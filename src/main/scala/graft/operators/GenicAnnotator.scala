@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.VariantColumns
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /**
@@ -120,19 +120,21 @@ object GenicAnnotator {
     * indexed; real gene dimensions are ≤10⁵. */
   val MaxIndexRows: Long = 2000000L
 
-  /** Bounded row count: `limit(max+1).count()` stops scanning as soon
-    * as the answer is known instead of counting an (unexpectedly) huge
-    * table. Returns min(actual, max+1). */
-  private def boundedCount(genes: DataFrame, maxIndexRows: Long): Long =
-    genes.limit((maxIndexRows + 1).toInt).count()
+  /** The gene table's rows, collected in ONE bounded job:
+    * `limit(max+1)` stops scanning as soon as the table is known to be
+    * too big. None when it has more than `maxIndexRows` rows. */
+  private def boundedCollect(genes: DataFrame, maxIndexRows: Long)
+      : Option[Array[Row]] = {
+    val rows = genes.limit((maxIndexRows + 1).toInt).collect()
+    if (rows.length > maxIndexRows) None else Some(rows)
+  }
 
-  /** Interval tables at or above this size are pruned to the probe
-    * side's chromosomes before the driver collect: at 100× gene counts
+  /** Collected interval tables at or above this size are pruned to the
+    * probe side's chromosomes before the index build: at 100× gene counts
     * the one cheap chromosome-column distinct over the probe side pays
-    * for itself in collect time, index memory, and broadcast bytes
-    * (a probe restricted to 2 of 20 chromosomes builds a 10× smaller
-    * index). Below it the extra probe-side job costs more than the
-    * collect it would shrink. */
+    * for itself in index memory and broadcast bytes (a probe restricted
+    * to 2 of 20 chromosomes builds a 10× smaller index). Below it the
+    * extra probe-side job costs more than the index it would shrink. */
   val PruneIndexRows: Long = 100000L
 
   /** More distinct probe-side chromosomes than this means the probe is
@@ -140,57 +142,66 @@ object GenicAnnotator {
     * skip the filter rather than build a giant isin list. */
   private val MaxProbedChroms = 4096
 
-  /** The build side restricted to chromosomes the probe side actually
-    * contains. One column-pruned distinct over `variants`; falls back to
-    * the unpruned table when the probe spans too many chromosomes. */
-  private[graft] def pruneToProbedChromosomes(variants: DataFrame,
-      genes: DataFrame): DataFrame = {
+  /** The chromosomes the probe side contains: one column-pruned
+    * distinct over `variants`. None when it spans too many to prune on. */
+  private def probedChromosomes(variants: DataFrame): Option[Set[String]] = {
     val chroms = variants.select(col("chromosome")).distinct()
-      .limit(MaxProbedChroms + 1).collect().map(_.getString(0)).toSeq
-    if (chroms.size > MaxProbedChroms) genes
-    else genes.filter(col("chromosome").isin(chroms: _*))
+      .limit(MaxProbedChroms + 1).collect().map(_.getString(0))
+    if (chroms.length > MaxProbedChroms) None else Some(chroms.toSet)
   }
 
-  private def maybePrune(variants: DataFrame, genes: DataFrame,
-      buildRows: Long): DataFrame =
-    if (buildRows >= PruneIndexRows) pruneToProbedChromosomes(variants, genes)
-    else genes
+  /** The build side restricted to chromosomes the probe side actually
+    * contains; the unpruned table when the probe spans too many. */
+  private[graft] def pruneToProbedChromosomes(variants: DataFrame,
+      genes: DataFrame): DataFrame =
+    probedChromosomes(variants).fold(genes)(cs =>
+      genes.filter(col("chromosome").isin(cs.toSeq: _*)))
+
+  /** Collected gene rows (column 0 = chromosome) restricted to the probed
+    * chromosomes once they are many enough for that to pay. */
+  private def maybePrune(variants: DataFrame, rows: Array[Row]): Array[Row] =
+    if (rows.length < PruneIndexRows) rows
+    else probedChromosomes(variants).fold(rows)(cs =>
+      rows.filter(r => cs.contains(r.getString(0))))
 
   def annotateIndexed(variants: DataFrame, genes: DataFrame,
-      maxIndexRows: Long = MaxIndexRows): DataFrame = {
-    val n = boundedCount(genes, maxIndexRows)
-    if (n > maxIndexRows) annotateBinned(variants, genes)
-    else {
-      val index = graft.functions.IntervalExpressions.IntervalIndex.build(
-        maybePrune(variants, genes, n)
-          .select("chromosome", "start_pos", "stop_pos")
-          .collect()
-          .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq)
-      variants.withColumn("genic_status",
-        statusCol(graft.functions.IntervalExpressions.intervalOverlaps(
-          col("chromosome"), col("start_pos"), col("end_pos"), index)))
+      maxIndexRows: Long = MaxIndexRows): DataFrame =
+    boundedCollect(genes.select("chromosome", "start_pos", "stop_pos"),
+        maxIndexRows) match {
+      case None => annotateBinned(variants, genes)
+      case Some(rows) =>
+        val index = graft.functions.IntervalExpressions.IntervalIndex.build(
+          maybePrune(variants, rows)
+            .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq)
+        variants.withColumn("genic_status",
+          statusCol(graft.functions.IntervalExpressions.intervalOverlaps(
+            col("chromosome"), col("start_pos"), col("end_pos"), index)))
     }
-  }
 
   /** Returns matching gene ids per variant — the reference's
     * `getGeneRgdIds` surface (GeneCache.java:51), exposed for the query
     * API; one output row per (variant, overlapping gene). Planned by the
     * custom [[graft.plans.IntervalJoin]] operator (broadcast interval
     * index, O(log g + hits) per row) instead of the BroadcastNestedLoop
-    * join Spark would pick for the range predicate. */
+    * join Spark would pick for the range predicate; its build side is the
+    * already-collected gene rows, as a local relation. */
   def overlappingGenes(variants: DataFrame, genes: DataFrame,
       maxIndexRows: Long = MaxIndexRows): DataFrame = {
-    val n = boundedCount(genes, maxIndexRows)
-    if (n > maxIndexRows)
-      overlappingGenesBinned(variants, genes).drop("g_chrom", "g_start", "g_stop")
-    else {
-      val g = maybePrune(variants, genes, n).select(
-        col("gene_rgd_id"),
-        col("chromosome").as("g_chrom"),
-        col("start_pos").as("g_start"),
-        col("stop_pos").as("g_stop"))
-      graft.plans.IntervalJoin.join(variants.sparkSession, variants, g)
-        .drop("g_chrom", "g_start", "g_stop")
+    val g = genes.select(
+      col("chromosome").as("g_chrom"),
+      col("start_pos").as("g_start"),
+      col("stop_pos").as("g_stop"),
+      col("gene_rgd_id"))
+    boundedCollect(g, maxIndexRows) match {
+      case None =>
+        overlappingGenesBinned(variants, genes).drop("g_chrom", "g_start", "g_stop")
+      case Some(rows) =>
+        val spark = variants.sparkSession
+        val local = spark.createDataFrame(
+          java.util.Arrays.asList(maybePrune(variants, rows): _*), g.schema)
+        graft.plans.IntervalJoin.join(spark, variants,
+          local.select("gene_rgd_id", "g_chrom", "g_start", "g_stop"))
+          .drop("g_chrom", "g_start", "g_stop")
     }
   }
 

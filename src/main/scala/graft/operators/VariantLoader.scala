@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.VariantColumns
+import graft.functions.{VariantColumns, VcfExpressions}
 import graft.model.LoadConfig
 import graft.sources.VcfSource
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -66,34 +66,19 @@ object VariantLoader {
     * micro-batches, tests). */
   def normalizedAllelesFromRecords(spark: SparkSession, raw: DataFrame,
       config: LoadConfig): DataFrame = {
-    // A single .gz file arrives as ONE input partition (gzip isn't
-    // splittable): rebalance the raw lines across the cluster before the
-    // expensive parse/normalize work — the shuffle moves plain text once,
-    // the alternative is a serial pipeline. Skipped when the source is
-    // already parallel (many files).
-    val parallelism = spark.sparkContext.defaultParallelism
-    val balanced =
-      if (raw.rdd.getNumPartitions < parallelism / 2)
-        raw.repartition(parallelism)
-      else raw
-    // genotypes stay RAW strings here: the struct-building array transform
-    // (VcfSource.withParsedGenotypes) is a higher-order lambda — Spark
-    // interprets those — and at 146 samples/row it dominated the load.
-    // The detail path parses blobs AFTER the melt, row-at-a-time in
-    // codegen.
-    val kept = balanced
+    // genotypes stay ONE raw string here: the melt walks it once per
+    // allele after the dedup. Both filters below are pushed onto the raw
+    // line by Catalyst; the field kernels make them read only the chrom
+    // field and the first sample blob.
+    val kept = raw
       .filter(VariantColumns.keepContig(col("chrom")))
       .withColumn("chromosome", VariantColumns.normalizeChromosome(col("chrom")))
     // P8: the reference drops the whole record when the FIRST sample's DP
-    // is 0 (HrdpVariants.java:289-301); DP is field 3 of the first blob
+    // is 0 (HrdpVariants.java:289-301); a sites-only record (no sample
+    // column, null genotypes) passes
     val gated =
       if (config.filterZeroDepth)
-        // try_element_at on BOTH levels: a sites-only record (no sample
-        // columns ⇒ empty genotypes array) must pass through, not abort
-        // the job under ANSI INVALID_ARRAY_INDEX
-        kept.filter(coalesce(
-          try_element_at(split(try_element_at(col("genotypes"), lit(1)), ":"),
-            lit(3)).try_cast("int"),
+        kept.filter(coalesce(VcfExpressions.firstSampleDepth(col("genotypes")),
           lit(-1)) =!= 0)
       else kept
     val alleles = gated.select(
@@ -194,6 +179,36 @@ object VariantLoader {
       existing, existingDetails, config, sampleIdByIdx)
   }
 
+  /** J4: dedup against the snapshot — null-safe on the nucleotide pair
+    * (Utils.stringsAreEqual treats null as "", HrdpVariants.java:412,438);
+    * equi on (chromosome, start_pos) mirrors the locus lookup J2. Left
+    * join: the `db_*` columns are null for novel alleles.
+    *
+    * (chromosome, start_pos) are the ONLY join keys — exactly the store's
+    * bucket keys — so the bucketed store arrives partitioned and only the
+    * batch shuffles. The nucleotide match is a residual condition written
+    * as `≤` and `≥` on the coalesced strings (byte equality): as `=` or
+    * `<=>` Catalyst would make it two more join keys, and Spark re-shuffles
+    * a side bucketed on only some of the keys
+    * (`spark.sql.requireAllClusterKeysForCoPartition`). */
+  private[graft] def matchStore(alleles: DataFrame, existing: DataFrame): DataFrame = {
+    val db = existing.select(
+      col("rgd_id").as("db_rgd_id"),
+      col("chromosome").as("db_chrom"),
+      col("start_pos").as("db_start"),
+      col("end_pos").as("db_end"),
+      col("ref_nuc").as("db_ref"),
+      col("var_nuc").as("db_var"))
+    def same(a: String, b: String): Column = {
+      val (x, y) = (coalesce(col(a), lit("")), coalesce(col(b), lit("")))
+      x <= y && x >= y
+    }
+    alleles.join(db,
+      col("chromosome") === col("db_chrom") && col("start_pos") === col("db_start") &&
+        same("ref_nuc", "db_ref") && same("var_nuc", "db_var"),
+      "left")
+  }
+
   /** [[load]] starting from a normalized-allele DataFrame — the entry
     * point for streaming micro-batches and pre-parsed inputs. */
   def loadFromAlleles(spark: SparkSession, alleles: DataFrame,
@@ -208,22 +223,7 @@ object VariantLoader {
     val classified = GenicAnnotator.annotateIndexed(alleles, genes)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    // J4: dedup against the snapshot — null-safe on the nucleotide pair
-    // (Utils.stringsAreEqual treats null as "", HrdpVariants.java:412,438);
-    // equi on (chromosome, start_pos) mirrors the locus lookup J2.
-    val db = existing.select(
-      col("rgd_id").as("db_rgd_id"),
-      col("chromosome").as("db_chrom"),
-      col("start_pos").as("db_start"),
-      col("end_pos").as("db_end"),
-      col("ref_nuc").as("db_ref"),
-      col("var_nuc").as("db_var"))
-    val joined = classified.join(db,
-      col("chromosome") === col("db_chrom") &&
-        col("start_pos") === col("db_start") &&
-        (coalesce(col("ref_nuc"), lit("")) <=> coalesce(col("db_ref"), lit(""))) &&
-        (coalesce(col("var_nuc"), lit("")) <=> coalesce(col("db_var"), lit(""))),
-      "left")
+    val joined = matchStore(classified, existing)
 
     val existingMatched = joined.filter(col("db_rgd_id").isNotNull)
     val novel = joined.filter(col("db_rgd_id").isNull)
@@ -251,24 +251,27 @@ object VariantLoader {
         col("ref_nuc"), col("var_nuc"), col("variant_type"),
         col("padding_base"), col("genic_status"), col("genotypes")))
 
-    def finalize(df: DataFrame): DataFrame = df.select(
+    // `__insert` marks the insert rows: the first occurrence of each
+    // novel key (K2-K4 first-wins), never a matched store row
+    def finalize(df: DataFrame, insert: Column): DataFrame = df.select(
       col("rgd_id"), col("chromosome"), col("start_pos"), col("end_pos"),
       col("ref_nuc"), col("var_nuc"), col("variant_type"), col("padding_base"),
       col("rs_id"), col("genic_status"),
       lit(config.mapKey).as("map_key"),
       lit(config.speciesTypeKey).as("species_type_key"),
-      col("allele_idx"), col("genotypes"))
+      col("allele_idx"), col("genotypes"), insert.as("__insert"))
 
     val keptExisting = finalize(
       existingMatched.withColumn("rgd_id", col("db_rgd_id"))
-        .drop("db_rgd_id", "db_chrom", "db_start", "db_end", "db_ref", "db_var"))
-    // insert rows: first occurrence per key only (K2-K4 first-wins)
-    val newVariants = finalize(minted.filter(col("__key_first")))
-    // persisted for the same reason as `classified`: the caller's counts
-    // and the two sinks all consume it. ALL novel occurrences (including
-    // key-duplicates sharing a minted id) participate in the detail melt.
-    val all = keptExisting.unionByName(finalize(minted))
+        .drop("db_rgd_id", "db_chrom", "db_start", "db_end", "db_ref", "db_var"),
+      lit(false))
+    // The J4 join and both mint windows run ONCE: the batch is persisted
+    // for the caller's counts, the two sinks, and the detail melt. ALL
+    // novel occurrences (including key-duplicates sharing a minted id)
+    // participate in the melt; only `__insert` rows are appended.
+    val all = keptExisting.unionByName(finalize(minted, col("__key_first")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val newVariants = all.filter(col("__insert"))
 
     // A5/K5: end-position drift on already-loaded variants
     // (HrdpVariants.java:416-419,444-447: dbVar.endPos != endPos && endPos != 0)
@@ -292,8 +295,8 @@ object VariantLoader {
     val details = sampleDetails(all, existingDetails, config, sampleIdByIdx,
       intraBatchDedup = hasKeyDups)
 
-    LoadResult(all.drop("allele_idx", "genotypes"),
-      newVariants.drop("allele_idx", "genotypes"), details, endPosUpdates,
+    LoadResult(all.drop("allele_idx", "genotypes", "__insert"),
+      newVariants.drop("allele_idx", "genotypes", "__insert"), details, endPosUpdates,
       persisted = Seq(classified, all))
   }
 
@@ -307,54 +310,12 @@ object VariantLoader {
   def sampleDetails(variants: DataFrame, existingDetails: DataFrame,
       config: LoadConfig, sampleIdByIdx: Map[Int, Int] = Map.empty,
       intraBatchDedup: Boolean = true): DataFrame = {
-    // sample_idx (header order) → sample_id; identity when no dictionary
-    val sampleIdCol =
-      if (sampleIdByIdx.isEmpty) col("g_sample_idx")
-      else map(sampleIdByIdx.toSeq.flatMap { case (idx, id) =>
-        Seq(lit(idx), lit(id))
-      }: _*).getItem(col("g_sample_idx"))
-
-    // J7 melt over RAW blobs: posexplode keeps the header column index,
-    // the per-row split/element_at parse stays in whole-stage codegen
-    // (P11 — try_* forms null out "." and short ./."-style blobs)
-    val melted = variants
-      .select(col("rgd_id"), col("chromosome"), col("start_pos"),
-        col("allele_idx"),
-        posexplode(col("genotypes")).as(Seq("g_sample_idx", "g_raw")))
-      .withColumn("g_parts", split(col("g_raw"), ":"))
-      .withColumn("g_gt", element_at(col("g_parts"), 1))
-      // P9: skip hom-ref / no-call genotypes (HrdpVariants.java:467-468)
-      .filter(!coalesce(col("g_gt"), lit("")).isin("0/0", "./."))
-      // J7 allele↔depth alignment: allele j pairs with AD[j+1]
-      .withColumn("var_freq",
-        try_element_at(split(try_element_at(col("g_parts"), lit(2)), ","),
-          col("allele_idx") + 2).try_cast("int"))
-      // P10: drop zero/missing allele frequency (HrdpVariants.java:479-481)
-      .filter(col("var_freq").isNotNull && col("var_freq") =!= 0)
-      .withColumn("total_depth", coalesce(
-        try_element_at(col("g_parts"), lit(3)).try_cast("int"), lit(0)))
-      .withColumn("z", VariantColumns.zygosity(col("var_freq"),
-        col("total_depth"), lit("U"), col("chromosome")))
-      .withColumn("sample_id", sampleIdCol)
-      .filter(col("sample_id").isNotNull)
-
-    val percentRead =
-      if (config.compat.intDivisionPercentRead)
-        // reference overwrite quirk: Java int division varFreq/depth
-        // (HrdpVariants.java:489-490) — almost always 0
-        when(col("total_depth") =!= 0,
-          (col("var_freq") / col("total_depth")).cast("int")).otherwise(lit(0))
-      else col("z.zygosity_percent_read")
-
-    val candidate = melted.select(
-      col("rgd_id"),
-      col("sample_id").cast("int").as("sample_id"),
-      col("total_depth"),
-      col("var_freq"),
-      col("z.zygosity_status").as("zygosity_status"),
-      percentRead.as("zygosity_percent_read"),
-      col("z.zygosity_poss_error").as("zygosity_poss_error"),
-      col("z.zygosity_in_pseudo").as("zygosity_in_pseudo"))
+    // J7 melt + P9-P11 + §2.7 as one native expression over the raw
+    // blobs: each blob is walked once, hom-ref/no-call genotypes allocate
+    // nothing, and only kept observations reach `inline`
+    val candidate = variants.select(col("rgd_id"),
+      inline(VcfExpressions.meltGenotypes(col("genotypes"), col("allele_idx"),
+        sampleIdByIdx, config.compat.intDivisionPercentRead)))
 
     // J6: only details not already present (DAO.java:64-66 count==0 gate).
     // Runs BEFORE the intra-batch window: if a (rgd_id, sample_id) key is

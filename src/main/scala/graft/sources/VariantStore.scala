@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.operators.VariantLoader
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
  *
  *   store/
  *     variants/...   (variant ⋈ variant_map_data, §1.1 —
- *                     bucketed+sorted on (chromosome, start_pos))
+ *                     bucketed on (chromosome, start_pos))
  *     details/...    (variant_sample_detail —
  *                     bucketed on (rgd_id, sample_id))
  *
@@ -23,7 +23,8 @@ import org.apache.spark.sql.functions._
  * on (rgd_id, sample_id). This is the same access path the reference gets
  * from its per-chromosome caches and locus lookups (GeneCache.java:23-44,
  * DAO.java:121-140). Verified by plan shape in VariantStoreSpec /
- * BucketedTablesSpec (exactly one Exchange in the dedup-shaped join).
+ * BucketedTablesSpec (exactly one Exchange in the dedup-shaped join) and
+ * StoreInvarianceSpec (the loader's own J4 and J6 joins).
  *
  * Catalog mechanics: bucket metadata can't live in plain parquet
  * directories, so each store side is an EXTERNAL catalog table
@@ -58,22 +59,37 @@ object VariantStore {
       keys: Seq[String]): Unit = {
     val t0 = System.currentTimeMillis()
     ensureTable(df.sparkSession, dir, side, keys)
-    // Pre-shuffle onto the bucket function (repartition uses the same
-    // pmod(murmur3) partitioning the bucketed write assigns bucket ids
-    // with), so every task holds exactly ONE bucket and writes one file.
-    // Without this each task fans out to all NumBuckets files — measured
-    // 73 s vs 8 s for the 8.1M-row detail append, dominated by per-file
-    // parquet writer overhead across tasks × buckets tiny files.
-    // Deliberately NOT sortBy: exchange elision needs bucketing only;
-    // the downstream joins sort on supersets of the bucket keys (J4) or
-    // see multi-file buckets after the second append (J6), so a write
-    // sort is pure cost on every insert batch.
-    df.repartition(NumBuckets, keys.map(col): _*).write
-      .bucketBy(NumBuckets, keys.head, keys.tail: _*)
-      .mode(SaveMode.Append).format("parquet")
+    bucketed(df, keys).mode(SaveMode.Append).format("parquet")
       .option("path", s"$dir/$side")
       .saveAsTable(tableName(dir, side))
     println(f"[graft] append $side: ${(System.currentTimeMillis() - t0) / 1000.0}%.1f s")
+  }
+
+  /**
+   * Bucketed writer for one store side. Pre-shuffles onto the bucket
+   * function so every bucket lands in exactly ONE task and one file per
+   * write: without it each task fans out to all NumBuckets files —
+   * measured 73 s vs 8 s for an 8.1M-row detail append, dominated by
+   * per-file parquet writer overhead across tasks × buckets tiny files.
+   *
+   * One task per core, not one per bucket: `p`, the largest divisor of
+   * NumBuckets no larger than the session's parallelism, partitions on
+   * `pmod(murmur3(keys), p)` — the bucket id `pmod(murmur3(keys),
+   * NumBuckets)` taken mod `p`, since `p` divides NumBuckets — so each
+   * task writes NumBuckets / p whole buckets. A bucketed-write task costs
+   * ~40 ms of deserialization on its own, so 32 tasks on 4 cores were
+   * mostly that overhead; `local[32]` keeps one bucket per task.
+   *
+   * Deliberately NOT sortBy: exchange elision needs bucketing only; the
+   * downstream joins sort on supersets of the bucket keys (J4) or see
+   * multi-file buckets after the second append (J6), so a write sort is
+   * pure cost on every insert batch.
+   */
+  private def bucketed(df: DataFrame, keys: Seq[String]): DataFrameWriter[Row] = {
+    val cores = df.sparkSession.sparkContext.defaultParallelism
+    val p = (1 to NumBuckets).filter(d => NumBuckets % d == 0 && d <= cores).max
+    df.repartition(p, keys.map(col): _*).write
+      .bucketBy(NumBuckets, keys.head, keys.tail: _*)
   }
 
   /** U1 secondary variant side (`variant_ext`): rgdcore's VariantDAO
@@ -189,10 +205,8 @@ object VariantStore {
 
   /** Current max rgd id (the W2 minting seed for the next load). */
   def maxRgdId(spark: SparkSession, dir: String, fallback: Long): Long = {
-    val df = variants(spark, dir)
-    if (df.isEmpty) fallback
-    else math.max(fallback,
-      df.agg(max("rgd_id")).head().getLong(0))
+    val top = variants(spark, dir).agg(max("rgd_id")).head()
+    if (top.isNullAt(0)) fallback else math.max(fallback, top.getLong(0))
   }
 
   /** K6: apply genic-status updates (changed rows from GenicQcJob) via
@@ -247,9 +261,7 @@ object VariantStore {
     spark.sql(s"DROP TABLE IF EXISTS $tmpTbl")
     deletePath(spark, tmpPath)
     deletePath(spark, oldPath)
-    df.repartition(NumBuckets, keys.map(col): _*).write
-      .bucketBy(NumBuckets, keys.head, keys.tail: _*)
-      .mode(SaveMode.Overwrite).format("parquet")
+    bucketed(df, keys).mode(SaveMode.Overwrite).format("parquet")
       .option("path", tmpPath)
       .saveAsTable(tmpTbl)
     spark.sql(s"DROP TABLE IF EXISTS $tmpTbl")

@@ -5,9 +5,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM-wide session). */
 object SparkSpec {
-  lazy val spark: SparkSession = {
+  lazy val spark: SparkSession = session("local[4]")
+
+  /** The suites' session configuration on the given master. */
+  def session(master: String): SparkSession = {
     val s = SparkSession.builder()
-      .master("local[4]")
+      .master(master)
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
