@@ -3,27 +3,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // SQL DML on the clustered table (DELETE/MERGE routing)
-      .config("spark.sql.extensions", "graft.sql.GraftSqlExtensions")
-      // typed aggregates carry small fixed buffers; the 128-key fallback
-      // to sort-based aggregation costs a full sort of the exploded input
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "10000000")
-      // 55 queries x several codegen stages each overflow the default
-      // 100-entry generated-class cache — q40's classes were evicted and
-      // recompiled EVERY rep (measured ~5 s in-battery vs ~1.7 s steady
-      // state in a fresh JVM). Static conf: must be set before the
-      // session exists.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.battery()
     // warm the session (scheduler, codegen, parquet footers) so the first
     // timed query isn't charged for one-time init
     try spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1).count()
@@ -46,20 +26,28 @@ object Bench {
     // Reps are INTERLEAVED round-robin (all queries once per round; one
     // untimed warmup round, then `reps` timed rounds; min per query
     // across rounds), not run back-to-back per query: this box's noise
-    // comes as multi-second stalls clustered in time (JvmStateProbe r8:
-    // same-JVM reps of one query swing 3.8→16.5 s inside one window
-    // while the same query minutes later is steady), and 6 consecutive
-    // reps of a 0.15 s query all fit inside one stall — the r7
+    // comes as multi-second stalls clustered in time (r8 JVM-state probe,
+    // last in 53a609c: same-JVM reps of one query swing 3.8→16.5 s
+    // inside one window while the same query minutes later is steady),
+    // and 6 consecutive reps of a 0.15 s query all fit inside one
+    // stall — the r7
     // "regressions" on untouched short queries (q21 0.85 vs 0.13 s
     // steady in-battery) were exactly that. Spreading each query's reps
     // across the full sweep makes the min robust to any stall shorter
     // than a whole round. Same executions, same statistic, reordered.
     val names = SparkEntry.queries.toSeq.sortBy(_._1)
+    // a failed rep is reported and fails the run after the JSON line is
+    // out; its time is still recorded so the line keeps its shape
+    var failed = false
     def timeOne(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : Double = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+      try fn(spark, sfDir).count()
+      catch { case e: Throwable =>
+        failed = true
+        System.err.println(s"[bench] $name failed: $e")
+      }
       val dt = (System.nanoTime() - t0) / 1e9
       // each rep re-caches its own intermediates; release so reps (and
       // queries) are independent and storage never accumulates
@@ -123,5 +111,6 @@ object Bench {
       try w.println(json) finally w.close()
     } catch { case _: Throwable => () }
     spark.stop()
+    if (failed) sys.exit(1)
   }
 }

@@ -6,31 +6,20 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet stores TIMESTAMP(NANOS); read as long, converted in
-      // the battery's events loader
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // SQL DML on the clustered table (DELETE/MERGE routing)
-      .config("spark.sql.extensions", "graft.sql.GraftSqlExtensions")
-      // typed aggregates (MinHashSig/SimhashVotes/KmvSketch) carry small
-      // fixed buffers; the default 128-key fallback to sort-based
-      // aggregation costs a full sort of the exploded input
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "10000000")
-      // see Bench: the 55-query battery overflows the 100-entry
-      // generated-class cache
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.battery()
+    dump(spark, sfDir, outDir, SparkEntry.queries.keys.toSeq)
+    spark.stop()
+  }
+
+  /** Writes the named queries' results to `<outDir>/<query>` and their
+    * oracle SQL to `<outDir>/oracle_sql.json`; a failing query is
+    * reported on stderr and the sweep goes on. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+      names: Seq[String]): Unit = {
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    names.foreach { name =>
+      try SparkEntry.queries(name)(spark, sfDir).coalesce(1).write
+        .mode("overwrite").parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
@@ -50,9 +39,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter(kv => names.contains(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

@@ -113,11 +113,6 @@ object VariantColumns {
       lit("N").as("zygosity_in_pseudo"))
   }
 
-  /** Null-safe string equality with the reference's null≡"" convention
-    * (rgdcore:Utils.stringsAreEqual; used at HrdpVariants.java:412,438). */
-  def nullSafeEq(a: Column, b: Column): Column =
-    coalesce(a, lit("")) === coalesce(b, lit(""))
-
   /** J1 overlap predicate (GeneCache.java:72-77). */
   def intervalsOverlap(s: Column, e: Column, gs: Column, ge: Column): Column =
     gs <= e && ge >= s

@@ -223,17 +223,18 @@ object VcfExpressions {
   private val No = UTF8String.fromString("N")
 
   /** Worker of [[MeltGenotypes]]. */
-  final class MeltWorker(sampleIds: Map[Int, Int], intDivisionPercentRead: Boolean,
+  final class MeltWorker(sampleIds: Option[Map[Int, Int]], intDivisionPercentRead: Boolean,
       failOnError: Boolean) extends Serializable {
 
-    // header column index → sample id, dense; an empty map is the identity
+    // header column index → sample id, dense; None is the identity
     private val identity = sampleIds.isEmpty
+    private val mapped = sampleIds.getOrElse(Map.empty)
     private val ids: Array[Int] = {
-      val a = new Array[Int](if (identity) 0 else sampleIds.keys.max + 1)
-      sampleIds.foreach { case (i, id) => a(i) = id }
+      val a = new Array[Int](if (mapped.isEmpty) 0 else mapped.keys.max + 1)
+      mapped.foreach { case (i, id) => a(i) = id }
       a
     }
-    private val known: Array[Boolean] = Array.tabulate(ids.length)(sampleIds.contains)
+    private val known: Array[Boolean] = Array.tabulate(ids.length)(mapped.contains)
 
     private def isGt(s: UTF8String, from: Int, until: Int, gt: UTF8String): Boolean =
       until - from == gt.numBytes &&
@@ -328,13 +329,13 @@ object VcfExpressions {
    * `posexplode` of the sample cells → `split(blob, ":")` → P9 skip of
    * GT `0/0`/`./.` → `try_cast(try_element_at(split(AD, ","),
    * allele_idx + 2) AS int)` non-null and non-zero → DP
-   * `try_cast`, null → 0 → sample id through `sampleIds` (an empty map
-   * is the identity; unmapped columns drop) → `VariantColumns.zygosity`
+   * `try_cast`, null → 0 → sample id through `sampleIds` (`None` is the
+   * identity; columns a given map lacks drop) → `VariantColumns.zygosity`
    * with gender 'U' → the int-division percent read when
    * `intDivisionPercentRead`.
    */
   case class MeltGenotypes(left: Expression, right: Expression,
-      sampleIds: Map[Int, Int], intDivisionPercentRead: Boolean,
+      sampleIds: Option[Map[Int, Int]], intDivisionPercentRead: Boolean,
       failOnError: Boolean = SQLConf.get.ansiEnabled) extends BinaryExpression {
 
     override def dataType: DataType = ArrayType(MeltSchema, containsNull = false)
@@ -357,7 +358,7 @@ object VcfExpressions {
 
   /** Column wrapper for [[MeltGenotypes]]: `genotypes` is the tab-joined
     * sample columns of a record, `alleleIdx` the 0-based ALT allele. */
-  def meltGenotypes(genotypes: Column, alleleIdx: Column, sampleIds: Map[Int, Int],
+  def meltGenotypes(genotypes: Column, alleleIdx: Column, sampleIds: Option[Map[Int, Int]],
       intDivisionPercentRead: Boolean): Column =
     ColumnBridge.of(MeltGenotypes(ColumnBridge.expr(genotypes),
       ColumnBridge.expr(alleleIdx), sampleIds, intDivisionPercentRead))

@@ -79,6 +79,9 @@ final case class SampleInfo(
 /**
  * Quirk-compatibility flags (SURVEY.md §4 item 3). Defaults are the
  * *corrected* semantics; enable a flag to reproduce the reference bit-for-bit.
+ * One quirk has no flag: the reference keeps the previous sample's depth
+ * for a non-numeric DP (".", HrdpVariants.java:470-475), which is order-
+ * dependent; the engine always reads it as a missing depth.
  */
 final case class CompatFlags(
     /** Reference emits "snp" (not "snv") for single-base substitutions on the
@@ -88,12 +91,7 @@ final case class CompatFlags(
     /** Reference overwrites the rounded zygosity percent with Java int
       * division `varFreq / depth` (≈ always 0) at HrdpVariants.java:489-490.
       * true → replicate. */
-    intDivisionPercentRead: Boolean = false,
-    /** Reference swallows a non-numeric DP ("."), silently keeping the
-      * previous sample's depth (HrdpVariants.java:470-475). Corrected
-      * semantics: null it out. true → not supported distributively; the
-      * engine always nulls (documented divergence). */
-    carryOverDotDepth: Boolean = false)
+    intDivisionPercentRead: Boolean = false)
 
 /** Engine configuration replacing the reference's Spring XML
   * (AppConfigure.xml:3-320). */

@@ -276,8 +276,8 @@ object Bpe {
     * ids dense from 0 — the id assignment a tokenizer ships alongside
     * its merges.
     *
-    * Ranked by the two-pass partition-offset device (the W2 mintIds
-    * trick, [[VariantLoader.mintIds]]): range-partition the distinct
+    * Ranked by the two-pass partition-offset device (the W2 id-mint
+    * trick, [[VariantLoader.mintIdsDense]]): range-partition the distinct
     * tokens, count per partition (ONE bounded collect of ≤ `numParts`
     * rows), prefix-sum the offsets driver-side, then rank WITHIN each
     * partition — ids identical to a global `row_number` window (range

@@ -492,8 +492,8 @@ object Dedup {
    * for pair cosine ≥ 0.8 on the test corpora at BOTH verification
    * scales — deterministic, seeded hyperplanes, so this is a measured
    * guarantee for this data, not a probability (verified in Battery q41
-   * against a DuckDB all-pairs oracle; graft.tools.TuneLsh reproduces
-   * the sweep: at sf0.1 the candidate pass scores 10.5% of all pairs,
+   * against a DuckDB all-pairs oracle; the plane/table sweep, last in
+   * 53a609c and recorded in NOTES: at sf0.1 the candidate pass scores 10.5% of all pairs,
    * and misses appear only at ≤16 tables or ≥10 planes).
    *
    * Plan shape: keys in ONE native-expression pass (posexplode to
@@ -509,8 +509,8 @@ object Dedup {
       .map(t => Similarity.hyperplanes(dim, numPlanes, seed = 911L + t))
     // persist: feeds the key pass and both vector-fetch joins. Spread
     // first (r21): a small embedding corpus arrives as 1 parquet split
-    // and the whole key/verify pipeline ran on 1-2 cores (JobCountProbe
-    // q41: 11 stages over 21 total tasks)
+    // and the whole key/verify pipeline ran on 1-2 cores (r21 job
+    // count, 53a609c: q41 ran 11 stages over 21 total tasks)
     val v = trackPersist(spreadSmallInput(df, idCol)
       .select(col(idCol).as("__id"), vecCol.as("__v")))
     val keyed = cappedBuckets(v.select(col("__id"),

@@ -12,19 +12,19 @@ import org.apache.spark.sql.functions._
  * The reference builds one sorted in-memory interval list per chromosome and
  * linearly scans it per variant. Spark-first re-expression, two strategies:
  *
- * 1. [[annotateBroadcast]] — broadcast range join. The gene table is small
- *    (~10⁴ intervals per chromosome), so `variants ⋈ broadcast(genes)` on
- *    `chrom equal && range overlap` plans a BroadcastNestedLoopJoin. Fine
- *    for small gene tables, but BNLJ compares every variant against every
- *    gene of every chromosome — O(V·G).
+ * 1. [[annotateIndexed]] (pipeline default) — a broadcast per-chromosome
+ *    interval index probed by binary search in one narrow pass.
  *
- * 2. [[annotateBinned]] (default) — binning rewrite: explode gene intervals
+ * 2. [[annotateBinned]] (fallback above [[MaxIndexRows]]) — binning
+ *    rewrite: explode gene intervals
  *    into fixed-width position bins, join variants on the *equi* key
  *    `(chromosome, bin)`, then apply the exact overlap predicate and
  *    dedup. This turns the range join into a hash join — O(V + G) with a
  *    shuffle, and at 100 TB the per-bin gene lists stay broadcastable since
  *    the exploded gene side is still tiny. This is the scale path and
- *    exactly the equi-join rewrite SURVEY.md §4.1 calls for.
+ *    exactly the equi-join rewrite SURVEY.md §4.1 calls for. (A broadcast
+ *    range join plans a BroadcastNestedLoopJoin: every variant against
+ *    every gene, O(V·G).)
  *
  * Variants spanning multiple bins probe each covered bin; `binsFor` on the
  * variant side uses a `sequence` so multi-bin variants (long deletions)
@@ -40,27 +40,8 @@ object GenicAnnotator {
   private def statusCol(matched: Column): Column =
     when(matched, "GENIC").otherwise("INTERGENIC")
 
-  /** Strategy 1: broadcast range join (BNLJ). A variant overlapping k genes
-    * matches k rows (the reference collects the id list but only tests
-    * emptiness, HrdpVariants.java:527) — an existence semi-join reduces back
-    * to one row per variant without a shuffle. */
-  def annotateBroadcast(variants: DataFrame, genes: DataFrame): DataFrame = {
-    val g = genes.select(
-      col("chromosome").as("g_chrom"),
-      col("start_pos").as("g_start"),
-      col("stop_pos").as("g_stop"))
-    val overlap = col("chromosome") === col("g_chrom") &&
-      VariantColumns.intervalsOverlap(col("start_pos"), col("end_pos"),
-        col("g_start"), col("g_stop"))
-    val genic = variants.join(broadcast(g), overlap, "left_semi")
-      .withColumn("genic_status", lit("GENIC"))
-    val intergenic = variants.join(broadcast(g), overlap, "left_anti")
-      .withColumn("genic_status", lit("INTERGENIC"))
-    genic.unionByName(intergenic)
-  }
-
-  /** Strategy 2 (default): binned equi-join, shuffle-hash/broadcast-hash
-    * friendly and linear in input size. */
+  /** Binned equi-join, shuffle-hash/broadcast-hash friendly and linear
+    * in input size. */
   def annotateBinned(variants: DataFrame, genes: DataFrame,
       binSize: Long = DefaultBinSize): DataFrame = {
     val bin = lit(binSize)
@@ -99,7 +80,7 @@ object GenicAnnotator {
   }
 
   /**
-   * Strategy 3 (pipeline default): broadcast interval index + binary search —
+   * Pipeline default: broadcast interval index + binary search —
    * the codegen realization of the reference's commented-out binary
    * search (GeneCache.java:53-67). The gene table is collected on the driver
    * (small by contract: ~tens of thousands of intervals), indexed per

@@ -322,15 +322,4 @@ object Layout {
       .sortWithinPartitions("__hkey")
       .drop("__hkey")
   }
-
-  /** [[clusterByHilbert]] for any dimension count, on the
-    * [[withHilbertKeyN]] key. */
-  def clusterByHilbertN(df: DataFrame, cols: Seq[Column],
-      numFiles: Int, bits: Int = 16): DataFrame = {
-    require(numFiles >= 1, s"numFiles must be >= 1, got $numFiles")
-    withHilbertKeyN(df, cols, bits)
-      .repartitionByRange(numFiles, col("__hkey"))
-      .sortWithinPartitions("__hkey")
-      .drop("__hkey")
-  }
 }

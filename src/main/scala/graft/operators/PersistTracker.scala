@@ -10,7 +10,7 @@ import org.apache.spark.sql.DataFrame
  *
  * Callers materialize the operator's result, then release; releasing
  * early only costs recomputation, never correctness. `Verify`/`Bench`/
- * `TimeQ` release after every query so a battery sweep never accumulates
+ * `Dev` release after every query so a battery sweep never accumulates
  * executor storage.
  */
 private[graft] object PersistTracker {

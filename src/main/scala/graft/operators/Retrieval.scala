@@ -66,7 +66,7 @@ object Retrieval {
     // the token array MUST be aliased in its own select before
     // size/explode consume it: inlined, the optimizer rewrites `__dl`
     // as size(tokenize(text)) ABOVE the Generate — re-tokenizing the
-    // doc once per OUTPUT TOKEN (measured 6x slower, TfShapeProbe).
+    // doc once per OUTPUT TOKEN (measured 6x slower, r20).
     // Per-doc tf is ROW-LOCAL (r21, guide §2.4): the TokenTf kernel
     // emits each doc's (token, count) pairs in one codegen pass, so the
     // corpus-scale explode → groupBy(__id, __t, __dl) exchange is gone
@@ -192,7 +192,7 @@ object Retrieval {
     * picks) are exactly the rows every broadcast join already collects
     * to the driver — but as DISTRIBUTED subtrees each broadcast build
     * ran as its own Spark job, with its own AQE shuffle stages for any
-    * distinct/union in the subtree (r20 JobCountProbe: 40 of the PRF
+    * distinct/union in the subtree (r20 job count, 53a609c: 40 of the PRF
     * serve's 50 jobs were broadcast builds). A broadcast over a local
     * relation builds jobless, and driver-side distinct/union replace
     * the shuffles outright (guide §2.4). */
@@ -275,7 +275,7 @@ object Retrieval {
    * relations between stages (r20): each is at most |Q|·fbDocs or
    * |Q|·fbTerms rows — rows the old lazy plan collected anyway to
    * build its broadcasts, but as distributed subtrees whose builds ran
-   * ~40 separate Spark jobs per serve (JobCountProbe); localized, the
+   * ~40 separate Spark jobs per serve (r20 job count); localized, the
    * serve runs 3 corpus-side actions (round 1, expansion weights,
    * round 2) and the persisted all-terms/union shuffles disappear.
    *

@@ -340,7 +340,7 @@ object Sampling {
    * [[TextAnalysis.packGreedy]]'s job and is order-dependent).
    *
    * Scale shape: the global running sum uses the two-pass
-   * partition-offset device ([[Bpe.tokenIds]] / the W2 mintIds trick) —
+   * partition-offset device ([[Bpe.tokenIds]] / the W2 id-mint trick) —
    * range-partition by the order key, ONE bounded collect of ≤ numParts
    * per-partition token sums, driver prefix-sum, then a WITHIN-partition
    * running-sum window. No single-partition exchange at any size; the

@@ -87,8 +87,8 @@ object StringSimilarity {
     * the variant/gram explode — and, because the downstream shuffles
     * carry FEW BYTES (hashes and short strings) that AQE coalesces to
     * 1-2 post-shuffle partitions, effectively the whole CPU-dense
-    * candidate+levenshtein pipeline — on 1-2 cores (r21 JobCountProbe:
-    * q69 ran 10 stages over 16 TOTAL tasks). Re-spread on the id (the
+    * candidate+levenshtein pipeline — on 1-2 cores (r21 job count,
+    * 53a609c: q69 ran 10 stages over 16 TOTAL tasks). Re-spread on the id (the
     * [[Dedup.spreadSmallInput]] device); large corpora already have
     * enough splits and skip the shuffle. */
   private def spreadSmall(df: DataFrame, idCol: String): DataFrame = {
@@ -213,8 +213,8 @@ object StringSimilarity {
     * count (keyed on the pair, so dropDuplicates reuses it — no extra
     * exchange): in the small-corpus regime the candidate rows are so
     * few BYTES that AQE coalesces them to 1-2 partitions, serializing
-    * the CPU-dense levenshtein stage (r21 JobCountProbe: 16 tasks
-    * total). Large corpora pass 0 and keep AQE's sizing. */
+    * the CPU-dense levenshtein stage (r21 job count, 53a609c:
+    * 16 tasks total). Large corpora pass 0 and keep AQE's sizing. */
   private def verifyAgainst(cands: DataFrame, baseA: DataFrame,
       baseB: DataFrame, maxDist: Int, spreadTo: Int = 0): DataFrame = {
     val c = if (spreadTo > 0)

@@ -19,12 +19,12 @@ object TextAnalysis {
   def tokens(text: Column): Column =
     // ≡ array_remove(split(text, "\\s+"), "") ≡ filter(split(...),
     // len > 0) — spec-pinned. The r20 form removed the interpreted
-    // per-element lambda (TokensProbe 0.60 → 0.42 s); the r21 kernel
+    // per-element lambda (0.60 → 0.42 s, r20); the r21 kernel
     // removes the built-in chain's per-row costs outright: the
     // UTF-16 round trip inside UTF8String.split, String.split's
     // Pattern.compile of "\s+" EVERY ROW (no single-char fast path),
     // and array_remove's second array walk — one byte scan, zero-copy
-    // token slices (TokensProbe 0.43 → 0.35 s steady for the tf stage;
+    // token slices (0.43 → 0.35 s steady for the tf stage, r21;
     // parity exact on corpus + whitespace/unicode edges, WsTokensSpec).
     graft.functions.TextExpressions.wsTokens(text)
 

@@ -102,37 +102,19 @@ object VariantLoader {
   }
 
   /**
-   * W2: deterministic distributed id minting. Assigns `rgd_id = seed +
-   * offset(chromosome) + row_number within chromosome`, where the offsets
-   * are a driver-side prefix sum over per-chromosome counts (~25 rows).
-   * No global sort, no single-partition window — survives any scale at
-   * which a per-chromosome sort fits a task, and chromosomes can be
-   * salted further if one dominates.
-   */
-  def mintIds(df: DataFrame, seed: Long, orderCols: Seq[String]): DataFrame = {
-    val counts = df.groupBy("chromosome").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).sortBy(_._1)
-    // prefix sum: chromosome → id offset within this batch
-    val offsets = counts.map(_._1)
-      .zip(counts.scanLeft(0L) { case (acc, (_, n)) => acc + n })
-    val offsetCol = offsets.foldLeft(lit(0L)) { case (acc, (c, off)) =>
-      when(col("chromosome") === c, lit(off)).otherwise(acc)
-    }
-    val w = Window.partitionBy("chromosome")
-      .orderBy(orderCols.map(col): _*)
-    df.withColumn("rgd_id", lit(seed) + offsetCol + row_number().over(w))
-  }
-
-  /**
-   * [[mintIds]] variant that assigns ONE id per distinct key: rows whose
-   * `keyExprs` tie share the minted id (dense_rank), and the first row in
-   * (key, tieBreak) order is flagged `__key_first` for first-wins insert
-   * semantics. This is the intra-batch dedup the reference gets for free
-   * from per-record locus lookups — each line's lookup sees prior lines'
-   * inserts (HrdpVariants.java:310-465) — re-expressed set-level.
+   * W2: deterministic distributed id minting, ONE id per distinct key:
+   * `rgd_id = seed + offset(chromosome) + dense_rank within chromosome`,
+   * where the offsets are a driver-side prefix sum over per-chromosome
+   * distinct-key counts (~25 rows). Rows whose `keyExprs` tie share the
+   * minted id, and the first row in (key, tieBreak) order is flagged
+   * `__key_first` for first-wins insert semantics. This is the
+   * intra-batch dedup the reference gets for free from per-record locus
+   * lookups — each line's lookup sees prior lines' inserts
+   * (HrdpVariants.java:310-465) — re-expressed set-level.
    *
-   * Scale design: identical to [[mintIds]] — per-chromosome windows plus a
-   * driver prefix sum over the ~25-row distinct-count map; both windows
+   * Scale design: no global sort, no single-partition window — survives
+   * any scale at which a per-chromosome sort fits a task, and
+   * chromosomes can be salted further if one dominates. Both windows
    * share one hash exchange on chromosome (same partitioning, two sort
    * specs).
    */
@@ -169,15 +151,22 @@ object VariantLoader {
   def load(spark: SparkSession, vcfPath: String, genes: DataFrame,
       existing: DataFrame, existingDetails: DataFrame,
       config: LoadConfig): LoadResult = {
-    // S3/J8: resolve the header's sample columns through the dictionary
-    val sampleIdByIdx: Map[Int, Int] =
-      if (config.sampleDict.isEmpty) Map.empty
-      else VcfSource.headerSamples(spark, vcfPath).zipWithIndex.flatMap {
-        case (name, idx) => config.sampleDict.get(name).map(idx -> _)
-      }.toMap
     loadFromAlleles(spark, normalizedAlleles(spark, vcfPath, config), genes,
-      existing, existingDetails, config, sampleIdByIdx)
+      existing, existingDetails, config,
+      sampleIds(config.sampleDict, VcfSource.headerSamples(spark, vcfPath)))
   }
+
+  /** S3/J8: header column index → configured sample id. `None` without a
+    * dictionary: the melt then keeps the column index as the sample id.
+    * With one, only the columns it names (possibly none) are kept, as the
+    * reference skips unknown sample columns. The header is read only when
+    * there is a dictionary. */
+  def sampleIds(dict: Map[String, Int], header: => Seq[String])
+      : Option[Map[Int, Int]] =
+    if (dict.isEmpty) None
+    else Some(header.zipWithIndex.flatMap {
+      case (name, idx) => dict.get(name).map(idx -> _)
+    }.toMap)
 
   /** J4: dedup against the snapshot — null-safe on the nucleotide pair
     * (Utils.stringsAreEqual treats null as "", HrdpVariants.java:412,438);
@@ -213,7 +202,7 @@ object VariantLoader {
     * point for streaming micro-batches and pre-parsed inputs. */
   def loadFromAlleles(spark: SparkSession, alleles: DataFrame,
       genes: DataFrame, existing: DataFrame, existingDetails: DataFrame,
-      config: LoadConfig, sampleIdByIdx: Map[Int, Int] = Map.empty)
+      config: LoadConfig, sampleIdByIdx: Option[Map[Int, Int]] = None)
       : LoadResult = {
 
     // J1: genic classification via the broadcast interval index.
@@ -302,13 +291,13 @@ object VariantLoader {
 
   /** The per-sample observation path (HrdpVariants.java:462-495).
     * `sampleIdByIdx`: 0-based header column index → configured sample id
-    * (columns absent from the dictionary are dropped, mirroring the
-    * reference's skip of unknown sample columns).
+    * ([[sampleIds]]; `None` keeps the column index, and columns absent
+    * from a given map are dropped).
     * `intraBatchDedup`: apply the (rgd_id, sample_id) first-wins window —
     * required only when the batch contains same-key duplicate records
     * ([[loadFromAlleles]] detects that and passes it accordingly). */
   def sampleDetails(variants: DataFrame, existingDetails: DataFrame,
-      config: LoadConfig, sampleIdByIdx: Map[Int, Int] = Map.empty,
+      config: LoadConfig, sampleIdByIdx: Option[Map[Int, Int]] = None,
       intraBatchDedup: Boolean = true): DataFrame = {
     // J7 melt + P9-P11 + §2.7 as one native expression over the raw
     // blobs: each blob is walked once, hom-ref/no-call genotypes allocate

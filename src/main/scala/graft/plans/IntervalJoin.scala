@@ -50,9 +50,9 @@ final class ChromIndex(
  * enumeration form (`GenicAnnotator.overlappingGenes` surface); the
  * existence form stays an expression ([[graft.functions.IntervalExpressions]]).
  *
- * Install once per session: `IntervalJoin.install(spark)` (adds the
- * strategy to `spark.experimental.extraStrategies`); build plans with
- * [[IntervalJoin.join]].
+ * The planner strategy comes with the session's SQL extensions
+ * (`spark.sql.extensions=graft.sql.GraftSqlExtensions`, set by
+ * [[graft.GraftSession]]); build plans with [[IntervalJoin.join]].
  */
 object IntervalJoin {
 
@@ -248,17 +248,17 @@ object IntervalJoin {
     }
   }
 
-  /** Adds the strategy to the session (idempotent). */
-  def install(spark: SparkSession): Unit =
-    ColumnBridge.addStrategy(spark, Strategy)
-
   /**
    * Interval join of `left` (chromosome, start_pos, end_pos, ...) against
    * `right` (g_chrom, g_start, g_stop, ...): one row per overlapping
-   * pair, left columns then right columns.
+   * pair, left columns then right columns. The session must carry
+   * [[graft.sql.GraftSqlExtensions]], which plans the join.
    */
   def join(spark: SparkSession, left: DataFrame, right: DataFrame): DataFrame = {
-    install(spark)
+    if (!ColumnBridge.plansWith(spark, Strategy))
+      throw new IllegalStateException("IntervalJoin needs the graft planner " +
+        "strategy: build the session with spark.sql.extensions=" +
+        "graft.sql.GraftSqlExtensions (graft.GraftSession does)")
     ColumnBridge.ofRows(spark, IntervalJoinPlan(
       ColumnBridge.analyzedPlan(left), ColumnBridge.analyzedPlan(right)))
   }

@@ -1170,8 +1170,8 @@ object Battery {
     * 8 dims are zeroed (cosine ≥0.80 to its source, ≤0.62 to everything
     * else — measured at both test SFs). At threshold 0.70 the answer is
     * exactly the planted pairs; the LSH candidate pass must reach recall
-    * 1.0 (deterministic, seeded hyperplanes — parameters swept with
-    * graft.tools.TuneLsh) and the exact-cosine verify step makes the
+    * 1.0 (deterministic, seeded hyperplanes — parameters swept,
+    * NOTES) and the exact-cosine verify step makes the
     * output equal the DuckDB all-pairs oracle. */
   val q41LshDedup: Q = (s, dir) => {
     val emb = t(s, dir, "embeddings")
@@ -5555,7 +5555,7 @@ WHERE rk <= 40"""
     // the 64 md5 base pixels are frame-independent: hoist them to ONE
     // aliased array per doc BELOW the frame explode (r20 — inlined,
     // the interpreted-lambda md5s ran once per FRAME, 3x the work;
-    // VideoProbe: 0.82 -> 0.41 s, pixel parity exact)
+    // r20: 0.82 -> 0.41 s, pixel parity exact)
     // (r21) the 64 base pixels come from the fused md5-byte kernel (one
     // native pass; the transform+md5+conv chain was interpreted), and
     // the per-frame shift touches only the first 2f elements, so the
@@ -6508,7 +6508,7 @@ WHERE rk <= 40"""
     // native store init dominates when state is a few thousand rows);
     // the default HDFS-backed store stays. At production state sizes
     // the trade reverses — that's a deployment conf, not a harness one.
-    // 8 vs 4 vs 2 re-measured (r16, TimeQ steady-state on
+    // 8 vs 4 vs 2 re-measured (r16, same-JVM steady-state on
     // q153/q152/q158): identical within noise — below 8 partitions the
     // cost floor is per-OPERATOR commit overhead, not partition count.
     // The env knob stays for deployment experiments.

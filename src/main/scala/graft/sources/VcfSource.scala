@@ -63,10 +63,13 @@ object VcfSource {
       Iterator.continually(in.readLine())
         .takeWhile(l => l != null && l.startsWith("#"))
         .find(_.startsWith("#CHROM"))
+        .map(sampleNames)
         .getOrElse(throw new IllegalArgumentException(s"no #CHROM header in $first"))
-        .split("\t").drop(9).toSeq
     } finally in.close()
   }
+
+  /** The sample names of a `#CHROM` header line: its columns after FORMAT. */
+  def sampleNames(chromLine: String): Seq[String] = chromLine.split("\t").drop(9).toSeq
 
   /**
    * Parses VCF records into a DataFrame:
@@ -111,33 +114,5 @@ object VcfSource {
       field(7).as("info"),
       field(8).as("format"),
       VcfExpressions.tabTail(col("value"), 9).as("genotypes"))
-  }
-
-  /**
-   * Parses the FORMAT blob of every genotype column (P11,
-   * HrdpVariants.java:292-294,466-475) into
-   * `genotypes: array<struct<sample_idx:int, gt:string, ad:array<int>,
-   * dp:int>>` where `sample_idx` is 0-based over the header's sample
-   * columns, `ad(0)` is the ref depth and `ad(j+1)` the depth of ALT allele
-   * j. A non-numeric DP (".") becomes null — the reference's carry-over of
-   * the previous sample's depth (:470-475) is an order-dependent quirk we
-   * deliberately correct (model.CompatFlags.carryOverDotDepth).
-   */
-  def withParsedGenotypes(df: DataFrame): DataFrame = {
-    val parsed = transform(
-      split(col("genotypes"), "\t", -1),
-      (g, i) => {
-        val parts = split(g, ":")
-        // try_* variants, not plain cast/element_at: a "./." blob carries no
-        // AD/DP and a "." depth is non-numeric — both must become null, and
-        // Spark 4's default ANSI mode makes the plain forms throw instead.
-        struct(
-          i.cast("int").as("sample_idx"),
-          element_at(parts, 1).as("gt"),
-          transform(split(try_element_at(parts, lit(2)), ","),
-            d => d.try_cast("int")).as("ad"),
-          try_element_at(parts, lit(3)).try_cast("int").as("dp"))
-      })
-    df.withColumn("genotypes", parsed)
   }
 }

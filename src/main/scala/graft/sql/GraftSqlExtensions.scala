@@ -23,12 +23,10 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType,
  * rule converts the resolved command into a runnable one before the
  * v2-only checks fire).
  *
- * Install at session build (extensions bind at construction):
- * {{{
- *   SparkSession.builder()
- *     .config("spark.sql.extensions", "graft.sql.GraftSqlExtensions")
- *     // or .withExtensions(new GraftSqlExtensions()(_))
- * }}}
+ * Installed at session build (extensions bind at construction) by
+ * [[graft.GraftSession]], which sets
+ * `spark.sql.extensions=graft.sql.GraftSqlExtensions`; the same
+ * extensions also plan [[graft.plans.IntervalJoin]].
  *
  * Supported shapes (anything else is refused with a typed error, never
  * silently narrowed):
@@ -115,6 +113,8 @@ class GraftSqlExtensions extends (SparkSessionExtensions => Unit) {
     // through CREATE TEMP VIEW ... USING graft-layout
     ext.injectTableFunction(GraftTvf.table)
     ext.injectTableFunction(GraftTvf.tableSince)
+    // the interval-overlap join operator (graft.plans.IntervalJoin.join)
+    ext.injectPlannerStrategy(_ => graft.plans.IntervalJoin.Strategy)
   }
 }
 

@@ -87,7 +87,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
  * 100 TB: nothing here is driver-bound — batches shuffle once on the
  * key (the range partition), compaction reads only the small tail, and
  * the table serves statistics-pruned scans the whole time (the
- * LayoutProbe numbers: a thin slice materializes 1/64 of a clustered
+ * r12 layout-probe numbers, NOTES: a thin slice materializes 1/64 of a clustered
  * table vs all of a time-ordered one).
  */
 object LayoutIngest extends org.apache.spark.internal.Logging {
@@ -149,8 +149,8 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
   val BatchCol = "__batch"
 
   /** `curve`: "zorder" (any dims) or "hilbert" (≥2 dims, the Skilling
-    * N-dim form — tighter locality at the same grid; the LayoutProbe
-    * numbers). A table property like the rest of the grid: every
+    * N-dim form — tighter locality at the same grid; the r12
+    * layout-probe numbers in NOTES). A table property like the rest of the grid: every
     * writer keys with the same curve forever.
     *
     * `bloomCols`: long- or string-typed columns to carry a per-unit
@@ -1277,7 +1277,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
    * axis-aligned box on the clustered columns are removed by rewriting
    * ONLY the data dirs whose parquet footer statistics intersect the
    * box. On a clustered table a thin box touches a handful of dirs
-   * (the LayoutProbe numbers); a time-ordered table would rewrite
+   * (the r12 layout-probe numbers); a time-ordered table would rewrite
    * everything. Each affected dir rewrites through the SAME WAL
    * manifest as [[compact]] (stage the filtered copy, record
    * (target, source, COMMIT), publish by rename, drop the source) —
@@ -3598,7 +3598,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     * reads) during planning: the decisions are per-unit independent
     * and each costs one small remote read, so at 100 TB unit counts a
     * SERIAL driver walk is the planning bottleneck the sidecars were
-    * built to avoid (the StatsProbe lesson, one level up — reading
+    * built to avoid (the sidecar planning-cost lesson, one level up — reading
     * 10⁵ sidecars one at a time is as bad as opening 10⁵ footers).
     * Daemon threads; sized for metadata-read latency hiding, not CPU.
     * Caches (stats/bloom LRUs) are synchronized; Hadoop FileSystem
@@ -4431,7 +4431,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
    * Box scan with FILE-LEVEL pruning — the read-side twin of
    * [[deleteBox]], and the piece Spark's own reader does not do:
    * parquet scans skip row GROUPS from footer statistics but still
-   * list and open every file (LayoutProbe measured scanFiles = all in
+   * list and open every file (the r12 layout probe measured scanFiles = all in
    * every layout). On a clustered table the per-dir statistics are
    * decisive, so dirs disjoint from the box are dropped BEFORE the
    * DataFrame is built — the reader never touches them at all (the

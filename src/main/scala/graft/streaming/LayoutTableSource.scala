@@ -33,7 +33,7 @@ import org.apache.spark.sql.types.StructType
   *    sidecar-pruned scan as readSince, so each micro-batch opens
   *    only the units whose batch span intersects the range (a tail
   *    poll on a 100 TB table reads the tail, not the history;
-  *    CdcProbe's 3.5%-of-bytes number).
+  *    a tail poll opened 3.5% of table bytes, NOTES).
   *  - Exactly-once comes from Spark's checkpoint: offsets are durable
   *    in the consumer's checkpoint, batches are re-served
   *    deterministically on replay (units are write-once and the

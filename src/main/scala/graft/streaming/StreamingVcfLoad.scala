@@ -4,6 +4,7 @@ import graft.model.LoadConfig
 import graft.operators.VariantLoader
 import graft.sources.{VariantStore, VcfSource}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /**
@@ -57,6 +58,7 @@ object StreamingVcfLoad {
     val writer = lines.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val sampleIds = VariantLoader.sampleIds(config.sampleDict, batchSamples(batch))
         val result = VariantLoader.loadFromAlleles(
           spark,
           VariantLoader.normalizedAllelesFromRecords(
@@ -65,7 +67,8 @@ object StreamingVcfLoad {
           VariantStore.variants(spark, storeDir),
           VariantStore.detailKeys(spark, storeDir),
           config.copy(rgdIdSeed =
-            VariantStore.maxRgdId(spark, storeDir, config.rgdIdSeed)))
+            VariantStore.maxRgdId(spark, storeDir, config.rgdIdSeed)),
+          sampleIds)
         VariantStore.append(result, storeDir)
         result.unpersist()
         compactEvery.foreach { n =>
@@ -74,5 +77,16 @@ object StreamingVcfLoad {
       }
     (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer)
       .start()
+  }
+
+  /** Sample names of a micro-batch's `#CHROM` line. Sample ids resolve per
+    * header column, so a batch whose files disagree on the header is
+    * refused; a batch without one has no sample columns to name. */
+  private def batchSamples(batch: DataFrame): Seq[String] = {
+    val headers = batch.filter(col("value").startsWith("#CHROM")).distinct()
+      .collect().map(_.getString(0))
+    require(headers.length <= 1,
+      "micro-batch files disagree on the #CHROM header: " + headers.mkString(" | "))
+    headers.headOption.toSeq.flatMap(VcfSource.sampleNames)
   }
 }

@@ -1,7 +1,7 @@
 package graft.tools
 
+import graft.GraftSession
 import graft.operators._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
@@ -15,14 +15,7 @@ import org.apache.spark.sql.functions._
 object CorpusDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("local[4]", 4)
     try {
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")

@@ -1,7 +1,7 @@
 package graft.tools
 
+import graft.GraftSession
 import graft.streaming.LayoutIngest
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end drive of the clustered-table surface on the real event
@@ -18,15 +18,7 @@ import org.apache.spark.sql.functions._
 object LakehouseDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // SQL DELETE FROM / MERGE INTO routing (stage 14)
-      .config("spark.sql.extensions", "graft.sql.GraftSqlExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("local[8]", 8)
     import spark.implicits._
 
     val base = java.nio.file.Files.createTempDirectory("lakehouse-demo")

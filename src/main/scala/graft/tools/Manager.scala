@@ -1,9 +1,9 @@
 package graft.tools
 
+import graft.GraftSession
 import graft.model.LoadConfig
 import graft.operators.{GenicQcJob, VariantLoader}
 import graft.sources.VariantStore
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /**
@@ -28,22 +28,8 @@ object Manager {
         k.stripPrefix("--") -> v
     }.toMap
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .appName("graft-variant-manager")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // NOTE the objectHashAggregate sort-based fallback threshold stays
-      // at its default here (Verify/Bench raise it for the battery's
-      // small-group typed aggregates): the load has no such aggregate.
-      // Its detail dedup is a row_number window (VariantLoader
-      // .sampleDetails) because a struct-min aggregate over MILLIONS of
-      // near-unique keys measured 127 s of GC thrash against ~12 s
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(sys.env.getOrElse("SPARK_MASTER", "local[32]"),
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, Some("graft-variant-manager"))
 
     val started = System.currentTimeMillis()
     try {

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.GraftSession
 import graft.queries.Battery
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -205,23 +206,11 @@ object ScaleProbe {
     require(Set("bijection", "heaps")(textMode),
       s"textMode in {bijection, heaps}, got $textMode")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val queries = if (args.nonEmpty) args.toSeq
       else Seq("q40_ngram_jaccard", "q69_edit_join", "q83_banded_dedup",
         "q89_ann_rerank", "q99_containment", "q115_bpe_pack",
         "q126_bitext_mine", "q141_knn_join")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.sql.GraftSqlExtensions")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "10000000")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.battery()
 
     val (fsys, probe) = (new org.apache.hadoop.fs.Path(out))
       .getFileSystem(spark.sessionState.newHadoopConf()) ->

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.GraftSession
 import graft.operators.Dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -56,18 +57,7 @@ object SkewProbe {
     val familySize = sys.env.getOrElse("SPARK_GRAFT_SKEW_FAMILY", "5000").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt
     val runAllPairs = sys.env.getOrElse("SPARK_GRAFT_SKEW_ALLPAIRS", "1") == "1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "10000000")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.battery()
 
     val plain = spark.read.parquet(s"$base/documents.parquet")
       .select("doc_id", "text")

@@ -1,9 +1,9 @@
 package graft.tools
 
+import graft.GraftSession
 import graft.model.LoadConfig
 import graft.sources.VariantStore
 import graft.streaming.StreamingVcfLoad
-import org.apache.spark.sql.SparkSession
 
 /**
  * Streaming-ingestion throughput probe: points [[StreamingVcfLoad]] at a
@@ -33,18 +33,8 @@ object StreamLoadBench {
     val Array(watchDir, genesPath, storeDir, checkpoint) = args.take(4)
     val mapKey = args.lift(4).map(_.toInt).getOrElse(372)
     val mfpt = args.lift(5).map(_.toInt).getOrElse(1)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .appName("graft-stream-bench")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // see Manager: the loader's struct-min dedup WANTS the sort-based
-      // object-agg fallback (millions of near-unique keys)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(sys.env.getOrElse("SPARK_MASTER", "local[32]"),
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, Some("graft-stream-bench"))
     try {
       val genes = spark.read.parquet(genesPath)
       val t0 = System.currentTimeMillis()

@@ -1,87 +1,51 @@
 package graft.tools
 
-import graft.functions.VariantColumns
-import graft.operators.GenicAnnotator
-import graft.sources.VcfSource
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import graft.GraftSession
+import graft.model.LoadConfig
+import graft.operators.{GenicAnnotator, VariantLoader}
+import graft.sources.{VariantStore, VcfSource}
 
 /**
- * Usage example / smoke driver: parse a (gzipped) VCF through the public
- * API — source → explode alleles → normalize → genic-annotate → zygosity —
- * and print each stage.
+ * Usage example / smoke driver: runs a (gzipped) VCF through the public
+ * API — source → explode alleles → normalize → genic-annotate → full
+ * load with the zygosity-carrying sample melt — and prints each stage.
  *
  *   sbt "runMain graft.tools.VcfDemo /path/to/file.vcf.gz"
  */
 object VcfDemo {
   def main(args: Array[String]): Unit = {
     val path = args.headOption.getOrElse("/tmp/graft-verify/sample.vcf.gz")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-vcf-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession("local[4]", 4, Some("graft-vcf-demo"))
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 
     println("=== header samples ===")
     println(VcfSource.headerSamples(spark, path).mkString(", "))
 
-    val recs = VcfSource.withParsedGenotypes(VcfSource.records(spark, path))
     println("=== parsed records ===")
-    recs.show(20, truncate = false)
+    VcfSource.records(spark, path).show(20, truncate = false)
 
-    val norm = recs
-      .filter(VariantColumns.keepContig($"chrom"))
-      .withColumn("chromosome", VariantColumns.normalizeChromosome($"chrom"))
-      .select($"chromosome", $"pos", $"rs_id", $"ref",
-        posexplode(split($"alt", ",")).as(Seq("allele_idx", "allele")),
-        $"genotypes")
-      .withColumn("n", VariantColumns.normalizeAllele($"pos", $"ref", $"allele"))
-      .select($"chromosome", $"rs_id", $"allele_idx", $"n.*", $"genotypes")
+    val cfg = LoadConfig(mapKey = 372,
+      sampleDict = Map("ACI_EurMcwi_2019NG" -> 11, "BN_NHsdMcwi_2019NG" -> 22),
+      rgdIdSeed = 5000L)
+    val norm = VariantLoader.normalizedAlleles(spark, path, cfg)
     println("=== normalized variants ===")
     norm.drop("genotypes").orderBy("start_pos").show(20, truncate = false)
 
     val genes = Seq((1, "1", 90L, 110L), (2, "1", 350L, 450L),
       (3, "MT", 1L, 1000L))
       .toDF("gene_rgd_id", "chromosome", "start_pos", "stop_pos")
-    for ((label, annotate) <- Seq(
-        "indexed" -> ((v: org.apache.spark.sql.DataFrame,
-          g: org.apache.spark.sql.DataFrame) => GenicAnnotator.annotateIndexed(v, g)),
-        "binned" -> ((v: org.apache.spark.sql.DataFrame,
-          g: org.apache.spark.sql.DataFrame) => GenicAnnotator.annotateBinned(v, g)),
-        "broadcast" -> GenicAnnotator.annotateBroadcast _)) {
-      println(s"=== genic ($label) ===")
-      annotate(norm.drop("genotypes"), genes)
-        .orderBy("start_pos", "variant_type").show(20, truncate = false)
-    }
+    println("=== genic ===")
+    GenicAnnotator.annotateIndexed(norm.drop("genotypes"), genes)
+      .orderBy("start_pos", "variant_type").show(20, truncate = false)
 
     println("=== full load pipeline (E1) ===")
-    val emptyStore = Seq.empty[(Long, String, Long, Long, Option[String],
-        Option[String], String, Option[String], Option[String], String, Int,
-        Int)]
-      .toDF(graft.operators.VariantLoader.variantCols: _*)
-    val emptyDetails = Seq.empty[(Long, Int)].toDF("rgd_id", "sample_id")
-    val cfg = graft.model.LoadConfig(mapKey = 372,
-      sampleDict = Map("ACI_EurMcwi_2019NG" -> 11, "BN_NHsdMcwi_2019NG" -> 22),
-      rgdIdSeed = 5000L)
-    val loaded = graft.operators.VariantLoader.load(
-      spark, path, genes, emptyStore, emptyDetails, cfg)
+    val loaded = VariantLoader.load(spark, path, genes,
+      VariantStore.emptyVariants(spark),
+      Seq.empty[(Long, Int)].toDF("rgd_id", "sample_id"), cfg)
     loaded.variants.orderBy("start_pos").show(20, truncate = false)
+    println("=== sample details with zygosity ===")
     loaded.sampleDetails.orderBy("rgd_id", "sample_id").show(30, truncate = false)
-
-    println("=== zygosity on melted samples ===")
-    norm.select($"chromosome", $"start_pos", $"allele_idx", $"variant_type",
-        explode($"genotypes").as("g"))
-      .filter(!coalesce($"g.gt", lit("")).isin("0/0", "./."))
-      .withColumn("var_freq", try_element_at($"g.ad", $"allele_idx" + 2))
-      .withColumn("z", VariantColumns.zygosity($"var_freq", $"g.dp", lit("U"),
-        $"chromosome"))
-      .select($"chromosome", $"start_pos", $"allele_idx", $"g.sample_idx",
-        $"var_freq", $"g.dp", $"z.*")
-      .orderBy("start_pos", "sample_idx", "allele_idx")
-      .show(30, truncate = false)
 
     spark.stop()
   }

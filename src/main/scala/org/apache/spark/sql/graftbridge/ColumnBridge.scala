@@ -76,12 +76,9 @@ object ColumnBridge {
       .internalCreateDataFrame(rows, df.schema, isStreaming = false)
   }
 
-  /** Adds a planner strategy to the session (idempotent). */
-  def addStrategy(spark: org.apache.spark.sql.SparkSession,
-      strategy: org.apache.spark.sql.execution.SparkStrategy): Unit = {
-    val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .experimental
-    if (!exp.extraStrategies.contains(strategy))
-      exp.extraStrategies = exp.extraStrategies :+ strategy
-  }
+  /** Whether the session's planner runs `strategy`. */
+  def plansWith(spark: org.apache.spark.sql.SparkSession,
+      strategy: org.apache.spark.sql.execution.SparkStrategy): Boolean =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.planner.strategies.contains(strategy)
 }

@@ -154,6 +154,31 @@ class IntervalJoinSpec extends SparkSpec {
     assert(indexed.exists(_._2 == "GENIC") && indexed.exists(_._2 == "INTERGENIC"))
   }
 
+  test("a GraftSession session plans IntervalJoinExec with no install call") {
+    val classicSpark = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    assert(classicSpark.experimental.extraStrategies.isEmpty)
+    val plan = IntervalJoin.join(spark, variants, genes).queryExecution.executedPlan
+    assert(plan.collect { case e: IntervalJoin.IntervalJoinExec => e }.size == 1)
+  }
+
+  test("a session without the graft extensions gets a named error") {
+    // Spark applies spark.sql.extensions to every session it builds on a
+    // context, so a session without them is constructed directly
+    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val ctor = classOf[org.apache.spark.sql.classic.SparkSession]
+      .getDeclaredConstructors.find(_.getParameterCount == 6).get
+    ctor.setAccessible(true)
+    val bare = ctor.newInstance(classic.sparkContext, Some(classic.sharedState), None,
+      new org.apache.spark.sql.SparkSessionExtensions, Map.empty[String, String],
+      Map.empty[String, String]).asInstanceOf[org.apache.spark.sql.SparkSession]
+    val v = bare.range(3).selectExpr("'1' AS chromosome", "id AS start_pos",
+      "id + 1 AS end_pos")
+    val g = bare.range(3).selectExpr("'1' AS g_chrom", "id AS g_start",
+      "id + 1 AS g_stop")
+    val e = intercept[IllegalStateException](IntervalJoin.join(bare, v, g))
+    assert(e.getMessage.contains("spark.sql.extensions"))
+  }
+
   test("boundary semantics: touching intervals overlap (GeneCache.java:72-77)") {
     val v = Seq((1L, "1", 100L, 200L)).toDF("vid", "chromosome", "start_pos",
       "end_pos")

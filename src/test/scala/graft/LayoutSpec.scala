@@ -281,8 +281,8 @@ class LayoutSpec extends SparkSpec {
       "materializes a fraction of the rows a linear layout reads") {
     // deterministic 2-D data, 16 files; a thin non-leading-column
     // slice. The LIVE FileSourceScanExec metric (rows materialized
-    // after row-group skipping) is the gate — LayoutProbe's r12
-    // measurement turned into a permanent regression spec.
+    // after row-group skipping) is the gate — the r12 layout probe's
+    // measurement (probe last in 53a609c) turned into a permanent regression spec.
     val rnd = new scala.util.Random(7)
     val pts = (0L until 20000L).map(i =>
       (i, rnd.nextInt(1024).toLong, rnd.nextInt(1024).toLong))

@@ -7,22 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
 object SparkSpec {
   lazy val spark: SparkSession = session("local[4]")
 
-  /** The suites' session configuration on the given master. */
-  def session(master: String): SparkSession = {
-    val s = SparkSession.builder()
-      .master(master)
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet stores TIMESTAMP(NANOS) — same conf as Verify/Bench
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // SQL DML on the clustered table (DELETE/MERGE routing)
-      .config("spark.sql.extensions", "graft.sql.GraftSqlExtensions")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The suites' session on the given master: the shipped configuration
+    * ([[GraftSession]]) with four shuffle partitions. */
+  def session(master: String): SparkSession =
+    GraftSession(master, 4, Some("graft-test"))
 }
 
 abstract class SparkSpec extends AnyFunSuite {

@@ -247,7 +247,7 @@ class StoreInvarianceSpec extends SparkSpec {
       val variants = Seq((5L, "1", 1234L, 0, "0/1:3,4:7\t1/1:0,9:9"))
         .toDF("rgd_id", "chromosome", "start_pos", "allele_idx", "genotypes")
       assertOneExchange(VariantLoader.sampleDetails(variants,
-        VariantStore.detailKeys(spark, dir), config, Map(0 -> 101, 1 -> 102),
+        VariantStore.detailKeys(spark, dir), config, Some(Map(0 -> 101, 1 -> 102)),
         intraBatchDedup = true))
     } finally {
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")

@@ -12,11 +12,52 @@ import org.apache.spark.sql.functions._
 class StreamingVcfLoadSpec extends SparkSpec {
   import spark.implicits._
 
-  private def writeVcf(dir: String, name: String, rows: Seq[String]): Unit = {
+  private def writeVcf(dir: String, name: String, rows: Seq[String],
+      samples: Seq[String] = Seq("S1")): Unit = {
     val body =
-      ("#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tS1" +: rows)
-        .mkString("", "\n", "\n")
+      (("#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT" +: samples)
+        .mkString("\t") +: rows).mkString("", "\n", "\n")
     Files.write(Paths.get(dir, name), body.getBytes("UTF-8"))
+  }
+
+  private val genes1 = Seq((1, "1", 90L, 110L))
+    .toDF("gene_rgd_id", "chromosome", "start_pos", "stop_pos")
+
+  /** Streams `watch` into a fresh store and returns its detail sample ids. */
+  private def streamedSampleIds(watch: String, dict: Map[String, Int]): Seq[Int] = {
+    val store = Files.createTempDirectory("graft-stream-dict").toString
+    val ckpt = Files.createTempDirectory("graft-ckpt-dict").toString
+    StreamingVcfLoad.start(spark, watch, genes1, store,
+      LoadConfig(mapKey = 372, sampleDict = dict, rgdIdSeed = 100L), ckpt,
+      availableNow = true).awaitTermination()
+    VariantStore.detailKeys(spark, store).select("sample_id").as[Int]
+      .collect().toSeq.sorted
+  }
+
+  test("micro-batches resolve the sample dictionary from their #CHROM line") {
+    val watch = Files.createTempDirectory("graft-watch-dict").toString
+    writeVcf(watch, "a.vcf", Seq(
+      "chr1\t100\t.\tA\tT\t50\tPASS\t.\tGT:AD:DP\t0/1:32,9:41\t0/1:3,4:7",
+      "chr2\t200\t.\tC\tG\t50\tPASS\t.\tGT:AD:DP\t0/0:30,0:30\t1/1:0,30:30"),
+      samples = Seq("S1", "S2"))
+    // no dictionary: the header column index is the sample id
+    assert(streamedSampleIds(watch, Map.empty) == Seq(0, 1, 1))
+    // only the columns the dictionary names
+    assert(streamedSampleIds(watch, Map("S2" -> 22, "OTHER" -> 5)) == Seq(22, 22))
+    // a dictionary that names no header column yields no details
+    assert(streamedSampleIds(watch, Map("OTHER" -> 99)).isEmpty)
+  }
+
+  test("a micro-batch whose files disagree on the header is refused") {
+    val watch = Files.createTempDirectory("graft-watch-hdr").toString
+    val row = Seq("chr1\t100\t.\tA\tT\t50\tPASS\t.\tGT:AD:DP\t0/1:32,9:41")
+    writeVcf(watch, "a.vcf", row, samples = Seq("S1"))
+    writeVcf(watch, "b.vcf", row, samples = Seq("S2"))
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      streamedSampleIds(watch, Map("S1" -> 1, "S2" -> 2)))
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+    assert(causes.exists(c => String.valueOf(c.getMessage)
+      .contains("disagree on the #CHROM header")), e)
   }
 
   test("micro-batches load incrementally with cross-file dedup") {

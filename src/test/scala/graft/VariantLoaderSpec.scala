@@ -45,6 +45,24 @@ class VariantLoaderSpec extends SparkSpec {
     LoadConfig(mapKey = 372, sampleDict = Map("S1" -> 11, "S2" -> 22),
       rgdIdSeed = 1000L)
 
+  test("sample dictionary: none keeps column ids, partial keeps mapped, unmatched keeps none") {
+    def details(dict: Map[String, Int]): Set[(Long, Int, Int, Int)] =
+      VariantLoader.load(spark, vcf, genes, emptyStore, emptyDetails,
+        config.copy(sampleDict = dict)).sampleDetails
+        .select("rgd_id", "sample_id", "total_depth", "var_freq")
+        .as[(Long, Int, Int, Int)].collect().toSet
+    val full = details(config.sampleDict)
+    assert(full.map(_._2) == Set(11, 22))
+    // no dictionary: the header column index is the sample id
+    val byIndex = details(Map.empty)
+    assert(byIndex.map { case (r, i, d, f) => (r, Seq(11, 22)(i), d, f) } == full)
+    // only the columns the dictionary names; names absent from the header
+    // are ignored
+    assert(details(Map("S2" -> 22, "OTHER" -> 5)) == full.filter(_._2 == 22))
+    // a dictionary that names no header column yields no details
+    assert(details(Map("OTHER" -> 99)).isEmpty)
+  }
+
   test("fresh load: variants, ids, genic status, details") {
     val r = VariantLoader.load(spark, vcf, genes, emptyStore, emptyDetails,
       config)

@@ -91,17 +91,18 @@ class VcfKernelsSpec extends SparkSpec {
 
   private val emptyDetails = Seq.empty[(Long, Int)].toDF("rgd_id", "sample_id")
 
-  private val dictionaries = Seq(
-    Map.empty[Int, Int],
+  private val dictionaries: Seq[Option[Map[Int, Int]]] = Seq(
+    None,
     // header columns 1 and 4 are outside the dictionary
-    Map(0 -> 11, 2 -> 33, 3 -> -4, 5 -> 0))
+    Some(Map(0 -> 11, 2 -> 33, 3 -> -4, 5 -> 0)))
 
-  private def meltBoth(cases: Seq[MeltCase], ids: Map[Int, Int], intDiv: Boolean)
+  private def meltBoth(cases: Seq[MeltCase], ids: Option[Map[Int, Int]], intDiv: Boolean)
       : (Either[String, Seq[String]], Either[String, Seq[String]]) = {
     val config = LoadConfig(mapKey = 372,
       compat = CompatFlags(intDivisionPercentRead = intDiv))
+    // the legacy chain reads an empty map as "no dictionary"
     (outcome(LegacyVcfChains.sampleDetails(legacyVariants(cases), emptyDetails,
-        config, ids, intraBatchDedup = false)),
+        config, ids.getOrElse(Map.empty), intraBatchDedup = false)),
       outcome(VariantLoader.sampleDetails(kernelVariants(cases), emptyDetails,
         config, ids, intraBatchDedup = false)))
   }
@@ -142,7 +143,7 @@ class VcfKernelsSpec extends SparkSpec {
       ((0, Some(Seq("0/1:0,-2147483648:-1"))), false, true),
       ((0, Some(Seq("0/1:0,20000000:1"))), false, false))
     for ((c, intDiv, fails) <- cases) {
-      val (legacy, kernel) = meltBoth(Seq(c), Map.empty, intDiv)
+      val (legacy, kernel) = meltBoth(Seq(c), None, intDiv)
       assert(legacy.isLeft == fails, s"$c intDivision=$intDiv: $legacy")
       assert(kernel == legacy, s"$c intDivision=$intDiv")
     }
