@@ -6748,7 +6748,7 @@ WHERE rk <= 40"""
   }
 
   /** RIGHT-TO-BE-FORGOTTEN on the streamed clustered table
-    * ([[graft.streaming.LayoutIngest.deleteBox]]): q161's ingest into
+    * ([[graft.streaming.LayoutIngest.delete]]): q161's ingest into
     * a separate corpus-keyed table, then a targeted delete of a 2%
     * user slice — the delete rewrites ONLY the data dirs whose parquet
     * footer statistics intersect the box (the layout paying off on
@@ -6792,10 +6792,10 @@ WHERE rk <= 40"""
     // replays ((mx-mn)*49//100 — floor division, non-negative)
     val grid = graft.streaming.LayoutIngest.readGrid(s, tableDir)
     val (umn, umx) = grid.bounds.head
-    graft.streaming.LayoutIngest.deleteBox(s, tableDir,
-      Seq(("user_id",
+    graft.streaming.LayoutIngest.delete(s, tableDir,
+      graft.streaming.LayoutIngest.DmlTarget.Boxes(Seq(Seq(("user_id",
         umn + (umx - umn) * 49 / 100,
-        umn + (umx - umn) * 51 / 100)), deleteId = 1L)
+        umn + (umx - umn) * 51 / 100)))), id = 1L)
     graft.streaming.LayoutIngest.read(s, tableDir)
       .select(col("event_id"), col("zkey"))
   }
@@ -7824,8 +7824,9 @@ WHERE rk <= 40"""
       // ingest ABOVE a gap at 3 (it must keep its individual marker)
       graft.streaming.LayoutIngest.compactMarkers(s, tableDir)
       ing(ev.filter(col("ts_us") >= cut3), 4L)
-      graft.streaming.LayoutIngest.deleteBox(s, tableDir,
-        Seq(("user_id", umn, umn)), deleteId = 7L): Unit
+      graft.streaming.LayoutIngest.delete(s, tableDir,
+        graft.streaming.LayoutIngest.DmlTarget.Boxes(
+          Seq(Seq(("user_id", umn, umn)))), id = 7L): Unit
       // a recorded UPDATE (id 2), then the DML-marker FOLD: both
       // statements' permanent records consolidate into ONE dml-log
       // file and history() must present them EXACTLY as before — the
@@ -7834,10 +7835,11 @@ WHERE rk <= 40"""
       // assignment reads only an UNTOUCHED column — the replayable
       // shape the record-time self-ref gate now requires; only the
       // ledger, never row content, matters to this gate)
-      graft.streaming.LayoutIngest.updateBoxes(s, tableDir,
-        Seq(Seq(("user_id", umn + 1, umn + 1))),
+      graft.streaming.LayoutIngest.update(s, tableDir,
+        graft.streaming.LayoutIngest.DmlTarget.Boxes(
+          Seq(Seq(("user_id", umn + 1, umn + 1)))),
         Seq("value" -> (col("user_id") % 97).cast("double")),
-        updateId = 2L): Unit
+        id = 2L): Unit
       require(graft.streaming.LayoutIngest
           .compactDmlMarkers(s, tableDir) == 2,
         s"$tag premise: the fold must retire exactly del-7 and upd-2")
@@ -7950,8 +7952,9 @@ WHERE rk <= 40"""
         ev.filter(inBox), 0L, tableDir, 1), "q188: batch 0")
       require(graft.streaming.LayoutIngest.ingestBatch(
         ev.filter(!inBox), 1L, tableDir, 4), "q188: batch 1")
-      require(graft.streaming.LayoutIngest.deleteBox(s, tableDir,
-        Seq(("user_id", blo, bhi)), deleteId = 0L), "q188: delete")
+      require(graft.streaming.LayoutIngest.delete(s, tableDir,
+        graft.streaming.LayoutIngest.DmlTarget.Boxes(
+          Seq(Seq(("user_id", blo, bhi)))), id = 0L), "q188: delete")
       // premise: the emptied unit is PHYSICALLY present pre-vacuum
       val unitsBefore = Option(
         new java.io.File(s"$tableDir/data").list()).map(_.length)
@@ -8455,10 +8458,10 @@ WHERE rk <= 40"""
     * entirely through the SQL surface: [[graft.sql.GraftSqlExtensions]]
     * intercepts the analyzed `DeleteFromTable` over the V1 relation
     * (the Delta-style post-hoc resolution pattern) and routes it to
-    * [[graft.streaming.LayoutIngest.deleteBoxNext]]. The statement's
+    * [[graft.streaming.LayoutIngest.dmlNext]]. The statement's
     * conjunctive long ranges (`BETWEEN` over the middle 2% of the user
     * domain, q162's integer arithmetic) translate EXACTLY into the
-    * deleteBox box — pruned WAL-manifested rewrite under the next
+    * delete's box — pruned WAL-manifested rewrite under the next
     * unused delete id — and the table hashes against q162's oracle
     * (events MINUS the slice, keys replayed). A translation that
     * widened or narrowed the box by one user id fails the hash. */
@@ -8567,7 +8570,7 @@ WHERE rk <= 40"""
   }
 
   /** SQL DELETE with a TOP-LEVEL OR — the union-of-boxes surface
-    * ([[graft.streaming.LayoutIngest.deleteBoxes]] behind
+    * ([[graft.streaming.LayoutIngest.delete]] over boxes, behind
     * `DELETE ... WHERE <box> OR <box> OR col IN (...)`): one statement
     * removes the q162 user slice, a disjoint early-time slice AND an
     * IN-list of three mid-domain event ids (the forget-these-ids
@@ -8812,8 +8815,9 @@ WHERE rk <= 40"""
         // sink's batch-0 serve deterministically empty
         require(graft.streaming.LayoutIngest.ingestBatch(
           ev.filter(inBox), 0L, tableDir, 1), "q193: batch 0")
-        require(graft.streaming.LayoutIngest.deleteBox(s, tableDir,
-          Seq(("user_id", blo, bhi)), deleteId = 0L), "q193: delete")
+        require(graft.streaming.LayoutIngest.delete(s, tableDir,
+          graft.streaming.LayoutIngest.DmlTarget.Boxes(
+            Seq(Seq(("user_id", blo, bhi)))), id = 0L), "q193: delete")
         require(Option(new java.io.File(s"$tableDir/data").list())
             .exists(_.length == 1),
           "q193 premise: the emptied unit must be physically present")
@@ -9040,7 +9044,7 @@ WHERE rk <= 40"""
   }
 
   /** SQL UPDATE — the box-scoped in-place REDACTION rewrite
-    * ([[graft.streaming.LayoutIngest.updateBoxes]] behind
+    * ([[graft.streaming.LayoutIngest.update]] over boxes, behind
     * `UPDATE ... SET <payload> WHERE <boxes>`): statement 1 overwrites
     * the mid-time window's values through an expression over the
     * row's UNTOUCHED columns (`value = user_id % 97 + 1` — the
@@ -9464,7 +9468,8 @@ WHERE rk <= 40"""
     * replica catches up, then the source runs
     * `DELETE FROM t WHERE doc_key IN ('ev-a','ev-b','ev-c')` — routed
     * by [[graft.sql.GraftSqlExtensions]] to
-    * [[graft.streaming.LayoutIngest.deleteKeysNext]]. Premises pin
+    * [[graft.streaming.LayoutIngest.dmlNext]] over a key target.
+    * Premises pin
     * the mechanism: ONE `delete_keys` ledger op, the rewrite
     * BLOOM-PRUNED (strictly fewer units rewritten than live — string
     * keys have no stats range, the bloom sidecar is what prunes), and
@@ -9681,7 +9686,7 @@ WHERE rk <= 40"""
   /** KEYED SQL UPDATE — redaction BY DOC ID, the q199 takedown's
     * gentler sibling (null the payload, keep the rows):
     * `UPDATE t SET value = NULL WHERE doc_key IN (...)` routes to
-    * [[graft.streaming.LayoutIngest.updateKeys]] (the `updk` ledger
+    * [[graft.streaming.LayoutIngest.update]] over keys (the `updk` ledger
     * kind), bloom-pruned like the keyed delete and RECORDED with keys
     * AND assignment SQL so `graft_replicate` replays the redaction on
     * the replica. Premises pin ONE `update_keys` op, a bloom-pruned
@@ -9780,7 +9785,8 @@ WHERE rk <= 40"""
     * `DELETE FROM t WHERE doc_key LIKE 'doc-…%'` over a band at the
     * quarter point of the id domain, routed by
     * [[graft.sql.GraftSqlExtensions]] to
-    * [[graft.streaming.LayoutIngest.deleteStrNext]]. Premises pin the
+    * [[graft.streaming.LayoutIngest.dmlNext]] over a string span.
+    * Premises pin the
     * mechanism: ONE `delete_range` ledger op, the rewrite pruned by
     * the per-unit STRING min/max sidecars (strictly fewer units
     * rewritten than live — the lower-quarter band can never reach the
@@ -10624,7 +10630,7 @@ WHERE rk <= 40"""
     // exactly batch 0's slice under q155's formula
     "q190_sql_time_travel" -> (q190SqlTimeTravel, Some(q190Sql)),
     // q191: one DELETE statement with a top-level OR removes the
-    // union of two boxes in ONE ledger op (deleteBoxes)
+    // union of two boxes in ONE ledger op (one box-target delete)
     "q191_sql_delete_or" -> (q191SqlDeleteOr, Some(q191Sql)),
     // q192: conditional MERGE (same source-only condition on both
     // actions) ≡ the parity-gated DuckDB twin

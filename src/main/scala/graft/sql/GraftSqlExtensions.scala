@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType,
 
 /**
  * SQL DML for the clustered table: `DELETE FROM` and `MERGE INTO`
- * over a `graft-layout` temp view route to [[LayoutIngest.deleteBox]]
+ * over a `graft-layout` temp view route to [[LayoutIngest.delete]]
  * and [[LayoutIngest.mergeRows]] — the relation stays a V1
  * `PrunedFilteredScan` (see the trade-off note on
  * [[LayoutTableRelation]]) and the statements are intercepted as a
@@ -34,7 +34,7 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType,
  *  - `DELETE FROM t [WHERE <box> [OR <box>]...]` — each disjunct must
  *    be a conjunction of `=`, `<`, `<=`, `>`, `>=`, `BETWEEN` over
  *    LONG columns and integral literals (exactly the
- *    [[LayoutIngest.deleteBox]] box contract, translated EXACTLY —
+ *    [[LayoutIngest.DmlTarget.Boxes]] contract, translated EXACTLY —
  *    `>`/`<` shift by one, integers make open bounds closed), or a
  *    whole `col IN (literals)` (one point box per value — the
  *    forget-these-ids statement), or a whole NEGATED point shape —
@@ -43,13 +43,14 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType,
  *    complement intervals on the long domain (NULL column values stay
  *    kept, matching SQL's three-valued NOT). A top-level OR of such
  *    disjuncts runs as ONE union-of-boxes delete
- *    ([[LayoutIngest.deleteBoxes]]: one ledger entry, at most one
+ *    ([[LayoutIngest.delete]]: one ledger entry, at most one
  *    rewrite per affected unit, overlap harmless). No WHERE deletes
- *    every row. Runs under the next unused delete id
- *    ([[LayoutIngest.deleteBoxesNext]]).
+ *    every row. Every DELETE and UPDATE runs under the next unused id
+ *    of its target's kind ([[LayoutIngest.dmlNext]]), classified by
+ *    [[DmlTranslate.target]].
  *  - `DELETE FROM t WHERE <stringCol> = '...' / IN (...)` (and
  *    top-level ORs of those over ONE string column) — the doc-id
- *    TAKEDOWN statement, routed to [[LayoutIngest.deleteKeysNext]]:
+ *    TAKEDOWN statement, a [[LayoutIngest.DmlTarget.Keys]] target:
  *    Bloom-sidecar-pruned unit rewrite (declare the column in
  *    `Grid.bloomCols`), one `delk-<id>` ledger entry recording every
  *    key, replayed on replicas by `graft_replicate`. NULL literals
@@ -82,7 +83,7 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType,
  *    Runs under the next unused ledger id
  *    ([[LayoutIngest.mergeRowsNext]], safe next to txn streams).
  *  - `UPDATE t SET <payload> = <expr over the row> [WHERE <boxes>]` —
- *    the in-place REDACTION rewrite ([[LayoutIngest.updateBoxes]]):
+ *    the in-place REDACTION rewrite ([[LayoutIngest.update]]):
  *    the WHERE meets the same union-of-boxes contract as DELETE, the
  *    assignments target flat payload columns only (grid columns and
  *    the cluster key decide where a row LIVES — row moves stay a
@@ -91,8 +92,10 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType,
  *    pre-update columns. Only stats-intersecting units rewrite; one
  *    `upd-<id>` ledger entry per statement. A WHERE that is a string
  *    point shape (`<stringCol> = '...'` / `IN (...)`) routes to the
- *    KEYED update instead ([[LayoutIngest.updateKeys]] — redaction by
- *    doc id, bloom-pruned, `updk-<id>`, replayed on replicas).
+ *    KEYED update instead (a `Keys` target — redaction by doc id,
+ *    bloom-pruned, `updk-<id>`, replayed on replicas); string
+ *    prefix/range shapes to a `StrSpan` target (`dels`/`upds`), as
+ *    for DELETE.
  */
 class GraftSqlExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -287,42 +290,19 @@ private[graft] class GraftDmlRule(session: SparkSession)
     case d @ DeleteFromTable(t @ LayoutTarget(rel), cond)
         if d.resolved =>
       refuseProvenance(rel, "DELETE")
-      // STRING point shapes (= / IN over one string column — the
-      // doc-id takedown) route to the keyed delete; string PREFIX /
-      // RANGE shapes (LIKE 'p%', BETWEEN — the domain takedown) to
-      // the string-range delete; everything else takes the long-box
-      // translation
-      DmlTranslate.strKeyDelete(cond, t.outputSet) match {
-        case Some((keyCol, keys)) =>
-          GraftDeleteKeysCommand(rel.tableDir, keyCol, keys)
-        case None =>
-          DmlTranslate.strRangeDelete(cond, t.outputSet) match {
-            case Some((c, shape)) =>
-              GraftDeleteStrRangeCommand(rel.tableDir, c, shape)
-            case None =>
-              // a governance-sized LONG IN list above the cutover
-              // takes the keyed path too (bloom probes beat N point
-              // boxes); small lists keep the box history kind
-              DmlTranslate.longKeyDelete(cond, t.outputSet) match {
-                case Some((c, keys)) =>
-                  GraftDeleteLongKeysCommand(rel.tableDir, c, keys)
-                case None =>
-                  GraftDeleteCommand(rel.tableDir,
-                    DmlTranslate.toBoxes(cond, t.outputSet))
-              }
-          }
-      }
+      GraftDmlCommand(rel.tableDir, DmlTranslate.target(cond, t.outputSet),
+        Nil)
     case m: MergeIntoTable => m.targetTable match {
       case t @ LayoutTarget(rel) if m.resolved =>
         refuseProvenance(rel, "MERGE INTO")
         DmlTranslate.toMergeCommand(m, t, rel)
       case _ => plan
     }
-    // UPDATE = the box-scoped in-place REDACTION rewrite
-    // ([[LayoutIngest.updateBoxes]]): payload assignments over the
-    // row's own values, condition = the same union-of-boxes contract
-    // as DELETE. Key/row-moving updates stay refused (the whole-row
-    // upsert is the correction surface for those).
+    // UPDATE = the in-place REDACTION rewrite
+    // ([[LayoutIngest.update]]): payload assignments over the row's
+    // own values, condition = the same [[DmlTranslate.target]]
+    // classification as DELETE. Key/row-moving updates stay refused
+    // (the whole-row upsert is the correction surface for those).
     case u @ UpdateTable(t @ LayoutTarget(rel), assigns, cond)
         if u.resolved =>
       refuseProvenance(rel, "UPDATE")
@@ -376,14 +356,14 @@ private[graft] object DmlTranslate {
   /** STRING-keyed DELETE detection: a condition that is entirely
     * point shapes over ONE string column — `c = 'v'`, `c IN (...)`,
     * and top-level ORs of those (the doc-id takedown statement) —
-    * yields (column, keys) for [[GraftDeleteKeysCommand]]
-    * ([[LayoutIngest.deleteKeys]]: bloom-pruned unit rewrite, recorded
-    * for replica replay). Anything else returns None and falls to the
-    * long-box translation. NULL literals drop out EXACTLY (SQL's
+    * yields (column, keys) for a [[LayoutIngest.DmlTarget.Keys]]
+    * target (bloom-pruned unit rewrite, recorded for replica
+    * replay). Anything else returns None and falls to the long-box
+    * translation. NULL literals drop out EXACTLY (SQL's
     * three-valued IN: `c IN (NULL, 'a')` deletes only c='a' rows —
     * the NULL element can never make the predicate TRUE); a list of
     * ONLY nulls deletes nothing (clean no-op at the command). */
-  def strKeyDelete(cond: Expression,
+  private def strKeyDelete(cond: Expression,
       target: AttributeSet): Option[(String, Seq[String])] = {
     def strAttr(e: Expression): Option[String] = e match {
       case a: AttributeReference
@@ -426,7 +406,7 @@ private[graft] object DmlTranslate {
     * one clean PREFIX pattern (`LIKE 'p%'` with no other wildcards,
     * or `startswith(s, 'p')`) or range comparisons (BETWEEN, the four
     * inequalities, `=` as a closed point) yields the column and the
-    * [[LayoutIngest.StrShape]] for the string-range commands
+    * [[LayoutIngest.StrShape]] of a [[LayoutIngest.DmlTarget.StrSpan]]
     * (stats-pruned unit rewrite in binary UTF-8 order, recorded for
     * replica replay). Checked AFTER [[strKeyDelete]] (pure point
     * shapes route keyed — bloom-pruned); anything else returns None
@@ -435,7 +415,7 @@ private[graft] object DmlTranslate {
     * (`'%x%'`, `'_x'`) all return None — refused downstream with the
     * API pointer, never silently narrowed. An empty combined range
     * (lo > hi) is legal: the command layer runs it as a clean no-op. */
-  def strRangeDelete(cond: Expression, target: AttributeSet)
+  private def strRangeDelete(cond: Expression, target: AttributeSet)
       : Option[(String, LayoutIngest.StrShape)] = {
     def strAttr(e: Expression): Option[String] = e match {
       case a: AttributeReference
@@ -575,7 +555,7 @@ private[graft] object DmlTranslate {
   /** The long IN-list shapes [[LongInKeyedMin]] governs: the whole
     * condition is a single `IN` over one long column, all-literal,
     * above the cutover. NULL literals drop exactly (three-valued IN). */
-  def longKeyDelete(cond: Expression, target: AttributeSet)
+  private def longKeyDelete(cond: Expression, target: AttributeSet)
       : Option[(String, Seq[Long])] = cond match {
     case In(a, vs) if vs.nonEmpty &&
         vs.forall(v => litLong(v).isDefined ||
@@ -587,6 +567,24 @@ private[graft] object DmlTranslate {
     case _ => None
   }
 
+  /** DELETE/UPDATE condition → the [[LayoutIngest.DmlTarget]] it
+    * selects, EXACT or refused. Classified in this order: string point
+    * shapes → [[LayoutIngest.DmlTarget.Keys]] (the doc-id takedown,
+    * bloom-pruned); string prefix/range conjunctions →
+    * [[LayoutIngest.DmlTarget.StrSpan]] (the domain takedown); one
+    * long `IN` list above [[LongInKeyedMin]] → `Keys` (bloom probes
+    * beat N point boxes); everything else → the long-box translation
+    * [[toBoxes]] (refusing what it cannot express). */
+  def target(cond: Expression, output: AttributeSet)
+      : LayoutIngest.DmlTarget = {
+    import LayoutIngest.DmlTarget._
+    strKeyDelete(cond, output).map { case (c, ks) => Keys(c, ks) }
+      .orElse(strRangeDelete(cond, output)
+        .map { case (c, shape) => StrSpan(c, shape) })
+      .orElse(longKeyDelete(cond, output).map { case (c, ks) => Keys(c, ks) })
+      .getOrElse(Boxes(toBoxes(cond, output)))
+  }
+
   /** DELETE condition → the EXACT union of conjunctive boxes, or
     * refuse: the condition splits on its TOP-LEVEL ORs and each
     * disjunct goes through [[toBox]]. A disjunct that is
@@ -594,7 +592,7 @@ private[graft] object DmlTranslate {
     * expands to one point box per value. Identical disjuncts collapse
     * (`x = 1 OR x = 1` is one box); overlap needs no special casing —
     * the union executes as a single OR predicate in ONE
-    * [[LayoutIngest.deleteBoxes]] pass, so a doubly-covered row is
+    * [[LayoutIngest.delete]] pass, so a doubly-covered row is
     * simply deleted once and history records one delete. */
   def toBoxes(cond: Expression,
       target: AttributeSet): Seq[Seq[(String, Long, Long)]] = {
@@ -737,7 +735,7 @@ private[graft] object DmlTranslate {
       case other => err(
         s"DELETE condition '${other.sql}' is not a conjunction of " +
           "=/</<=/>/>=/BETWEEN ranges over LONG columns and integral " +
-          "literals — the exact deleteBox contract (OR and IN are " +
+          "literals — the exact box-delete contract (OR and IN are " +
           "supported only at the TOP level, between/as whole " +
           "disjuncts; string =/IN point shapes route to the keyed " +
           "delete, and string LIKE-'p%'/BETWEEN/inequality " +
@@ -745,8 +743,8 @@ private[graft] object DmlTranslate {
           "condition is over one string column). Anything else " +
           "(nested OR, IN inside a conjunction, general LIKE " +
           "patterns, string negations, expressions over columns) " +
-          "needs the API: LayoutIngest.deleteBoxes / deleteKeys / " +
-          "deleteStrPrefix / mergeRows.")
+          "needs the API: LayoutIngest.delete over a DmlTarget " +
+          "(Boxes / Keys / StrSpan), or mergeRows.")
     }
     // bind returns false (falls through to `other`) unless BOTH sides
     // fit the attr-vs-literal shape — a guard, not an action
@@ -764,9 +762,10 @@ private[graft] object DmlTranslate {
     }
   }
 
-  /** Resolved UPDATE → [[GraftUpdateCommand]], or refuse: the
-    * condition must meet the DELETE box contract ([[toBoxes]] — OR,
-    * IN and the negated shapes all work; no WHERE updates every row),
+  /** Resolved UPDATE → [[GraftDmlCommand]], or refuse: the
+    * condition classifies exactly like DELETE's ([[target]]; no WHERE
+    * updates every row), the column a key or string-span target
+    * selects by is not assignable,
     * every assignment target must be a flat PAYLOAD column (the grid
     * columns and the cluster key decide where a row LIVES — changing
     * them in place would strand the row under a stale key, so row
@@ -777,37 +776,12 @@ private[graft] object DmlTranslate {
       assigns: Seq[Assignment], cond: Option[Expression])
       : LogicalPlan = {
     val sets = validateUpdateAssigns(rel, target, assigns)
-    // string point shapes route to the KEYED update (the redact-by-
-    // doc-id statement — [[LayoutIngest.updateKeys]]); everything
-    // else takes the box translation
-    cond.flatMap(strKeyDelete(_, target.outputSet)) match {
-      case Some((keyCol, keys)) =>
-        if (sets.exists(_._1 == keyCol)) err(
-          s"UPDATE assigns the key column '$keyCol' it selects by — " +
-            "rewriting row identity in place is not an update; use " +
-            "MERGE INTO or DELETE + INSERT")
-        GraftUpdateKeysCommand(rel.tableDir, keyCol, keys, sets)
-      case None => cond.flatMap(strRangeDelete(_, target.outputSet)) match {
-        case Some((c, shape)) =>
-          if (sets.exists(_._1 == c)) err(
-            s"UPDATE assigns the string column '$c' it selects by — " +
-              "rewriting what the predicate means on replay is not an " +
-              "update; use MERGE INTO or DELETE + INSERT")
-          GraftUpdateStrRangeCommand(rel.tableDir, c, shape, sets)
-        case None => cond.flatMap(longKeyDelete(_, target.outputSet)) match {
-          case Some((c, keys)) =>
-            if (sets.exists(_._1 == c)) err(
-              s"UPDATE assigns the key column '$c' it selects by — " +
-                "rewriting row identity in place is not an update; " +
-                "use MERGE INTO or DELETE + INSERT")
-            GraftUpdateLongKeysCommand(rel.tableDir, c, keys, sets)
-          case None =>
-            GraftUpdateCommand(rel.tableDir,
-              toBoxes(cond.getOrElse(Literal(true)), target.outputSet),
-              sets)
-        }
-      }
-    }
+    val t = this.target(cond.getOrElse(Literal(true)), target.outputSet)
+    t.selectCol.filter(c => sets.exists(_._1 == c)).foreach(c => err(
+      s"UPDATE assigns the column '$c' it selects by — rewriting row " +
+        "identity (what the predicate means on replay) in place is " +
+        "not an update; use MERGE INTO or DELETE + INSERT"))
+    GraftDmlCommand(rel.tableDir, t, sets)
   }
 
   /** The UPDATE assignment contract shared by the box and keyed
@@ -831,8 +805,8 @@ private[graft] object DmlTranslate {
         // current_timestamp(), current_user()): the assignment is
         // recorded as SQL and re-evaluated per unit rewrite and at
         // replica replay — it must be a pure function of the row
-        // ([[LayoutIngest.environmentBound]]; updateBoxes enforces the
-        // same gate for API callers)
+        // ([[LayoutIngest.environmentBound]]; LayoutIngest.update
+        // enforces the same gate for API callers)
         LayoutIngest.environmentBound(v).foreach(bad => err(
           s"UPDATE assignment to '${k.name}' reads the evaluation " +
             s"environment ($bad) — a WAL replay and a replica sync " +
@@ -888,7 +862,7 @@ private[graft] object DmlTranslate {
       case other => err(
         s"WHEN MATCHED must be exactly one UPDATE " +
           s"(got ${other.map(_.getClass.getSimpleName).mkString(", ")})" +
-          " — for MATCHED DELETE use LayoutIngest.deleteBox")
+          " — for MATCHED DELETE use LayoutIngest.delete")
     }
     val (insertCond, ias) = m.notMatchedActions match {
       case Seq(InsertAction(c, as)) => (c, as)
@@ -1090,153 +1064,29 @@ private[graft] case class GraftReplicateCommand(srcDir: String,
   }
 }
 
-/** `DELETE FROM <layout view> WHERE <box> [OR <box>]...` — runs
-  * [[LayoutIngest.deleteBoxesNext]] (ONE WAL-manifested pruned rewrite
-  * over the union of boxes, under the next unused delete id). An
-  * empty union (every box provably empty — [[DmlTranslate.toBoxes]])
-  * is a clean no-op: nothing to delete, no id minted. */
-private[graft] case class GraftDeleteCommand(dir: String,
-    boxes: Seq[Seq[(String, Long, Long)]]) extends LeafRunnableCommand {
-  override def run(sparkSession: SparkSession): Seq[Row] = {
-    if (boxes.nonEmpty)
-      LayoutIngest.deleteBoxesNext(sparkSession, dir, boxes): Unit
-    Seq.empty
-  }
-}
-
-/** `DELETE FROM <layout view> WHERE <stringCol> = '...' / IN (...)` —
-  * the doc-id TAKEDOWN statement, routed to
-  * [[LayoutIngest.deleteKeysNext]] (bloom-pruned unit rewrite under
-  * the next unused `delk` id, recorded so replicas replay it). An
-  * empty key list (`IN (NULL)` — SQL's three-valued IN can never be
-  * TRUE) is a clean no-op: nothing to delete, no id minted. */
-private[graft] case class GraftDeleteKeysCommand(dir: String,
-    keyCol: String, keys: Seq[String]) extends LeafRunnableCommand {
-  override def run(sparkSession: SparkSession): Seq[Row] = {
-    if (keys.nonEmpty)
-      LayoutIngest.deleteKeysNext(sparkSession, dir, keyCol, keys): Unit
-    Seq.empty
-  }
-}
-
-/** `UPDATE <layout view> SET ... WHERE <stringCol> = '...' / IN (...)`
-  * — the REDACT-BY-DOC-ID statement, routed to
-  * [[LayoutIngest.updateKeysNext]] (bloom-pruned in-place rewrite
-  * under the next unused `updk` id; the record carries keys AND
-  * assignment SQL, so replicas replay it). Assignment expressions
-  * re-bind BY NAME like the box form. An empty key list (`IN (NULL)`)
-  * is a clean no-op: nothing to redact, no id minted. */
-private[graft] case class GraftUpdateKeysCommand(dir: String,
-    keyCol: String, keys: Seq[String],
-    sets: Seq[(String, Expression)]) extends LeafRunnableCommand {
-  override def run(sparkSession: SparkSession): Seq[Row] = {
-    if (keys.isEmpty) return Seq.empty
-    val cols = sets.map { case (n, e) =>
-      n -> ColumnBridge.of(e.transform {
-        case a: AttributeReference =>
-          org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-            .quoted(a.name)
-      })
-    }
-    LayoutIngest.updateKeysNext(sparkSession, dir, keyCol, keys,
-      cols): Unit
-    Seq.empty
-  }
-}
-
-/** `DELETE FROM <layout view> WHERE <longCol> IN (many values)` — a
-  * long IN list above [[DmlTranslate.LongInKeyedMin]] routed to
-  * [[LayoutIngest.deleteKeysNext]] (per-unit bloom + stats probes)
-  * instead of N point boxes; same record/replay contract as the
-  * string-keyed form. */
-private[graft] case class GraftDeleteLongKeysCommand(dir: String,
-    keyCol: String, keys: Seq[Long]) extends LeafRunnableCommand {
-  override def run(sparkSession: SparkSession): Seq[Row] = {
-    if (keys.nonEmpty)
-      LayoutIngest.deleteKeysNext(sparkSession, dir, keyCol, keys): Unit
-    Seq.empty
-  }
-}
-
-/** `UPDATE <layout view> SET ... WHERE <longCol> IN (many values)` —
-  * the long-IN cutover's UPDATE twin, routed to
-  * [[LayoutIngest.updateKeysNext]]. */
-private[graft] case class GraftUpdateLongKeysCommand(dir: String,
-    keyCol: String, keys: Seq[Long],
-    sets: Seq[(String, Expression)]) extends LeafRunnableCommand {
-  override def run(sparkSession: SparkSession): Seq[Row] = {
-    if (keys.isEmpty) return Seq.empty
-    val cols = sets.map { case (n, e) =>
-      n -> ColumnBridge.of(e.transform {
-        case a: AttributeReference =>
-          org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-            .quoted(a.name)
-      })
-    }
-    LayoutIngest.updateKeysNext(sparkSession, dir, keyCol, keys,
-      cols): Unit
-    Seq.empty
-  }
-}
-
-/** `DELETE FROM <layout view> WHERE <stringCol> LIKE 'p%' /
-  * BETWEEN ...` — the DOMAIN TAKEDOWN statement, routed to
-  * [[LayoutIngest.deleteStrNext]] (string-stats-pruned unit rewrite
-  * under the next unused `dels` id; the record carries column + shape,
-  * so replicas replay it). A provably-empty range is a clean no-op:
-  * nothing matches, no id minted. */
-private[graft] case class GraftDeleteStrRangeCommand(dir: String,
-    col: String, shape: LayoutIngest.StrShape)
+/** `DELETE FROM` / `UPDATE` on a layout view — runs
+  * [[LayoutIngest.dmlNext]] over the [[DmlTranslate.target]] the
+  * condition classified to (ONE WAL-manifested pruned rewrite under
+  * the next unused id of the target's kind; `sets` empty = DELETE).
+  * Assignment expressions re-bind to the rewrite frames BY NAME (the
+  * analyzed attrs belong to the statement's own relation instance).
+  * A target that provably matches nothing (every box empty, `IN
+  * (NULL)`, an inverted string range) is a clean no-op: no rewrite,
+  * no id minted, no ledger entry. */
+private[graft] case class GraftDmlCommand(dir: String,
+    target: LayoutIngest.DmlTarget, sets: Seq[(String, Expression)])
   extends LeafRunnableCommand {
   override def run(sparkSession: SparkSession): Seq[Row] = {
-    if (!LayoutIngest.strShapeEmpty(shape))
-      LayoutIngest.deleteStrNext(sparkSession, dir, col, shape): Unit
-    Seq.empty
-  }
-}
-
-/** `UPDATE <layout view> SET ... WHERE <stringCol> LIKE 'p%' /
-  * BETWEEN ...` — the redact-by-domain statement, routed to
-  * [[LayoutIngest.updateStrNext]]. Assignment expressions re-bind BY
-  * NAME like the box form; an empty range is a clean no-op. */
-private[graft] case class GraftUpdateStrRangeCommand(dir: String,
-    col: String, shape: LayoutIngest.StrShape,
-    sets: Seq[(String, Expression)]) extends LeafRunnableCommand {
-  override def run(sparkSession: SparkSession): Seq[Row] = {
-    if (LayoutIngest.strShapeEmpty(shape)) return Seq.empty
-    val cols = sets.map { case (n, e) =>
-      n -> ColumnBridge.of(e.transform {
-        case a: AttributeReference =>
-          org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-            .quoted(a.name)
-      })
+    if (!target.isEmpty) {
+      val cols = sets.map { case (n, e) =>
+        n -> ColumnBridge.of(e.transform {
+          case a: AttributeReference =>
+            org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+              .quoted(a.name)
+        })
+      }
+      LayoutIngest.dmlNext(sparkSession, dir, target, cols): Unit
     }
-    LayoutIngest.updateStrNext(sparkSession, dir, col, shape,
-      cols): Unit
-    Seq.empty
-  }
-}
-
-/** `UPDATE <layout view> SET ... [WHERE <boxes>]` — runs
-  * [[LayoutIngest.updateBoxesNext]] (box-pruned in-place rewrite of
-  * the affected units under the next unused update id). Assignment
-  * expressions re-bind to the rewrite frames BY NAME (the analyzed
-  * attrs belong to the statement's own relation instance). An empty
-  * box union (condition provably matches nothing) is a clean no-op:
-  * no rewrite, no id minted. */
-private[graft] case class GraftUpdateCommand(dir: String,
-    boxes: Seq[Seq[(String, Long, Long)]],
-    sets: Seq[(String, Expression)]) extends LeafRunnableCommand {
-  override def run(sparkSession: SparkSession): Seq[Row] = {
-    if (boxes.isEmpty) return Seq.empty
-    val cols = sets.map { case (n, e) =>
-      n -> ColumnBridge.of(e.transform {
-        case a: AttributeReference =>
-          org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-            .quoted(a.name)
-      })
-    }
-    LayoutIngest.updateBoxesNext(sparkSession, dir, boxes, cols): Unit
     Seq.empty
   }
 }

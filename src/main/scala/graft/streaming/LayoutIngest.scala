@@ -1,8 +1,10 @@
 package graft.streaming
 
 import graft.operators.Layout
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /**
@@ -52,7 +54,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
  *    the TAIL lock (`<dir>/markers/lock`) serializes the ingest path —
  *    batch publish, commit markers, the marker-watermark fold, schema
  *    publication — and the MAINTENANCE lock (`<dir>/maint/…`)
- *    serializes every unit REWRITER ([[compact]], [[deleteBox]], the
+ *    serializes every unit REWRITER ([[compact]], [[delete]], the
  *    rewrite half of [[mergeRows]]) plus [[recoverCompact]]. The split
  *    is safe because the tail only ever CREATES new units and markers,
  *    never mutates published ones, and readers are lock-free by the
@@ -64,7 +66,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
  *    stream stalls only for that append, never for the merge's
  *    rewrites. Rewriters must still exclude EACH OTHER — two
  *    manifests naming one source with different targets would
- *    double-publish its rows. A deleteBox/compact concurrent with a
+ *    double-publish its rows. A delete/compact concurrent with a
  *    live stream is serializable as happening BEFORE any batch
  *    published after its unit selection (a concurrent insert into the
  *    deleted box survives — the delete happened first).
@@ -361,7 +363,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     val (f, markers) = DedupIngest.fs(spark, s"$dir/markers")
     // NO recoverCompact here, by design: the ingest path never touches
     // gen manifests — recovery is the MAINTENANCE lock's job (compact/
-    // deleteBox/mergeRows all run it), which is what lets a fold run
+    // delete/mergeRows all run it), which is what lets a fold run
     // concurrently with the stream (see the lock-split section of the
     // object doc). Reads are crash-correct without recovery (liveDirs'
     // publish-point rule), so deferring it costs only debris lifetime.
@@ -431,12 +433,12 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
   /** Stamp commit markers for PUBLISHED-BUT-UNMARKED L0 batch dirs (a
     * crash between the publish rename and the marker create). Must be
     * called with the MAINTENANCE lock held, BEFORE
-    * [[compact]]/[[deleteBox]] select units: both pick units by
+    * [[compact]]/[[delete]] select units: both pick units by
     * listing `data/`, so without this an orphan `batch-<id>` dir could
     * be folded into a generation (or rewritten) first, and the
     * stream's later replay of that id — finding neither marker nor
     * target dir — would re-ingest it, duplicating every row (and,
-    * after a deleteBox, resurrecting deleted ones). Stamping is safe
+    * after a delete, resurrecting deleted ones). Stamping is safe
     * by the same argument [[ingestBatch]]'s own recovery path uses: a
     * published dir is complete by construction (the rename is the last
     * data step), so the marker only formalizes a commit the replay
@@ -477,7 +479,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     * producing more than one output file publishes as a RANGE-SPLIT
     * generation: each file lands in its own `range-k/` subdir (the
     * files are range-disjoint by construction), so FILE-LEVEL pruning
-    * ([[scanBox]]/[[deleteBox]]'s unit selection) applies within the
+    * ([[scanBox]]/[[delete]]'s unit selection) applies within the
     * generation — at scale a fold spans many dirs' worth of data, and
     * one monolithic dir would force every box to open all of it. The
     * split happens INSIDE the stage, so the publish is still one
@@ -607,7 +609,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     *     rewrites its stage itself, so sweeping it early only does the
     *     replay's first step for it; only a fresh-checkpoint restart
     *     never revisits the id at all;
-    *  3. ZERO-ROW live units (a [[deleteBox]]/[[mergeRows]] rewrite
+    *  3. ZERO-ROW live units (a [[delete]]/[[mergeRows]] rewrite
     *     that emptied a whole unit publishes an empty dir — trivially
     *     pruned by every read, but it costs a listing + sidecar stat
     *     probe per scan forever): dropped WITHOUT a WAL manifest,
@@ -820,18 +822,21 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
       }
   }
 
-  /** One recorded box-DML statement — the durable payload behind a
-    * `del-<id>` / `upd-<id>` / `sdml-<srcSeq>` marker (or its folded
-    * [[foldDmlMarkers]] record). WHY statements are recorded, not just
+  /** One recorded DML statement — the durable payload behind a
+    * `<kind>-<id>` marker ([[DmlKinds]]: a [[DmlTarget]] delete or
+    * update, an `sdml-<srcSeq>` replay, a merge) or its folded
+    * [[foldDmlMarkers]] record. WHY statements are recorded, not just
     * marked: a marker name alone can prove idempotence, but it cannot
     * tell a REPLICA what the statement did — and a redaction that
     * never reaches replicas isn't a redaction (the RTBF gap). `seq` is
-    * the table-global DML order (del and upd are separate id
-    * namespaces, so ids alone cannot order an interleaved history);
+    * the table-global DML order (each kind is its own id namespace,
+    * so ids alone cannot order an interleaved history);
     * `upto` is the contiguous committed batch watermark at statement
     * time — the provenance scope a replica replays under (rows of
-    * later batches were not visible to the statement). `sets` carries
-    * assignment expressions as re-parseable SQL text (empty for a
+    * later batches were not visible to the statement). `boxes` and
+    * `sets` carry the target ([[DmlTarget.record]]: a box target's
+    * boxes, a key or string-span target's tagged payload) and the
+    * assignment expressions as re-parseable SQL text (none for a
     * delete). `seq < 0` marks a pre-v1 (payload-less) or unparseable
     * record: idempotence and history stay exact, replication refuses
     * typed. */
@@ -912,7 +917,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     * ([[replicate]]), and even on the source each affected unit
     * rewrites in its own job — `current_timestamp()` would stamp
     * different values per unit and diverge replica bytes from source
-    * bytes silently. Refused typed at record time ([[updateBoxes]])
+    * bytes silently. Refused typed at record time ([[update]])
     * and, defense-in-depth for records minted by foreign writers, at
     * replay time. */
   private[graft] def environmentBound(
@@ -926,13 +931,13 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     }.map(x => scala.util.Try(x.sql).getOrElse(x.toString))
 
   /** The statement-record kinds sharing one global `seq` and one fold:
-    * local box deletes and updates (marked through
-    * [[rewriteBoxedUnits]]), KEYED deletes (`delk`, marked through
-    * [[rewriteKeyedUnits]] — the doc-id takedown statement), replicated
-    * source statements ([[replicate]]'s `sdml-<srcSeq>` replays), and
-    * merges (`mrg-<ledgerId>`, recorded at commit by [[mergeRows]] —
-    * `boxes` empty, `sets` = the merge key by convention, the updates
-    * snapshot at `markers/mrg-<id>.updates`). */
+    * the six local DELETE/UPDATE kinds, one per [[DmlTarget]] shape
+    * (`del`/`upd` boxes, `delk`/`updk` keys, `dels`/`upds` string
+    * spans — all written by [[rewriteMarkedUnits]]), replicated source
+    * statements ([[replicate]]'s `sdml-<srcSeq>` replays), and merges
+    * (`mrg-<ledgerId>`, recorded at commit by [[mergeRows]] — `boxes`
+    * empty, `sets` = the merge key by convention, the updates snapshot
+    * at `markers/mrg-<id>.updates`). */
   private val DmlKinds = Seq("del", "delk", "dels", "upd", "updk",
     "upds", "sdml", "mrg")
 
@@ -946,42 +951,24 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
   private val KeyedDmlTag = "__graft_keyed_dml"
   private val KeyedTypeTag = "__graft_key_type"
 
-  /** Keyed-DML record payload: the key column, its type, every key
-    * URL-encoded (keys are user data — tabs/newlines/unicode must
-    * survive the line-based record format exactly), and for a keyed
-    * UPDATE the assignments as `enc(col) enc(sql)` pairs (URL-encoding
-    * never emits a space, so the space splits exactly). */
-  private def encodeKeyedSets(keyCol: String, keyIsLong: Boolean,
-      keys: Seq[Any], assigns: Seq[(String, String)] = Nil)
-      : Seq[(String, String)] = {
-    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
-    (KeyedDmlTag -> keyCol) +:
-      (KeyedTypeTag -> (if (keyIsLong) "long" else "string")) +:
-      (keys.map(k => "k" -> enc(k.toString)) ++
-        assigns.map { case (c, sql) => "set" -> s"${enc(c)} ${enc(sql)}" })
-  }
+  /** Tagged-payload values are URL-encoded: keys and bounds are user
+    * data (tabs/newlines/unicode must survive the line-based record
+    * format exactly), and an assignment rides as `enc(col) enc(sql)`
+    * (URL-encoding never emits a space, so the space splits exactly). */
+  private def urlEnc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
+  private def urlDec(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
 
-  private def decodeKeyedSets(sets: Seq[(String, String)])
-      : (String, Boolean, Seq[Any], Seq[(String, String)]) = {
-    def dec(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
-    val keyCol = sets.collectFirst {
-      case (KeyedDmlTag, c) => c }.getOrElse(
-      throw new IllegalStateException(
-        "keyed-DML record carries no key column — corrupted record"))
-    val keyIsLong = sets.collectFirst {
-      case (KeyedTypeTag, t) => t }.contains("long")
-    val keys = sets.collect { case ("k", v) =>
-      if (keyIsLong) (dec(v).toLong: Any) else (dec(v): Any)
-    }
-    val assigns = sets.collect { case ("set", v) =>
+  private def encodeAssigns(assigns: Seq[(String, String)]) =
+    assigns.map { case (c, sql) => "set" -> s"${urlEnc(c)} ${urlEnc(sql)}" }
+
+  private def decodeAssigns(sets: Seq[(String, String)], what: String) =
+    sets.collect { case ("set", v) =>
       v.split(" ", 2) match {
-        case Array(c, sql) => dec(c) -> dec(sql)
+        case Array(c, sql) => urlDec(c) -> urlDec(sql)
         case _ => throw new IllegalStateException(
-          s"keyed-DML record carries a malformed assignment: '$v'")
+          s"$what DML record carries a malformed assignment: '$v'")
       }
     }
-    (keyCol, keyIsLong, keys, assigns)
-  }
 
   /** One STRING-RANGE takedown shape — the DOMAIN statement
     * (`WHERE url LIKE 'https://spam.example/%'`, `WHERE s BETWEEN 'a'
@@ -1007,52 +994,266 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     * records too (chained replication). */
   private val StrRangeDmlTag = "__graft_str_range_dml"
 
-  /** String-range record payload: the column, the shape (`pfx`, or
-    * `lo`/`hi` with an `i`/`x` inclusivity flag), and for an update
-    * the assignments — all URL-encoded (bounds are user data). */
-  private def encodeStrRangeSets(col: String, shape: StrShape,
-      assigns: Seq[(String, String)] = Nil): Seq[(String, String)] = {
-    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
-    val shapePart = shape match {
-      case StrPrefix(p) => Seq("pfx" -> enc(p))
-      case StrRange(lo, loInc, hi, hiInc) =>
-        lo.map(l => "lo" -> s"${if (loInc) "i" else "x"} ${enc(l)}")
-          .toSeq ++
-          hi.map(h => "hi" -> s"${if (hiInc) "i" else "x"} ${enc(h)}")
-    }
-    (StrRangeDmlTag -> col) +: (shapePart ++
-      assigns.map { case (c, sql) => "set" -> s"${enc(c)} ${enc(sql)}" })
+  /** WHAT one DELETE/UPDATE statement selects — the only part of the
+    * lakehouse DML that differs by predicate shape. The prune →
+    * rewrite → record → replay machinery is shared: [[delete]],
+    * [[update]], [[dmlNext]], [[rewriteMarkedUnits]] and
+    * [[replicate]]. Each case owns its argument contract, its NULL-safe
+    * row predicate (a row whose selecting value is NULL is never hit —
+    * three-valued logic, the row is kept/untouched), its conservative
+    * unit pruner and its record payload:
+    *
+    *  - [[DmlTarget.Boxes]]: a union of conjunctive inclusive boxes
+    *    over LONG columns (`del`/`upd`), pruned by footer stats.
+    *  - [[DmlTarget.Keys]]: a key list over one LONG or STRING column
+    *    (`delk`/`updk` — the doc-id takedown), pruned by stats and the
+    *    unit Bloom sidecars ([[Grid.bloomCols]]; without a bloom every
+    *    unit conservatively rewrites). Keys are non-NULL, homogeneous,
+    *    deduped and bounded by [[MaxDeleteKeys]] — they ride in the
+    *    record and drive driver bloom probes.
+    *  - [[DmlTarget.StrSpan]]: a [[StrShape]] prefix or range over one
+    *    STRING column (`dels`/`upds` — the domain takedown), pruned by
+    *    the string stats sidecar in binary UTF-8 order.
+    *
+    * A statement may be SCOPED to `__batch <= scope` (replica replay;
+    * `Long.MaxValue` = unscoped): boxes carry the scope as one more
+    * range in every box, keys and string spans as one batch box in the
+    * record's `boxes` — which is how a chained replay reads back the
+    * scope it applied under. */
+  sealed trait DmlTarget {
+    /** The `(delete, update)` record kinds, each its own id namespace. */
+    private[streaming] def kinds: (String, String)
+    /** The column the predicate selects by — an UPDATE may not assign
+      * it (it would rewrite what the statement means on replay). */
+    private[graft] def selectCol: Option[String]
+    /** Provably matches nothing: the SQL commands run it as a no-op
+      * (no rewrite, no minted id, no ledger entry); the explicit-id
+      * API refuses it (an empty statement given a permanent id is a
+      * caller bug). */
+    def isEmpty: Boolean
+    /** The argument contract; returns the normalized target. `known`
+      * is [[knownColumns]], evaluated only by shapes that check a
+      * column. */
+    private[streaming] def validate(what: String,
+        known: => Option[Map[String, DataType]]): DmlTarget
+    private[streaming] def hit(scope: Long): Column
+    private[streaming] def pruner(spark: SparkSession, dir: String,
+        scope: Long): (FileSystem, Path) => Boolean
+    /** The record's `(boxes, sets)` payload. */
+    private[streaming] def record(scope: Long,
+        assigns: Seq[(String, String)])
+        : (Seq[Seq[(String, Long, Long)]], Seq[(String, String)])
   }
 
-  private def decodeStrRangeSets(sets: Seq[(String, String)])
-      : (String, StrShape, Seq[(String, String)]) = {
-    def dec(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
-    val col = sets.collectFirst { case (StrRangeDmlTag, c) => c }
-      .getOrElse(throw new IllegalStateException(
-        "string-range DML record carries no column — corrupted record"))
-    def bound(key: String): Option[(String, Boolean)] =
-      sets.collectFirst { case (`key`, v) => v.split(" ", 2) match {
-        case Array(flag, b) => (dec(b), flag == "i")
-        case _ => throw new IllegalStateException(
-          s"string-range DML record carries a malformed bound: '$v'")
-      } }
-    val shape = sets.collectFirst { case ("pfx", p) => StrPrefix(dec(p)) }
-      .getOrElse {
-        val lo = bound("lo")
-        val hi = bound("hi")
-        StrRange(lo.map(_._1), lo.forall(_._2),
-          hi.map(_._1), hi.forall(_._2))
+  object DmlTarget {
+    final case class Boxes(boxes: Seq[Seq[(String, Long, Long)]])
+        extends DmlTarget {
+      private[streaming] def kinds = ("del", "upd")
+      private[graft] def selectCol: Option[String] = None
+      def isEmpty: Boolean = boxes.isEmpty
+      private[streaming] def validate(what: String,
+          known: => Option[Map[String, DataType]]): DmlTarget = {
+        require(boxes.nonEmpty && boxes.forall(_.nonEmpty),
+          s"$what: empty box")
+        this
       }
-    val assigns = sets.collect { case ("set", v) =>
-      v.split(" ", 2) match {
-        case Array(c, sql) => dec(c) -> dec(sql)
-        case _ => throw new IllegalStateException(
-          s"string-range DML record carries a malformed assignment: " +
-            s"'$v'")
+      private def scoped(scope: Long) =
+        if (scope == Long.MaxValue) boxes
+        else boxes.map(_ :+ ((BatchCol, Long.MinValue, scope)))
+      private[streaming] def hit(scope: Long): Column =
+        coalesce(scoped(scope).map(_.map { case (c, lo, hi) =>
+          col(c) >= lo && col(c) <= hi
+        }.reduce(_ && _)).reduce(_ || _), lit(false))
+      private[streaming] def pruner(spark: SparkSession, dir: String,
+          scope: Long): (FileSystem, Path) => Boolean = {
+        val bs = scoped(scope)
+        (f, d) => bs.exists(_.forall { case (c, lo, hi) =>
+          dirColumnRange(f, d, c) match {
+            case Some((mn, mx)) => mx >= lo && mn <= hi
+            case None => true // no stats → conservatively rewrite
+          }
+        })
+      }
+      private[streaming] def record(scope: Long,
+          assigns: Seq[(String, String)]) = (scoped(scope), assigns)
+    }
+
+    final case class Keys(col: String, keys: Seq[Any]) extends DmlTarget {
+      private def keyIsLong = keys.headOption.exists(_.isInstanceOf[Long])
+      private[streaming] def kinds = ("delk", "updk")
+      private[graft] def selectCol: Option[String] = Some(col)
+      def isEmpty: Boolean = keys.isEmpty
+      private[streaming] def validate(what: String,
+          known: => Option[Map[String, DataType]]): DmlTarget = {
+        require(keys.nonEmpty, s"$what: no keys")
+        require(!keys.contains(null),
+          s"$what: NULL keys are not supported — a NULL never matches " +
+            "(SQL IN semantics), so the statement could not touch " +
+            "anything")
+        val distinct = keys.distinct
+        require(distinct.size <= MaxDeleteKeys,
+          s"$what: ${distinct.size} distinct keys — a keyed statement " +
+            "this large is a rewrite in disguise; split it or use a box " +
+            "statement on a range")
+        require(distinct.forall(k =>
+            if (keyIsLong) k.isInstanceOf[Long] else k.isInstanceOf[String]),
+          s"$what: keys must be all Long or all String (the bloom " +
+            "sidecar types)")
+        val want = if (keyIsLong) LongType else StringType
+        columnType(what, known, col).foreach(dt => require(dt == want,
+          s"$what: column '$col' is ${dt.simpleString} but the keys " +
+            s"are ${want.simpleString} — a mistyped key can never " +
+            "match; cast the keys, not the column"))
+        Keys(col, distinct)
+      }
+      private[streaming] def hit(scope: Long): Column = scopedHit(
+        coalesce(functions.col(col).isin(keys: _*), lit(false)), scope)
+      private[streaming] def pruner(spark: SparkSession, dir: String,
+          scope: Long): (FileSystem, Path) => Boolean = {
+        val (lo, hi) =
+          if (keyIsLong) {
+            val ls = keys.map(_.asInstanceOf[Long])
+            (ls.min, ls.max)
+          } else (Long.MinValue, Long.MaxValue)
+        val unitCount = {
+          val (f0, data0) = DedupIngest.fs(spark, s"$dir/data")
+          if (!f0.exists(data0)) 0 else leafUnits(f0, data0).size
+        }
+        val probeBloom =
+          keys.size.toLong * math.max(1, unitCount) <= KeyedBloomProbeBudget
+        if (!probeBloom) keyedBloomBudgetSkips += 1
+        (f, d) => unitRows(f, d) > 0 && inScope(f, d, scope) &&
+          (!keyIsLong || (dirColumnRange(f, d, col) match {
+            case Some((mn, mx)) => mx >= lo && mn <= hi
+            case None => true
+          })) &&
+          (!probeBloom || (unitBloom(f, d, col) match {
+            case Some(b) => keys.exists {
+              case s: String => b.mightContainString(s)
+              case l: Long => b.mightContainLong(l)
+              case other => throw new IllegalStateException(
+                s"unreachable key type: ${other.getClass.getName}")
+            }
+            case None => true // no bloom sidecar → conservative
+          }))
+      }
+      /** `(tag, col)`, the key type, every key, the assignments. */
+      private[streaming] def record(scope: Long,
+          assigns: Seq[(String, String)]) = (batchBox(scope),
+        (KeyedDmlTag -> col) +:
+          (KeyedTypeTag -> (if (keyIsLong) "long" else "string")) +:
+          (keys.map(k => "k" -> urlEnc(k.toString)) ++
+            encodeAssigns(assigns)))
+    }
+
+    final case class StrSpan(col: String, shape: StrShape)
+        extends DmlTarget {
+      private[streaming] def kinds = ("dels", "upds")
+      private[graft] def selectCol: Option[String] = Some(col)
+      /** A bounded range whose lo exceeds hi in byte order, or meets
+        * it with an exclusive end. */
+      def isEmpty: Boolean = shape match {
+        case StrRange(Some(l), loInc, Some(h), hiInc) =>
+          utf8Cmp(l, h) > 0 || (utf8Cmp(l, h) == 0 && !(loInc && hiInc))
+        case _ => false
+      }
+      private[streaming] def validate(what: String,
+          known: => Option[Map[String, DataType]]): DmlTarget = {
+        require(!isEmpty,
+          s"$what: provably-empty range ($shape) — it matches no " +
+            "string; the SQL surface no-ops these, the explicit-id API " +
+            "refuses them")
+        columnType(what, known, col).foreach(dt =>
+          require(dt == StringType,
+            s"$what: column '$col' is ${dt.simpleString} — " +
+              "string-range statements only apply to STRING columns; " +
+              "long columns take the box surface"))
+        this
+      }
+      private[streaming] def hit(scope: Long): Column =
+        scopedHit(strShapeHit(col, shape), scope)
+      private[streaming] def pruner(spark: SparkSession, dir: String,
+          scope: Long): (FileSystem, Path) => Boolean =
+        (f, d) => unitRows(f, d) > 0 && inScope(f, d, scope) &&
+          strShapeMayHit(f, d, col, shape)
+      /** `(tag, col)`, the shape (`pfx`, or `lo`/`hi` with an `i`/`x`
+        * inclusivity flag), the assignments. */
+      private[streaming] def record(scope: Long,
+          assigns: Seq[(String, String)]) = {
+        def bound(k: String, v: Option[String], inc: Boolean) =
+          v.map(b => k -> s"${if (inc) "i" else "x"} ${urlEnc(b)}")
+        val shapePart = shape match {
+          case StrPrefix(p) => Seq("pfx" -> urlEnc(p))
+          case StrRange(lo, loInc, hi, hiInc) =>
+            bound("lo", lo, loInc).toSeq ++ bound("hi", hi, hiInc)
+        }
+        (batchBox(scope),
+          (StrRangeDmlTag -> col) +: (shapePart ++ encodeAssigns(assigns)))
       }
     }
-    (col, shape, assigns)
+
+    /** A record back to its statement: the target, its assignment SQL
+      * (empty for a delete) and the batch scope it was recorded under
+      * (`Long.MaxValue` when unscoped; a box record keeps its scope
+      * inside its boxes). The payload tag, not the kind, names the
+      * shape, so an `sdml` replay of any shape decodes too. */
+    private[streaming] def decode(r: DmlRecord)
+        : (DmlTarget, Seq[(String, String)], Long) = {
+      val scope = r.boxes.flatten.collectFirst {
+        case (c, _, hi) if c == BatchCol => hi }.getOrElse(Long.MaxValue)
+      r.sets match {
+        case (KeyedDmlTag, c) +: rest =>
+          val isLong = rest.collectFirst {
+            case (KeyedTypeTag, t) => t }.contains("long")
+          val keys = rest.collect { case ("k", v) =>
+            if (isLong) (urlDec(v).toLong: Any) else (urlDec(v): Any) }
+          (Keys(c, keys), decodeAssigns(rest, "keyed"), scope)
+        case (StrRangeDmlTag, c) +: rest =>
+          def bound(key: String) = rest.collectFirst { case (`key`, v) =>
+            v.split(" ", 2) match {
+              case Array(flag, b) => (urlDec(b), flag == "i")
+              case _ => throw new IllegalStateException(
+                s"string-range DML record carries a malformed bound: '$v'")
+            }
+          }
+          val shape = rest.collectFirst {
+            case ("pfx", p) => StrPrefix(urlDec(p)) }.getOrElse {
+            val (lo, hi) = (bound("lo"), bound("hi"))
+            StrRange(lo.map(_._1), lo.forall(_._2), hi.map(_._1),
+              hi.forall(_._2))
+          }
+          (StrSpan(c, shape), decodeAssigns(rest, "string-range"), scope)
+        case _ => (Boxes(r.boxes), r.sets, Long.MaxValue)
+      }
+    }
+
+    private def batchBox(scope: Long) =
+      if (scope == Long.MaxValue) Nil
+      else Seq(Seq((BatchCol, Long.MinValue, scope)))
+    private def scopedHit(hit: Column, scope: Long) =
+      if (scope == Long.MaxValue) hit
+      else hit && functions.col(BatchCol) <= scope
+    private def inScope(f: FileSystem, d: Path, scope: Long) =
+      scope == Long.MaxValue || (dirColumnRange(f, d, BatchCol) match {
+        case Some((mn, _)) => mn <= scope
+        case None => true // no stats → conservative
+      })
+    private def columnType(what: String,
+        known: Option[Map[String, DataType]], c: String) =
+      known.map(k => k.getOrElse(c, throw new IllegalArgumentException(
+        s"$what: unknown column '$c' (table has ${k.keySet})")))
   }
+
+  /** The table's column types for argument validation: the stored
+    * schema, else the served columns; None when the table has neither
+    * (no rows to miss — a statement validates against nothing). */
+  private def knownColumns(spark: SparkSession, dir: String)
+      : Option[Map[String, DataType]] =
+    tableSchema(spark, dir).orElse {
+      val (f, data) = DedupIngest.fs(spark, s"$dir/data")
+      if (!f.exists(data) || leafUnits(f, data).isEmpty) None
+      else Some(read(spark, dir).schema)
+    }.map(_.fields.map(fd => fd.name -> fd.dataType).toMap)
 
   private def readMarkerLines(f: org.apache.hadoop.fs.FileSystem,
       p: org.apache.hadoop.fs.Path): Seq[String] = {
@@ -1156,7 +1357,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     * `dml-log-<k>` file — the DML ledger's analogue of the ingest
     * fold ([[compactMarkers]]). WHY: the markers are each statement's
     * permanent idempotence + replay record, and
-    * [[deleteBoxesNext]]/[[updateBoxesNext]]/[[history]]/[[replicate]]
+    * [[dmlNext]]/[[history]]/[[replicate]]
     * all list (and for records, READ) the whole namespace — at a
     * daily-retention cadence on a 100 TB deployment that listing
     * grows without bound. The fold keeps the dir at one log file +
@@ -1272,158 +1473,160 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
   }
 
   /**
-   * Targeted delete (the right-to-be-forgotten surface on the
-   * clustered table) — where the layout pays off TWICE: rows inside an
-   * axis-aligned box on the clustered columns are removed by rewriting
-   * ONLY the data dirs whose parquet footer statistics intersect the
-   * box. On a clustered table a thin box touches a handful of dirs
-   * (the r12 layout-probe numbers); a time-ordered table would rewrite
-   * everything. Each affected dir rewrites through the SAME WAL
-   * manifest as [[compact]] (stage the filtered copy, record
-   * (target, source, COMMIT), publish by rename, drop the source) —
-   * crash at any point converges via [[recoverCompact]], and readers
-   * stay correct throughout ([[read]]'s publish-point rule). The
-   * whole operation is idempotent behind a `del-<deleteId>` marker:
-   * a replay after a mid-delete crash re-filters the already-filtered
-   * dirs (a no-op rewrite) and finishes the rest. Returns false when
-   * the marker shows the delete already committed.
+   * Targeted DELETE (the right-to-be-forgotten surface on the
+   * clustered table) — where the layout pays off TWICE: the rows the
+   * [[DmlTarget]] selects are removed by rewriting ONLY the units its
+   * pruner admits (footer stats for boxes, Bloom sidecars for keys,
+   * string stats for string spans). On a clustered table a thin box
+   * touches a handful of units (the r12 layout-probe numbers); a
+   * time-ordered table would rewrite everything. Each affected unit
+   * rewrites through the SAME WAL manifest as [[compact]] (stage the
+   * filtered copy, record (target, source, COMMIT), publish by rename,
+   * drop the source) — crash at any point converges via
+   * [[recoverCompact]], and readers stay correct throughout
+   * ([[read]]'s publish-point rule). One maintenance hold, ONE ledger
+   * entry (`<kind>-<id>`, the kind from [[DmlTarget]]), at most one
+   * rewrite per affected unit however many boxes or keys name it.
+   * Idempotent behind the marker: a replay after a mid-delete crash
+   * re-filters the already-filtered units (a no-op rewrite) and
+   * finishes the rest. RECORDED — the marker carries the statement, so
+   * [[replicate]] replays it on every replica scoped
+   * `__batch <= upto`. Returns false when the marker shows the delete
+   * already committed.
    *
-   * `box`: (column, lo, hi) conjunctive ranges, inclusive; rows
-   * matching EVERY range are deleted. Columns must be long-typed
-   * (the clustered columns are — that is what makes the footer
-   * statistics decisive).
+   * NULL-safe: only rows where the predicate is TRUE are deleted.
+   * Under three-valued logic a NULL column makes the naive NOT(pred)
+   * evaluate to NULL and filter() would silently DESTROY the row (nulls
+   * are legal in grid columns — quantization folds them to the minimum
+   * cell — and pre-evolution units read added columns as NULL).
+   *
+   * 100 TB: pruning is metadata-only; each affected unit rewrites once
+   * through a codegen'd filter; nothing collects or shuffles.
    */
-  def deleteBox(spark: SparkSession, dir: String,
-      box: Seq[(String, Long, Long)], deleteId: Long): Boolean =
-    deleteBoxes(spark, dir, Seq(box), deleteId)
+  def delete(spark: SparkSession, dir: String, target: DmlTarget,
+      id: Long): Boolean = {
+    val t = target.validate("delete", knownColumns(spark, dir))
+    rewriteMarkedUnits(spark, dir, t.kinds._1, id, t, Long.MaxValue,
+      Nil, Nil)
+  }
 
-  /** UNION-of-boxes delete — [[deleteBox]] generalized to remove rows
-    * matching ANY of several conjunctive boxes in ONE operation: one
-    * maintenance hold, one ledger entry (`del-<deleteId>`), and at
-    * most ONE rewrite per affected unit no matter how many boxes name
-    * it (N sequential deleteBox calls would rewrite a shared unit N
-    * times and log N delete ops for what the caller means as one
-    * statement). Overlapping boxes are fine — the row predicate is a
-    * single OR, so a doubly-covered row is simply deleted. A unit is
-    * rewritten iff its footer stats intersect at least one box. The
-    * body behind SQL `DELETE ... WHERE <box> OR <box>`. */
-  def deleteBoxes(spark: SparkSession, dir: String,
-      boxes: Seq[Seq[(String, Long, Long)]], deleteId: Long): Boolean =
-    // NULL-safe: delete ONLY rows where the box predicate is TRUE.
-    // Under three-valued logic a NULL box column makes the naive
-    // NOT(range AND range) evaluate to NULL and filter() would
-    // silently DESTROY the row (nulls are legal in grid columns —
-    // quantization folds them to the minimum cell — and pre-evolution
-    // units read added columns as NULL). `hit` arrives coalesced.
-    rewriteBoxedUnits(spark, dir, "del", deleteId,
-      boxes, Nil)((df, hit) => df.filter(!hit))
-
-  /** In-place BOX-SCOPED UPDATE — the REDACTION surface (null out or
-    * overwrite a payload column for a user/time slice WITHOUT deleting
-    * the rows — the compliance op deletion is too blunt for). Same
-    * machinery as [[deleteBoxes]]: only units whose footer statistics
-    * intersect a box are rewritten, each through the WAL manifest,
-    * idempotent behind an `upd-<updateId>` marker, one ledger entry
-    * for the whole union of boxes.
+  /** In-place UPDATE — the REDACTION surface (null out or overwrite
+    * payload columns for the rows a [[DmlTarget]] selects WITHOUT
+    * deleting them — the compliance op deletion is too blunt for). Same
+    * machinery as [[delete]]: only admitted units rewrite, each
+    * through the WAL manifest, idempotent behind an `<kind>-<id>`
+    * marker whose record carries every assignment's SQL.
     *
     * `sets` assigns payload columns from deterministic expressions
-    * over the row's UNTOUCHED columns — an assignment may read any
-    * column the statement does not assign. Reading an ASSIGNED column
-    * (`value = value + 1`, swaps) is refused at record time, like
-    * environment-bound values: the statement is recorded as SQL text
-    * and re-evaluated on replica sync, where at-least-once replay
-    * over pre- or post-statement bytes cannot re-apply a self-read
-    * exactly ([[validateAssignSets]]; MERGE's partial UPDATE SET is
-    * the replica-exact spelling of those shapes — its updates
-    * snapshot replays bytes, not expressions). Rows outside the
-    * boxes (or where the predicate is NULL — three-valued logic, the
-    * row is NOT hit) keep every column untouched.
+    * over the row's UNTOUCHED columns ([[validateAssignSets]]). A key
+    * or string-span target may not assign its own selecting column —
+    * that rewrites row identity, what the statement means on replay
+    * (use MERGE or delete + insert). Rows the predicate does not hit
+    * (or where it is NULL) keep every column untouched.
     *
-    * REPLAY after a mid-operation crash (same updateId): exact — and
-    * belt-and-braces: the replay skips the crashed attempt's own
-    * published rewrites by their `gen-upd<id>-` name prefix, so even
-    * a NON-idempotent assignment (none are recordable today — that
-    * would need a self-read — but the skip predates the gate and
-    * guards records minted by older writers) applies exactly once
-    * per row. The contract assumes the standard
-    * crash-recovery discipline: replay the owed op before any OTHER
-    * maintenance renames those units (the maintenance lock's
+    * REPLAY after a mid-operation crash (same id): exact — the replay
+    * skips the crashed attempt's own published rewrites by their
+    * `gen-<kind><id>-` name prefix, so even a NON-idempotent assignment
+    * (none are recordable today — that would need a self-read — but
+    * the skip predates the gate and guards records minted by older
+    * writers) applies exactly once per row. The contract assumes the
+    * standard crash-recovery discipline: replay the owed op before any
+    * OTHER maintenance renames those units (the maintenance lock's
     * break-then-look rule). The SQL path never replays — a driver
-    * retry mints a new id, and [[occupiedDmlIds]] counts a crashed
-    * statement's published debris as occupying its id, so the fresh
-    * statement can never collide with (and silently skip) the dead
-    * one's outputs.
+    * retry mints a new id ([[dmlNext]]).
     *
     * The CLUSTER-DERIVED columns are not assignable: the grid columns
     * and [[KeyCol]] decide where a row lives (stats, blooms,
     * range-split leaves), so changing them in place would strand the
     * row under a stale key — move rows with delete + insert, or
     * [[regrid]]. [[BatchCol]] is immutable provenance; consistent
-    * with [[deleteBox]], an in-place redaction is NOT re-emitted to
-    * CDC readers (the row keeps its original `__batch`). */
-  def updateBoxes(spark: SparkSession, dir: String,
-      boxes: Seq[Seq[(String, Long, Long)]],
-      sets: Seq[(String, org.apache.spark.sql.Column)],
-      updateId: Long): Boolean = {
-    val setExprs = validateAssignSets(spark, dir, "updateBoxes", sets)
-    val setMap = sets.toMap
-    rewriteBoxedUnits(spark, dir, "upd", updateId, boxes,
-      setExprs) { (df, hit) =>
-      df.select(df.columns.toSeq.map { c =>
-        setMap.get(c)
-          .map(e => when(hit, e).otherwise(col(c)).as(c))
-          .getOrElse(col(c))
-      }: _*)
-    }
+    * with [[delete]], an in-place redaction is NOT re-emitted to CDC
+    * readers (the row keeps its original `__batch`). */
+  def update(spark: SparkSession, dir: String, target: DmlTarget,
+      sets: Seq[(String, Column)], id: Long): Boolean = {
+    lazy val known = knownColumns(spark, dir)
+    val t = target.validate("update", known)
+    val setsRecord = validateAssignSets(spark, dir, sets, known)
+    t.selectCol.filter(c => sets.exists(_._1 == c)).foreach(c =>
+      throw new IllegalArgumentException(
+        s"update: assigning the selecting column '$c' itself rewrites " +
+          "row identity — what the statement means on replay; use " +
+          "MERGE (whole-row) or delete + insert"))
+    rewriteMarkedUnits(spark, dir, t.kinds._2, id, t, Long.MaxValue,
+      sets, setsRecord)
   }
 
-  /** Shared assignment contract of the in-place UPDATE statements
-    * ([[updateBoxes]] and [[updateKeys]]): non-empty distinct targets;
-    * cluster-derived/provenance columns and the reserved `__graft`
-    * prefix refused (the grid columns and [[KeyCol]] decide where a
-    * row LIVES; the prefix carries engine record tags a forged
+  /** [[delete]] (empty `sets`) or [[update]] under the NEXT UNUSED id
+    * of the target's kind — the body behind SQL `DELETE FROM` and
+    * `UPDATE` on the relation. Each kind is its own marker namespace,
+    * scanned fresh per attempt INCLUDING id-stamped crash debris
+    * ([[occupiedDmlIds]] — a crashed statement's published-but-
+    * unmarked rewrites occupy its id, so a fresh statement never
+    * adopts them); a concurrent statement that wins the id turns this
+    * attempt into a marker no-op (false), and the loop re-mints —
+    * bounded, since every loss means another statement COMMITTED.
+    * Same retry caveat as [[appendNext]]: a driver-level retry of the
+    * whole statement is a new statement, not a replay. Returns the id
+    * the statement committed under. */
+  private[graft] def dmlNext(spark: SparkSession, dir: String,
+      target: DmlTarget, sets: Seq[(String, Column)]): Long = {
+    val kind = if (sets.isEmpty) target.kinds._1 else target.kinds._2
+    @scala.annotation.tailrec
+    def attempt(lost: Int): Long = {
+      val next =
+        occupiedDmlIds(spark, dir, kind).foldLeft(-1L)(math.max) + 1L
+      val committed =
+        if (sets.isEmpty) delete(spark, dir, target, next)
+        else update(spark, dir, target, sets, next)
+      if (committed) next
+      else {
+        require(lost + 1 < 16,
+          s"dmlNext: lost the $kind-id race ${lost + 1} times on $dir " +
+            "— a pathological storm of concurrent statements")
+        attempt(lost + 1)
+      }
+    }
+    attempt(0)
+  }
+
+  /** The assignment contract of [[update]]: non-empty distinct
+    * targets; cluster-derived/provenance columns and the reserved
+    * `__graft` prefix refused (the grid columns and [[KeyCol]] decide
+    * where a row LIVES; the prefix carries engine record tags a forged
     * assignment could make a replica mis-replay); targets must exist
-    * (no stored schema falls back to the served columns — without it a
-    * typo'd target would silently never apply; a table with neither
-    * schema nor data has no rows to miss); and the RECORD-TIME
-    * replayability gates — the assignment is recorded as SQL text and
-    * re-evaluated at replica replay (and once per affected unit even
-    * on the source), so an environment-bound value
-    * (current_timestamp(), rand(), uuid(), current_user()) would write
-    * DIFFERENT bytes per evaluation, and a SELF-REFERENTIAL value
-    * (reading any assigned column) cannot re-apply exactly over a
-    * replica's pre- or post-statement bytes — both silently diverge
-    * replicas, both refused here rather than poisoning the record
-    * stream for every later sync.
+    * (`known` = [[knownColumns]] — without it a typo'd target would
+    * silently never apply; a table with neither schema nor data has no
+    * rows to miss); and the RECORD-TIME replayability gates — the
+    * assignment is recorded as SQL text and re-evaluated at replica
+    * replay (and once per affected unit even on the source), so an
+    * environment-bound value (current_timestamp(), rand(), uuid(),
+    * current_user()) would write DIFFERENT bytes per evaluation, and a
+    * SELF-REFERENTIAL value (reading any assigned column) cannot
+    * re-apply exactly over a replica's pre- or post-statement bytes —
+    * both silently diverge replicas, both refused here rather than
+    * poisoning the record stream for every later sync.
     * Returns the (column, SQL) record pairs. */
   private def validateAssignSets(spark: SparkSession, dir: String,
-      what: String, sets: Seq[(String, org.apache.spark.sql.Column)])
-      : Seq[(String, String)] = {
-    require(sets.nonEmpty, s"$what: no assignments")
+      sets: Seq[(String, Column)],
+      known: => Option[Map[String, DataType]]): Seq[(String, String)] = {
+    require(sets.nonEmpty, s"update: no assignments")
     require(sets.map(_._1).distinct.size == sets.size,
-      s"$what: duplicate assignment targets in ${sets.map(_._1)}")
+      s"update: duplicate assignment targets in ${sets.map(_._1)}")
     val gridNow = readGrid(spark, dir)
     val reserved = (gridNow.cols :+ KeyCol :+ BatchCol).toSet
     sets.foreach { case (c, _) =>
       require(!reserved(c),
-        s"$what: '$c' is a cluster-derived or provenance " +
+        s"update: '$c' is a cluster-derived or provenance " +
           "column — not assignable in place (delete + insert, or " +
           "regrid, to move rows)")
       require(!c.startsWith("__graft"),
-        s"$what: '$c' — the __graft prefix is reserved for " +
+        s"update: '$c' — the __graft prefix is reserved for " +
           "engine-internal columns and record tags")
     }
-    val known = tableSchema(spark, dir)
-      .map(_.fieldNames.toSet)
-      .orElse {
-        val (df0, data0) = DedupIngest.fs(spark, s"$dir/data")
-        if (!df0.exists(data0) || leafUnits(df0, data0).isEmpty) None
-        else Some(read(spark, dir).columns.toSet)
-      }
-      .getOrElse(Set.empty)
+    val cols = known.map(_.keySet).getOrElse(Set.empty[String])
     sets.foreach { case (c, _) =>
-      require(known.isEmpty || known(c),
-        s"$what: unknown column '$c' (table has $known)")
+      require(cols.isEmpty || cols(c),
+        s"update: unknown column '$c' (table has $cols)")
     }
     // RECORD-TIME twin of the replica-replay gates (replicateBody):
     // a recorded statement must be replayable, and two value shapes
@@ -1446,7 +1649,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
         .catalystExpr(e)
       environmentBound(ex).foreach(bad =>
         throw new IllegalArgumentException(
-          s"$what: assignment to '$c' reads the evaluation " +
+          s"update: assignment to '$c' reads the evaluation " +
             s"environment ($bad) — it cannot rewrite the same bytes " +
             "on replay or replica sync; evaluate it once and assign " +
             "the resulting literal instead"))
@@ -1458,7 +1661,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
       }
       refs.toSet.intersect(assigned).headOption.foreach(bad =>
         throw new IllegalArgumentException(
-          s"$what: assignment to '$c' reads an assigned column " +
+          s"update: assignment to '$c' reads an assigned column " +
             s"('$bad') — self-referential assignments cannot " +
             "replay exactly under at-least-once replica sync, so they " +
             "are refused at record time; read only untouched columns, " +
@@ -1468,55 +1671,31 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     }
   }
 
-  /** The shared core of the box-scoped unit REWRITERS ([[deleteBoxes]]
-    * filters, [[updateBoxes]] projects, [[replicate]] replays): under
-    * the maintenance lock,
+  /** The ONE unit rewriter under every DELETE/UPDATE — source
+    * statements ([[delete]]/[[update]]) and replica replays
+    * ([[replicate]]'s scoped `sdml`): under the maintenance lock,
     * idempotent behind the `<kind>-<id>` marker (live or folded into
-    * the [[foldDmlMarkers]] log), rewrite exactly the units whose
-    * stats intersect at least one box, each through the same WAL
-    * manifest as [[compact]]. `transform` receives the unit frame and
-    * the NULL-SAFE union-of-boxes predicate (already coalesced to
-    * false — a NULL box column never hits). The commit marker carries
-    * the full statement as a [[DmlRecord]] (boxes, `setsRecord`
-    * assignment SQL, the global DML `seq`, the batch watermark `upto`)
-    * — what [[replicate]] replays on a replica. */
-  private def rewriteBoxedUnits(spark: SparkSession, dir: String,
-      kind: String, id: Long,
-      boxes: Seq[Seq[(String, Long, Long)]],
-      setsRecord: Seq[(String, String)])(
-      transform: (DataFrame, org.apache.spark.sql.Column) => DataFrame)
-      : Boolean = {
-    require(boxes.nonEmpty && boxes.forall(_.nonEmpty),
-      s"$kind$id: empty box")
-    val inBox = boxes.map(_.map { case (c, lo, hi) =>
-      col(c) >= lo && col(c) <= hi
-    }.reduce(_ && _)).reduce(_ || _)
-    val hit = coalesce(inBox, lit(false))
-    rewriteMarkedUnits(spark, dir, kind, id, boxes, setsRecord,
-      affects = (f, d) => boxes.exists(_.forall { case (c, lo, hi) =>
-        dirColumnRange(f, d, c) match {
-          case Some((mn, mx)) => mx >= lo && mn <= hi
-          case None => true // no stats → conservatively rewrite
-        }
-      }))(df => transform(df, hit))
-  }
-
-  /** The shared scaffold under every marked unit REWRITER
-    * ([[rewriteBoxedUnits]]'s box ops and [[rewriteKeyedUnits]]'s
-    * keyed deletes): under the maintenance lock, idempotent behind the
-    * `<kind>-<id>` marker (live or folded into the [[foldDmlMarkers]]
-    * log), rewrite exactly the units `affects` admits (a conservative
-    * pruner — stats for boxes, blooms for keys), each through the same
-    * WAL manifest as [[compact]]. The commit marker carries the full
-    * statement as a [[DmlRecord]] (`recBoxes`/`recSets` — what
-    * [[replicate]] replays on a replica). */
+    * the [[foldDmlMarkers]] log), rewrite exactly the units the
+    * target's pruner admits, each through the same WAL manifest as
+    * [[compact]] — dropping the rows `target.hit(scope)` selects
+    * (empty `sets`) or projecting `sets` onto them. The commit marker
+    * carries the full statement as a [[DmlRecord]] (the target's
+    * payload, the `setsRecord` assignment SQL, the global DML `seq`,
+    * the batch watermark `upto`) — what [[replicate]] replays. */
   private def rewriteMarkedUnits(spark: SparkSession, dir: String,
-      kind: String, id: Long,
-      recBoxes: Seq[Seq[(String, Long, Long)]],
-      recSets: Seq[(String, String)],
-      affects: (org.apache.hadoop.fs.FileSystem,
-        org.apache.hadoop.fs.Path) => Boolean)(
-      transform: DataFrame => DataFrame): Boolean = {
+      kind: String, id: Long, target: DmlTarget, scope: Long,
+      sets: Seq[(String, Column)],
+      setsRecord: Seq[(String, String)]): Boolean = {
+    val hit = target.hit(scope)
+    val affects = target.pruner(spark, dir, scope)
+    val (recBoxes, recSets) = target.record(scope, setsRecord)
+    val setMap = sets.toMap
+    def transform(df: DataFrame): DataFrame =
+      if (sets.isEmpty) df.filter(!hit)
+      else df.select(df.columns.toSeq.map { c =>
+        setMap.get(c).map(e => when(hit, e).otherwise(col(c)).as(c))
+          .getOrElse(col(c))
+      }: _*)
     refuseReplicaWrite(spark, dir, s"$kind-$id")
     withMaintLock(spark, dir) {
       fencePromotedMidSync(spark, dir, s"$kind-$id")
@@ -1601,13 +1780,13 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     }
   }
 
-  /** Every delete/update id OCCUPIED on `dir` for `prefix` (`del` or
-    * `upd`): committed markers PLUS the id-stamped debris a statement
-    * that crashed after publishing rewrites but before its marker
-    * leaves behind — published `gen-<prefix><id>-*` units in the data
+  /** Every delete/update id OCCUPIED on `dir` for the record kind
+    * `prefix` (`del`, `updk`, ...): committed markers PLUS the
+    * id-stamped debris a statement that crashed after publishing
+    * rewrites but before its marker leaves behind — published `gen-<prefix><id>-*` units in the data
     * tree, staged `gen-<prefix><id>-*.stage` dirs, and
     * `compact-<prefix><id>-*.manifest` WAL entries. WHY the debris
-    * counts: [[rewriteBoxedUnits]]'s replay path skips units carrying
+    * counts: [[rewriteMarkedUnits]]' replay path skips units carrying
     * the operation's OWN id stamp (what makes a non-idempotent UPDATE
     * replay exact), so a LATER, semantically different statement that
     * re-minted a crashed id would silently treat the dead statement's
@@ -1648,60 +1827,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     (markerIds ++ logIds ++ stageIds ++ unitIds).toSet
   }
 
-  /** [[deleteBox]] under the NEXT UNUSED delete id — the body behind
-    * SQL `DELETE FROM` on the relation. Delete ids are their own
-    * marker namespace (`del-<id>`), scanned fresh per attempt
-    * INCLUDING id-stamped crash debris ([[occupiedDmlIds]] — a crashed
-    * statement's published-but-unmarked rewrites occupy its id, so a
-    * fresh statement never adopts them); a
-    * concurrent SQL DELETE that wins the id turns this attempt's
-    * deleteBox into a marker no-op (returns false), and the loop
-    * re-mints — bounded, since every loss means another delete
-    * COMMITTED. Same retry caveat as [[appendNext]]: a driver-level
-    * retry of the whole statement is a new delete, not a replay.
-    * Returns the id the delete committed under. */
-  private[graft] def deleteBoxNext(spark: SparkSession, dir: String,
-      box: Seq[(String, Long, Long)]): Long =
-    deleteBoxesNext(spark, dir, Seq(box))
-
-  /** [[deleteBoxes]] under the next unused delete id (same id-race
-    * loop as the single-box form). */
-  private[graft] def deleteBoxesNext(spark: SparkSession, dir: String,
-      boxes: Seq[Seq[(String, Long, Long)]]): Long = {
-    var attempts = 0
-    while (true) {
-      val next =
-        occupiedDmlIds(spark, dir, "del").foldLeft(-1L)(math.max) + 1L
-      if (deleteBoxes(spark, dir, boxes, next)) return next
-      attempts += 1
-      require(attempts < 16,
-        s"deleteBoxNext: lost the delete-id race $attempts times on " +
-          s"$dir — a pathological storm of concurrent DELETEs")
-    }
-    -1L // unreachable
-  }
-
-  /** [[updateBoxes]] under the next unused update id — the body
-    * behind SQL `UPDATE` on the relation. `upd-<id>` is its own
-    * marker namespace (crash debris counted — [[occupiedDmlIds]]),
-    * same id-race loop as [[deleteBoxesNext]]. */
-  private[graft] def updateBoxesNext(spark: SparkSession, dir: String,
-      boxes: Seq[Seq[(String, Long, Long)]],
-      sets: Seq[(String, org.apache.spark.sql.Column)]): Long = {
-    var attempts = 0
-    while (true) {
-      val next =
-        occupiedDmlIds(spark, dir, "upd").foldLeft(-1L)(math.max) + 1L
-      if (updateBoxes(spark, dir, boxes, sets, next)) return next
-      attempts += 1
-      require(attempts < 16,
-        s"updateBoxesNext: lost the update-id race $attempts times " +
-          s"on $dir — a pathological storm of concurrent UPDATEs")
-    }
-    -1L // unreachable
-  }
-
-  /** Hard ceiling on one keyed delete's keys: the keys drive
+  /** Hard ceiling on one keyed statement's keys: the keys drive
     * driver-side bloom probing AND ride inside the statement's
     * permanent record (what replicas replay) — a takedown list is
     * governance-sized by nature, and a "delete" of corpus-sized keys
@@ -1709,15 +1835,6 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     * because the record stores every key). */
   private val MaxDeleteKeys = 1 << 16
 
-  /** The unit pruner + row predicate behind the KEYED statements,
-    * shared by the source forms ([[deleteKeys]]/[[updateKeys]],
-    * unscoped) and their replica replays ([[replicate]], scoped
-    * `__batch <= scopeUpto`): a unit rewrites only if it has rows,
-    * intersects the batch scope, and — when `keyCol` carries sidecars
-    * — its stats range (long keys) or Bloom filter (both types; the
-    * [[mergeRows]] q166/q170 machinery) admits at least one key. The
-    * row predicate handed to `transform` is a codegen'd IN-set,
-    * NULL-safe (a NULL key never hits — SQL's three-valued IN). */
   /** Ceiling on ONE keyed statement's total driver bloom-probe work,
     * keys × live units (each probe is ~7 hash lookups): above it the
     * unit selection falls back to stats-range pruning alone — the
@@ -1732,217 +1849,9 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     * for budget (no behavior rides on it). */
   private[graft] var keyedBloomBudgetSkips = 0L
 
-  private def rewriteKeyedUnits(spark: SparkSession, dir: String,
-      kind: String, id: Long, keyCol: String, keyIsLong: Boolean,
-      keys: Seq[Any], scopeUpto: Long,
-      recBoxes: Seq[Seq[(String, Long, Long)]],
-      assigns: Seq[(String, String)] = Nil)(
-      transform: (DataFrame, org.apache.spark.sql.Column) => DataFrame =
-        (df, hit) => df.filter(!hit)): Boolean = {
-    val (longMin, longMax) =
-      if (keyIsLong && keys.nonEmpty) {
-        val ls = keys.map(_.asInstanceOf[Long])
-        (ls.min, ls.max)
-      } else (Long.MinValue, Long.MaxValue)
-    val unitCount = {
-      val (f0, data0) = DedupIngest.fs(spark, s"$dir/data")
-      if (!f0.exists(data0)) 0 else leafUnits(f0, data0).size
-    }
-    val probeBloom =
-      keys.size.toLong * math.max(1, unitCount) <= KeyedBloomProbeBudget
-    if (!probeBloom) keyedBloomBudgetSkips += 1
-    val affects = (f: org.apache.hadoop.fs.FileSystem,
-        d: org.apache.hadoop.fs.Path) =>
-      unitRows(f, d) > 0 &&
-        (scopeUpto == Long.MaxValue ||
-          (dirColumnRange(f, d, BatchCol) match {
-            case Some((mn, _)) => mn <= scopeUpto
-            case None => true // no stats → conservative
-          })) &&
-        (!keyIsLong || (dirColumnRange(f, d, keyCol) match {
-          case Some((mn, mx)) => mx >= longMin && mn <= longMax
-          case None => true
-        })) &&
-        (!probeBloom || (unitBloom(f, d, keyCol) match {
-          case Some(b) => keys.exists {
-            case s: String => b.mightContainString(s)
-            case l: Long => b.mightContainLong(l)
-            case other => throw new IllegalStateException(
-              s"unreachable key type: ${other.getClass.getName}")
-          }
-          case None => true // no bloom sidecar → conservative
-        }))
-    val inKeys = coalesce(
-      col(keyCol).isin(keys: _*), lit(false))
-    val hit =
-      if (scopeUpto == Long.MaxValue) inKeys
-      else inKeys && col(BatchCol) <= scopeUpto
-    rewriteMarkedUnits(spark, dir, kind, id, recBoxes,
-      encodeKeyedSets(keyCol, keyIsLong, keys, assigns), affects)(
-      df => transform(df, hit))
-  }
-
-  /** Targeted KEY delete — the doc-id TAKEDOWN statement (the RTBF
-    * shape every LLM-corpus operator actually writes: "forget these
-    * document ids"), where the box machinery cannot reach: string keys
-    * have no enumerable complement and no long-range stats, but they
-    * DO have per-unit Bloom sidecars ([[Grid.bloomCols]] — the
-    * [[mergeRows]] string path's pruning), so the statement rewrites
-    * only the units whose bloom admits at least one key. Long keys
-    * work too (stats range + bloom); for those the box surface
-    * (`deleteBoxes` point boxes) is equivalent — this form just skips
-    * the per-key box bookkeeping.
-    *
-    * Same contract family as [[deleteBoxes]]: one maintenance hold,
-    * ONE ledger entry (`delk-<deleteId>`), at most one WAL-manifested
-    * rewrite per affected unit, idempotent behind the marker, replayed
-    * crash-exact (filtering is idempotent), and RECORDED — the marker
-    * carries the key column and every key (URL-encoded, bounded by
-    * [[MaxDeleteKeys]]), so [[replicate]] replays the statement on
-    * every replica scoped `__batch <= upto`, exactly like a box
-    * delete. NULL keys are refused (they can never match — SQL IN);
-    * rows whose key IS NULL are kept (three-valued logic, the
-    * [[deleteBoxes]] rule). `keyCol` must be LONG or STRING (the bloom
-    * sidecar types) and SHOULD be in [[Grid.bloomCols]] — without a
-    * bloom every unit conservatively rewrites (correct, slow).
-    *
-    * 100 TB: the keys are driver-held by contract (governance-sized,
-    * ≤ [[MaxDeleteKeys]]); pruning is metadata-only; each affected
-    * unit rewrites once through a codegen'd IN-set filter; the data
-    * path never collects or shuffles. */
-  def deleteKeys(spark: SparkSession, dir: String, keyCol: String,
-      keys: Seq[Any], deleteId: Long): Boolean = {
-    val (distinctKeys, keyIsLong) =
-      validateKeyedArgs(spark, dir, "deleteKeys", keyCol, keys)
-    rewriteKeyedUnits(spark, dir, "delk", deleteId, keyCol, keyIsLong,
-      distinctKeys, Long.MaxValue, Nil)()
-  }
-
-  /** Shared argument contract of the keyed statements: non-empty
-    * NULL-free keys (a NULL never matches — SQL IN), deduped, bounded
-    * by [[MaxDeleteKeys]] (they ride in the record and drive driver
-    * bloom probes), homogeneous Long-or-String, and the key column
-    * must exist with the matching type (the updateBoxes fallback rule:
-    * no stored schema falls back to the served columns; neither →
-    * nothing to touch, validates against nothing). */
-  private def validateKeyedArgs(spark: SparkSession, dir: String,
-      what: String, keyCol: String, keys: Seq[Any])
-      : (Seq[Any], Boolean) = {
-    require(keys.nonEmpty, s"$what: no keys")
-    require(!keys.contains(null),
-      s"$what: NULL keys are not supported — a NULL never matches " +
-        "(SQL IN semantics), so the statement could not touch anything")
-    val distinctKeys = keys.distinct
-    require(distinctKeys.size <= MaxDeleteKeys,
-      s"$what: ${distinctKeys.size} distinct keys — a keyed statement " +
-        "this large is a rewrite in disguise; split it or use a box " +
-        "statement on a range")
-    val keyIsLong = distinctKeys.head.isInstanceOf[Long]
-    require(distinctKeys.forall(k =>
-        if (keyIsLong) k.isInstanceOf[Long] else k.isInstanceOf[String]),
-      s"$what: keys must be all Long or all String (the bloom " +
-        "sidecar types)")
-    tableSchema(spark, dir)
-      .map(s => s.fields.map(fd => fd.name -> fd.dataType).toMap)
-      .orElse {
-        val (df0, data0) = DedupIngest.fs(spark, s"$dir/data")
-        if (!df0.exists(data0) || leafUnits(df0, data0).isEmpty) None
-        else Some(read(spark, dir).schema.fields
-          .map(fd => fd.name -> fd.dataType).toMap)
-      }
-      .foreach { known =>
-        val dt = known.getOrElse(keyCol,
-          throw new IllegalArgumentException(
-            s"$what: unknown column '$keyCol' (table has " +
-              s"${known.keySet})"))
-        val want =
-          if (keyIsLong) org.apache.spark.sql.types.LongType
-          else org.apache.spark.sql.types.StringType
-        require(dt == want,
-          s"$what: column '$keyCol' is ${dt.simpleString} but " +
-            s"the keys are ${want.simpleString} — a mistyped key can " +
-            "never match; cast the keys, not the column")
-      }
-    (distinctKeys, keyIsLong)
-  }
-
-  /** KEY-scoped in-place UPDATE — the REDACTION twin of
-    * [[deleteKeys]] (null out or overwrite payload columns for a list
-    * of document ids WITHOUT deleting the rows — the statement a
-    * string-keyed corpus writes when deletion is too blunt), where the
-    * box surface cannot reach (string keys have no boxes). Same
-    * machinery and contracts: Bloom-sidecar unit pruning, one
-    * `updk-<updateId>` ledger entry recording the key column, every
-    * key AND every assignment's SQL (all URL-encoded), replica replay
-    * scoped `__batch <= upto`, crash-replay exact (the
-    * [[rewriteMarkedUnits]] own-output skip), and [[updateBoxes]]'
-    * assignment contract — payload columns only, deterministic
-    * environment-free expressions over columns the statement does NOT
-    * assign (self-reads refused at record time, the replica
-    * replayability gate; [[validateAssignSets]]), rows whose key is
-    * NULL or absent untouched. */
-  def updateKeys(spark: SparkSession, dir: String, keyCol: String,
-      keys: Seq[Any], sets: Seq[(String, org.apache.spark.sql.Column)],
-      updateId: Long): Boolean = {
-    val (distinctKeys, keyIsLong) =
-      validateKeyedArgs(spark, dir, "updateKeys", keyCol, keys)
-    val setExprs = validateAssignSets(spark, dir, "updateKeys", sets)
-    require(!sets.exists(_._1 == keyCol),
-      s"updateKeys: assigning the key column '$keyCol' itself under a " +
-        "key predicate rewrites row identity — use MERGE (whole-row) " +
-        "or delete + insert")
-    val setMap = sets.toMap
-    rewriteKeyedUnits(spark, dir, "updk", updateId, keyCol, keyIsLong,
-      distinctKeys, Long.MaxValue, Nil, setExprs) { (df, hit) =>
-      df.select(df.columns.toSeq.map { c =>
-        setMap.get(c)
-          .map(e => when(hit, e).otherwise(col(c)).as(c))
-          .getOrElse(col(c))
-      }: _*)
-    }
-  }
-
-  /** [[updateKeys]] under the next unused keyed-update id — the body
-    * behind SQL `UPDATE t SET ... WHERE <stringCol> IN (...)`. Same
-    * id-race loop as its siblings; `updk-<id>` debris counted. */
-  private[graft] def updateKeysNext(spark: SparkSession, dir: String,
-      keyCol: String, keys: Seq[Any],
-      sets: Seq[(String, org.apache.spark.sql.Column)]): Long = {
-    var attempts = 0
-    while (true) {
-      val next =
-        occupiedDmlIds(spark, dir, "updk").foldLeft(-1L)(math.max) + 1L
-      if (updateKeys(spark, dir, keyCol, keys, sets, next)) return next
-      attempts += 1
-      require(attempts < 16,
-        s"updateKeysNext: lost the update-id race $attempts times on " +
-          s"$dir — a pathological storm of concurrent UPDATEs")
-    }
-    -1L // unreachable
-  }
-
-  /** [[deleteKeys]] under the NEXT UNUSED delete-keys id — the body
-    * behind SQL `DELETE FROM t WHERE <stringCol> IN (...)`. `delk-<id>`
-    * is its own marker namespace (crash debris counted —
-    * [[occupiedDmlIds]]), same id-race loop as [[deleteBoxesNext]]. */
-  private[graft] def deleteKeysNext(spark: SparkSession, dir: String,
-      keyCol: String, keys: Seq[Any]): Long = {
-    var attempts = 0
-    while (true) {
-      val next =
-        occupiedDmlIds(spark, dir, "delk").foldLeft(-1L)(math.max) + 1L
-      if (deleteKeys(spark, dir, keyCol, keys, next)) return next
-      attempts += 1
-      require(attempts < 16,
-        s"deleteKeysNext: lost the delete-id race $attempts times on " +
-          s"$dir — a pathological storm of concurrent DELETEs")
-    }
-    -1L // unreachable
-  }
-
   /** The rewrite predicate of a [[StrShape]], NULL-safe: a NULL
     * string never matches (three-valued logic — the row is kept /
-    * untouched, the [[deleteBoxes]] rule); comparisons are Spark's
+    * untouched, the [[delete]] rule); comparisons are Spark's
     * binary UTF-8 order, matching the driver-side pruning. */
   private def strShapeHit(c: String, shape: StrShape)
       : org.apache.spark.sql.Column = {
@@ -1974,197 +1883,6 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
       }
       case None => true
     }
-
-  /** Shared argument contract of the string-range statements: the
-    * column must exist and be STRING (same fallback ladder as the
-    * keyed statements), and a bounded range must be non-empty in byte
-    * order. */
-  /** PROVABLY-EMPTY string shape: a bounded range whose lo exceeds
-    * hi in byte order, or meets it with an exclusive end — matches no
-    * string. The SQL commands run these as clean no-ops (no rewrite,
-    * no minted id, no ledger entry — the empty-box rule); the
-    * explicit-id API refuses them instead (an empty statement given a
-    * permanent id is a caller bug). */
-  private[graft] def strShapeEmpty(shape: StrShape): Boolean =
-    shape match {
-      case StrRange(Some(l), loInc, Some(h), hiInc) =>
-        utf8Cmp(l, h) > 0 ||
-          (utf8Cmp(l, h) == 0 && !(loInc && hiInc))
-      case _ => false
-    }
-
-  private def validateStrRangeArgs(spark: SparkSession, dir: String,
-      what: String, c: String, shape: StrShape): Unit = {
-    require(!strShapeEmpty(shape),
-      s"$what: provably-empty range ($shape) — it matches no string; " +
-        "the SQL surface no-ops these, the explicit-id API refuses " +
-        "them")
-    tableSchema(spark, dir)
-      .map(s => s.fields.map(fd => fd.name -> fd.dataType).toMap)
-      .orElse {
-        val (df0, data0) = DedupIngest.fs(spark, s"$dir/data")
-        if (!df0.exists(data0) || leafUnits(df0, data0).isEmpty) None
-        else Some(read(spark, dir).schema.fields
-          .map(fd => fd.name -> fd.dataType).toMap)
-      }
-      .foreach { known =>
-        val dt = known.getOrElse(c,
-          throw new IllegalArgumentException(
-            s"$what: unknown column '$c' (table has ${known.keySet})"))
-        require(dt == org.apache.spark.sql.types.StringType,
-          s"$what: column '$c' is ${dt.simpleString} — string-range " +
-            "statements only apply to STRING columns; long columns " +
-            "take the box surface")
-      }
-  }
-
-  /** The string-range analogue of [[rewriteKeyedUnits]]: rewrite
-    * exactly the units whose STRING stats sidecar admits the shape,
-    * behind the `<kind>-<id>` marker, recording column + shape (+
-    * assignments) for replica replay. */
-  private def rewriteStrRangeUnits(spark: SparkSession, dir: String,
-      kind: String, id: Long, c: String, shape: StrShape,
-      scopeUpto: Long,
-      recBoxes: Seq[Seq[(String, Long, Long)]],
-      assigns: Seq[(String, String)] = Nil)(
-      transform: (DataFrame, org.apache.spark.sql.Column) => DataFrame =
-        (df, hit) => df.filter(!hit)): Boolean = {
-    val affects = (f: org.apache.hadoop.fs.FileSystem,
-        d: org.apache.hadoop.fs.Path) =>
-      unitRows(f, d) > 0 &&
-        (scopeUpto == Long.MaxValue ||
-          (dirColumnRange(f, d, BatchCol) match {
-            case Some((mn, _)) => mn <= scopeUpto
-            case None => true
-          })) &&
-        strShapeMayHit(f, d, c, shape)
-    val inShape = strShapeHit(c, shape)
-    val hit =
-      if (scopeUpto == Long.MaxValue) inShape
-      else inShape && col(BatchCol) <= scopeUpto
-    rewriteMarkedUnits(spark, dir, kind, id, recBoxes,
-      encodeStrRangeSets(c, shape, assigns), affects)(
-      df => transform(df, hit))
-  }
-
-  /** STRING-RANGE DELETE — the DOMAIN TAKEDOWN statement
-    * (`DELETE ... WHERE url LIKE 'https://spam.example/%'`, the most
-    * common corpus governance statement after doc-id lists), where
-    * neither the box surface (long-only) nor the keyed surface
-    * (enumerated points) can reach: the shape selects an open set of
-    * strings, pruned by the per-unit STRING min/max sidecar in binary
-    * UTF-8 order. Same contract family as [[deleteKeys]]: one
-    * maintenance hold, ONE ledger entry (`dels-<deleteId>`), at most
-    * one WAL-manifested rewrite per admitted unit, idempotent behind
-    * the marker, and RECORDED — [[replicate]] replays the statement on
-    * every replica scoped `__batch <= upto`. NULL values never match
-    * (kept). Pruning is only as good as the sidecars: units written
-    * before the string-stats line (or whose column carries no binary
-    * footer stats) conservatively rewrite — correct, slow; `c` SHOULD
-    * be a [[Grid.bloomCols]] column, which is what gets the sidecar
-    * written.
-    *
-    * 100 TB: pruning is metadata-only (one small sidecar read per
-    * unit, pooled); each admitted unit rewrites once through a
-    * codegen'd StartsWith/range filter; nothing collects or
-    * shuffles. A prefix that covers the table IS a rewrite — that is
-    * what the statement means. */
-  def deleteStrPrefix(spark: SparkSession, dir: String, c: String,
-      prefix: String, deleteId: Long): Boolean =
-    deleteStr(spark, dir, c, StrPrefix(prefix), deleteId)
-
-  /** [[deleteStrPrefix]]'s general form: a one-column string RANGE
-    * with optional bounds and per-bound inclusivity (SQL
-    * `s BETWEEN 'a' AND 'b'`, `s >= 'a' AND s < 'b'`). */
-  def deleteStrRange(spark: SparkSession, dir: String, c: String,
-      lo: Option[String], loInc: Boolean,
-      hi: Option[String], hiInc: Boolean, deleteId: Long): Boolean =
-    deleteStr(spark, dir, c, StrRange(lo, loInc, hi, hiInc), deleteId)
-
-  private[graft] def deleteStr(spark: SparkSession, dir: String,
-      c: String, shape: StrShape, deleteId: Long): Boolean = {
-    validateStrRangeArgs(spark, dir, "deleteStr", c, shape)
-    rewriteStrRangeUnits(spark, dir, "dels", deleteId, c, shape,
-      Long.MaxValue, Nil)()
-  }
-
-  /** STRING-RANGE in-place UPDATE — [[deleteStrPrefix]]'s REDACTION
-    * twin (null out or overwrite payload columns for a domain/prefix
-    * slice WITHOUT deleting the rows). [[updateBoxes]]' assignment
-    * contract applies unchanged: payload columns only, deterministic
-    * environment-free expressions over columns the statement does NOT
-    * assign, the selecting column itself not assignable; rows whose
-    * value is NULL or outside the shape untouched. */
-  def updateStrPrefix(spark: SparkSession, dir: String, c: String,
-      prefix: String,
-      sets: Seq[(String, org.apache.spark.sql.Column)],
-      updateId: Long): Boolean =
-    updateStr(spark, dir, c, StrPrefix(prefix), sets, updateId)
-
-  def updateStrRange(spark: SparkSession, dir: String, c: String,
-      lo: Option[String], loInc: Boolean,
-      hi: Option[String], hiInc: Boolean,
-      sets: Seq[(String, org.apache.spark.sql.Column)],
-      updateId: Long): Boolean =
-    updateStr(spark, dir, c, StrRange(lo, loInc, hi, hiInc), sets,
-      updateId)
-
-  private[graft] def updateStr(spark: SparkSession, dir: String,
-      c: String, shape: StrShape,
-      sets: Seq[(String, org.apache.spark.sql.Column)],
-      updateId: Long): Boolean = {
-    validateStrRangeArgs(spark, dir, "updateStr", c, shape)
-    val setExprs = validateAssignSets(spark, dir, "updateStr", sets)
-    require(!sets.exists(_._1 == c),
-      s"updateStr: assigning the selecting column '$c' itself under " +
-        "a string-range predicate rewrites what the statement means " +
-        "on replay — use MERGE (whole-row) or delete + insert")
-    val setMap = sets.toMap
-    rewriteStrRangeUnits(spark, dir, "upds", updateId, c, shape,
-      Long.MaxValue, Nil, setExprs) { (df, hit) =>
-      df.select(df.columns.toSeq.map { cc =>
-        setMap.get(cc)
-          .map(e => when(hit, e).otherwise(col(cc)).as(cc))
-          .getOrElse(col(cc))
-      }: _*)
-    }
-  }
-
-  /** [[deleteStr]] under the next unused `dels` id — the body behind
-    * SQL `DELETE ... WHERE <stringCol> LIKE 'p%' / BETWEEN ...`.
-    * Same id-race loop as its siblings; crash debris counted. */
-  private[graft] def deleteStrNext(spark: SparkSession, dir: String,
-      c: String, shape: StrShape): Long = {
-    var attempts = 0
-    while (true) {
-      val next =
-        occupiedDmlIds(spark, dir, "dels").foldLeft(-1L)(math.max) + 1L
-      if (deleteStr(spark, dir, c, shape, next)) return next
-      attempts += 1
-      require(attempts < 16,
-        s"deleteStrNext: lost the delete-id race $attempts times on " +
-          s"$dir — a pathological storm of concurrent DELETEs")
-    }
-    -1L // unreachable
-  }
-
-  /** [[updateStr]] under the next unused `upds` id — the body behind
-    * SQL `UPDATE ... WHERE <stringCol> LIKE 'p%' / BETWEEN ...`. */
-  private[graft] def updateStrNext(spark: SparkSession, dir: String,
-      c: String, shape: StrShape,
-      sets: Seq[(String, org.apache.spark.sql.Column)]): Long = {
-    var attempts = 0
-    while (true) {
-      val next =
-        occupiedDmlIds(spark, dir, "upds").foldLeft(-1L)(math.max) + 1L
-      if (updateStr(spark, dir, c, shape, sets, next)) return next
-      attempts += 1
-      require(attempts < 16,
-        s"updateStrNext: lost the update-id race $attempts times on " +
-          s"$dir — a pathological storm of concurrent UPDATEs")
-    }
-    -1L // unreachable
-  }
 
   /** What one [[replicate]] sync did, for operations logging and the
     * battery's premises. */
@@ -2298,8 +2016,8 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
   /** Incremental REPLICA sync — the answer to "RTBF that doesn't
     * reach replicas isn't RTBF": pull the source's new committed batch
     * prefix, then REPLAY the source's recorded DML statements
-    * ([[DmlRecord]] — every [[deleteBoxes]]/[[updateBoxes]] commit
-    * marker carries its boxes, assignment SQL, global order `seq`, and
+    * ([[DmlRecord]] — every [[delete]]/[[update]] commit
+    * marker carries its target, assignment SQL, global order `seq`, and
     * batch-watermark scope `upto`), so a redaction or deletion on the
     * source converges on every replica that syncs, INCLUDING rows the
     * replica consumed before the statement ran. Call on a cadence (or
@@ -2326,7 +2044,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     *    constant, mask-from-siblings — the redaction shapes) are
     *    idempotent under re-application, so every interleaving
     *    converges to the source's bytes.
-    *  - Each replay runs through [[rewriteBoxedUnits]] behind an
+    *  - Each replay runs through [[rewriteMarkedUnits]] behind an
     *    `sdml-<srcSeq>` marker: exactly-once per source statement,
     *    crash-replay-exact (own-output skip), stats-pruned to the
     *    affected units, and recorded — a replica can itself be
@@ -2552,201 +2270,76 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
       require(!isPromoted(dmf, dmarkers0),
         s"replicate: $dstDir was promoted mid-sync — statement " +
           "replay aborted (promoted tables never sync again)")
-      val scopeUpto = if (dstFresh) -1L else r.upto
-      val scoped = r.boxes.map(_ :+ ((BatchCol, Long.MinValue,
-        scopeUpto)))
-      if (r.sets.headOption.exists(_._1 == KeyedDmlTag)) {
-        // a KEYED statement (source `delk`/`updk`, or a chained
-        // replica's `sdml` replay of one — the tag, not the kind,
-        // marks the payload): replay scoped `__batch <= upto` like
-        // every box statement; a chained record also carries the
-        // scope it ITSELF applied under (its recBoxes batch box) —
-        // intersect, so a replica-of-a-replica never widens the
-        // original statement
-        val (kc, keyIsLong, keys, assigns) = decodeKeyedSets(r.sets)
-        val recordedScope = r.boxes.flatten.collectFirst {
-          case (c, _, hi) if c == BatchCol => hi }
-        val keyScope =
-          if (dstFresh) -1L
-          else math.min(r.upto, recordedScope.getOrElse(Long.MaxValue))
-        val known = tableSchema(spark, dstDir)
-          .map(_.fieldNames.toSet).getOrElse(Set.empty)
-        (kc +: assigns.map(_._1)).foreach { c =>
-          require(dstFresh || known.isEmpty || known(c),
-            s"replicate: source keyed statement seq ${r.seq} touches " +
-              s"'$c', a column this replica has not seen yet (schema " +
-              "evolution above a source ledger gap) — re-sync after " +
-              "the gap commits")
-        }
-        if (assigns.isEmpty)
-          rewriteKeyedUnits(spark, dstDir, "sdml", r.seq, kc, keyIsLong,
-            keys, keyScope,
-            recBoxes =
-              Seq(Seq((BatchCol, Long.MinValue, keyScope))))(): Unit
-        else {
-          // keyed UPDATE replay: same replayability gates as the box
-          // update below — self-referential and environment-bound
-          // assignments cannot re-evaluate to the source's bytes
-          val assigned = assigns.map(_._1.toLowerCase).toSet
-          val sets = assigns.map { case (c, sql) =>
-            val e = org.apache.spark.sql.graftbridge.ColumnBridge
-              .catalystExpr(org.apache.spark.sql.functions.expr(sql))
-            val refs = e.collect {
-              case u: org.apache.spark.sql.catalyst.analysis
-                .UnresolvedAttribute => u.nameParts.last.toLowerCase
-            }
-            require(dstFresh || refs.toSet.intersect(assigned).isEmpty,
-              s"replicate: source keyed update seq ${r.seq} assigns " +
-                s"'$c' from '$sql', which reads an assigned column — " +
-                "self-referential assignments cannot replay exactly " +
-                "under at-least-once replication")
-            if (!dstFresh) environmentBound(e).foreach(bad =>
-              throw new IllegalArgumentException(
-                s"replicate: source keyed update seq ${r.seq} " +
-                  s"assigns '$c' from '$sql', which reads the " +
-                  s"evaluation environment ($bad) — re-evaluating it " +
-                  "at replay time diverges replica bytes"))
-            c -> org.apache.spark.sql.functions.expr(sql)
-          }
-          val setMap = sets.toMap
-          rewriteKeyedUnits(spark, dstDir, "sdml", r.seq, kc, keyIsLong,
-            keys, keyScope,
-            recBoxes = Seq(Seq((BatchCol, Long.MinValue, keyScope))),
-            assigns = assigns) { (d, hit) =>
-            d.select(d.columns.toSeq.map { c =>
-              setMap.get(c)
-                .map(e => when(hit, e).otherwise(col(c)).as(c))
-                .getOrElse(col(c))
-            }: _*)
-          }: Unit
-        }
-      } else if (r.sets.headOption.exists(_._1 == StrRangeDmlTag)) {
-        // a STRING-RANGE statement (source `dels`/`upds`, or a
-        // chained replica's `sdml` replay of one): replay scoped
-        // `__batch <= upto` like every statement; a chained record's
-        // own batch box intersects, so a replica-of-a-replica never
-        // widens the original
-        val (sc, shape, strAssigns) = decodeStrRangeSets(r.sets)
-        val recordedScope = r.boxes.flatten.collectFirst {
-          case (c, _, hi) if c == BatchCol => hi }
-        val strScope =
-          if (dstFresh) -1L
-          else math.min(r.upto, recordedScope.getOrElse(Long.MaxValue))
-        val known = tableSchema(spark, dstDir)
-          .map(_.fieldNames.toSet).getOrElse(Set.empty)
-        (sc +: strAssigns.map(_._1)).foreach { c =>
-          require(dstFresh || known.isEmpty || known(c),
-            s"replicate: source string-range statement seq ${r.seq} " +
-              s"touches '$c', a column this replica has not seen yet " +
-              "(schema evolution above a source ledger gap) — " +
-              "re-sync after the gap commits")
-        }
-        if (strAssigns.isEmpty)
-          rewriteStrRangeUnits(spark, dstDir, "sdml", r.seq, sc, shape,
-            strScope,
-            recBoxes =
-              Seq(Seq((BatchCol, Long.MinValue, strScope))))(): Unit
-        else {
-          // string-range UPDATE replay: the same replayability gates
-          // as the keyed/box updates — defense-in-depth for records
-          // minted by foreign/older writers
-          val assigned = strAssigns.map(_._1.toLowerCase).toSet
-          val sets = strAssigns.map { case (c, sql) =>
-            val e = org.apache.spark.sql.graftbridge.ColumnBridge
-              .catalystExpr(org.apache.spark.sql.functions.expr(sql))
-            val refs = e.collect {
-              case u: org.apache.spark.sql.catalyst.analysis
-                .UnresolvedAttribute => u.nameParts.last.toLowerCase
-            }
-            require(dstFresh || refs.toSet.intersect(assigned).isEmpty,
-              s"replicate: source string-range update seq ${r.seq} " +
-                s"assigns '$c' from '$sql', which reads an assigned " +
-                "column — self-referential assignments cannot replay " +
-                "exactly under at-least-once replication")
-            if (!dstFresh) environmentBound(e).foreach(bad =>
-              throw new IllegalArgumentException(
-                s"replicate: source string-range update seq ${r.seq} " +
-                  s"assigns '$c' from '$sql', which reads the " +
-                  s"evaluation environment ($bad) — re-evaluating it " +
-                  "at replay time diverges replica bytes"))
-            c -> org.apache.spark.sql.functions.expr(sql)
-          }
-          val setMap = sets.toMap
-          rewriteStrRangeUnits(spark, dstDir, "sdml", r.seq, sc, shape,
-            strScope,
-            recBoxes = Seq(Seq((BatchCol, Long.MinValue, strScope))),
-            assigns = strAssigns) { (d, hit) =>
-            d.select(d.columns.toSeq.map { c =>
-              setMap.get(c)
-                .map(e => when(hit, e).otherwise(col(c)).as(c))
-                .getOrElse(col(c))
-            }: _*)
-          }: Unit
-        }
-      } else if (r.sets.isEmpty) {
-        rewriteBoxedUnits(spark, dstDir, "sdml", r.seq, scoped,
-          Nil)((d, hit) => d.filter(!hit)): Unit
-      } else {
-        val assigned = r.sets.map(_._1.toLowerCase).toSet
-        // an assigned column the replica has never seen (schema
-        // evolution via a still-gapped source batch) must refuse, not
-        // silently no-op the projection — the sync retries after the
-        // gap commits and the evolving batch arrives
-        val known = tableSchema(spark, dstDir)
-          .map(_.fieldNames.toSet).getOrElse(Set.empty)
-        r.sets.foreach { case (c, _) =>
-          require(dstFresh || known.isEmpty || known(c),
-            s"replicate: source update seq ${r.seq} assigns '$c', a " +
-              "column this replica has not seen yet (schema evolution " +
-              "above a source ledger gap) — re-sync after the gap " +
-              "commits")
-        }
-        val sets = r.sets.map { case (c, sql) =>
-          val e = org.apache.spark.sql.graftbridge.ColumnBridge
-            .catalystExpr(org.apache.spark.sql.functions.expr(sql))
-          val refs = e.collect {
-            case u: org.apache.spark.sql.catalyst.analysis
-              .UnresolvedAttribute => u.nameParts.last.toLowerCase
-          }
-          // a BOOTSTRAP stamp (empty scope) never evaluates the
-          // assignment, so even a self-referential statement is safe
-          // to mark applied — its effects are in every pulled byte
-          require(dstFresh || refs.toSet.intersect(assigned).isEmpty,
-            s"replicate: source update seq ${r.seq} assigns '$c' " +
-              s"from '$sql', which reads an assigned column — " +
-              "self-referential assignments cannot replay exactly " +
-              "under at-least-once replication (a replica may see " +
-              "pre- or post-statement bytes); redactions must read " +
-              "only columns the statement leaves untouched")
-          // defense-in-depth twin of [[updateBoxes]]'s record-time
-          // gate, for records minted by foreign/older writers: an
-          // environment-bound value (now(), rand()) re-evaluates to
-          // DIFFERENT bytes here than it did at the source — silent
-          // divergence, refused typed (a fresh bootstrap never
-          // evaluates the assignment; the stamp stays safe)
-          if (!dstFresh) environmentBound(e).foreach(bad =>
-            throw new IllegalArgumentException(
-              s"replicate: source update seq ${r.seq} assigns '$c' " +
-                s"from '$sql', which reads the evaluation environment " +
-                s"($bad) — re-evaluating it at replay time diverges " +
-                "replica bytes from source bytes; such statements " +
-                "cannot replicate (and current writers refuse them at " +
-                "record time)"))
-          c -> org.apache.spark.sql.functions.expr(sql)
-        }
-        val setMap = sets.toMap
-        rewriteBoxedUnits(spark, dstDir, "sdml", r.seq, scoped,
-          r.sets) { (d, hit) =>
-          d.select(d.columns.toSeq.map { c =>
-            setMap.get(c)
-              .map(e => when(hit, e).otherwise(col(c)).as(c))
-              .getOrElse(col(c))
-          }: _*)
-        }: Unit
-      }
+      // scoped `__batch <= upto` (rows of later batches were never
+      // touched by the statement); a chained record also carries the
+      // scope it ITSELF applied under — intersect, so a replica of a
+      // replica never widens the original statement. A fresh replica
+      // stamps with an empty scope: nothing rewrites, the marker and
+      // record publish
+      val (target, assigns, recorded) = DmlTarget.decode(r)
+      val scope = if (dstFresh) -1L else math.min(r.upto, recorded)
+      val sets = replayAssigns(spark, dstDir, r, target, assigns, dstFresh)
+      rewriteMarkedUnits(spark, dstDir, "sdml", r.seq, target, scope,
+        sets, assigns): Unit
       if (dstFresh) stamped += 1 else replayed += 1
     }
     ReplicateStats(pulled, replayed, stamped, mergesReplayed)
+  }
+
+  /** The replay-side gates on one source statement's assignments —
+    * defense-in-depth twins of [[validateAssignSets]]' record-time
+    * gates, for records minted by foreign or older writers: a column
+    * the statement touches that this replica has never seen (schema
+    * evolution via a still-gapped source batch) must refuse, not
+    * silently no-op — the sync retries after the gap commits; a
+    * SELF-REFERENTIAL assignment cannot replay exactly under
+    * at-least-once replication (a replica may hold pre- or
+    * post-statement bytes); an ENVIRONMENT-BOUND value re-evaluates to
+    * different bytes here than at the source. A bootstrap stamp
+    * (`dstFresh`) evaluates nothing, so it passes every gate. Returns
+    * the assignments as columns. */
+  private def replayAssigns(spark: SparkSession, dstDir: String,
+      r: DmlRecord, target: DmlTarget, assigns: Seq[(String, String)],
+      dstFresh: Boolean): Seq[(String, Column)] = {
+    val touched = target.selectCol.toSeq ++ assigns.map(_._1)
+    if (!dstFresh && touched.nonEmpty) {
+      val known = tableSchema(spark, dstDir)
+        .map(_.fieldNames.toSet).getOrElse(Set.empty)
+      touched.foreach { c =>
+        require(known.isEmpty || known(c),
+          s"replicate: source statement seq ${r.seq} (${r.kind}) " +
+            s"touches '$c', a column this replica has not seen yet " +
+            "(schema evolution above a source ledger gap) — re-sync " +
+            "after the gap commits")
+      }
+    }
+    val assigned = assigns.map(_._1.toLowerCase).toSet
+    assigns.map { case (c, sql) =>
+      val e = org.apache.spark.sql.graftbridge.ColumnBridge
+        .catalystExpr(expr(sql))
+      if (!dstFresh) {
+        val refs = e.collect {
+          case u: org.apache.spark.sql.catalyst.analysis
+            .UnresolvedAttribute => u.nameParts.last.toLowerCase
+        }
+        require(refs.toSet.intersect(assigned).isEmpty,
+          s"replicate: source update seq ${r.seq} assigns '$c' " +
+            s"from '$sql', which reads an assigned column — " +
+            "self-referential assignments cannot replay exactly " +
+            "under at-least-once replication (a replica may see " +
+            "pre- or post-statement bytes); redactions must read " +
+            "only columns the statement leaves untouched")
+        environmentBound(e).foreach(bad =>
+          throw new IllegalArgumentException(
+            s"replicate: source update seq ${r.seq} assigns '$c' " +
+              s"from '$sql', which reads the evaluation environment " +
+              s"($bad) — re-evaluating it at replay time diverges " +
+              "replica bytes from source bytes; such statements " +
+              "cannot replicate (and current writers refuse them at " +
+              "record time)"))
+      }
+      c -> expr(sql)
+    }
   }
 
   /** RETENTION for the merge replay snapshots: drop the
@@ -3064,7 +2657,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
    *     q166/q170 machinery: a unit whose bloom excludes every key is
    *     never opened, let alone rewritten);
    *  4. each affected unit rewrites through the same staged
-   *     WAL-manifest as [[deleteBox]], dropping its matching-key rows
+   *     WAL-manifest as [[delete]], dropping its matching-key rows
    *     with `__batch < batchId` (a broadcast anti-join on the keys —
    *     the data path never collects). Because the append is already
    *     published, a concurrent reader during the rewrites sees AT
@@ -3119,7 +2712,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
    * so it is "not matched by source" and deletes (gate permitting) —
    * the ONE spot where the engine's keep-NULL-rows delete rule yields
    * to the SQL MERGE contract. The gate must be environment-free
-   * (recorded SQL, re-evaluated at replay — the [[updateBoxes]]
+   * (recorded SQL, re-evaluated at replay — the [[update]]
    * rule); an empty `updates` with `dropUnmatched` is a gated
    * FULL-TABLE delete (nothing appends, everything unmatched).
    * Incompatible with the chunked split ([[mergeRowsChunkedNext]] —
@@ -3138,7 +2731,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
    * wherever a fold may have carried them), re-stamps the commit
    * marker, drops the intent. After the commit marker → false, O(1).
    *
-   * Like [[deleteBox]], replaced row versions are destructive across
+   * Like [[delete]], replaced row versions are destructive across
    * history: [[readAsOf]] views before `batchId` do not resurrect the
    * old values of merged keys (the RTBF rule — a correction exists to
    * supersede the record everywhere).
@@ -3175,7 +2768,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
       dropUnmatched: Option[UnmatchedDelete] = None): Boolean = {
     refuseReplicaWrite(spark, dir, "mergeRows")
     // the gate is recorded as SQL and re-evaluated per unit rewrite
-    // and at replica replay — the updateBoxes record-time rule
+    // and at replica replay — the update record-time rule
     val unmatchedRec: Option[String] = dropUnmatched.map { ud =>
       ud.gate.map { g =>
         val ex = org.apache.spark.sql.graftbridge.ColumnBridge
@@ -3365,7 +2958,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
           .withColumn("__graft_merge_hit", lit(true)))
         val gridNow = readGrid(spark, dir)
         affected.zipWithIndex.foreach { case ((name, d), i) =>
-          // same attempt-nonce discipline as deleteBox: a replay's
+          // same attempt-nonce discipline as delete: a replay's
           // target names must not collide with a published one
           val stamp = s"merge$batchId-$i-" +
             java.util.UUID.randomUUID().toString.take(6)
@@ -3377,7 +2970,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
           // keep: key not merged, OR the row is AT/ABOVE the merge
           // point (its own append wherever a fold carried it, and any
           // batch a live stream published meanwhile); null keys never
-          // join → kept, the deleteBox null-safety rule. With
+          // join → kept, the delete null-safety rule. With
           // dropUnmatched, an UNMATCHED pre-merge row (null-keyed
           // included — SQL MERGE semantics, the doc) survives only if
           // the gate spares it.
@@ -4087,7 +3680,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     * only the units published since its checkpoint, however many
     * generations the rest has been folded into. Rows REMOVED since the
     * checkpoint are not reported (this is an append-log view, not a
-    * diff; [[deleteBox]] is the deliberate exception — right-to-be-
+    * diff; [[delete]] is the deliberate exception — right-to-be-
     * forgotten must not re-surface rows anywhere, including here).
     * A downstream TABLE built from this view keeps rows the source
     * later deletes or redacts — use [[replicate]] for a replica that
@@ -4102,7 +3695,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
 
   /** Ingest-time travel: the live rows ingested by batches ≤ `batch`
     * — the table as the ingest left it after that batch, EXCEPT that
-    * [[deleteBox]] is destructive across history by design: a
+    * [[delete]] is destructive across history by design: a
     * forgotten row never reappears in any as-of view (time travel
     * that resurrects deleted user data is a compliance hole, not a
     * feature — the reason lakehouse GDPR guides tell operators to cap
@@ -4429,7 +4022,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
 
   /**
    * Box scan with FILE-LEVEL pruning — the read-side twin of
-   * [[deleteBox]], and the piece Spark's own reader does not do:
+   * [[delete]], and the piece Spark's own reader does not do:
    * parquet scans skip row GROUPS from footer statistics but still
    * list and open every file (the r12 layout probe measured scanFiles = all in
    * every layout). On a clustered table the per-dir statistics are

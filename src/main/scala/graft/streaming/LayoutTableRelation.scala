@@ -59,8 +59,9 @@ private[graft] class LayoutTableRelation(
   extends BaseRelation with PrunedFilteredScan with InsertableRelation {
 
   /** The table dir — for the DML rules ([[graft.sql.GraftDmlRule]])
-    * that route SQL DELETE/MERGE over this relation to
-    * [[LayoutIngest.deleteBox]]/[[LayoutIngest.mergeRows]]. */
+    * that route SQL DELETE/UPDATE/MERGE over this relation to
+    * [[LayoutIngest.delete]]/[[LayoutIngest.update]]/
+    * [[LayoutIngest.mergeRows]]. */
   private[graft] def tableDir: String = dir
 
   /** sinceBatch/asOfBatch views are reads of HISTORY — every write

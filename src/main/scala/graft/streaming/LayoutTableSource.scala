@@ -54,7 +54,7 @@ import org.apache.spark.sql.types.StructType
   *
   * Constraints: the table must carry ingest provenance (post-__batch;
   * pre-provenance tables fail at schema resolution), and
-  * [[LayoutIngest.deleteBox]] removals are NOT emitted (append-log
+  * [[LayoutIngest.delete]] removals are NOT emitted (append-log
   * view; RTBF must not re-surface rows — the readSince contract). */
 class LayoutTableSource extends StreamSourceProvider
     with RelationProvider with CreatableRelationProvider

@@ -6,7 +6,13 @@ import graft.{GraftSession, Verify}
 import graft.queries.Battery
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.{FormattedMode, SortExec, SparkPlan,
+  WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
+  BroadcastNestedLoopJoinExec, CartesianProductExec, ShuffledHashJoinExec,
+  SortMergeJoinExec}
 
 /**
  * The battery dev loop, one verb per question, on the bench's session
@@ -18,10 +24,13 @@ import org.apache.spark.sql.execution.FormattedMode
  *  - `jobs <query...>`: Spark jobs, stages, tasks and stage time per rep,
  *    then the 15 costliest stage shapes of the last rep — per-stage
  *    scheduling overhead against compute: `[jobs] <query> rep<r> ...`
- *  - `plan <query...>`: an inventory line (exchanges, join strategies,
- *    codegen spans, sorts) then the formatted physical plan
+ *  - `plan <query...>`: runs each query once, then an inventory line
+ *    (shuffle exchanges, join strategies, codegen spans, sorts — counted
+ *    by operator class over the final adaptive plan) and the formatted
+ *    physical plan
  *  - `verify <sfDir> <outDir> <query...>`: [[graft.Verify]] for just the
- *    named queries, for `scripts/compare_oracle.py <sfDir> <outDir>`
+ *    named queries, for `scripts/compare_oracle.py <sfDir> <outDir>`;
+ *    exits 1 when any query failed
  *
  * With no query names, `time`, `jobs` and `plan` take every battery query.
  * Env: SPARK_GRAFT_SF_DIR (default sf0.1) for `time`/`jobs`/`plan`,
@@ -38,14 +47,15 @@ object Dev {
     def names(given: Seq[String]): Seq[String] =
       if (given.nonEmpty) given else Battery.queries.keys.toSeq.sorted
     val spark = GraftSession.battery()
-    try args(0) match {
-      case "time" => time(spark, sfDir, names(args.toSeq.tail), reps)
-      case "jobs" => jobs(spark, sfDir, names(args.toSeq.tail), reps)
-      case "plan" => names(args.toSeq.tail).foreach(plan(spark, sfDir, _))
+    val failed = try args(0) match {
+      case "time" => time(spark, sfDir, names(args.toSeq.tail), reps); Nil
+      case "jobs" => jobs(spark, sfDir, names(args.toSeq.tail), reps); Nil
+      case "plan" => names(args.toSeq.tail).foreach(plan(spark, sfDir, _)); Nil
       case "verify" if args.length >= 4 =>
         Verify.dump(spark, args(1), args(2), args.toSeq.drop(3))
       case _ => throw new IllegalArgumentException(usage)
     } finally spark.stop()
+    Verify.exitOnFailure(failed)
   }
 
   private def run(spark: SparkSession, sfDir: String, name: String): (Long, Double) = {
@@ -102,13 +112,20 @@ object Dev {
   private def plan(spark: SparkSession, sfDir: String, name: String): Unit = {
     try {
       val df = Battery.queries(name)(spark, sfDir)
-      val plan = df.queryExecution.executedPlan.toString
-      def n(s: String) = plan.linesIterator.count(_.contains(s))
-      println(s"[explain] $name exch=${n("Exchange")} " +
-        s"smj=${n("SortMergeJoin")} bhj=${n("BroadcastHashJoin")} " +
-        s"shj=${n("ShuffledHashJoin")} bnl=${n("BroadcastNestedLoop")} " +
-        s"cart=${n("CartesianProduct")} wscg=${n("WholeStageCodegen")} " +
-        s"sort=${n("Sort ")}")
+      // run once: under AQE the plan before execution is the initial
+      // one, without the codegen spans and join choices it ends with
+      df.queryExecution.toRdd.count()
+      val ops = new AdaptiveSparkPlanHelper {}
+        .collect(df.queryExecution.executedPlan) { case p => p }
+      def n(f: SparkPlan => Boolean) = ops.count(f)
+      println(s"[explain] $name exch=${n(_.isInstanceOf[ShuffleExchangeLike])} " +
+        s"smj=${n(_.isInstanceOf[SortMergeJoinExec])} " +
+        s"bhj=${n(_.isInstanceOf[BroadcastHashJoinExec])} " +
+        s"shj=${n(_.isInstanceOf[ShuffledHashJoinExec])} " +
+        s"bnl=${n(_.isInstanceOf[BroadcastNestedLoopJoinExec])} " +
+        s"cart=${n(_.isInstanceOf[CartesianProductExec])} " +
+        s"wscg=${n(_.isInstanceOf[WholeStageCodegenExec])} " +
+        s"sort=${n(_.isInstanceOf[SortExec])}")
       println(df.queryExecution.explainString(FormattedMode))
     } catch { case e: Throwable =>
       println(s"[explain] $name FAILED: ${e.getMessage}")

@@ -119,8 +119,8 @@ object LakehouseDemo {
       "box scan inexact")
 
     println("[demo] 7. right-to-be-forgotten: delete that user slice")
-    require(LayoutIngest.deleteBox(spark, dir,
-      Seq(("user_id", blo, bhi)), deleteId = 1L), "delete must commit")
+    require(LayoutIngest.delete(spark, dir, LayoutIngest.DmlTarget.Boxes(
+      Seq(Seq(("user_id", blo, bhi)))), id = 1L), "delete must commit")
     require(LayoutIngest.read(spark, dir).count() == n - boxRows,
       "delete lost or kept wrong rows")
     println("[demo] 8. as-of read must NOT resurrect the forgotten rows")
@@ -208,7 +208,7 @@ object LakehouseDemo {
       "DataFrameWriter append must land exactly the new rows")
 
     println("[demo] 14. SQL DML: DELETE FROM / MERGE INTO route to " +
-      "deleteBox/mergeRows (GraftSqlExtensions)")
+      "delete/mergeRows (GraftSqlExtensions)")
     val beforeDml = spark.table("events_table").count()
     // the five appended rows live at event_id 5000+; DELETE them by box
     spark.sql("DELETE FROM events_table WHERE event_id >= 5000")

@@ -1,6 +1,8 @@
 package graft
 
 import graft.streaming.LayoutIngest
+import graft.streaming.LayoutIngest.DmlTarget.{Boxes, Keys, StrSpan}
+import graft.streaming.LayoutIngest.StrRange
 import org.apache.spark.sql.functions._
 
 /** The DML statement-record machinery and the replica surface
@@ -34,63 +36,105 @@ class DmlReplicationSpec extends SparkSpec {
       .select("a", "b", "v", "zkey", "__batch")
       .as[(Long, Long, Long, Long, Long)].collect().toSet
 
-  test("a crashed DELETE's published debris OCCUPIES its id: the " +
-      "next DIFFERENT statement mints past it and its predicate " +
-      "applies INSIDE the debris units") {
-    val t = freshTable("dmldebris-del")
-    // statement A: delete b in [40,60] — rewrites BOTH units
-    assert(LayoutIngest.deleteBoxes(spark, t,
-      Seq(Seq(("b", 40L, 60L))), deleteId = 0L))
-    // worst crash window: all rewrites published, marker never lands
-    val marker = new java.io.File(s"$t/markers/del-0")
-    assert(marker.exists() && marker.delete())
-    assert(Option(new java.io.File(s"$t/data").list()).get
-      .exists(_.startsWith("gen-del0-")),
-      "premise: A's published rewrites must survive as gen-del0-*")
-    // statement B, semantically DIFFERENT, through the mint-next path
-    // (the SQL DELETE body). Pre-fix, B minted id 0 and the replay
-    // skip exempted A's debris — b=10 and b=90 survived inside them.
-    val view = spark.read.format("graft-layout").load(t)
-    view.createOrReplaceTempView("debris_del")
-    spark.sql("DELETE FROM debris_del WHERE b = 10 OR b = 90")
-    val left = LayoutIngest.read(spark, t)
-      .select("b").as[Long].collect().toSet
-    assert(!left.contains(10L) && !left.contains(90L),
-      "B's predicate must apply inside A's published debris units")
-    assert(new java.io.File(s"$t/markers/del-1").exists(),
-      "B must have minted PAST the crashed id 0")
-    // A's owed replay still converges behind its own id (the same-id
-    // skip is for true replays only)
-    assert(LayoutIngest.deleteBoxes(spark, t,
-      Seq(Seq(("b", 40L, 60L))), deleteId = 0L))
-    assert(LayoutIngest.read(spark, t).select("b").as[Long]
-      .collect().toSet === ((0L to 99L).toSet -- (40L to 60L) - 10L -
-        90L))
-  }
+  private type KRow = (Long, Long, Option[String], Long)
 
-  test("a crashed UPDATE's debris occupies its id too — a later " +
-      "statement's redaction reaches the debris (the missed-redaction " +
-      "hazard)") {
-    val t = freshTable("dmldebris-upd")
-    assert(LayoutIngest.updateBoxes(spark, t,
-      Seq(Seq(("b", 0L, 99L))), Seq("v" -> (col("b") * 10L + 1L)),
-      updateId = 0L))
-    val marker = new java.io.File(s"$t/markers/upd-0")
-    assert(marker.exists() && marker.delete())
-    // a DIFFERENT statement: a redaction on a slice covering rows
-    // inside the debris units, through the SQL mint-next path
-    val view = spark.read.format("graft-layout").load(t)
-    view.createOrReplaceTempView("debris_upd")
-    spark.sql("UPDATE debris_upd SET v = 0 WHERE b >= 10 AND b <= 20")
-    val got = LayoutIngest.read(spark, t)
-      .select("b", "v").as[(Long, Long)].collect().toMap
-    (10L to 20L).foreach { b =>
-      assert(got(b) === 0L,
-        s"b=$b: the new statement's redaction must reach the crashed " +
-          s"statement's published units, got ${got(b)}")
+  /** One crash-debris case per DML kind, on [[freshKeyedTable]]:
+    * `crash` is statement A under the explicit id 0, rewriting BOTH
+    * units; `later` is a semantically DIFFERENT SQL statement B of the
+    * same kind (the mint-next path) whose rows sit inside A's
+    * published units; `crashFx`/`laterFx` are their row effects (None
+    * = deleted), the model the table must equal. */
+  private case class DebrisCase(name: String, kind: String,
+      crash: String => Boolean, later: String => String,
+      crashFx: KRow => Option[KRow], laterFx: KRow => Option[KRow])
+
+  private def docIn(lo: String, hi: String)(r: KRow) =
+    r._3.exists(d => d >= lo && d <= hi)
+
+  private val debrisCases = Seq(
+    DebrisCase("a crashed DELETE's published debris OCCUPIES its id: " +
+        "the next DIFFERENT statement mints past it and its predicate " +
+        "applies INSIDE the debris units", "del",
+      t => LayoutIngest.delete(spark, t,
+        Boxes(Seq(Seq(("b", 40L, 60L)))), id = 0L),
+      v => s"DELETE FROM $v WHERE b = 10 OR b = 90",
+      r => if (r._2 >= 40 && r._2 <= 60) None else Some(r),
+      r => if (r._2 == 10 || r._2 == 90) None else Some(r)),
+    DebrisCase("a crashed UPDATE's debris occupies its id too — a later " +
+        "statement's redaction reaches the debris (the missed-redaction " +
+        "hazard)", "upd",
+      t => LayoutIngest.update(spark, t,
+        Boxes(Seq(Seq(("b", 0L, 99L)))), Seq("v" -> (col("b") * 10L + 1L)),
+        id = 0L),
+      v => s"UPDATE $v SET v = 0 WHERE b >= 10 AND b <= 20",
+      r => Some(r.copy(_4 = r._2 * 10L + 1L)),
+      r => if (r._2 >= 10 && r._2 <= 20) Some(r.copy(_4 = 0L)) else Some(r)),
+    DebrisCase("a crashed keyed DELETE's debris occupies its id (delk)",
+      "delk",
+      t => LayoutIngest.delete(spark, t,
+        Keys("doc", Seq("doc-10", "doc-60")), id = 0L),
+      v => s"DELETE FROM $v WHERE doc IN ('doc-20', 'doc-80')",
+      r => if (r._3.exists(Set("doc-10", "doc-60"))) None else Some(r),
+      r => if (r._3.exists(Set("doc-20", "doc-80"))) None else Some(r)),
+    DebrisCase("a crashed keyed UPDATE's debris occupies its id (updk)",
+      "updk",
+      t => LayoutIngest.update(spark, t,
+        Keys("doc", Seq("doc-11", "doc-61")), Seq("v" -> lit(-1L)),
+        id = 0L),
+      v => s"UPDATE $v SET v = 0 WHERE doc = 'doc-21' OR doc = 'doc-81'",
+      r => if (r._3.exists(Set("doc-11", "doc-61"))) Some(r.copy(_4 = -1L))
+        else Some(r),
+      r => if (r._3.exists(Set("doc-21", "doc-81"))) Some(r.copy(_4 = 0L))
+        else Some(r)),
+    DebrisCase("a crashed string-range DELETE's debris occupies its id " +
+        "(dels)", "dels",
+      t => LayoutIngest.delete(spark, t, StrSpan("doc",
+        StrRange(Some("doc-40"), true, Some("doc-60"), true)), id = 0L),
+      v => s"DELETE FROM $v WHERE doc LIKE 'doc-9%'",
+      r => if (docIn("doc-40", "doc-60")(r)) None else Some(r),
+      r => if (r._3.exists(_.startsWith("doc-9"))) None else Some(r)),
+    DebrisCase("a crashed string-range UPDATE's debris occupies its id " +
+        "(upds)", "upds",
+      t => LayoutIngest.update(spark, t, StrSpan("doc",
+        StrRange(Some("doc-40"), true, Some("doc-60"), true)),
+        Seq("v" -> lit(-1L)), id = 0L),
+      v => s"UPDATE $v SET v = 0 WHERE doc LIKE 'doc-9%'",
+      r => if (docIn("doc-40", "doc-60")(r)) Some(r.copy(_4 = -1L))
+        else Some(r),
+      r => if (r._3.exists(_.startsWith("doc-9"))) Some(r.copy(_4 = 0L))
+        else Some(r)))
+
+  debrisCases.foreach { c =>
+    test(c.name) {
+      val t = freshKeyedTable(s"dmldebris-${c.kind}")
+      def rows(): Set[KRow] = LayoutIngest.read(spark, t)
+        .select("a", "b", "doc", "v").as[KRow].collect().toSet
+      val base = rows()
+      // statement A; then the worst crash window: all rewrites
+      // published, marker never lands
+      assert(c.crash(t))
+      val marker = new java.io.File(s"$t/markers/${c.kind}-0")
+      assert(marker.exists() && marker.delete())
+      assert(Option(new java.io.File(s"$t/data").list()).get
+        .count(_.startsWith(s"gen-${c.kind}0-")) === 2,
+        s"premise: A's published rewrites of both units must survive " +
+          s"as gen-${c.kind}0-*")
+      // statement B through the mint-next path. Had B minted id 0, the
+      // replay skip would have exempted A's debris units from it — a
+      // missed delete/redaction.
+      spark.read.format("graft-layout").load(t)
+        .createOrReplaceTempView(s"debris_${c.kind}")
+      spark.sql(c.later(s"debris_${c.kind}"))
+      val afterB = base.flatMap(c.crashFx).flatMap(c.laterFx)
+      assert(rows() === afterB,
+        "B's predicate must apply inside A's published debris units")
+      assert(new java.io.File(s"$t/markers/${c.kind}-1").exists(),
+        "B must have minted PAST the crashed id 0")
+      // A's owed replay still converges behind its own id (the same-id
+      // skip is for true replays only)
+      assert(c.crash(t))
+      assert(rows() === afterB.flatMap(c.crashFx))
     }
-    assert(new java.io.File(s"$t/markers/upd-1").exists(),
-      "the new UPDATE must mint past the crashed id 0")
   }
 
   test("a CRASHED chunked merge auto-completes at the next vacuum: " +
@@ -169,11 +213,11 @@ class DmlReplicationSpec extends SparkSpec {
       "consolidates EXACTLY: history identical, replays stay no-ops, " +
       "minting scans the log") {
     val t = freshTable("dmlfold")
-    assert(LayoutIngest.deleteBoxes(spark, t,
-      Seq(Seq(("b", 90L, 99L))), deleteId = 0L))
-    assert(LayoutIngest.updateBoxes(spark, t,
-      Seq(Seq(("a", 0L, 9L)), Seq(("a", 20L, 29L))),
-      Seq("v" -> lit(-1L)), updateId = 0L))
+    assert(LayoutIngest.delete(spark, t,
+      Boxes(Seq(Seq(("b", 90L, 99L)))), id = 0L))
+    assert(LayoutIngest.update(spark, t,
+      Boxes(Seq(Seq(("a", 0L, 9L)), Seq(("a", 20L, 29L)))),
+      Seq("v" -> lit(-1L)), id = 0L))
     val before = LayoutIngest.history(spark, t)
       .select("kind", "id", "committed", "at_ms")
       .collect().map(_.toSeq).toSet
@@ -188,8 +232,8 @@ class DmlReplicationSpec extends SparkSpec {
       "history must present folded DML ops EXACTLY as before " +
         "(kind, id, committed, commit mtime)")
     // a replay of a folded statement is still a marker no-op
-    assert(!LayoutIngest.deleteBoxes(spark, t,
-      Seq(Seq(("b", 90L, 99L))), deleteId = 0L),
+    assert(!LayoutIngest.delete(spark, t,
+      Boxes(Seq(Seq(("b", 90L, 99L)))), id = 0L),
       "a folded op must stay idempotent")
     // mint-next scans the log: the next ids are 1, not 0
     spark.read.format("graft-layout").load(t)
@@ -287,8 +331,8 @@ class DmlReplicationSpec extends SparkSpec {
     val dst = src.stripSuffix("/t") + "/r"
     LayoutIngest.replicate(spark, src, dst): Unit
     // redact v for EVERY row present now (batches 0..1)
-    LayoutIngest.updateBoxesNext(spark, src,
-      Seq(Seq(("a", 0L, 99L))), Seq("v" -> lit(0L))): Unit
+    LayoutIngest.dmlNext(spark, src,
+      Boxes(Seq(Seq(("a", 0L, 99L)))), Seq("v" -> lit(0L))): Unit
     // then a THIRD batch lands in the same box — the statement never
     // saw it, so neither side may redact it
     LayoutIngest.ingestBatch((0L to 9L).map(i => (i, i, 777L))
@@ -305,10 +349,10 @@ class DmlReplicationSpec extends SparkSpec {
   test("a FRESH replica bootstraps without re-running history: " +
       "statements stamp applied, nothing rewrites") {
     val src = freshTable("repl-boot-src")
-    LayoutIngest.deleteBoxNext(spark, src,
-      Seq(("a", 0L, 4L))): Unit
-    LayoutIngest.updateBoxesNext(spark, src,
-      Seq(Seq(("a", 90L, 99L))), Seq("v" -> lit(-5L))): Unit
+    LayoutIngest.dmlNext(spark, src,
+      Boxes(Seq(Seq(("a", 0L, 4L)))), Nil): Unit
+    LayoutIngest.dmlNext(spark, src,
+      Boxes(Seq(Seq(("a", 90L, 99L)))), Seq("v" -> lit(-5L))): Unit
     val dst = src.stripSuffix("/t") + "/r"
     val st = LayoutIngest.replicate(spark, src, dst)
     assert(st.batchesPulled === 2 && st.dmlReplayed === 0 &&
@@ -319,7 +363,7 @@ class DmlReplicationSpec extends SparkSpec {
       .exists(_.startsWith("gen-sdml")),
       "a bootstrap stamp must not rewrite any unit")
     // the stamps are real records: a LATER statement still replays
-    LayoutIngest.deleteBoxNext(spark, src, Seq(("a", 50L, 54L))): Unit
+    LayoutIngest.dmlNext(spark, src, Boxes(Seq(Seq(("a", 50L, 54L)))), Nil): Unit
     val st2 = LayoutIngest.replicate(spark, src, dst)
     assert(st2.dmlReplayed === 1 && snap(dst) === snap(src))
   }
@@ -330,9 +374,9 @@ class DmlReplicationSpec extends SparkSpec {
     val r2 = src.stripSuffix("/t") + "/r2"
     LayoutIngest.replicate(spark, src, r1): Unit
     LayoutIngest.replicate(spark, r1, r2): Unit
-    LayoutIngest.deleteBoxNext(spark, src, Seq(("b", 40L, 49L))): Unit
-    LayoutIngest.updateBoxesNext(spark, src,
-      Seq(Seq(("b", 60L, 69L))), Seq("v" -> lit(0L))): Unit
+    LayoutIngest.dmlNext(spark, src, Boxes(Seq(Seq(("b", 40L, 49L)))), Nil): Unit
+    LayoutIngest.dmlNext(spark, src,
+      Boxes(Seq(Seq(("b", 60L, 69L)))), Seq("v" -> lit(0L))): Unit
     LayoutIngest.replicate(spark, src, r1): Unit
     val st = LayoutIngest.replicate(spark, r1, r2)
     assert(st.dmlReplayed === 2)
@@ -353,8 +397,8 @@ class DmlReplicationSpec extends SparkSpec {
     val updates = Seq((5L, 5L, 111L), (60L, 60L, 222L),
       (150L, 7L, 333L)).toDF("a", "b", "v")
     val mid = LayoutIngest.mergeRowsNext(spark, src, "a", updates)
-    LayoutIngest.updateBoxesNext(spark, src,
-      Seq(Seq(("b", 0L, 10L))), Seq("v" -> lit(-1L))): Unit
+    LayoutIngest.dmlNext(spark, src,
+      Boxes(Seq(Seq(("b", 0L, 10L)))), Seq("v" -> lit(-1L))): Unit
     val st = LayoutIngest.replicate(spark, src, dst)
     assert(st.mergesReplayed === 1 && st.dmlReplayed === 1,
       s"one merge + one update must replay: $st")
@@ -393,7 +437,7 @@ class DmlReplicationSpec extends SparkSpec {
     LayoutIngest.replicate(spark, srcS, dstS): Unit
     val ups = Seq((7L, 7L, 444L)).toDF("a", "b", "v")
     val mid = LayoutIngest.mergeRowsNext(spark, srcS, "a", ups)
-    LayoutIngest.deleteBoxNext(spark, srcS, Seq(("b", 90L, 99L))): Unit
+    LayoutIngest.dmlNext(spark, srcS, Boxes(Seq(Seq(("b", 90L, 99L)))), Nil): Unit
     val mk = new java.io.File(s"$srcS/markers/merge-$mid")
     assert(mk.exists() && mk.delete())
     java.nio.file.Files.write(
@@ -493,16 +537,16 @@ class DmlReplicationSpec extends SparkSpec {
     val srcS = freshTable("repl-ref-self")
     val dstS = srcS.stripSuffix("/t") + "/r"
     LayoutIngest.replicate(spark, srcS, dstS): Unit
-    refuses(LayoutIngest.updateBoxesNext(spark, srcS,
-      Seq(Seq(("a", 0L, 9L))), Seq("v" -> (col("v") + lit(1L)))),
+    refuses(LayoutIngest.dmlNext(spark, srcS,
+      Boxes(Seq(Seq(("a", 0L, 9L)))), Seq("v" -> (col("v") + lit(1L)))),
       "assigned column")
     // …and the sync stays healthy afterwards (nothing was recorded)
     LayoutIngest.replicate(spark, srcS, dstS): Unit
     // defense-in-depth: the REPLAY gate still refuses a
     // self-referential record minted by a foreign/older writer —
     // simulated by doctoring a legal statement's marker on disk
-    LayoutIngest.updateBoxesNext(spark, srcS,
-      Seq(Seq(("a", 0L, 9L))), Seq("v" -> lit(0L))): Unit
+    LayoutIngest.dmlNext(spark, srcS,
+      Boxes(Seq(Seq(("a", 0L, 9L)))), Seq("v" -> lit(0L))): Unit
     val updMarker = new java.io.File(s"$srcS/markers")
       .listFiles().filter(_.getName.matches("upd-\\d+"))
       .maxBy(_.getName)
@@ -522,8 +566,8 @@ class DmlReplicationSpec extends SparkSpec {
     // a payload-less marker (pre-record format) cannot be replayed
     val srcP = freshTable("repl-ref-prerec")
     val dstP = srcP.stripSuffix("/t") + "/r"
-    assert(LayoutIngest.deleteBoxes(spark, srcP,
-      Seq(Seq(("a", 0L, 0L))), deleteId = 3L))
+    assert(LayoutIngest.delete(spark, srcP,
+      Boxes(Seq(Seq(("a", 0L, 0L)))), id = 3L))
     val m = new java.io.File(s"$srcP/markers/del-3")
     java.nio.file.Files.write(m.toPath, Array.empty[Byte])
     refuses(LayoutIngest.replicate(spark, srcP, dstP),
@@ -553,10 +597,10 @@ class DmlReplicationSpec extends SparkSpec {
               (base until base + 5).map(i => (i, i % 100, i))
                 .toDF("a", "b", "v"), filesPerBatch = 1): Unit
           case 1 =>
-            LayoutIngest.deleteBoxesNext(spark, src, randBox()): Unit
+            LayoutIngest.dmlNext(spark, src, Boxes(randBox()), Nil): Unit
           case 2 =>
             // idempotent-safe redaction (reads no assigned column)
-            LayoutIngest.updateBoxesNext(spark, src, randBox(),
+            LayoutIngest.dmlNext(spark, src, Boxes(randBox()),
               Seq("v" -> lit(rnd.nextInt(1000).toLong))): Unit
           case 3 =>
             // some existing keys (replace), some fresh (insert)
@@ -588,13 +632,13 @@ class DmlReplicationSpec extends SparkSpec {
     sd.listFiles().foreach(_.delete())
     assert(sd.delete())
     val e = intercept[IllegalArgumentException](
-      LayoutIngest.updateBoxes(spark, t, Seq(Seq(("a", 0L, 9L))),
-        Seq("v_typo" -> lit(0L)), updateId = 0L))
+      LayoutIngest.update(spark, t, Boxes(Seq(Seq(("a", 0L, 9L)))),
+        Seq("v_typo" -> lit(0L)), id = 0L))
     assert(e.getMessage.contains("unknown column 'v_typo'"))
     // a REAL column still updates (the fallback reads the served
     // columns, not nothing)
-    assert(LayoutIngest.updateBoxes(spark, t, Seq(Seq(("a", 0L, 9L))),
-      Seq("v" -> lit(1L)), updateId = 0L))
+    assert(LayoutIngest.update(spark, t, Boxes(Seq(Seq(("a", 0L, 9L)))),
+      Seq("v" -> lit(1L)), id = 0L))
     assert(LayoutIngest.read(spark, t).filter(col("a") <= 9L)
       .select("v").as[Long].collect().toSet === Set(1L))
   }
@@ -620,8 +664,8 @@ class DmlReplicationSpec extends SparkSpec {
       "unit selection, keeps NULL-keyed rows, and is idempotent") {
     val t = freshKeyedTable("delk-api")
     // doc-10 lives in batch 0's unit only; batch 1's bloom excludes it
-    assert(LayoutIngest.deleteKeys(spark, t, "doc", Seq("doc-10"),
-      deleteId = 0L))
+    assert(LayoutIngest.delete(spark, t, Keys("doc", Seq("doc-10")),
+      id = 0L))
     val rewritten = Option(new java.io.File(s"$t/data").list()).get
       .count(_.startsWith("gen-delk0-"))
     assert(rewritten === 1,
@@ -631,14 +675,14 @@ class DmlReplicationSpec extends SparkSpec {
     assert(docs.length === 99 && !docs.contains(Some("doc-10")))
     assert(docs.count(_.isEmpty) === 1, "the NULL-keyed row is KEPT")
     // replay of the same id is a marker no-op
-    assert(!LayoutIngest.deleteKeys(spark, t, "doc", Seq("doc-10"), 0L))
+    assert(!LayoutIngest.delete(spark, t, Keys("doc", Seq("doc-10")), 0L))
     // a second statement auto-mints past the first; multi-key +
     // record-hostile key content (tab/newline/unicode) round-trips
     LayoutIngest.ingestBatch(
       Seq((3L, 3L, "we\tird\nkeyé", 1L)).toDF("a", "b", "doc", "v"),
       2L, t, 1): Unit
-    val id = LayoutIngest.deleteKeysNext(spark, t, "doc",
-      Seq("doc-20", "we\tird\nkeyé", "absent"))
+    val id = LayoutIngest.dmlNext(spark, t, Keys("doc",
+      Seq("doc-20", "we\tird\nkeyé", "absent")), Nil)
     assert(id === 1L)
     val left = LayoutIngest.read(spark, t)
       .select("doc").as[Option[String]].collect()
@@ -649,16 +693,16 @@ class DmlReplicationSpec extends SparkSpec {
       .filter(col("kind") === "delete_keys").count() === 2L)
     // long keys work through the same surface (stats + bloom types)
     val tl = freshTable("delk-long")
-    assert(LayoutIngest.deleteKeys(spark, tl, "a", Seq(5L, 95L), 0L))
+    assert(LayoutIngest.delete(spark, tl, Keys("a", Seq(5L, 95L)), 0L))
     assert(LayoutIngest.read(spark, tl).select("a").as[Long]
       .collect().toSet === ((0L to 99L).toSet -- Set(5L, 95L)))
     // refusals: null key, unknown column, mistyped keys
     intercept[IllegalArgumentException](
-      LayoutIngest.deleteKeys(spark, t, "doc", Seq("x", null), 9L))
+      LayoutIngest.delete(spark, t, Keys("doc", Seq("x", null)), 9L))
     intercept[IllegalArgumentException](
-      LayoutIngest.deleteKeys(spark, t, "nope", Seq("x"), 9L))
+      LayoutIngest.delete(spark, t, Keys("nope", Seq("x")), 9L))
     intercept[IllegalArgumentException](
-      LayoutIngest.deleteKeys(spark, t, "v", Seq("x"), 9L))
+      LayoutIngest.delete(spark, t, Keys("v", Seq("x")), 9L))
   }
 
   test("a keyed delete REPLAYS on replicas scoped to the batches it " +
@@ -671,8 +715,8 @@ class DmlReplicationSpec extends SparkSpec {
     assert(LayoutIngest.replicate(spark, dst, dst3).batchesPulled === 2)
     // the statement; then the SAME key re-appears in a LATER batch —
     // the upto scope must keep the re-added row alive on every replica
-    assert(LayoutIngest.deleteKeys(spark, src, "doc",
-      Seq("doc-30", "doc-77"), deleteId = 0L))
+    assert(LayoutIngest.delete(spark, src, Keys("doc",
+      Seq("doc-30", "doc-77")), id = 0L))
     LayoutIngest.ingestBatch(
       Seq((30L, 30L, "doc-30", 999L)).toDF("a", "b", "doc", "v"),
       2L, src, 1): Unit
@@ -710,6 +754,149 @@ class DmlReplicationSpec extends SparkSpec {
     LayoutIngest.readSince(spark, dir, -1L)
       .select("a", "b", "doc", "v", "zkey", "__batch")
       .as[(Long, Long, Option[String], Long, Long, Long)].collect().toSet
+
+  test("every DML kind writes its marker body byte for byte: the six " +
+      "source kinds, their sdml replays, and chained replays") {
+    // driven through SQL and replicate() only, so the same spec runs
+    // against any build of the verbs behind them
+    val src = freshKeyedTable("dml-format")
+    val dst = src.stripSuffix("/t") + "/r"
+    val dst2 = src.stripSuffix("/t") + "/r2"
+    LayoutIngest.replicate(spark, src, dst): Unit
+    LayoutIngest.replicate(spark, dst, dst2): Unit
+    spark.read.format("graft-layout").load(src)
+      .createOrReplaceTempView("fmt_src")
+    Seq(
+      "DELETE FROM fmt_src WHERE a BETWEEN 10 AND 12 OR b = 90",
+      "UPDATE fmt_src SET v = -1 WHERE a >= 20 AND a < 23",
+      "DELETE FROM fmt_src WHERE doc IN ('doc-30', 'doc-61', 'x y/é')",
+      "UPDATE fmt_src SET v = 0 WHERE doc = 'doc-40' OR doc = 'doc-41'",
+      "DELETE FROM fmt_src WHERE doc LIKE 'doc-5%'",
+      "UPDATE fmt_src SET v = b + 1 WHERE doc >= 'doc-80' AND " +
+        "doc < 'doc-85'"
+    ).foreach(spark.sql)
+    LayoutIngest.replicate(spark, src, dst): Unit
+    LayoutIngest.replicate(spark, dst, dst2): Unit
+    def body(dir: String, marker: String): String =
+      new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(s"$dir/markers/$marker")), "UTF-8")
+    val dirs = Map("src" -> src, "r" -> dst, "r2" -> dst2)
+    // every statement marker on the three tables, and nothing else
+    val listed = dirs.toSeq.flatMap { case (l, d) =>
+      new java.io.File(s"$d/markers").list().toSeq
+        .filter(_.matches("(del|upd|delk|updk|dels|upds|sdml)-\\d+"))
+        .map(l -> _)
+    }
+    val want: Seq[(String, String, String)] = Seq(
+      ("src", "del-0",
+        "graft-dml v1 del 0 0 1\n" +
+        "B\ta\t10\t12\n" +
+        "B\tb\t90\t90"),
+      ("src", "delk-0",
+        "graft-dml v1 delk 0 2 1\n" +
+        "S\t__graft_keyed_dml\tdoc\n" +
+        "S\t__graft_key_type\tstring\n" +
+        "S\tk\tdoc-30\n" +
+        "S\tk\tdoc-61\n" +
+        "S\tk\tx+y%2F%C3%A9"),
+      ("src", "dels-0",
+        "graft-dml v1 dels 0 4 1\n" +
+        "S\t__graft_str_range_dml\tdoc\n" +
+        "S\tpfx\tdoc-5"),
+      ("src", "upd-0",
+        "graft-dml v1 upd 0 1 1\n" +
+        "B\ta\t20\t22\n" +
+        "S\tv\tCAST(-1 AS BIGINT)"),
+      ("src", "updk-0",
+        "graft-dml v1 updk 0 3 1\n" +
+        "S\t__graft_keyed_dml\tdoc\n" +
+        "S\t__graft_key_type\tstring\n" +
+        "S\tk\tdoc-40\n" +
+        "S\tk\tdoc-41\n" +
+        "S\tset\tv CAST%280+AS+BIGINT%29"),
+      ("src", "upds-0",
+        "graft-dml v1 upds 0 5 1\n" +
+        "S\t__graft_str_range_dml\tdoc\n" +
+        "S\tlo\ti doc-80\n" +
+        "S\thi\tx doc-85\n" +
+        "S\tset\tv %28b+%2B+CAST%281+AS+BIGINT%29%29"),
+      ("r", "sdml-0",
+        "graft-dml v1 sdml 0 0 1\n" +
+        "B\ta\t10\t12\t__batch\t-9223372036854775808\t1\n" +
+        "B\tb\t90\t90\t__batch\t-9223372036854775808\t1"),
+      ("r", "sdml-1",
+        "graft-dml v1 sdml 1 1 1\n" +
+        "B\ta\t20\t22\t__batch\t-9223372036854775808\t1\n" +
+        "S\tv\tCAST(-1 AS BIGINT)"),
+      ("r", "sdml-2",
+        "graft-dml v1 sdml 2 2 1\n" +
+        "B\t__batch\t-9223372036854775808\t1\n" +
+        "S\t__graft_keyed_dml\tdoc\n" +
+        "S\t__graft_key_type\tstring\n" +
+        "S\tk\tdoc-30\n" +
+        "S\tk\tdoc-61\n" +
+        "S\tk\tx+y%2F%C3%A9"),
+      ("r", "sdml-3",
+        "graft-dml v1 sdml 3 3 1\n" +
+        "B\t__batch\t-9223372036854775808\t1\n" +
+        "S\t__graft_keyed_dml\tdoc\n" +
+        "S\t__graft_key_type\tstring\n" +
+        "S\tk\tdoc-40\n" +
+        "S\tk\tdoc-41\n" +
+        "S\tset\tv CAST%280+AS+BIGINT%29"),
+      ("r", "sdml-4",
+        "graft-dml v1 sdml 4 4 1\n" +
+        "B\t__batch\t-9223372036854775808\t1\n" +
+        "S\t__graft_str_range_dml\tdoc\n" +
+        "S\tpfx\tdoc-5"),
+      ("r", "sdml-5",
+        "graft-dml v1 sdml 5 5 1\n" +
+        "B\t__batch\t-9223372036854775808\t1\n" +
+        "S\t__graft_str_range_dml\tdoc\n" +
+        "S\tlo\ti doc-80\n" +
+        "S\thi\tx doc-85\n" +
+        "S\tset\tv %28b+%2B+CAST%281+AS+BIGINT%29%29"),
+      ("r2", "sdml-0",
+        "graft-dml v1 sdml 0 0 1\n" +
+        "B\ta\t10\t12\t__batch\t-9223372036854775808\t1\t__batch\t-9223372036854775808\t1\n" +
+        "B\tb\t90\t90\t__batch\t-9223372036854775808\t1\t__batch\t-9223372036854775808\t1"),
+      ("r2", "sdml-1",
+        "graft-dml v1 sdml 1 1 1\n" +
+        "B\ta\t20\t22\t__batch\t-9223372036854775808\t1\t__batch\t-9223372036854775808\t1\n" +
+        "S\tv\tCAST(-1 AS BIGINT)"),
+      ("r2", "sdml-2",
+        "graft-dml v1 sdml 2 2 1\n" +
+        "B\t__batch\t-9223372036854775808\t1\n" +
+        "S\t__graft_keyed_dml\tdoc\n" +
+        "S\t__graft_key_type\tstring\n" +
+        "S\tk\tdoc-30\n" +
+        "S\tk\tdoc-61\n" +
+        "S\tk\tx+y%2F%C3%A9"),
+      ("r2", "sdml-3",
+        "graft-dml v1 sdml 3 3 1\n" +
+        "B\t__batch\t-9223372036854775808\t1\n" +
+        "S\t__graft_keyed_dml\tdoc\n" +
+        "S\t__graft_key_type\tstring\n" +
+        "S\tk\tdoc-40\n" +
+        "S\tk\tdoc-41\n" +
+        "S\tset\tv CAST%280+AS+BIGINT%29"),
+      ("r2", "sdml-4",
+        "graft-dml v1 sdml 4 4 1\n" +
+        "B\t__batch\t-9223372036854775808\t1\n" +
+        "S\t__graft_str_range_dml\tdoc\n" +
+        "S\tpfx\tdoc-5"),
+      ("r2", "sdml-5",
+        "graft-dml v1 sdml 5 5 1\n" +
+        "B\t__batch\t-9223372036854775808\t1\n" +
+        "S\t__graft_str_range_dml\tdoc\n" +
+        "S\tlo\ti doc-80\n" +
+        "S\thi\tx doc-85\n" +
+        "S\tset\tv %28b+%2B+CAST%281+AS+BIGINT%29%29"))
+    assert(listed.toSet === want.map(w => (w._1, w._2)).toSet)
+    want.foreach { case (d, m, b) =>
+      assert(body(dirs(d), m) === b, s"$d/markers/$m")
+    }
+  }
 
   test("updateKeys redacts by doc id: bloom-pruned in place, NULL " +
       "rows kept, SQL routes string point WHEREs to it, replicas " +
@@ -769,8 +956,8 @@ class DmlReplicationSpec extends SparkSpec {
       "WHERE doc = 'doc-30'", "evaluation environment")
     // the API twin with LONG keys and a row-reading assignment
     val tl = freshTable("updk-long")
-    assert(LayoutIngest.updateKeys(spark, tl, "a", Seq(5L, 7L),
-      Seq("v" -> (col("b") * 1000L)), updateId = 0L))
+    assert(LayoutIngest.update(spark, tl, Keys("a", Seq(5L, 7L)),
+      Seq("v" -> (col("b") * 1000L)), id = 0L))
     val got = LayoutIngest.read(spark, tl)
       .select("a", "v").as[(Long, Long)].collect().toMap
     assert(got(5L) === 5000L && got(7L) === 7000L && got(6L) === 60L)
@@ -789,16 +976,16 @@ class DmlReplicationSpec extends SparkSpec {
     // every local mutator refuses typed on the un-promoted replica
     refuses(LayoutIngest.ingestBatch(
       Seq((1L, 1L, 1L)).toDF("a", "b", "v"), 2L, dst, 1), "REPLICA")
-    refuses(LayoutIngest.deleteBoxes(spark, dst,
-      Seq(Seq(("a", 0L, 9L))), 0L), "REPLICA")
-    refuses(LayoutIngest.deleteKeys(spark, dst, "a", Seq(1L), 0L),
+    refuses(LayoutIngest.delete(spark, dst,
+      Boxes(Seq(Seq(("a", 0L, 9L)))), 0L), "REPLICA")
+    refuses(LayoutIngest.delete(spark, dst, Keys("a", Seq(1L)), 0L),
       "REPLICA")
-    refuses(LayoutIngest.updateBoxes(spark, dst, Seq(Seq(("a", 0L, 9L))),
+    refuses(LayoutIngest.update(spark, dst, Boxes(Seq(Seq(("a", 0L, 9L)))),
       Seq("v" -> lit(0L)), 0L), "REPLICA")
     refuses(LayoutIngest.mergeRows(spark, dst, "a",
       Seq((1L, 1L, 1L)).toDF("a", "b", "v"), 9L), "REPLICA")
     // ...but the SYNC still writes (it is the one legitimate writer)
-    LayoutIngest.deleteBoxes(spark, src, Seq(Seq(("a", 0L, 4L))), 0L): Unit
+    LayoutIngest.delete(spark, src, Boxes(Seq(Seq(("a", 0L, 4L)))), 0L): Unit
     assert(LayoutIngest.replicate(spark, src, dst).dmlReplayed === 1)
     // promotion on a non-replica refuses
     refuses(LayoutIngest.promoteReplica(spark, src), "not a replica")
@@ -818,7 +1005,7 @@ class DmlReplicationSpec extends SparkSpec {
     val id = LayoutIngest.appendNext(spark, dst,
       Seq((200L, 0L, 0L)).toDF("a", "b", "v"), 1)
     assert(id === 2L, s"first local id above the mirrored prefix, got $id")
-    LayoutIngest.deleteBoxesNext(spark, dst, Seq(Seq(("a", 5L, 9L)))): Unit
+    LayoutIngest.dmlNext(spark, dst, Boxes(Seq(Seq(("a", 5L, 9L)))), Nil): Unit
     val left = LayoutIngest.read(spark, dst)
       .select("a").as[Long].collect().toSet
     assert(left === ((10L to 99L).toSet + 200L),
@@ -834,7 +1021,7 @@ class DmlReplicationSpec extends SparkSpec {
     val dst = src.stripSuffix("/t") + "/r"
     assert(LayoutIngest.replicate(spark, src, dst).batchesPulled === 2)
     // a source statement the NEXT sync would replay
-    LayoutIngest.updateBoxesNext(spark, src, Seq(Seq(("a", 0L, 9L))),
+    LayoutIngest.dmlNext(spark, src, Boxes(Seq(Seq(("a", 0L, 9L)))),
       Seq("v" -> lit(-5L))): Unit
     // the race window: replicate() passed its ENTRY check, then a
     // promotion landed before the replay phase — simulated by driving
@@ -860,8 +1047,8 @@ class DmlReplicationSpec extends SparkSpec {
     val s0 = LayoutIngest.keyedBloomBudgetSkips
     LayoutIngest.KeyedBloomProbeBudget = 4L // 3 keys x 2 units = 6 > 4
     try {
-      assert(LayoutIngest.deleteKeys(spark, t, "a", Seq(5L, 7L, 9L),
-        deleteId = 0L))
+      assert(LayoutIngest.delete(spark, t, Keys("a", Seq(5L, 7L, 9L)),
+        id = 0L))
       assert(LayoutIngest.keyedBloomBudgetSkips === s0 + 1,
         "the over-budget statement must skip bloom probing")
       assert(LayoutIngest.read(spark, t).select("a").as[Long]
@@ -960,8 +1147,8 @@ class DmlReplicationSpec extends SparkSpec {
       "behavior change), hit on unchanged logs; a just-written log " +
       "(coarse-mtime window) is never served from cache") {
     val t = freshTable("dmllog-cache")
-    LayoutIngest.deleteBoxes(spark, t, Seq(Seq(("a", 0L, 1L))), 0L): Unit
-    LayoutIngest.updateBoxesNext(spark, t, Seq(Seq(("a", 90L, 99L))),
+    LayoutIngest.delete(spark, t, Boxes(Seq(Seq(("a", 0L, 1L)))), 0L): Unit
+    LayoutIngest.dmlNext(spark, t, Boxes(Seq(Seq(("a", 90L, 99L)))),
       Seq("v" -> lit(-1L))): Unit
     val beforeFold = LayoutIngest.history(spark, t).collect()
       .map(_.toString).sorted.toSeq
@@ -995,7 +1182,7 @@ class DmlReplicationSpec extends SparkSpec {
     } finally LayoutIngest.DmlLogMtimeSlackMs = slack0
     // a NEW statement + fold mints a new log → miss → fresh parse,
     // and the facts stay exact
-    LayoutIngest.deleteBoxesNext(spark, t, Seq(Seq(("a", 50L, 50L)))): Unit
+    LayoutIngest.dmlNext(spark, t, Boxes(Seq(Seq(("a", 50L, 50L)))), Nil): Unit
     assert(LayoutIngest.compactDmlMarkers(spark, t) > 0)
     assert(LayoutIngest.history(spark, t)
       .filter(col("kind") === "delete").count() === 2L)
@@ -1013,13 +1200,13 @@ class DmlReplicationSpec extends SparkSpec {
     val t = freshTable("repl-envbound")
     // record time: the statement's value would re-evaluate per unit
     // rewrite and at replica replay — refused before any mutation
-    refuses(LayoutIngest.updateBoxes(spark, t, Seq(Seq(("a", 0L, 9L))),
+    refuses(LayoutIngest.update(spark, t, Boxes(Seq(Seq(("a", 0L, 9L)))),
         Seq("v" -> expr("cast(current_timestamp() as bigint)")),
-        updateId = 0L),
+        id = 0L),
       "evaluation environment")
-    refuses(LayoutIngest.updateBoxes(spark, t, Seq(Seq(("a", 0L, 9L))),
+    refuses(LayoutIngest.update(spark, t, Boxes(Seq(Seq(("a", 0L, 9L)))),
         Seq("v" -> expr("cast(rand() * 100 as bigint)")),
-        updateId = 0L),
+        id = 0L),
       "evaluation environment")
     assert(LayoutIngest.history(spark, t)
       .filter(col("kind") === "update").count() === 0L,

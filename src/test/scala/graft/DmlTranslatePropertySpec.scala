@@ -120,6 +120,7 @@ class DmlTranslatePropertySpec extends SparkSpec {
   test("updateBoxes ≡ Spark's own conditional projection for 8 " +
       "seeded random box/assignment combinations on a REAL table") {
     import graft.streaming.LayoutIngest
+    import graft.streaming.LayoutIngest.DmlTarget.Boxes
     import org.apache.spark.sql.functions.{coalesce, col, lit, when}
     val rnd = new scala.util.Random(20260818L)
     val base = (for (a <- 0L to 14L; b <- 0L to 14L)
@@ -146,7 +147,7 @@ class DmlTranslatePropertySpec extends SparkSpec {
         case 1 => Seq("v" -> (col("a") * lit(3L)), "w" -> col("b"))
         case _ => Seq("w" -> lit(null).cast("long"))
       }
-      assert(LayoutIngest.updateBoxes(spark, t, boxes, sets, 0L))
+      assert(LayoutIngest.update(spark, t, Boxes(boxes), sets, 0L))
       val hit = coalesce(boxes.map(_.map { case (c, lo, hi) =>
         col(c) >= lo && col(c) <= hi
       }.reduce(_ && _)).reduce(_ || _), lit(false))
@@ -169,6 +170,7 @@ class DmlTranslatePropertySpec extends SparkSpec {
       "replica-replayability gate); crash-replay of a legal " +
       "assignment converges exactly behind the same id") {
     import graft.streaming.LayoutIngest
+    import graft.streaming.LayoutIngest.DmlTarget.Boxes
     import org.apache.spark.sql.functions.{col, lit}
     val dir = java.nio.file.Files.createTempDirectory("updreplay")
       .toFile
@@ -184,31 +186,31 @@ class DmlTranslatePropertySpec extends SparkSpec {
     // `v = v + 1` would mint a record no replica could ever replay —
     // refused BEFORE any marker or rewrite, nothing burned
     val e = intercept[IllegalArgumentException](
-      LayoutIngest.updateBoxes(spark, t,
-        Seq(Seq(("b", 40L, 60L))), Seq("v" -> (col("v") + lit(1L))),
-        updateId = 0L))
+      LayoutIngest.update(spark, t,
+        Boxes(Seq(Seq(("b", 40L, 60L)))), Seq("v" -> (col("v") + lit(1L))),
+        id = 0L))
     assert(e.getMessage.contains("assigned column"), e.getMessage)
     assert(!new java.io.File(s"$t/markers/upd-0").exists(),
       "a refused statement must not mint its marker")
     // same for a swap — each side reads the OTHER assigned column
     val e2 = intercept[IllegalArgumentException](
-      LayoutIngest.updateBoxes(spark, t,
-        Seq(Seq(("b", 40L, 60L))),
-        Seq("v" -> col("w"), "w" -> col("v")), updateId = 0L))
+      LayoutIngest.update(spark, t,
+        Boxes(Seq(Seq(("b", 40L, 60L)))),
+        Seq("v" -> col("w"), "w" -> col("v")), id = 0L))
     assert(e2.getMessage.contains("assigned column"), e2.getMessage)
     // a LEGAL assignment (reads only untouched columns) records, and
     // its crash-replay converges exactly: the replay skips the
     // crashed attempt's own published rewrites by gen-name prefix
-    assert(LayoutIngest.updateBoxes(spark, t,
-      Seq(Seq(("b", 40L, 60L))), Seq("v" -> (col("b") * 10L + 1L)),
-      updateId = 0L))
+    assert(LayoutIngest.update(spark, t,
+      Boxes(Seq(Seq(("b", 40L, 60L)))), Seq("v" -> (col("b") * 10L + 1L)),
+      id = 0L))
     // simulate the WORST crash window: every unit rewrite published,
     // the upd-0 marker not yet created
     val marker = new java.io.File(s"$t/markers/upd-0")
     assert(marker.exists() && marker.delete())
-    assert(LayoutIngest.updateBoxes(spark, t,
-      Seq(Seq(("b", 40L, 60L))), Seq("v" -> (col("b") * 10L + 1L)),
-      updateId = 0L))
+    assert(LayoutIngest.update(spark, t,
+      Boxes(Seq(Seq(("b", 40L, 60L)))), Seq("v" -> (col("b") * 10L + 1L)),
+      id = 0L))
     val got = LayoutIngest.read(spark, t)
       .select("b", "v").as[(Long, Long)].collect().toMap
     (0L to 99L).foreach { b =>

@@ -1,6 +1,7 @@
 package graft
 
 import graft.streaming.LayoutIngest
+import graft.streaming.LayoutIngest.DmlTarget.{Boxes, Keys}
 import org.apache.spark.sql.functions._
 
 /** SQL DELETE / MERGE INTO routing over the V1 layout relation
@@ -58,8 +59,8 @@ class GraftSqlDmlSpec extends SparkSpec {
     val dirApi = freshTable("sqldml-twin-api")
     view(dirSql, "stwin")
     spark.sql("DELETE FROM stwin WHERE b >= 30 AND b <= 60")
-    LayoutIngest.deleteBox(spark, dirApi,
-      Seq(("b", 30L, 60L)), deleteId = 0L)
+    LayoutIngest.delete(spark, dirApi,
+      Boxes(Seq(Seq(("b", 30L, 60L)))), id = 0L)
     val got = LayoutIngest.read(spark, dirSql)
       .select("a", "zkey").as[(Long, Long)].collect().toSet
     val want = LayoutIngest.read(spark, dirApi)
@@ -155,12 +156,12 @@ class GraftSqlDmlSpec extends SparkSpec {
       .filter(col("kind") === "update").count() === 2L)
     // API twin on a fresh table
     val dirApi = build("sqldml-upd-api")
-    assert(LayoutIngest.updateBoxes(spark, dirApi,
-      Seq(Seq(("a", 10L, 12L))),
-      Seq("v" -> (col("w") + col("a"))), updateId = 0L))
-    assert(LayoutIngest.updateBoxes(spark, dirApi,
-      Seq(Seq(("a", 5L, 5L)), Seq(("a", 7L, 7L))),
-      Seq("s" -> lit(null).cast("string")), updateId = 1L))
+    assert(LayoutIngest.update(spark, dirApi,
+      Boxes(Seq(Seq(("a", 10L, 12L)))),
+      Seq("v" -> (col("w") + col("a"))), id = 0L))
+    assert(LayoutIngest.update(spark, dirApi,
+      Boxes(Seq(Seq(("a", 5L, 5L)), Seq(("a", 7L, 7L)))),
+      Seq("s" -> lit(null).cast("string")), id = 1L))
     val got = LayoutIngest.read(spark, dir)
       .select("a", "v", "w", "s", "zkey")
       .as[(Long, Long, Long, Option[String], Long)].collect().toSet
@@ -256,10 +257,10 @@ class GraftSqlDmlSpec extends SparkSpec {
     view(dirSql, "sortwin")
     spark.sql("""DELETE FROM sortwin WHERE (a >= 2 AND a <= 12)
       OR (b > 93 AND a < 40)""")
-    LayoutIngest.deleteBoxes(spark, dirApi,
-      Seq(Seq(("a", 2L, 12L)),
-        Seq(("b", 94L, Long.MaxValue), ("a", Long.MinValue, 39L))),
-      deleteId = 0L)
+    LayoutIngest.delete(spark, dirApi,
+      Boxes(Seq(Seq(("a", 2L, 12L)),
+        Seq(("b", 94L, Long.MaxValue), ("a", Long.MinValue, 39L)))),
+      id = 0L)
     val got = LayoutIngest.read(spark, dirSql)
       .select("a", "zkey").as[(Long, Long)].collect().toSet
     val want = LayoutIngest.read(spark, dirApi)
@@ -427,7 +428,7 @@ class GraftSqlDmlSpec extends SparkSpec {
   test("graft_history / graft_describe table functions ≡ the API " +
       "views; non-literal args refused") {
     val dir = freshTable("sqldml-tvf")
-    LayoutIngest.deleteBox(spark, dir, Seq(("a", 5L, 9L)), 0L)
+    LayoutIngest.delete(spark, dir, Boxes(Seq(Seq(("a", 5L, 9L)))), 0L)
     val histSql = spark.sql(s"SELECT * FROM graft_history('$dir')")
       .collect().toSet
     val histApi = LayoutIngest.history(spark, dir).collect().toSet
@@ -703,10 +704,10 @@ class GraftSqlDmlSpec extends SparkSpec {
     // string-RANGE delete; StrRangeDmlSpec owns that surface)
     // SQL ≡ the deleteKeys API twin
     val dirApi = freshTable("sqldml-strdel-api")
-    LayoutIngest.deleteKeys(spark, dirApi, "s",
-      Seq("v3", "v5", "v6", "v8", "v9"), 0L): Unit
-    LayoutIngest.deleteBox(spark, dirApi,
-      Seq(("a", 30L, 31L)), 0L): Unit
+    LayoutIngest.delete(spark, dirApi, Keys("s",
+      Seq("v3", "v5", "v6", "v8", "v9")), 0L): Unit
+    LayoutIngest.delete(spark, dirApi,
+      Boxes(Seq(Seq(("a", 30L, 31L)))), 0L): Unit
     assert(LayoutIngest.read(spark, dir).select("a", "s", "zkey")
         .as[(Long, String, Long)].collect().toSet ===
       LayoutIngest.read(spark, dirApi).select("a", "s", "zkey")

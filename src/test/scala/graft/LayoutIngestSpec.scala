@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.Layout
 import graft.streaming.{LayoutIngest, LedgerLock}
+import graft.streaming.LayoutIngest.DmlTarget.Boxes
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -199,7 +200,7 @@ class LayoutIngestSpec extends SparkSpec {
     val before = LayoutIngest.read(spark, dir)
       .select("id", "zkey").as[(Long, Long)].collect().toMap
     // box x ∈ [30, 40]: only batch-1 (x 25..49) can contain matches
-    assert(LayoutIngest.deleteBox(spark, dir, Seq(("x", 30L, 40L)), 1L))
+    assert(LayoutIngest.delete(spark, dir, Boxes(Seq(Seq(("x", 30L, 40L)))), 1L))
     val dataDirs = new java.io.File(s"$dir/data").listFiles()
       .filter(_.isDirectory).map(_.getName).toSet
     assert(Seq("batch-0", "batch-2", "batch-3").forall(dataDirs),
@@ -213,11 +214,11 @@ class LayoutIngestSpec extends SparkSpec {
     assert(after.forall { case (id, k) => before(id) == k },
       "survivors must keep their exact keys")
     // replay: the marker short-circuits (false), contents unchanged
-    assert(!LayoutIngest.deleteBox(spark, dir, Seq(("x", 30L, 40L)), 1L))
+    assert(!LayoutIngest.delete(spark, dir, Boxes(Seq(Seq(("x", 30L, 40L)))), 1L))
     assert(LayoutIngest.read(spark, dir).count() === (100 - 11).toLong)
     // a 2-dim box spanning two dirs: both rewrite, others stay
-    assert(LayoutIngest.deleteBox(spark, dir,
-      Seq(("x", 20L, 28L), ("y", 0L, 99L)), 2L))
+    assert(LayoutIngest.delete(spark, dir,
+      Boxes(Seq(Seq(("x", 20L, 28L), ("y", 0L, 99L)))), 2L))
     val dirs2 = new java.io.File(s"$dir/data").listFiles()
       .filter(_.isDirectory).map(_.getName).toSet
     assert(Seq("batch-2", "batch-3").forall(dirs2), dirs2.toString)
@@ -352,7 +353,7 @@ class LayoutIngestSpec extends SparkSpec {
     val hitNames = delHit.map(_.getName).toSet
     val surviveNames = delLive.map(_.getName).toSet -- hitNames
     assert(hitNames.nonEmpty && surviveNames.nonEmpty)
-    assert(LayoutIngest.deleteBox(spark, dir, Seq(("x", 96L, 99L)), 5L))
+    assert(LayoutIngest.delete(spark, dir, Boxes(Seq(Seq(("x", 96L, 99L)))), 5L))
     val leavesAfter = new java.io.File(s"$dir/data").listFiles()
       .filter(_.isDirectory).flatMap { t =>
         val subs = t.listFiles().filter(d =>
@@ -482,8 +483,8 @@ class LayoutIngestSpec extends SparkSpec {
       .select("id").as[Long].collect() === Array(42L))
     // a targeted delete rebuilds the rewritten unit's bloom; the
     // deleted slice is gone, the rest exact
-    assert(LayoutIngest.deleteBox(spark, dir,
-      Seq(("x", 0L, 0L)), 3L)) // x==0 <=> i==0 <=> ids 0,1,2,3
+    assert(LayoutIngest.delete(spark, dir,
+      Boxes(Seq(Seq(("x", 0L, 0L)))), 3L)) // x==0 <=> i==0 <=> ids 0,1,2,3
     LayoutIngest.clearStatsCache()
     assert(LayoutIngest.scanPoints(spark, dir, "id",
       (0L until 100L).toSeq).select("id").as[Long].collect().sorted ===
@@ -716,9 +717,9 @@ class LayoutIngestSpec extends SparkSpec {
     // deletes are destructive ACROSS history (the RTBF contract):
     // as-of views never resurrect a forgotten row
     val victim = rows(5 to 5).head
-    assert(LayoutIngest.deleteBox(spark, dir,
-      Seq(("x", victim._2, victim._2), ("y", victim._3, victim._3)),
-      deleteId = 9L))
+    assert(LayoutIngest.delete(spark, dir,
+      Boxes(Seq(Seq(("x", victim._2, victim._2), ("y", victim._3, victim._3)))),
+      id = 9L))
     assert(!ids(LayoutIngest.readAsOf(spark, dir, 1L)).contains(victim._1))
 
     // pre-provenance tables fail fast, not silently wrong
@@ -795,10 +796,10 @@ class LayoutIngestSpec extends SparkSpec {
     // pre-evolution rows too (readUnits rewrites under the stored
     // union schema, so the old unit materializes the column instead
     // of silently skipping the assignment)
-    assert(LayoutIngest.updateBoxes(spark, dir,
-      Seq(Seq(("x", 3L, 5L))),
+    assert(LayoutIngest.update(spark, dir,
+      Boxes(Seq(Seq(("x", 3L, 5L)))),
       Seq("tag" -> org.apache.spark.sql.functions.lit("redacted")),
-      updateId = 0L))
+      id = 0L))
     val tags3 = LayoutIngest.read(spark, dir).select("id", "x", "tag")
       .as[(Long, Long, Option[String])].collect()
     tags3.foreach { case (id, x, tag) =>
@@ -908,8 +909,8 @@ class LayoutIngestSpec extends SparkSpec {
     // for every row and has no score stats → conservatively
     // rewritten; under the naive NOT(range) predicate all its rows
     // evaluated NULL and were silently destroyed
-    assert(LayoutIngest.deleteBox(spark, dir,
-      Seq(("score", 25L, 30L)), deleteId = 1L))
+    assert(LayoutIngest.delete(spark, dir,
+      Boxes(Seq(Seq(("score", 25L, 30L)))), id = 1L))
     val want1 = ((0L until 20L) ++
       (20L until 40L).filterNot(i => i >= 25 && i <= 30) ++
       Seq(100L)).sorted.toArray
@@ -918,8 +919,8 @@ class LayoutIngestSpec extends SparkSpec {
 
     // delete on a GRID column: the null-x row (y=50) must survive a
     // box that includes its y — NULL is "not provably in the box"
-    assert(LayoutIngest.deleteBox(spark, dir,
-      Seq(("x", 0L, 99L), ("y", 50L, 50L)), deleteId = 2L))
+    assert(LayoutIngest.delete(spark, dir,
+      Boxes(Seq(Seq(("x", 0L, 99L), ("y", 50L, 50L)))), id = 2L))
     assert(LayoutIngest.read(spark, dir).select("id")
       .as[Long].collect().sorted === want1)
 
@@ -927,8 +928,8 @@ class LayoutIngestSpec extends SparkSpec {
     assert(LayoutIngest.ingestBatch(
       Seq((200L, 99L, 99L), (201L, 99L, 99L)).toDF("id", "x", "y"),
       3L, dir, 1))
-    assert(LayoutIngest.deleteBox(spark, dir,
-      Seq(("x", 99L, 99L), ("y", 99L, 99L)), deleteId = 3L))
+    assert(LayoutIngest.delete(spark, dir,
+      Boxes(Seq(Seq(("x", 99L, 99L), ("y", 99L, 99L)))), id = 3L))
     // the zero-row unit is trivially prunable, NOT "pre-provenance":
     // every view keeps working
     assert(LayoutIngest.read(spark, dir).select("id")
@@ -981,8 +982,8 @@ class LayoutIngestSpec extends SparkSpec {
       rows(40 until 60).toDF("id", "x", "y"), 2L, dir, 2))
     java.nio.file.Files.delete(
       java.nio.file.Paths.get(s"$dir/markers/batch-2"))
-    assert(LayoutIngest.deleteBox(spark, dir,
-      Seq(("x", 0L, 99L), ("y", 0L, 99L)), deleteId = 1L))
+    assert(LayoutIngest.delete(spark, dir,
+      Boxes(Seq(Seq(("x", 0L, 99L), ("y", 0L, 99L)))), id = 1L))
     assert(!LayoutIngest.ingestBatch(
       rows(40 until 60).toDF("id", "x", "y"), 2L, dir, 2),
       "replay after the delete must be a no-op, not a resurrection")
@@ -1248,7 +1249,7 @@ class LayoutIngestSpec extends SparkSpec {
     LayoutIngest.compactMarkers(spark, dir) // folds 0..2 into upto-2
     assert(LayoutIngest.ingestBatch(
       rows(40 until 50).toDF("id", "x", "y"), 4L, dir, 1)) // gap at 3
-    assert(LayoutIngest.deleteBox(spark, dir, Seq(("x", 0L, 5L)), 7L))
+    assert(LayoutIngest.delete(spark, dir, Boxes(Seq(Seq(("x", 0L, 5L)))), 7L))
     assert(LayoutIngest.mergeRows(spark, dir, "id",
       Seq((8L, 8L, 8L)).toDF("id", "x", "y"), batchId = 3L))
     // a crashed merge: intent standing, no commit marker
@@ -1302,7 +1303,7 @@ class LayoutIngestSpec extends SparkSpec {
         LayoutIngest.compact(spark, dir)
       }
       intercept[LedgerLock.ConcurrentWriterException] {
-        LayoutIngest.deleteBox(spark, dir, Seq(("x", 0L, 1L)), 9L)
+        LayoutIngest.delete(spark, dir, Boxes(Seq(Seq(("x", 0L, 1L)))), 9L)
       }
       intercept[LedgerLock.ConcurrentWriterException] {
         LayoutIngest.mergeRows(spark, dir, "id",

@@ -1,6 +1,7 @@
 package graft
 
 import graft.streaming.LayoutIngest
+import graft.streaming.LayoutIngest.DmlTarget.Boxes
 import org.apache.spark.sql.functions._
 
 /** [[LayoutIngest.vacuum]] — the retention sweep. Each debris class is
@@ -48,8 +49,8 @@ class LayoutVacuumSpec extends SparkSpec {
       rows(0 until 50).toDF("id", "x", "y"), 0L, dir, 1))
     assert(LayoutIngest.ingestBatch(
       rows(50 until 100).toDF("id", "x", "y"), 1L, dir, 1))
-    assert(LayoutIngest.deleteBox(spark, dir,
-      Seq(("x", 0L, 49L)), deleteId = 0L))
+    assert(LayoutIngest.delete(spark, dir,
+      Boxes(Seq(Seq(("x", 0L, 49L)))), id = 0L))
     // premise: the rewrite PUBLISHED an empty replacement unit
     val withEmpty = dataDirs(dir)
     assert(withEmpty.size === 2, s"expected empty gen + batch-1: $withEmpty")
@@ -66,8 +67,8 @@ class LayoutVacuumSpec extends SparkSpec {
     // the idempotence RECORDS are permanent but the marker FILES fold:
     // vacuum consolidates del-/upd- markers into one dml-log (class 5)
     // and a replay of either op must still no-op from the log
-    assert(LayoutIngest.updateBoxes(spark, dir,
-      Seq(Seq(("x", 60L, 62L))), Seq("id" -> lit(-1L)), updateId = 0L))
+    assert(LayoutIngest.update(spark, dir,
+      Boxes(Seq(Seq(("x", 60L, 62L)))), Seq("id" -> lit(-1L)), id = 0L))
     val st2 = LayoutIngest.vacuum(spark, dir)
     assert(st2.dmlMarkersFolded === 1, s"stats: $st2")
     val markers = Option(new java.io.File(s"$dir/markers").list())
@@ -75,11 +76,11 @@ class LayoutVacuumSpec extends SparkSpec {
     assert(!markers.contains("del-0") && !markers.contains("upd-0") &&
       markers.count(_.startsWith("dml-log-")) === 1,
       s"DML markers must fold into ONE dml-log under vacuum: $markers")
-    assert(!LayoutIngest.updateBoxes(spark, dir,
-      Seq(Seq(("x", 60L, 62L))), Seq("id" -> lit(-1L)), updateId = 0L),
+    assert(!LayoutIngest.update(spark, dir,
+      Boxes(Seq(Seq(("x", 60L, 62L)))), Seq("id" -> lit(-1L)), id = 0L),
       "a replayed update id must still no-op after the fold")
-    assert(!LayoutIngest.deleteBox(spark, dir,
-      Seq(("x", 0L, 49L)), deleteId = 0L),
+    assert(!LayoutIngest.delete(spark, dir,
+      Boxes(Seq(Seq(("x", 0L, 49L)))), id = 0L),
       "a replayed delete id must still no-op after the fold")
   }
 

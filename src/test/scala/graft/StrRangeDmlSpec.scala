@@ -1,6 +1,8 @@
 package graft
 
 import graft.streaming.LayoutIngest
+import graft.streaming.LayoutIngest.{StrPrefix, StrRange}
+import graft.streaming.LayoutIngest.DmlTarget.StrSpan
 import org.apache.spark.sql.functions._
 
 /** The STRING-RANGE DML surface — the DOMAIN TAKEDOWN statement
@@ -45,8 +47,8 @@ class StrRangeDmlSpec extends SparkSpec {
     val t = freshDocTable("strdel-prefix")
     val unitsBefore =
       Option(new java.io.File(s"$t/data").list()).get.length
-    assert(LayoutIngest.deleteStrPrefix(spark, t, "doc", "doc-001",
-      deleteId = 0L))
+    assert(LayoutIngest.delete(spark, t, StrSpan("doc", StrPrefix("doc-001")),
+      id = 0L))
     val want = (0 to 99).filterNot(i => i >= 10 && i <= 19)
       .map(i => f"doc-$i%04d").toSet
     assert(docs(t) === want, "exactly doc-0010..doc-0019 deleted")
@@ -60,13 +62,13 @@ class StrRangeDmlSpec extends SparkSpec {
     assert(rewritten >= 1 && rewritten < unitsBefore,
       s"string stats must prune: rewrote $rewritten of $unitsBefore")
     // idempotent: same id no-ops
-    assert(!LayoutIngest.deleteStrPrefix(spark, t, "doc", "doc-001",
-      deleteId = 0L))
+    assert(!LayoutIngest.delete(spark, t, StrSpan("doc", StrPrefix("doc-001")),
+      id = 0L))
     // crash window: marker gone, rewrites published — replay converges
     val marker = new java.io.File(s"$t/markers/dels-0")
     assert(marker.exists() && marker.delete())
-    assert(LayoutIngest.deleteStrPrefix(spark, t, "doc", "doc-001",
-      deleteId = 0L))
+    assert(LayoutIngest.delete(spark, t, StrSpan("doc", StrPrefix("doc-001")),
+      id = 0L))
     assert(docs(t) === want)
     assert(LayoutIngest.history(spark, t)
       .filter(col("kind") === "delete_range").count() === 1L)
@@ -77,9 +79,9 @@ class StrRangeDmlSpec extends SparkSpec {
       "(correct, unpruned)") {
     val t = freshDocTable("strdel-range")
     // [doc-0040, doc-0060): inclusive lo, exclusive hi
-    assert(LayoutIngest.deleteStrRange(spark, t, "doc",
-      Some("doc-0040"), loInc = true, Some("doc-0060"), hiInc = false,
-      deleteId = 0L))
+    assert(LayoutIngest.delete(spark, t, StrSpan("doc",
+      StrRange(Some("doc-0040"), loInc = true, Some("doc-0060"), hiInc = false)),
+      id = 0L))
     val want = (0 to 99).filterNot(i => i >= 40 && i <= 59)
       .map(i => f"doc-$i%04d").toSet
     assert(docs(t) === want, "inclusive lo, exclusive hi — 40..59 out")
@@ -98,9 +100,9 @@ class StrRangeDmlSpec extends SparkSpec {
         }
       }
     LayoutIngest.clearStatsCache()
-    assert(LayoutIngest.deleteStrRange(spark, t, "doc",
-      Some("doc-0090"), loInc = false, None, hiInc = true,
-      deleteId = 1L))
+    assert(LayoutIngest.delete(spark, t, StrSpan("doc",
+      StrRange(Some("doc-0090"), loInc = false, None, hiInc = true)),
+      id = 1L))
     assert(docs(t) === want.filterNot(_ > "doc-0090"),
       "exclusive unbounded-above range: strictly greater than " +
         "doc-0090 deleted, doc-0090 itself kept")
@@ -164,8 +166,8 @@ class StrRangeDmlSpec extends SparkSpec {
         s"wanted '$needle': ${msgs(e).mkString(" | ")}")
     }
     val t = freshDocTable("strupd")
-    assert(LayoutIngest.updateStrPrefix(spark, t, "doc", "doc-003",
-      Seq("v" -> lit(-7L)), updateId = 0L))
+    assert(LayoutIngest.update(spark, t, StrSpan("doc", StrPrefix("doc-003")),
+      Seq("v" -> lit(-7L)), id = 0L))
     val vByDoc = LayoutIngest.read(spark, t)
       .filter(col("doc").isNotNull)
       .select("doc", "v").as[(String, Long)].collect().toMap
@@ -185,13 +187,13 @@ class StrRangeDmlSpec extends SparkSpec {
     assert(LayoutIngest.history(spark, t)
       .filter(col("kind") === "update_range").count() === 2L)
     // refusals
-    refuses(LayoutIngest.updateStrPrefix(spark, t, "doc", "doc-00",
-      Seq("doc" -> lit("x")), updateId = 9L), "selecting column")
+    refuses(LayoutIngest.update(spark, t, StrSpan("doc", StrPrefix("doc-00")),
+      Seq("doc" -> lit("x")), id = 9L), "selecting column")
     refuses(spark.sql(
       "UPDATE sdocu SET doc = 'x' WHERE doc LIKE 'doc-00%'"),
       "selects by")
-    refuses(LayoutIngest.updateStrPrefix(spark, t, "doc", "doc-00",
-      Seq("v" -> (col("v") + 1L)), updateId = 9L), "assigned column")
+    refuses(LayoutIngest.update(spark, t, StrSpan("doc", StrPrefix("doc-00")),
+      Seq("v" -> (col("v") + 1L)), id = 9L), "assigned column")
     refuses(spark.sql(
       "UPDATE sdocu SET v = cast(rand()*9 as bigint) " +
         "WHERE doc LIKE 'doc-00%'"), "evaluation environment")
@@ -208,12 +210,12 @@ class StrRangeDmlSpec extends SparkSpec {
       assert(Option(e.getMessage).exists(_.contains(needle)),
         s"wanted '$needle', got: ${e.getMessage}")
     }
-    refuses(LayoutIngest.deleteStrPrefix(spark, t, "v", "1",
-      deleteId = 0L), "string-range statements only apply to STRING")
-    refuses(LayoutIngest.deleteStrPrefix(spark, t, "nope", "x",
-      deleteId = 0L), "unknown column")
-    refuses(LayoutIngest.deleteStrRange(spark, t, "doc",
-      Some("b"), loInc = true, Some("a"), hiInc = true, deleteId = 0L),
+    refuses(LayoutIngest.delete(spark, t, StrSpan("v", StrPrefix("1")),
+      id = 0L), "string-range statements only apply to STRING")
+    refuses(LayoutIngest.delete(spark, t, StrSpan("nope", StrPrefix("x")),
+      id = 0L), "unknown column")
+    refuses(LayoutIngest.delete(spark, t, StrSpan("doc",
+      StrRange(Some("b"), loInc = true, Some("a"), hiInc = true)), id = 0L),
       "provably-empty")
     intercept[IllegalArgumentException](
       LayoutIngest.StrRange(None, true, None, true))
@@ -227,11 +229,11 @@ class StrRangeDmlSpec extends SparkSpec {
     // replica catches up BEFORE the statements — it must converge by
     // replaying them
     assert(LayoutIngest.replicate(spark, t, dst).batchesPulled === 2)
-    assert(LayoutIngest.deleteStrPrefix(spark, t, "doc", "doc-001",
-      deleteId = 0L))
-    assert(LayoutIngest.updateStrRange(spark, t, "doc",
-      Some("doc-0090"), loInc = true, None, hiInc = true,
-      Seq("v" -> lit(0L)), updateId = 0L))
+    assert(LayoutIngest.delete(spark, t, StrSpan("doc", StrPrefix("doc-001")),
+      id = 0L))
+    assert(LayoutIngest.update(spark, t, StrSpan("doc",
+      StrRange(Some("doc-0090"), loInc = true, None, hiInc = true)),
+      Seq("v" -> lit(0L)), id = 0L))
     val st = LayoutIngest.replicate(spark, t, dst)
     assert(st.batchesPulled === 0 && st.dmlReplayed === 2, s"got $st")
     def snap(dir: String) =
