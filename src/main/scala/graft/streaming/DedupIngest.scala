@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.Dedup
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -107,9 +107,7 @@ object DedupIngest {
     * every batch lands new small files, so a long-running ingest pays
     * growing listing/scan overhead without this. The index sides
     * re-`distinct` and fully rewrite (they shrink under distinct and are
-    * the per-batch probe targets); swap is write-`.next` → delete live →
-    * promote, with [[recoverSwap]] completing a swap that crashed after
-    * the delete and clearing a `.next` orphaned before it. The corpus is
+    * the per-batch probe targets) through [[MarkerLedger.swap]]. The corpus is
     * NOT rewritten wholesale: at scale a compaction cadence that
     * rewrites the full corpus is a non-starter, so only the small-file
     * tail folds ([[foldCorpusTail]]) and large generations are never
@@ -117,24 +115,11 @@ object DedupIngest {
     */
   private def compact(spark: SparkSession, dir: String,
       smallFileBytes: Long): Unit = LedgerLock.withLock(spark, dir) {
-    def swap(path: String, write: String => Unit): Unit = {
-      recoverSwap(spark, path)
-      val (f, live) = fs(spark, path)
-      if (f.exists(live)) {
-        write(path + ".next")
-        f.delete(live, true)
-        renameOrThrow(f, new org.apache.hadoop.fs.Path(path + ".next"),
-          live, "compact swap")
-      }
+    Seq("fps" -> FpSchema, "grams" -> GramSchema, "msigs" -> MsigSchema,
+        "mbands" -> MbandSchema).foreach { case (side, schema) =>
+      MarkerLedger.swap(spark, s"$dir/$side")(spark.read.schema(schema)
+        .parquet(s"$dir/$side").distinct().write.parquet(_))
     }
-    swap(s"$dir/fps", out => spark.read.schema(FpSchema)
-      .parquet(s"$dir/fps").distinct().write.parquet(out))
-    swap(s"$dir/grams", out => spark.read.schema(GramSchema)
-      .parquet(s"$dir/grams").distinct().write.parquet(out))
-    swap(s"$dir/msigs", out => spark.read.schema(MsigSchema)
-      .parquet(s"$dir/msigs").distinct().write.parquet(out))
-    swap(s"$dir/mbands", out => spark.read.schema(MbandSchema)
-      .parquet(s"$dir/mbands").distinct().write.parquet(out))
     foldCorpusTail(spark, s"$dir/corpus", smallFileBytes)
   }
 
@@ -275,42 +260,23 @@ object DedupIngest {
     require(ids.nonEmpty, "need at least one doc id to delete")
     require(deleteId >= 0, s"deleteId must be non-negative, got $deleteId")
     val m = s"del-$deleteId"
-    val (f, root) = fs(spark, s"$dir/markers")
-    def marker(name: String) = new org.apache.hadoop.fs.Path(root, name)
-    if (f.exists(marker(m))) {
-      if (f.exists(marker(s"$m.intent"))) f.delete(marker(s"$m.intent"), false)
+    if (MarkerLedger.has(spark, dir, m)) {
+      MarkerLedger.drop(spark, dir, s"$m.intent")
       return false
     }
-    f.mkdirs(root)
-    f.create(marker(s"$m.intent"), true).close()
+    MarkerLedger.put(spark, dir, s"$m.intent")
     // corpus + stage: schema is caller-defined — filter on the id cast
-    // to string so the at-rest purge is id-type agnostic
-    def purge(path: String, keep: org.apache.spark.sql.Column): Unit = {
-      recoverFold(spark, path)
-      recoverSwap(spark, path)
-      val (pf, live) = fs(spark, path)
-      if (!pf.exists(live)) return
-      spark.read.parquet(path).filter(keep).write.parquet(path + ".next")
-      pf.delete(live, true)
-      renameOrThrow(pf, new org.apache.hadoop.fs.Path(path + ".next"),
-        live, "purge swap")
-    }
-    // NULL-safe: a null id can never match a tombstone — keep it
-    // (NOT(in-list) alone evaluates NULL and filter would drop the row)
-    val keepDoc = !org.apache.spark.sql.functions.coalesce(
-      org.apache.spark.sql.functions.col(idCol).cast("string")
-        .isInCollection(ids),
-      org.apache.spark.sql.functions.lit(false))
-    val keepMid =
-      !org.apache.spark.sql.functions.coalesce(
-        org.apache.spark.sql.functions.col("__mid").isInCollection(ids),
-        org.apache.spark.sql.functions.lit(false))
-    purge(s"$dir/corpus", keepDoc)
-    purge(s"$dir/stage", keepDoc)
-    purge(s"$dir/msigs", keepMid)
-    purge(s"$dir/mbands", keepMid)
-    f.create(marker(m), true).close()
-    f.delete(marker(s"$m.intent"), false)
+    // to string so the at-rest purge is id-type agnostic. NULL-safe: a
+    // null id can never match a tombstone — keep it (NOT(in-list) alone
+    // evaluates NULL and filter would drop the row)
+    def purge(side: String, id: Column): Unit =
+      MarkerLedger.swap(spark, s"$dir/$side")(spark.read.parquet(s"$dir/$side")
+        .filter(!coalesce(id.isInCollection(ids), lit(false))).write.parquet(_))
+    purge("corpus", col(idCol).cast("string"))
+    purge("stage", col(idCol).cast("string"))
+    purge("msigs", col("__mid"))
+    purge("mbands", col("__mid"))
+    MarkerLedger.commit(spark, dir, m)
     true
   }
 

@@ -1,167 +1,181 @@
 package graft.streaming
 
-import graft.operators.{Retrieval, Similarity}
+import graft.operators.{Clustering, Dedup, Retrieval, Similarity}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /**
- * Streaming maintenance of SERVED retrieval indexes — the missing piece
- * between the batch increments ([[Retrieval.mergeIndex]] for BM25,
- * [[Similarity.addToIvfIndex]] for ANN) and a recurring-crawl pipeline:
- * a `foreachBatch` loop that folds each micro-batch into an at-rest
- * index whose READERS ([[readBm25]] / [[readIvf]]) always see a
- * consistent, replay-safe view. [[DedupIngest]] is the template (staged
- * writes, explicit crash ordering, bounded compaction); this module
- * applies the same reasoning to the two index families whose serving
- * surfaces already exist.
+ * Streaming maintenance of SERVED indexes and models — the piece
+ * between the batch builders and a recurring-crawl pipeline: a
+ * `foreachBatch` loop folds each micro-batch into an at-rest structure
+ * whose readers always see a consistent, replay-safe view. Four
+ * families share ONE ledgered-batch core; each supplies only its data
+ * dirs (with their schemas) and the body that appends a batch or
+ * cancels a deletion:
  *
- * == Commit protocol and crash windows ==
+ *  - BM25 — `tf/`, `df/`, `stats/` ([[Retrieval.buildIndex]]);
+ *  - IVF — `assigned/` against frozen centroids
+ *    ([[Similarity.buildIvfIndex]]);
+ *  - PQ — `codes/` against a frozen codebook
+ *    ([[Similarity.buildPqIndex]]);
+ *  - mini-batch k-means — `partials/` onto frozen seeds
+ *    ([[Clustering.miniBatchPartials]]).
  *
- * Data dirs are append-only parquet, every row stamped `__batch`; a
+ * The served view of every family ≡ a from-scratch build over every
+ * committed batch ("increment ≡ rebuild"), spec-checked on served
+ * results. [[DedupIngest]] is the template (staged writes, explicit
+ * crash ordering, bounded compaction); the marker files and the
+ * recoverable `.next` swap live in [[MarkerLedger]], shared with it.
+ *
+ * == Ingest: one marker protocol ==
+ *
+ * Data dirs are append-only parquet, every row stamped `__batch`; the
  * `markers/` ledger carries one tiny file per batch in two states —
- * `<id>.intent`, created atomically BEFORE any append, and `<id>`
- * (the commit record), created atomically AFTER every append. Ingest:
+ * `<id>.intent`, created atomically BEFORE any append, and `<id>` (the
+ * commit record), created atomically AFTER every append. Every
+ * `ingest*Batch` runs:
  *
- *  1. commit marker exists → the batch is fully folded; a checkpoint
- *     REPLAY no-ops in O(1) (one file-existence probe — no index scan
- *     on the hot path).
- *  2. intent marker exists without a commit → a previous attempt
- *     crashed somewhere inside its appends; the batch's rows (possibly
- *     a PARTIAL append — a parquet job commit is not atomic across
- *     files) are purged with a filtered rewrite of each data dir
- *     (recoverable `.next` swap), then the batch re-appends cleanly.
- *     The rewrite is paid only on this rare post-crash path.
- *  3. neither → first attempt: write intent, append (BM25: df, stats,
- *     tf), write commit, drop intent.
+ *  1. commit marker (or a `batch-upto-<n>` watermark covering the id)
+ *     → the batch is fully folded; a checkpoint REPLAY no-ops in O(1)
+ *     (no index scan on the hot path).
+ *  2. intent without commit → a previous attempt crashed inside its
+ *     appends (a parquet job commit is not atomic across files); the
+ *     batch's rows are purged from each data dir by a filtered
+ *     rewrite under the recoverable swap — paid only on this rare path.
+ *  3. ids a committed deletion tombstoned for this batch's horizon are
+ *     dropped; an empty remainder still COMMITS, so replays stay O(1)
+ *     and no intent dangles.
+ *  4. intent, the family's appends, commit, drop intent.
  *
  * Readers take the committed-marker set as the source of truth: rows
- * whose `__batch` lacks a commit marker (a crashed attempt not yet
- * replayed, or an in-flight batch) are filtered out of every served
- * frame. Net: exactly-once index contents and always-consistent reads
- * under any crash/replay interleaving.
+ * whose `__batch` lacks a commit (a crashed attempt not yet replayed,
+ * an in-flight batch) are filtered out of every served frame. Net:
+ * exactly-once contents and always-consistent reads under any
+ * crash/replay interleaving.
  *
  * Contract: an index dir is bound to ONE streaming checkpoint lineage —
  * batch ids are the replay identity, so pointing a NEW stream (fresh
  * checkpoint, ids restarting at 0) at an existing dir would read old
  * commit markers as "already ingested" and silently drop data. Start a
- * new dir for a new lineage (or feed batches through
- * [[ingestBm25Batch]]/[[ingestIvfBatch]] with caller-managed ids).
- * Doc/vector ids must be disjoint across batches (as for
- * [[Retrieval.mergeIndex]]) — gate recurring feeds through
+ * new dir for a new lineage (or call the `ingest*Batch` verbs with
+ * caller-managed ids). Doc/vector ids must be disjoint across batches
+ * (as for [[Retrieval.mergeIndex]]) — gate recurring feeds through
  * [[DedupIngest]] first.
  *
- * == BM25 layout ==
+ * == Deletion: the same ledger in its own namespace ==
  *
- *  - `tf/` — per-(doc, term) frequencies with doc length (at scale,
- *    write bucketed on `__t` — new files only per batch).
- *  - `df/` — PER-BATCH document-frequency partials (vocab-sized each).
- *  - `stats/` — per-batch `(n_docs, dl_sum)`, the length sum stored
- *    directly from the builder's exact long `__dlsum` (no float
- *    round-trip — deletions cancel it with exact negatives).
+ * Every `delete*` takes a fresh caller-managed `deleteId` with markers
+ * `del-<id>.intent` / `del-<id>`, and stamps the rows it appends
+ * `-(id) - 2` — distinct from every ingest id (≥ 0) and from the
+ * compaction stamp (−1). The one deletion protocol:
  *
- * Serving reconstructs exact global df (per-term sum of disjoint
- * batches' partials) and exact corpus stats (integer sums, one final
- * division) — [[readBm25]] ≡ a from-scratch [[Retrieval.buildIndex]]
- * over every committed doc, spec-checked down to served scores.
- *
- * == IVF layout ==
- *
- * `centroids/` is written once ([[bootstrapIvf]] — cell assignment
- * must be a pure function of (vector, frozen centroids) for increments
- * to equal rebuilds); `assigned/` appends each batch's assignments
- * under the same marker protocol. Centroid retraining/re-assignment
- * stays a batch-cadence operation ([[Similarity.addToIvfIndex]]).
- *
- * == Compaction ==
+ *  1. `del-<id>` committed → O(1) no-op that also drops any staged
+ *     snapshot a crash in the commit window left behind.
+ *  2. intent without commit → purge the crashed attempt's stamped rows
+ *     and its tombstones.
+ *  3. intent; the family's cancellation — BM25 and k-means append
+ *     NEGATIVE partials derived from a `deletes/<id>` snapshot staged
+ *     by rename (the evidence destroys itself, so it is frozen first);
+ *  4. TOMBSTONES `(id, horizon = highest batch the ledger has seen)`,
+ *     so a batch that crashed BEFORE the deletion cannot resurrect the
+ *     ids when it replays after;
+ *  5. the family's physical rewrite (BM25 `tf/`, IVF `assigned/`, PQ
+ *     `codes/`); commit, drop intent, drop the snapshot.
  *
  * == Single-writer contract ==
  *
  * Compaction AND deletion are filtered read→rewrite→swap operations
  * over the data dirs: an append landing between a rewrite's read and
  * its install would be silently lost, and a batch that passed its
- * `tombstonedIds` check before a deletion's intent landed would fold
- * tombstoned rows. So [[compactBm25]]/[[compactIvf]]/[[compactPq]]
- * AND [[deleteBm25Docs]]/[[deleteIvfVecs]]/[[deletePqVecs]]/
- * [[deleteKmeansContribs]] MUST run
- * from the ingest thread between batches (the `foreachBatch` body is
- * the natural place; the compactEvery hooks already do) — never
- * concurrently with an in-flight ingest of the same dir.
+ * tombstone check before a deletion's intent landed would fold
+ * tombstoned rows. So every `compact*` and `delete*` MUST run from the
+ * ingest thread between batches (the `foreachBatch` body is the
+ * natural place; the `compactEvery` hooks already do) — never
+ * concurrently with an in-flight ingest of the same dir. Every mutator
+ * holds the dir's [[LedgerLock]], so a violation fails fast.
  *
  * == Compaction ==
  *
- * Per-batch files and partials accumulate; [[compactBm25]] /
- * [[compactIvf]] fold them on the caller's cadence (single writer —
- * see above, like [[DedupIngest]]):
- * the tf/assigned tails fold through the manifest-logged size-tiered
- * [[DedupIngest.foldCorpusTail]] (large generations never rewritten;
- * readers run its recovery before listing, so a crashed fold can never
- * serve duplicates); the vocab-sized df/stats partials collapse to one
- * summed partial under the reserved batch stamp −1 (always committed)
- * via the `.next` swap with [[DedupIngest.recoverSwap]]. The ledger's
- * FACTS are permanent — late replays of folded batches still no-op —
- * but the individual ingest markers themselves fold into a
- * `batch-upto-<n>` watermark file ([[compactMarkers]]): a long-lived
- * stream would otherwise mint one marker per micro-batch forever and
- * every read's marker listing (and its committed-id set) would grow
- * with stream lifetime rather than index size.
+ * Per-batch files and partials accumulate; `compact*` fold them on the
+ * caller's cadence: the tf/assigned/codes/partials tails fold through
+ * the manifest-logged size-tiered [[DedupIngest.foldCorpusTail]] (large
+ * generations never rewritten; readers run its recovery before
+ * listing, so a crashed fold can never serve duplicates); BM25's
+ * vocab-sized df/stats partials collapse to one summed partial under
+ * the reserved stamp −1 (always committed) via the recoverable swap.
+ * Every compaction also sweeps the snapshots of committed deletions.
+ * The ledger's FACTS are permanent — late replays of folded batches
+ * still no-op — but the individual ingest markers fold into a
+ * `batch-upto-<n>` watermark ([[compactMarkers]]): a long-lived stream
+ * would otherwise mint one marker per micro-batch forever and every
+ * read's marker listing would grow with stream lifetime rather than
+ * index size.
  */
 object IndexIngest {
 
   private val CommittedBatch = -1L
 
-  private val TfSchema = StructType(Seq(
-    StructField("__id", StringType), StructField("__t", StringType),
-    StructField("__tf", LongType), StructField("__dl", LongType),
-    StructField("__batch", LongType)))
-  private val DfSchema = StructType(Seq(
-    StructField("__t", StringType), StructField("__df", LongType),
-    StructField("__batch", LongType)))
-  private val StatsSchema = StructType(Seq(
-    StructField("__batch", LongType), StructField("__n", LongType),
-    StructField("__dlsum", LongType)))
-  private val AssignedSchema = StructType(Seq(
-    StructField("__vid", LongType),
-    StructField("__cvec", ArrayType(FloatType)),
-    StructField("__cell", LongType), StructField("__batch", LongType)))
-  private val CentroidSchema = StructType(Seq(
-    StructField("cell_id", LongType),
-    StructField("cvec", ArrayType(FloatType))))
+  private def schemaOf(fields: (String, DataType)*): StructType =
+    StructType(fields.map { case (n, t) => StructField(n, t) })
 
-  // ------------------------------------------------------------------
-  // Marker ledger
-  // ------------------------------------------------------------------
-
-  private def marker(spark: SparkSession, dir: String, name: String) = {
-    val (f, _) = DedupIngest.fs(spark, s"$dir/markers")
-    (f, new org.apache.hadoop.fs.Path(s"$dir/markers/$name"))
+  /** One append-only data dir of a family, relative to the index
+    * root. */
+  private case class DataDir(name: String, schema: StructType) {
+    def path(dir: String): String = s"$dir/$name"
+    def read(spark: SparkSession, dir: String): DataFrame =
+      DedupIngest.readOrEmpty(spark, path(dir), schema)
+    def append(dir: String, rows: DataFrame): Unit =
+      rows.write.mode("append").parquet(path(dir))
+    /** Replace the dir by `f` of its rows (recoverable swap; no-op when
+      * the dir is absent). */
+    def rewrite(spark: SparkSession, dir: String)(
+        f: DataFrame => DataFrame): Unit =
+      MarkerLedger.swap(spark, path(dir))(out =>
+        f(spark.read.schema(schema).parquet(path(dir))).write.parquet(out))
+    def purge(spark: SparkSession, dir: String, keep: Column): Unit =
+      rewrite(spark, dir)(_.filter(keep))
   }
 
-  private def hasMarker(spark: SparkSession, dir: String,
-      name: String): Boolean = {
-    val (f, p) = marker(spark, dir, name)
-    f.exists(p)
-  }
+  private val Tf = DataDir("tf", schemaOf("__id" -> StringType,
+    "__t" -> StringType, "__tf" -> LongType, "__dl" -> LongType,
+    "__batch" -> LongType))
+  private val Df = DataDir("df", schemaOf("__t" -> StringType,
+    "__df" -> LongType, "__batch" -> LongType))
+  private val Stats = DataDir("stats", schemaOf("__batch" -> LongType,
+    "__n" -> LongType, "__dlsum" -> LongType))
+  private val Assigned = DataDir("assigned", schemaOf("__vid" -> LongType,
+    "__cvec" -> ArrayType(FloatType), "__cell" -> LongType,
+    "__batch" -> LongType))
+  private val Codes = DataDir("codes", schemaOf("__vid" -> LongType,
+    "__j" -> IntegerType, "__code" -> IntegerType, "__batch" -> LongType))
+  /** `__h` is the VALIDITY HORIZON: a partial participates in the state
+    * fold for `upTo` only when `__h < upTo`. Ingest partials carry
+    * `__h = batchId`; a DELETION's negative partials carry the ledger's
+    * max seen batch at deletion time, so a crashed batch REPLAYING later
+    * reconstructs exactly the state it first assigned against (the
+    * deletion didn't exist then), while the final served state
+    * (`upTo = ∞`) includes every committed cancellation. */
+  private val Partials = DataDir("partials", schemaOf("__cl" -> IntegerType,
+    "__n" -> LongType, "__s" -> ArrayType(DoubleType),
+    "__batch" -> LongType, "__h" -> LongType))
+  private val Tombstones = DataDir("tombstones", schemaOf("__id" -> StringType,
+    "__covered" -> LongType, "__del" -> LongType))
 
-  private def putMarker(spark: SparkSession, dir: String,
-      name: String): Unit = {
-    val (f, p) = marker(spark, dir, name)
-    f.mkdirs(p.getParent)
-    f.create(p, true).close()
-  }
+  private val CentroidSchema = schemaOf("cell_id" -> LongType,
+    "cvec" -> ArrayType(FloatType))
+  private val CodebookSchema = schemaOf("__j" -> IntegerType,
+    "__code" -> IntegerType, "cvec" -> ArrayType(FloatType))
+  private val KmSeedSchema = schemaOf("__cl" -> IntegerType,
+    "__s" -> ArrayType(DoubleType))
+  private val KmSnapSchema = schemaOf("__vid" -> LongType,
+    "__v" -> ArrayType(FloatType), "__b" -> LongType)
 
-  private def dropMarker(spark: SparkSession, dir: String,
-      name: String): Unit = {
-    val (f, p) = marker(spark, dir, name)
-    if (f.exists(p)) f.delete(p, false)
-  }
-
-  /** Deletions live in their own marker namespace (`del-<id>`) and
-    * stamp their negative partials `-(id) - 2` — distinct from every
-    * ingest batch id (≥ 0) and from the compaction stamp (−1), so a
-    * deletion id can never collide with a stream micro-batch id. */
-  private def delStamp(deleteId: Long): Long = -deleteId - 2
+  /** NULL-safe "not among `ids`" (NOT(in-list) alone evaluates NULL on
+    * a null id, and a filter would drop the row). */
+  private def notIn(c: Column, ids: Seq[Any]): Column =
+    !coalesce(c.isInCollection(ids), lit(false))
 
   // ------------------------------------------------------------------
   // Single-writer lock — machinery shared with DedupIngest, see
@@ -178,42 +192,38 @@ object IndexIngest {
   private def withLedgerLock[T](spark: SparkSession, dir: String)
       (body: => T): T = LedgerLock.withLock(spark, dir)(body)
 
-  /** Marker names in the ledger (commit state only). */
-  private def markerNames(spark: SparkSession, dir: String): Seq[String] = {
-    val (f, root) = DedupIngest.fs(spark, s"$dir/markers")
-    if (!f.exists(root)) Seq.empty
-    else f.listStatus(root).toSeq.map(_.getPath.getName)
-      .filterNot(_.endsWith(".intent"))
-  }
+  // ------------------------------------------------------------------
+  // Marker ledger
+  // ------------------------------------------------------------------
 
-  /** "Every ingest batch id in [0, n] is committed (and its intent
-    * dropped)" — the highest published `batch-upto-<n>` watermark,
-    * -1 when none. See [[compactMarkers]]. */
-  private def batchWatermark(spark: SparkSession, dir: String): Long =
-    MarkerLedger.watermark(markerNames(spark, dir))
+  /** Deletions stamp their rows `-(id) - 2` (object doc). */
+  private def delStamp(deleteId: Long): Long = -deleteId - 2
+
+  /** Marker names in the ledger (commit state only). */
+  private def markerNames(spark: SparkSession, dir: String): Seq[String] =
+    MarkerLedger.names(spark, dir).filterNot(_.endsWith(".intent"))
+
+  /** Ids of the committed deletions (`del-<id>` markers). */
+  private def committedDeletes(spark: SparkSession, dir: String): Seq[Long] =
+    markerNames(spark, dir).filter(_.startsWith("del-"))
+      .flatMap(_.drop(4).toLongOption)
 
   /** The committed-visibility predicate over a batch-stamp column:
-    * inside the watermark's [0, n], OR carrying an individual marker.
-    * This replaces `isInCollection(every historical id)` — both that
-    * literal list and the marker listing behind it grew with stream
-    * LIFETIME (millions of micro-batches at 100 TB), so reads got
-    * slower forever on a table whose size was flat. `ingestOnly`
-    * restricts the tail to non-negative ingest stamps (excludes
-    * deletion/compaction stamps).
+    * inside the watermark's [0, n], OR carrying an individual marker —
+    * a literal list of every historical id would grow with stream
+    * LIFETIME, not index size. `ingestOnly` restricts the tail to
+    * non-negative ingest stamps (excludes deletion/compaction stamps).
     *
-    * Watermark and tail come from ONE `listStatus` snapshot: two
-    * listings raced a concurrent [[compactMarkers]] fold (new
-    * watermark created, folded markers deleted, in between) — a
-    * lock-free reader could capture the OLD watermark with the
-    * POST-fold tail and silently drop committed batches. One listing
-    * is atomic enough: a fold never removes a marker without the
-    * covering watermark already existing, so any single snapshot is
-    * complete (it may only over-include, never under-include). */
+    * Watermark and tail come from ONE listing: with two, a concurrent
+    * [[compactMarkers]] fold (new watermark created, folded markers
+    * deleted, in between) could hand a lock-free reader the OLD
+    * watermark with the POST-fold tail and silently drop committed
+    * batches. One listing is atomic enough: a fold never
+    * removes a marker without the covering watermark already existing,
+    * so any single snapshot may only over-include, never
+    * under-include. */
   private def committedPred(spark: SparkSession, dir: String,
       c: Column, ingestOnly: Boolean = false): Column = {
-    // ONE snapshot ([[markerNames]] is a single listStatus), then the
-    // shared parsers — the watermark regex lives in MarkerLedger and
-    // the tail parse in [[markerTailIds]], not re-inlined here
     val names = markerNames(spark, dir)
     val w = MarkerLedger.watermark(names)
     val tail = (markerTailIds(names) :+ CommittedBatch)
@@ -223,8 +233,7 @@ object IndexIngest {
 
   /** Batch-stamp ids carried by INDIVIDUAL markers in `names` (bare
     * ingest ids and `del-<n>` deletion stamps) — the tail above the
-    * watermark plus permanent deletion markers. The one place this
-    * family's marker names are parsed into stamps. */
+    * watermark plus permanent deletion markers. */
   private def markerTailIds(names: Seq[String]): Seq[Long] =
     names.flatMap { n =>
       if (n.startsWith("del-")) n.drop(4).toLongOption.map(delStamp)
@@ -232,60 +241,36 @@ object IndexIngest {
     }
 
   /** Fold the contiguous committed prefix of INGEST batch markers into
-    * ONE `batch-upto-<n>` watermark file ([[LayoutIngest]]'s device):
-    * without it a long-lived stream mints one marker per micro-batch
-    * forever and every read/replay listing walks all of them. The
+    * ONE `batch-upto-<n>` watermark file ([[MarkerLedger.fold]]): the
     * watermark preserves both ledger facts the individual markers
-    * carried — replay no-ops ([[ingestBm25Batch]] &c. probe it) and
-    * committed visibility ([[committedPred]]). Crash-exact: the
-    * watermark create is atomic and its NAME carries the state
-    * (monotone — readers take the max); folded markers, their leftover
-    * intents (an intent at or below the watermark is by definition a
-    * committed batch's leftover), and superseded watermarks are deleted
-    * after, and every intermediate state converges on the next fold.
-    * Deletion markers (`del-*`) are PERMANENT — deletion volume is
-    * takedown-sized, not stream-lifetime-sized. Runs from the ingest
-    * thread (the single-writer cadence); the stream loops call it
-    * after every batch. */
+    * carried — replay no-ops and committed visibility
+    * ([[committedPred]]). Folded markers and their leftover intents (an
+    * intent at or below the watermark is by definition a committed
+    * batch's leftover, even when its commit marker went in an earlier
+    * crashed pass) are deleted after. Deletion markers (`del-*`) are
+    * PERMANENT — deletion volume is takedown-sized, not
+    * stream-lifetime-sized. Runs from the ingest thread; the stream
+    * loops call it after every batch. */
   def compactMarkers(spark: SparkSession, dir: String): Unit =
       withLedgerLock(spark, dir) {
+    val names = MarkerLedger.names(spark, dir)
     val (f, root) = DedupIngest.fs(spark, s"$dir/markers")
-    if (!f.exists(root)) return
-    val names = f.listStatus(root).toSeq.map(_.getPath.getName)
-    // shared fold core (MarkerLedger); this family names commit
-    // markers with the bare id, and a fold also retires the folded
-    // batches' stale .intent files — keyed on the watermark, so an
-    // intent whose commit marker went in an earlier crashed pass is
-    // still collected (an intent at or below the watermark is by
-    // definition a committed batch's leftover)
+    // ingest ids carrying a `<id><suffix>` marker (`del-*` never parse)
+    def ids(suffix: String) = names.filter(_.endsWith(suffix))
+      .flatMap(_.stripSuffix(suffix).toLongOption).filter(_ >= 0)
     MarkerLedger.fold(f, root, names,
-      commitIds = names.filterNot(_.startsWith("del-"))
-        .filterNot(_.endsWith(".intent"))
-        .flatMap(_.toLongOption).filter(_ >= 0).toSet,
-      commitName = i => i.toString,
-      retireBelow = n => names.filter(_.endsWith(".intent"))
-        .flatMap(_.stripSuffix(".intent").toLongOption)
-        .filter(i => i >= 0 && i <= n)
-        .map(i => s"$i.intent"))
+      commitIds = ids("").toSet, commitName = _.toString,
+      retireBelow = n => ids(".intent").filter(_ <= n).map(i => s"$i.intent"))
   }
 
   /** Highest ingest batch id the ledger has SEEN (commit or intent) —
     * the coverage horizon a deletion records so replays of earlier
     * batches know to re-apply it. */
   private def maxSeenBatch(spark: SparkSession, dir: String): Long = {
-    val (f, root) = DedupIngest.fs(spark, s"$dir/markers")
-    val names = if (!f.exists(root)) Seq.empty[String]
-      else f.listStatus(root).toSeq.map(_.getPath.getName)
-    val w = names.filter(_.matches("batch-upto-\\d+"))
-      .map(_.stripPrefix("batch-upto-").toLong).foldLeft(-1L)(math.max)
-    val ids = names.filterNot(_.startsWith("del-"))
-      .map(_.stripSuffix(".intent")).flatMap(_.toLongOption)
-    (ids :+ w).max
+    val names = MarkerLedger.names(spark, dir)
+    (names.filterNot(_.startsWith("del-")).map(_.stripSuffix(".intent"))
+      .flatMap(_.toLongOption) :+ MarkerLedger.watermark(names)).max
   }
-
-  private val TombSchema = StructType(Seq(
-    StructField("__id", StringType), StructField("__covered", LongType),
-    StructField("__del", LongType)))
 
   /** Ids a replaying batch must drop: tombstones of COMMITTED deletions
     * whose coverage horizon includes `batchId`. Bounded by deletion
@@ -295,113 +280,191 @@ object IndexIngest {
     // a crashed delete-replay tombstone rewrite must be completed, not
     // read as "no tombstones" — that would let a replaying batch
     // resurrect every committed deletion's docs
-    DedupIngest.recoverSwap(spark, s"$dir/tombstones")
-    val (f, p) = DedupIngest.fs(spark, s"$dir/tombstones")
+    DedupIngest.recoverSwap(spark, Tombstones.path(dir))
+    val (f, p) = DedupIngest.fs(spark, Tombstones.path(dir))
     if (!f.exists(p)) return Seq.empty
-    val dels = markerNames(spark, dir)
-      .filter(_.startsWith("del-")).flatMap(_.drop(4).toLongOption)
+    val dels = committedDeletes(spark, dir)
     if (dels.isEmpty) return Seq.empty
-    spark.read.schema(TombSchema).parquet(s"$dir/tombstones")
-      .filter(col("__covered") >= batchId &&
-        col("__del").isInCollection(dels))
+    spark.read.schema(Tombstones.schema).parquet(Tombstones.path(dir))
+      .filter(col("__covered") >= batchId && col("__del").isInCollection(dels))
       .select("__id").distinct().collect().map(_.getString(0)).toSeq
   }
 
-  /** Remove every `__batch = batchId` row from a data dir — the
-    * post-crash cleanup for a partially-appended batch. Completes any
-    * crashed compaction fold FIRST (a rewrite over a half-installed
-    * fold would both materialize its duplicates and orphan its
-    * manifest), then filtered-rewrites under the recoverable `.next`
-    * swap; a no-op when the dir is absent. Only runs on the
-    * intent-without-commit path. */
-  private def purgeBatch(spark: SparkSession, path: String,
-      schema: StructType, batchId: Long): Unit =
-    purgeWhere(spark, path, schema, col("__batch") =!= batchId)
+  // ------------------------------------------------------------------
+  // The ledgered-batch core: one ingest, one delete, one stream loop,
+  // one compaction shell
+  // ------------------------------------------------------------------
 
-  private def purgeWhere(spark: SparkSession, path: String,
-      schema: StructType,
-      keep: org.apache.spark.sql.Column): Unit = {
-    DedupIngest.recoverFold(spark, path)
-    DedupIngest.recoverSwap(spark, path)
-    val (f, live) = DedupIngest.fs(spark, path)
-    if (!f.exists(live)) return
-    spark.read.schema(schema).parquet(path)
-      .filter(keep)
-      .write.parquet(path + ".next")
-    f.delete(live, true)
-    DedupIngest.renameOrThrow(f,
-      new org.apache.hadoop.fs.Path(path + ".next"), live, "purge swap")
+  /** The ingest protocol (object doc, steps 1–4) for a family whose
+    * data dirs are `dirs`; `append` writes the tombstone-filtered batch
+    * into them. Returns false on a replay of a committed batch (an O(1)
+    * no-op) or when nothing is left to fold. */
+  private def ingest(batch: DataFrame, batchId: Long, dir: String,
+      idCol: String, dirs: Seq[DataDir])(append: DataFrame => Unit)
+      : Boolean = withLedgerLock(batch.sparkSession, dir) {
+    val spark = batch.sparkSession
+    require(batchId >= 0, s"batchId must be non-negative, got $batchId" +
+      " (negative stamps are reserved for deletions/compaction)")
+    if (MarkerLedger.has(spark, dir, batchId.toString) ||
+      batchId <= MarkerLedger.watermark(markerNames(spark, dir))) return false
+    if (MarkerLedger.has(spark, dir, s"$batchId.intent"))
+      dirs.foreach(_.purge(spark, dir, col("__batch") =!= batchId))
+    val tomb = tombstonedIds(spark, dir, batchId)
+    val live = if (tomb.isEmpty) batch
+      else batch.filter(notIn(col(idCol).cast("string"), tomb))
+    val folds = !live.isEmpty
+    if (folds) {
+      MarkerLedger.put(spark, dir, s"$batchId.intent")
+      append(live)
+    }
+    MarkerLedger.commit(spark, dir, batchId.toString)
+    folds
+  }
+
+  /** Where a deletion stages its snapshot. */
+  private def stageOf(dir: String, deleteId: Long): String =
+    s"$dir/deletes/$deleteId"
+
+  /** The deletion protocol (object doc, steps 1–5). `stamped` are the
+    * data dirs the family appends `-(id) - 2`-stamped rows to;
+    * `cancel(stamp, horizon)` appends them and returns the ids to
+    * tombstone (an `__id` string column); `rewrite` then removes the
+    * family's rows physically. Returns false on a replay of a
+    * committed deletion. */
+  private def delete(spark: SparkSession, dir: String, deleteId: Long,
+      stamped: Seq[DataDir] = Nil)(cancel: (Long, Long) => DataFrame)
+      (rewrite: => Unit): Boolean = withLedgerLock(spark, dir) {
+    require(deleteId >= 0, s"deleteId must be non-negative, got $deleteId")
+    val m = s"del-$deleteId"
+    val (f, stage) = DedupIngest.fs(spark, stageOf(dir, deleteId))
+    if (MarkerLedger.has(spark, dir, m)) {
+      // the snapshot holds the forgotten rows: it must not persist at
+      // rest past a crash between the commit and the cleanup
+      if (f.exists(stage)) f.delete(stage, true)
+      MarkerLedger.drop(spark, dir, s"$m.intent")
+      return false
+    }
+    val stamp = delStamp(deleteId)
+    if (MarkerLedger.has(spark, dir, s"$m.intent")) {
+      stamped.foreach(_.purge(spark, dir, col("__batch") =!= stamp))
+      Tombstones.purge(spark, dir, col("__del") =!= deleteId)
+    }
+    MarkerLedger.put(spark, dir, s"$m.intent")
+    val horizon = maxSeenBatch(spark, dir)
+    Tombstones.append(dir, cancel(stamp, horizon)
+      .select(col("__id"), lit(horizon).as("__covered"),
+        lit(deleteId).as("__del"))
+      .coalesce(1))
+    rewrite
+    MarkerLedger.commit(spark, dir, m)
+    if (f.exists(stage)) f.delete(stage, true)
+    true
+  }
+
+  /** Promote a crashed attempt's `<stage>.tmp` when no snapshot exists
+    * and its job committed (`_SUCCESS`); true when a snapshot exists
+    * after. */
+  private def promoteStage(spark: SparkSession, stage: String): Boolean = {
+    val (f, sp) = DedupIngest.fs(spark, stage)
+    val tmp = new org.apache.hadoop.fs.Path(stage + ".tmp")
+    if (!f.exists(sp) &&
+        f.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS"))) {
+      f.mkdirs(sp.getParent)
+      DedupIngest.renameOrThrow(f, tmp, sp, "stage promote")
+    }
+    f.exists(sp)
+  }
+
+  /** Write a snapshot aside to `<stage>.tmp` and RENAME it into place,
+    * so its existence implies completeness (a crash mid-write cannot
+    * leave a partial snapshot a replay would trust). */
+  private def publishStage(spark: SparkSession, stage: String)(
+      write: String => Unit): Unit = {
+    val (f, sp) = DedupIngest.fs(spark, stage)
+    val tmp = new org.apache.hadoop.fs.Path(stage + ".tmp")
+    if (f.exists(tmp)) f.delete(tmp, true)
+    write(tmp.toString)
+    if (f.exists(sp)) f.delete(sp, true)
+    f.mkdirs(sp.getParent)
+    DedupIngest.renameOrThrow(f, tmp, sp, "stage publish")
+  }
+
+  /** The `foreachBatch` loop under every `start*`: fold the batch, fold
+    * the marker ledger, compact on the `compactEvery` cadence (batch ids
+    * persist in the checkpoint, so the cadence survives restarts). */
+  private def stream(src: DataFrame, dir: String, checkpoint: String,
+      availableNow: Boolean, compactEvery: Option[Int])(
+      fold: (DataFrame, Long) => Boolean)(
+      compact: SparkSession => Unit): StreamingQuery = {
+    require(compactEvery.forall(_ > 0), "compactEvery must be positive")
+    val writer = src.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        fold(batch, batchId)
+        compactMarkers(batch.sparkSession, dir)
+        compactEvery.foreach { every =>
+          if ((batchId + 1) % every == 0) compact(batch.sparkSession)
+        }
+      }
+    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer)
+      .start()
+  }
+
+  /** The compaction shell under every `compact*`: the family's `fold`
+    * under the lock, then the sweep of committed deletions' staged
+    * snapshots — they hold the forgotten rows, and a crash in a
+    * deletion's commit window orphans one that is never replayed. */
+  private def compacting(spark: SparkSession, dir: String)(
+      fold: => Unit): Unit = withLedgerLock(spark, dir) {
+    fold
+    val (f, root) = DedupIngest.fs(spark, s"$dir/deletes")
+    if (f.exists(root)) {
+      val done = committedDeletes(spark, dir).toSet
+      f.listStatus(root).foreach { s =>
+        if (s.getPath.getName.stripSuffix(".tmp").toLongOption.exists(done))
+          f.delete(s.getPath, true)
+      }
+    }
   }
 
   // ------------------------------------------------------------------
   // BM25
   // ------------------------------------------------------------------
 
-  /** Fold one micro-batch into the BM25 dirs under the marker protocol
-    * (object doc). Returns false on a replay of a committed batch (an
-    * O(1) no-op) or an empty batch. */
+  /** Fold one micro-batch into the BM25 dirs (object doc). `tf/` holds
+    * per-(doc, term) frequencies with doc length; `df/` PER-BATCH
+    * document-frequency partials; `stats/` per-batch
+    * `(n_docs, dl_sum)`, the length sum stored directly from the
+    * builder's exact long `__dlsum` (deletions cancel it with exact
+    * negatives). Returns false on a replay of a committed batch or an
+    * empty batch. */
   def ingestBm25Batch(batch: DataFrame, batchId: Long, dir: String,
       idCol: String = "doc_id", textCol: String = "text"): Boolean =
-      withLedgerLock(batch.sparkSession, dir) {
-    val spark = batch.sparkSession
-    require(batchId >= 0, s"batchId must be non-negative, got $batchId" +
-      " (negative stamps are reserved for deletions/compaction)")
-    if (hasMarker(spark, dir, batchId.toString) ||
-      batchId <= batchWatermark(spark, dir)) return false
-    if (hasMarker(spark, dir, s"$batchId.intent")) {
-      purgeBatch(spark, s"$dir/tf", TfSchema, batchId)
-      purgeBatch(spark, s"$dir/df", DfSchema, batchId)
-      purgeBatch(spark, s"$dir/stats", StatsSchema, batchId)
-    }
-    // drop docs a committed deletion has tombstoned for this horizon —
-    // otherwise replaying a batch that crashed BEFORE the deletion
-    // would resurrect the deleted docs
-    val tomb = tombstonedIds(spark, dir, batchId)
-    val live = if (tomb.isEmpty) batch
-      else batch.filter(!coalesce(
-        col(idCol).cast("string").isInCollection(tomb), lit(false)))
-    if (live.isEmpty) {
-      // nothing to fold (empty or fully tombstoned) — still COMMIT so
-      // replays are O(1) no-ops and no intent marker dangles
-      putMarker(spark, dir, batchId.toString)
-      dropMarker(spark, dir, s"$batchId.intent")
-      return false
-    }
-    putMarker(spark, dir, s"$batchId.intent")
-    val idx = Retrieval.buildIndex(live, idCol, textCol)
-    try {
-      idx.df.select(col("__t"), col("__df").cast("long"),
-          lit(batchId).as("__batch"))
-        .write.mode("append").parquet(s"$dir/df")
-      idx.stats.select(lit(batchId).as("__batch"),
-          col("__n").cast("long"), col("__dlsum").cast("long"))
-        .write.mode("append").parquet(s"$dir/stats")
-      idx.tf.select(col("__id").cast("string"), col("__t"),
+    ingest(batch, batchId, dir, idCol, Seq(Tf, Df, Stats)) { live =>
+      val idx = Retrieval.buildIndex(live, idCol, textCol)
+      try {
+        Df.append(dir, idx.df.select(col("__t"), col("__df").cast("long"),
+          lit(batchId).as("__batch")))
+        Stats.append(dir, idx.stats.select(lit(batchId).as("__batch"),
+          col("__n").cast("long"), col("__dlsum").cast("long")))
+        Tf.append(dir, idx.tf.select(col("__id").cast("string"), col("__t"),
           col("__tf").cast("long"), col("__dl").cast("long"),
-          lit(batchId).as("__batch"))
-        .write.mode("append").parquet(s"$dir/tf")
-      putMarker(spark, dir, batchId.toString)
-      dropMarker(spark, dir, s"$batchId.intent")
-      true
-    } finally graft.operators.Dedup.releasePersisted()
-  }
+          lit(batchId).as("__batch")))
+      } finally Dedup.releasePersisted()
+    }
 
   /** The served view: exactly [[Retrieval.buildIndex]] over every
-    * committed document. Rows of uncommitted batches (crashed attempts
-    * awaiting replay, in-flight appends) are filtered by the marker
-    * ledger; a crashed compaction fold is completed before listing.
-    * Doc ids serve as strings (at-rest schema stability across
-    * feeds). */
+    * committed document — exact global df (per-term sum of disjoint
+    * batches' partials) and exact corpus stats (integer sums, one final
+    * division). Doc ids serve as strings (at-rest schema stability
+    * across feeds). */
   def readBm25(spark: SparkSession, dir: String): Retrieval.Bm25Index = {
-    DedupIngest.recoverFold(spark, s"$dir/tf")
+    DedupIngest.recoverFold(spark, Tf.path(dir))
     val vis = committedPred(spark, dir, col("__batch"))
-    val tf = DedupIngest.readOrEmpty(spark, s"$dir/tf", TfSchema)
-      .filter(vis)
-    val df = DedupIngest.readOrEmpty(spark, s"$dir/df", DfSchema)
-      .filter(vis)
+    val tf = Tf.read(spark, dir).filter(vis)
+    val df = Df.read(spark, dir).filter(vis)
       .groupBy("__t").agg(sum("__df").as("__df"))
-    val stats = DedupIngest.readOrEmpty(spark, s"$dir/stats", StatsSchema)
-      .filter(vis)
+    val stats = Stats.read(spark, dir).filter(vis)
       .agg(sum("__n").as("__n"),
         (sum("__dlsum").cast("double") / sum("__n")).as("__avgdl"),
         coalesce(sum("__dlsum"), lit(0L)).cast("long").as("__dlsum"))
@@ -413,231 +476,92 @@ object IndexIngest {
       idCol: String = "doc_id", textCol: String = "text",
       availableNow: Boolean = false,
       compactEvery: Option[Int] = None,
-      smallFileBytes: Long = 32L << 20): StreamingQuery = {
-    require(compactEvery.forall(_ > 0), "compactEvery must be positive")
-    val writer = docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBm25Batch(batch, batchId, dir, idCol, textCol)
-        compactMarkers(batch.sparkSession, dir)
-        compactEvery.foreach { every =>
-          if ((batchId + 1) % every == 0)
-            compactBm25(batch.sparkSession, dir, smallFileBytes)
-        }
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer)
-      .start()
-  }
+      smallFileBytes: Long = 32L << 20): StreamingQuery =
+    stream(docs, dir, checkpoint, availableNow, compactEvery)(
+      ingestBm25Batch(_, _, dir, idCol, textCol))(
+      compactBm25(_, dir, smallFileBytes))
 
-  /** Fold the BM25 dirs back to bounded size: tf through the
-    * size-tiered manifest-logged tail fold (file-level — any
-    * uncommitted rows ride along, stay reader-invisible, and are
-    * purged by their batch's replay); df/stats partials collapse to
-    * one committed partial each (stamp −1) under a recoverable `.next`
-    * swap, dropping uncommitted rows in passing. Commit markers
-    * survive as the permanent ledger. Single-writer cadence (object
-    * doc). */
+  /** Fold the BM25 dirs back to bounded size: tf through the tail fold
+    * (file-level — uncommitted rows ride along, stay reader-invisible,
+    * and are purged by their batch's replay); df/stats partials
+    * collapse to one committed partial each (stamp −1), dropping
+    * uncommitted rows in passing. */
   def compactBm25(spark: SparkSession, dir: String,
-      smallFileBytes: Long = 32L << 20): Unit = withLedgerLock(spark, dir) {
+      smallFileBytes: Long = 32L << 20): Unit = compacting(spark, dir) {
     val vis = committedPred(spark, dir, col("__batch"))
-    def swapFold(path: String, schema: StructType,
-        fold: DataFrame => DataFrame): Unit = {
-      DedupIngest.recoverSwap(spark, path)
-      val (f, live) = DedupIngest.fs(spark, path)
-      if (!f.exists(live)) return
-      val folded = fold(spark.read.schema(schema).parquet(path)
-        .filter(vis))
-      folded.coalesce(1).write.parquet(path + ".next")
-      f.delete(live, true)
-      DedupIngest.renameOrThrow(f,
-        new org.apache.hadoop.fs.Path(path + ".next"), live, "fold swap")
-    }
-    swapFold(s"$dir/df", DfSchema, d => d
+    Df.rewrite(spark, dir)(_.filter(vis)
       .groupBy("__t").agg(sum("__df").as("__df"))
-      .select(col("__t"), col("__df"), lit(CommittedBatch).as("__batch")))
-    swapFold(s"$dir/stats", StatsSchema, d => d
+      .select(col("__t"), col("__df"), lit(CommittedBatch).as("__batch"))
+      .coalesce(1))
+    Stats.rewrite(spark, dir)(_.filter(vis)
       .agg(sum("__n").as("__n"), sum("__dlsum").as("__dlsum"))
-      .select(lit(CommittedBatch).as("__batch"), col("__n"), col("__dlsum")))
-    DedupIngest.foldCorpusTail(spark, s"$dir/tf", smallFileBytes)
-    // sweep committed deletions' staged snapshots (they hold the
-    // forgotten docs' content; normally cleaned at commit, but a crash
-    // in the commit window can orphan one that is never replayed)
-    val (f, delRoot) = DedupIngest.fs(spark, s"$dir/deletes")
-    if (f.exists(delRoot)) {
-      val committed = markerNames(spark, dir)
-        .filter(_.startsWith("del-")).map(_.drop(4)).toSet
-      f.listStatus(delRoot).foreach { s =>
-        if (committed.contains(s.getPath.getName.stripSuffix(".tmp")))
-          f.delete(s.getPath, true)
-      }
-    }
+      .select(lit(CommittedBatch).as("__batch"), col("__n"), col("__dlsum"))
+      .coalesce(1))
+    DedupIngest.foldCorpusTail(spark, Tf.path(dir), smallFileBytes)
   }
 
   /**
-   * Targeted document deletion — the data-governance path
-   * (right-to-be-forgotten, takedown, retraction) a served index needs
-   * next to its ingest. Deletion is the MIRROR of ingest under the
-   * same ledger, with one extra staging step because the evidence
-   * destroys itself: the negative df/stats corrections can only be
-   * derived while the doomed tf rows still exist, so they are
-   * snapshotted to `deletes/<batchId>` first and every later step
-   * derives from that frozen copy —
+   * Targeted document deletion — right-to-be-forgotten, takedown,
+   * retraction — under the deletion protocol (object doc). The
+   * negative df/stats corrections can only be derived while the doomed
+   * tf rows still exist, so they are snapshotted to `deletes/<id>`
+   * first and derived from that frozen copy; then tf is rewritten
+   * without the docs.
    *
-   *  1. intent marker;
-   *  2. stage the affected tf rows (skipped if already staged — a
-   *     replay reuses the snapshot even though tf no longer holds the
-   *     rows);
-   *  3. append NEGATIVE df/stats partials derived from the snapshot
-   *     (purged and re-appended on replay like any partials);
-   *  4. rewrite tf without the deleted docs (recoverable `.next`
-   *     swap; idempotent);
-   *  5. commit marker, drop intent + snapshot.
+   * The snapshot is REFRESHED on every attempt: a replay may hold a
+   * stale snapshot (its rows already purged from tf) while OTHER rows
+   * of the doomed ids were re-committed by a batch replay in between —
+   * the union of the snapshot with tf's current rows covers both, and
+   * distinct() collapses the overlap (rows are deterministic per
+   * (batch, id, term)). A half-written refresh is promoted only if its
+   * job committed (`_SUCCESS`); otherwise it is discarded — tf still
+   * holds the rows in that case. The negatives derive from the
+   * committed slice only (uncommitted rows have no positive partials
+   * to cancel).
    *
    * Serving needs no special case: the committed negative partials
-   * cancel the deleted docs' contributions exactly, so
-   * [[readBm25]] ≡ a rebuild without them (spec-checked on served
-   * scores). A crash between the tf rewrite and the commit leaves a
-   * transient where candidates are already gone but df still counts
-   * the deleted docs (slightly inflated idf on shared terms) — healed
-   * by the replay, the same reader-visible window class as ingest.
-   *
-   * `deleteId` draws from its own `del-` marker namespace and must be
-   * fresh (caller-managed). SINGLE-WRITER: deletions rewrite the data
-   * dirs — run them from the ingest thread between batches, like
-   * compaction (object doc); a concurrent append would be lost in the
-   * rewrite window.
+   * cancel the deleted docs' contributions exactly, so [[readBm25]] ≡ a
+   * rebuild without them. A crash between the tf rewrite and the
+   * commit leaves a transient where candidates are already gone but df
+   * still counts the deleted docs — healed by the replay, the same
+   * reader-visible window class as ingest.
    */
   def deleteBm25Docs(spark: SparkSession, dir: String, ids: Seq[String],
-      deleteId: Long): Boolean = withLedgerLock(spark, dir) {
+      deleteId: Long): Boolean = {
     require(ids.nonEmpty, "need at least one doc id to delete")
-    require(deleteId >= 0, s"deleteId must be non-negative, got $deleteId")
-    val m = s"del-$deleteId"
-    val stamp = delStamp(deleteId)
-    val stage = s"$dir/deletes/$deleteId"
-    val (f, stagePath) = DedupIngest.fs(spark, stage)
-    if (hasMarker(spark, dir, m)) {
-      // committed replay: O(1) no-op, but clean any residue a crash
-      // between the commit and the cleanup left behind — the staged
-      // snapshot holds the to-be-forgotten docs' content and must not
-      // persist at rest
-      if (f.exists(stagePath)) f.delete(stagePath, true)
-      dropMarker(spark, dir, s"$m.intent")
-      return false
-    }
-    if (hasMarker(spark, dir, s"$m.intent")) {
-      purgeBatch(spark, s"$dir/df", DfSchema, stamp)
-      purgeBatch(spark, s"$dir/stats", StatsSchema, stamp)
-      purgeWhere(spark, s"$dir/tombstones", TombSchema,
-        col("__del") =!= deleteId)
-    }
-    putMarker(spark, dir, s"$m.intent")
-    // The snapshot is written aside and RENAMED into place so its
-    // existence implies completeness (a crash mid-write cannot leave a
-    // partial snapshot a replay would trust), and REFRESHED on every
-    // attempt: a replay may hold a stale snapshot (its rows already
-    // purged from tf) while OTHER rows of the doomed ids were
-    // re-committed by a batch replay in between — the union of the
-    // snapshot with tf's current rows for the ids covers both, and
-    // distinct() collapses the overlap (rows are deterministic per
-    // (batch, id, term)). A half-written refresh is promoted only if
-    // its job committed (_SUCCESS); otherwise it is discarded — tf
-    // still holds the rows in that case, nothing is lost. The negative
-    // partials below derive from the committed slice only (uncommitted
-    // rows have no positive partials to cancel).
-    DedupIngest.recoverFold(spark, s"$dir/tf")
-    val vis = committedPred(spark, dir, col("__batch"))
-    val tmpPath = new org.apache.hadoop.fs.Path(stage + ".tmp")
-    if (!f.exists(stagePath) && f.exists(tmpPath) &&
-        f.exists(new org.apache.hadoop.fs.Path(stage + ".tmp/_SUCCESS"))) {
-      f.mkdirs(stagePath.getParent)
-      DedupIngest.renameOrThrow(f, tmpPath, stagePath, "stage promote")
-    }
-    val prior = DedupIngest.readOrEmpty(spark, stage, TfSchema)
-    val current = DedupIngest.readOrEmpty(spark, s"$dir/tf", TfSchema)
-      .filter(col("__id").isInCollection(ids))
-    if (f.exists(tmpPath)) f.delete(tmpPath, true)
-    prior.unionByName(current).distinct().write.parquet(tmpPath.toString)
-    if (f.exists(stagePath)) f.delete(stagePath, true)
-    f.mkdirs(stagePath.getParent)
-    DedupIngest.renameOrThrow(f, tmpPath, stagePath, "stage publish")
-    val removed = spark.read.schema(TfSchema).parquet(stage)
-      .filter(vis)
-    removed.groupBy("__t")
-      .agg((-countDistinct("__id")).as("__df"))
-      .select(col("__t"), col("__df").cast("long"),
-        lit(stamp).as("__batch"))
-      .write.mode("append").parquet(s"$dir/df")
-    removed.groupBy("__id").agg(first("__dl").as("__dl"))
-      .agg(coalesce(-count(lit(1)), lit(0L)).as("__n"),
-        coalesce(-sum("__dl"), lit(0L)).as("__dlsum"))
-      .select(lit(stamp).as("__batch"), col("__n").cast("long"),
-        col("__dlsum").cast("long"))
-      .write.mode("append").parquet(s"$dir/stats")
-    // tombstones: any replay of a batch the ledger has seen so far
-    // must drop these ids, or a batch that crashed BEFORE this deletion
-    // would resurrect them when it replays after
-    val horizon = maxSeenBatch(spark, dir)
     import spark.implicits._
-    ids.toDF("__id")
-      .select(col("__id"), lit(horizon).as("__covered"),
-        lit(deleteId).as("__del"))
-      .coalesce(1).write.mode("append").parquet(s"$dir/tombstones")
-    purgeDocs(spark, s"$dir/tf", TfSchema, ids)
-    putMarker(spark, dir, m)
-    dropMarker(spark, dir, s"$m.intent")
-    f.delete(stagePath, true)
-    true
-  }
-
-  /** Remove every row of the given doc ids from a data dir (fold
-    * recovery first, then a filtered rewrite under the recoverable
-    * `.next` swap; idempotent). */
-  private def purgeDocs(spark: SparkSession, path: String,
-      schema: StructType, ids: Seq[String]): Unit =
-    purgeWhere(spark, path, schema,
-      !coalesce(col("__id").isInCollection(ids), lit(false)))
-
-  /** Targeted vector deletion — [[deleteBm25Docs]]' IVF counterpart,
-    * simpler because the assigned dir is self-contained (no derived
-    * partials): fold recovery + one recoverable filtered rewrite, a
-    * tombstone append so replays of earlier batches re-drop the ids,
-    * and the namespaced ledger marker (fresh `deleteId`,
-    * caller-managed). SINGLE-WRITER like compaction — run between
-    * batches from the ingest thread (object doc). */
-  def deleteIvfVecs(spark: SparkSession, dir: String, ids: Seq[Long],
-      deleteId: Long): Boolean = withLedgerLock(spark, dir) {
-    require(ids.nonEmpty, "need at least one vec id to delete")
-    require(deleteId >= 0, s"deleteId must be non-negative, got $deleteId")
-    val m = s"del-$deleteId"
-    if (hasMarker(spark, dir, m)) {
-      dropMarker(spark, dir, s"$m.intent")
-      return false
-    }
-    if (hasMarker(spark, dir, s"$m.intent"))
-      purgeWhere(spark, s"$dir/tombstones", TombSchema,
-        col("__del") =!= deleteId)
-    putMarker(spark, dir, s"$m.intent")
-    val horizon = maxSeenBatch(spark, dir)
-    import spark.implicits._
-    ids.map(_.toString).toDF("__id")
-      .select(col("__id"), lit(horizon).as("__covered"),
-        lit(deleteId).as("__del"))
-      .coalesce(1).write.mode("append").parquet(s"$dir/tombstones")
-    purgeWhere(spark, s"$dir/assigned", AssignedSchema,
-      !coalesce(col("__vid").isInCollection(ids), lit(false)))
-    putMarker(spark, dir, m)
-    dropMarker(spark, dir, s"$m.intent")
-    true
+    delete(spark, dir, deleteId, Seq(Df, Stats)) { (stamp, _) =>
+      val stage = stageOf(dir, deleteId)
+      DedupIngest.recoverFold(spark, Tf.path(dir))
+      val vis = committedPred(spark, dir, col("__batch"))
+      promoteStage(spark, stage)
+      val prior = DedupIngest.readOrEmpty(spark, stage, Tf.schema)
+      val current = Tf.read(spark, dir).filter(col("__id").isInCollection(ids))
+      publishStage(spark, stage)(
+        prior.unionByName(current).distinct().write.parquet(_))
+      val removed = spark.read.schema(Tf.schema).parquet(stage).filter(vis)
+      Df.append(dir, removed.groupBy("__t")
+        .agg((-countDistinct("__id")).as("__df"))
+        .select(col("__t"), col("__df").cast("long"), lit(stamp).as("__batch")))
+      Stats.append(dir, removed.groupBy("__id").agg(first("__dl").as("__dl"))
+        .agg(coalesce(-count(lit(1)), lit(0L)).as("__n"),
+          coalesce(-sum("__dl"), lit(0L)).as("__dlsum"))
+        .select(lit(stamp).as("__batch"), col("__n").cast("long"),
+          col("__dlsum").cast("long")))
+      ids.toDF("__id")
+    } (Tf.purge(spark, dir, notIn(col("__id"), ids)))
   }
 
   // ------------------------------------------------------------------
   // IVF
   // ------------------------------------------------------------------
 
-  /** Pin the frozen centroid set the ingest assigns against. Overwrite
-    * is idempotent; re-bootstrapping with DIFFERENT centroids after
-    * ingest has begun is a re-assignment event, not a bootstrap — the
-    * assigned dir must be rebuilt with them (batch cadence). */
+  /** Pin the frozen centroid set the ingest assigns against — cell
+    * assignment must be a pure function of (vector, frozen centroids)
+    * for increments to equal rebuilds. Overwrite is idempotent;
+    * re-bootstrapping with DIFFERENT centroids after ingest has begun is
+    * a re-assignment event, not a bootstrap — the assigned dir must be
+    * rebuilt with them (batch cadence, [[Similarity.addToIvfIndex]]). */
   def bootstrapIvf(spark: SparkSession, dir: String,
       centroids: Seq[(Long, Seq[Float])]): Unit = {
     require(centroids.nonEmpty, "need at least one centroid")
@@ -655,54 +579,27 @@ object IndexIngest {
       .map(r => r.getLong(0) -> r.getSeq[Float](1).toSeq).toSeq
 
   /** Assign one micro-batch against the bootstrapped centroids and
-    * append, under the same marker protocol as
-    * [[ingestBm25Batch]]. Vector ids must be long-castable (ranking
+    * append (object doc). Vector ids must be long-castable (ranking
     * ties break on the id — string order would reorder numeric
     * ids). */
   def ingestIvfBatch(batch: DataFrame, batchId: Long, dir: String,
       idCol: String = "vec_id", vecCol: String = "embedding"): Boolean =
-      withLedgerLock(batch.sparkSession, dir) {
-    val spark = batch.sparkSession
-    require(batchId >= 0, s"batchId must be non-negative, got $batchId" +
-      " (negative stamps are reserved for deletions/compaction)")
-    if (hasMarker(spark, dir, batchId.toString) ||
-      batchId <= batchWatermark(spark, dir)) return false
-    if (hasMarker(spark, dir, s"$batchId.intent"))
-      purgeBatch(spark, s"$dir/assigned", AssignedSchema, batchId)
-    val tomb = tombstonedIds(spark, dir, batchId)
-    val live = if (tomb.isEmpty) batch
-      else batch.filter(!coalesce(
-        col(idCol).cast("string").isInCollection(tomb), lit(false)))
-    if (live.isEmpty) {
-      // nothing to fold (empty or fully tombstoned) — still COMMIT so
-      // replays are O(1) no-ops and no intent marker dangles
-      putMarker(spark, dir, batchId.toString)
-      dropMarker(spark, dir, s"$batchId.intent")
-      return false
+    ingest(batch, batchId, dir, idCol, Seq(Assigned)) { live =>
+      val cents = readCentroids(batch.sparkSession, dir)
+      Assigned.append(dir, Similarity.buildIvfIndex(live, cents.size, idCol,
+          vecCol, cents)
+        .assigned.select(col(idCol).cast("long").as("__vid"),
+          col("__cvec").cast(ArrayType(FloatType)),
+          col("__cell").cast("long"), lit(batchId).as("__batch")))
     }
-    putMarker(spark, dir, s"$batchId.intent")
-    val cents = readCentroids(spark, dir)
-    val add = Similarity.buildIvfIndex(live, cents.size, idCol, vecCol,
-      cents)
-    add.assigned.select(col(idCol).cast("long").as("__vid"),
-        col("__cvec").cast(ArrayType(FloatType)),
-        col("__cell").cast("long"), lit(batchId).as("__batch"))
-      .write.mode("append").parquet(s"$dir/assigned")
-    putMarker(spark, dir, batchId.toString)
-    dropMarker(spark, dir, s"$batchId.intent")
-    true
-  }
 
   /** The served view: identical to [[Similarity.buildIvfIndex]] over
-    * every committed vector with the bootstrapped centroids
-    * (assignment is pure, so increments ≡ rebuild — spec-checked on
-    * served results). Uncommitted rows are filtered by the ledger; a
-    * crashed compaction fold is completed before listing. */
+    * every committed vector with the bootstrapped centroids. */
   def readIvf(spark: SparkSession, dir: String,
       idCol: String = "vec_id"): Similarity.IvfIndex = {
-    DedupIngest.recoverFold(spark, s"$dir/assigned")
+    DedupIngest.recoverFold(spark, Assigned.path(dir))
     Similarity.IvfIndex(
-      DedupIngest.readOrEmpty(spark, s"$dir/assigned", AssignedSchema)
+      Assigned.read(spark, dir)
         .filter(committedPred(spark, dir, col("__batch")))
         .select(col("__vid").as(idCol), col("__cvec"), col("__cell")),
       readCentroids(spark, dir))
@@ -713,41 +610,36 @@ object IndexIngest {
       idCol: String = "vec_id", vecCol: String = "embedding",
       availableNow: Boolean = false,
       compactEvery: Option[Int] = None,
-      smallFileBytes: Long = 32L << 20): StreamingQuery = {
-    require(compactEvery.forall(_ > 0), "compactEvery must be positive")
-    val writer = vecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestIvfBatch(batch, batchId, dir, idCol, vecCol)
-        compactMarkers(batch.sparkSession, dir)
-        compactEvery.foreach { every =>
-          if ((batchId + 1) % every == 0)
-            compactIvf(batch.sparkSession, dir, smallFileBytes)
-        }
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer)
-      .start()
+      smallFileBytes: Long = 32L << 20): StreamingQuery =
+    stream(vecs, dir, checkpoint, availableNow, compactEvery)(
+      ingestIvfBatch(_, _, dir, idCol, vecCol))(
+      compactIvf(_, dir, smallFileBytes))
+
+  /** Fold the assigned tail (size-tiered, manifest-logged). */
+  def compactIvf(spark: SparkSession, dir: String,
+      smallFileBytes: Long = 32L << 20): Unit = compacting(spark, dir) {
+    DedupIngest.foldCorpusTail(spark, Assigned.path(dir), smallFileBytes)
   }
 
-  /** Fold the assigned tail (size-tiered, manifest-logged — large
-    * generations never rewritten; readers complete a crashed fold
-    * before listing). */
-  def compactIvf(spark: SparkSession, dir: String,
-      smallFileBytes: Long = 32L << 20): Unit =
-    withLedgerLock(spark, dir) {
-      DedupIngest.foldCorpusTail(spark, s"$dir/assigned", smallFileBytes)
-    }
+  /** Targeted vector deletion: the assigned dir is self-contained (no
+    * derived partials), so the cancellation is the tombstones alone and
+    * the rewrite drops the vectors (object doc). */
+  def deleteIvfVecs(spark: SparkSession, dir: String, ids: Seq[Long],
+      deleteId: Long): Boolean = deleteVecs(spark, dir, ids, deleteId, Assigned)
+
+  /** IVF and PQ deletion: tombstones, then one filtered rewrite of the
+    * family's vector dir. */
+  private def deleteVecs(spark: SparkSession, dir: String, ids: Seq[Long],
+      deleteId: Long, vecs: DataDir): Boolean = {
+    require(ids.nonEmpty, "need at least one vec id to delete")
+    import spark.implicits._
+    delete(spark, dir, deleteId)((_, _) => ids.map(_.toString).toDF("__id"))(
+      vecs.purge(spark, dir, notIn(col("__vid"), ids)))
+  }
 
   // ------------------------------------------------------------------
   // PQ
   // ------------------------------------------------------------------
-
-  private val CodesSchema = StructType(Seq(
-    StructField("__vid", LongType), StructField("__j", IntegerType),
-    StructField("__code", IntegerType), StructField("__batch", LongType)))
-  private val CodebookSchema = StructType(Seq(
-    StructField("__j", IntegerType), StructField("__code", IntegerType),
-    StructField("cvec", ArrayType(FloatType))))
 
   /** Pin the frozen PQ codebook the ingest encodes against — the PQ
     * analogue of [[bootstrapIvf]]: encoding is a pure function of
@@ -776,57 +668,28 @@ object IndexIngest {
   }
 
   /** Encode one micro-batch against the bootstrapped codebook and
-    * append its code rows, under the same marker protocol as
-    * [[ingestIvfBatch]] — the codes dir is self-contained (no derived
-    * partials; encoding is per-row against the frozen codebook), so
-    * the protocol is exactly the IVF `assigned` shape. Vector ids must
+    * append its code rows (object doc) — the codes dir is
+    * self-contained, exactly the IVF `assigned` shape. Vector ids must
     * be long-castable. */
   def ingestPqBatch(batch: DataFrame, batchId: Long, dir: String,
       idCol: String = "vec_id", vecCol: String = "embedding"): Boolean =
-      withLedgerLock(batch.sparkSession, dir) {
-    val spark = batch.sparkSession
-    require(batchId >= 0, s"batchId must be non-negative, got $batchId" +
-      " (negative stamps are reserved for deletions/compaction)")
-    if (hasMarker(spark, dir, batchId.toString) ||
-      batchId <= batchWatermark(spark, dir)) return false
-    if (hasMarker(spark, dir, s"$batchId.intent"))
-      purgeBatch(spark, s"$dir/codes", CodesSchema, batchId)
-    val tomb = tombstonedIds(spark, dir, batchId)
-    val live = if (tomb.isEmpty) batch
-      else batch.filter(!coalesce(
-        col(idCol).cast("string").isInCollection(tomb), lit(false)))
-    if (live.isEmpty) {
-      // nothing to fold (empty or fully tombstoned) — still COMMIT so
-      // replays are O(1) no-ops and no intent marker dangles
-      putMarker(spark, dir, batchId.toString)
-      dropMarker(spark, dir, s"$batchId.intent")
-      return false
+    ingest(batch, batchId, dir, idCol, Seq(Codes)) { live =>
+      val cb = readCodebook(batch.sparkSession, dir)
+      val add = Similarity.buildPqIndex(live, cb.size, cb.head.size, idCol,
+        vecCol, cb)
+      try Codes.append(dir, add.codes.select(
+          col(idCol).cast("long").as("__vid"), col("__j").cast("int"),
+          col("__code").cast("int"), lit(batchId).as("__batch")))
+      finally Dedup.releasePersisted()
     }
-    putMarker(spark, dir, s"$batchId.intent")
-    val cb = readCodebook(spark, dir)
-    val add = Similarity.buildPqIndex(live, cb.size, cb.head.size, idCol,
-      vecCol, cb)
-    try {
-      add.codes.select(col(idCol).cast("long").as("__vid"),
-          col("__j").cast("int"), col("__code").cast("int"),
-          lit(batchId).as("__batch"))
-        .write.mode("append").parquet(s"$dir/codes")
-      putMarker(spark, dir, batchId.toString)
-      dropMarker(spark, dir, s"$batchId.intent")
-      true
-    } finally graft.operators.Dedup.releasePersisted()
-  }
 
   /** The served view: identical to [[Similarity.buildPqIndex]] over
-    * every committed vector with the bootstrapped codebook (encoding is
-    * pure, so increments ≡ rebuild). Uncommitted rows are filtered by
-    * the ledger; a crashed compaction fold is completed before
-    * listing. */
+    * every committed vector with the bootstrapped codebook. */
   def readPq(spark: SparkSession, dir: String,
       idCol: String = "vec_id"): Similarity.PqIndex = {
-    DedupIngest.recoverFold(spark, s"$dir/codes")
+    DedupIngest.recoverFold(spark, Codes.path(dir))
     Similarity.PqIndex(
-      DedupIngest.readOrEmpty(spark, s"$dir/codes", CodesSchema)
+      Codes.read(spark, dir)
         .filter(committedPred(spark, dir, col("__batch")))
         .select(col("__vid").as(idCol), col("__j"), col("__code")),
       readCodebook(spark, dir))
@@ -837,57 +700,32 @@ object IndexIngest {
       idCol: String = "vec_id", vecCol: String = "embedding",
       availableNow: Boolean = false,
       compactEvery: Option[Int] = None,
-      smallFileBytes: Long = 32L << 20): StreamingQuery = {
-    require(compactEvery.forall(_ > 0), "compactEvery must be positive")
-    val writer = vecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestPqBatch(batch, batchId, dir, idCol, vecCol)
-        compactMarkers(batch.sparkSession, dir)
-        compactEvery.foreach { every =>
-          if ((batchId + 1) % every == 0)
-            compactPq(batch.sparkSession, dir, smallFileBytes)
-        }
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer)
-      .start()
+      smallFileBytes: Long = 32L << 20): StreamingQuery =
+    stream(vecs, dir, checkpoint, availableNow, compactEvery)(
+      ingestPqBatch(_, _, dir, idCol, vecCol))(
+      compactPq(_, dir, smallFileBytes))
+
+  /** Fold the codes tail (size-tiered, manifest-logged). */
+  def compactPq(spark: SparkSession, dir: String,
+      smallFileBytes: Long = 32L << 20): Unit = compacting(spark, dir) {
+    DedupIngest.foldCorpusTail(spark, Codes.path(dir), smallFileBytes)
   }
 
-  /** Fold the codes tail (size-tiered, manifest-logged). Single-writer
-    * cadence (object doc). */
-  def compactPq(spark: SparkSession, dir: String,
-      smallFileBytes: Long = 32L << 20): Unit =
-    withLedgerLock(spark, dir) {
-      DedupIngest.foldCorpusTail(spark, s"$dir/codes", smallFileBytes)
-    }
+  /** Targeted PQ vector deletion — [[deleteIvfVecs]]' codes-dir twin. */
+  def deletePqVecs(spark: SparkSession, dir: String, ids: Seq[Long],
+      deleteId: Long): Boolean = deleteVecs(spark, dir, ids, deleteId, Codes)
 
   // ------------------------------------------------------------------
   // Mini-batch k-means (streamed model maintenance)
   // ------------------------------------------------------------------
 
-  private val KmSeedSchema = StructType(Seq(
-    StructField("__cl", IntegerType),
-    StructField("__s", ArrayType(DoubleType))))
-  /** `__h` is the VALIDITY HORIZON: a partial participates in the state
-    * fold for `upTo` only when `__h < upTo`. Ingest partials carry
-    * `__h = batchId` (same semantics as before); a DELETION's negative
-    * partials carry the ledger's max seen batch at deletion time, so a
-    * crashed batch REPLAYING later reconstructs exactly the state it
-    * first assigned against (the deletion didn't exist then), while the
-    * final served state (`upTo = ∞`) includes every committed
-    * cancellation. */
-  private val KmPartialSchema = StructType(Seq(
-    StructField("__cl", IntegerType), StructField("__n", LongType),
-    StructField("__s", ArrayType(DoubleType)),
-    StructField("__batch", LongType), StructField("__h", LongType)))
-
   /** Pin the frozen seed state the mini-batch stream accumulates onto —
     * the k-means analogue of [[bootstrapIvf]]. Seeds are centroid-SUM
-    * vectors on [[graft.operators.Clustering]]'s integer-quantized grid
-    * (normally [[graft.operators.Clustering.seedSums]] of a reference
-    * slice); the evolving state is always `seed + Σ committed batch
-    * partials`, so an emptied cluster degrades to its seed exactly as
-    * the batch trainer's empty-cluster policy. */
+    * vectors on [[Clustering]]'s integer-quantized grid (normally
+    * [[Clustering.seedSums]] of a reference slice); the evolving state
+    * is always `seed + Σ committed batch partials`, so an emptied
+    * cluster degrades to its seed exactly as the batch trainer's
+    * empty-cluster policy. */
   def bootstrapKmeans(spark: SparkSession, dir: String,
       seeds: Seq[Seq[Double]]): Unit = {
     require(seeds.nonEmpty, "need at least one seed centroid")
@@ -899,18 +737,17 @@ object IndexIngest {
   }
 
   /** Accumulated centroid-sum state from the seeds plus every COMMITTED
-    * partial with `__batch < upTo` — the distributive fold (posexplode →
+    * partial visible at `upTo` — the distributive fold (posexplode →
     * per-(cluster, dim) integer sum → k·dim bounded collect); all terms
     * are exact small-integer doubles, so the fold is order-free. */
   private def kmeansStateSums(spark: SparkSession, dir: String,
       upTo: Long): Seq[Seq[Double]] = {
-    DedupIngest.recoverFold(spark, s"$dir/partials")
+    DedupIngest.recoverFold(spark, Partials.path(dir))
     val seeds = spark.read.schema(KmSeedSchema).parquet(s"$dir/seeds")
     // committed AND horizon-visible: ingest partials fold when their
     // batch id < upTo (coalesce covers pre-__h rows), deletion partials
     // when they were committed before batch `upTo` was first ingested
-    val partials = DedupIngest
-      .readOrEmpty(spark, s"$dir/partials", KmPartialSchema)
+    val partials = Partials.read(spark, dir)
       .filter(committedPred(spark, dir, col("__batch")) &&
         coalesce(col("__h"), col("__batch")) < upTo)
       .select(col("__cl"), col("__s"))
@@ -924,61 +761,33 @@ object IndexIngest {
   }
 
   /**
-   * Fold one micro-batch into the mini-batch k-means state under the
-   * marker protocol: assign the batch against the state accumulated
-   * from STRICTLY EARLIER committed batches (so a crashed batch replays
-   * against exactly the state it first saw), append the per-cluster
-   * integer partials, commit. Unlike the index families the ingest
-   * order is SEMANTIC here — batch t's assignment depends on state
-   * t−1 — so the single-writer contract (object doc) additionally
-   * means monotone batch ids, which is what foreachBatch delivers.
+   * Fold one micro-batch into the mini-batch k-means state (object
+   * doc): assign the batch against the state accumulated from STRICTLY
+   * EARLIER committed batches (so a crashed batch replays against
+   * exactly the state it first saw) and append the per-cluster integer
+   * partials. Unlike the index families the ingest order is SEMANTIC
+   * here — batch t's assignment depends on state t−1 — so the
+   * single-writer contract additionally means monotone batch ids,
+   * which is what foreachBatch delivers.
    *
-   * Replay after a deletion: a crashed (intent-only) batch replaying
-   * once a committed [[deleteKmeansContribs]] has tombstoned some of
-   * its doc ids drops those rows; if EVERY row is tombstoned the
-   * replay is a successful no-op — it purges the batch's orphaned
-   * partials, commits the marker (so later replays are O(1)), and
-   * returns false. A batch whose COMMIT marker is lost is outside the
-   * contract: its positives were already cancelled by any committed
-   * deletion's negatives, so re-ingesting it would double-subtract —
-   * commit markers are never deleted (single-writer contract).
+   * A batch whose COMMIT marker is lost is outside the contract: its
+   * positives were already cancelled by any committed deletion's
+   * negatives, so re-ingesting it would double-subtract — commit
+   * markers are never deleted.
    */
   def ingestKmeansBatch(batch: DataFrame, batchId: Long, dir: String,
       idCol: String = "vec_id", vecCol: String = "embedding"): Boolean =
-      withLedgerLock(batch.sparkSession, dir) {
-    val spark = batch.sparkSession
-    require(batchId >= 0, s"batchId must be non-negative, got $batchId" +
-      " (negative stamps are reserved for compaction)")
-    if (hasMarker(spark, dir, batchId.toString) ||
-      batchId <= batchWatermark(spark, dir)) return false
-    if (hasMarker(spark, dir, s"$batchId.intent"))
-      purgeBatch(spark, s"$dir/partials", KmPartialSchema, batchId)
-    // a batch replaying AFTER a committed deletion must not resurrect
-    // the forgotten docs' contributions (the index families' rule)
-    val tomb = tombstonedIds(spark, dir, batchId)
-    val live = if (tomb.isEmpty) batch
-      else batch.filter(!coalesce(
-        col(idCol).cast("string").isInCollection(tomb), lit(false)))
-    if (live.isEmpty) {
-      putMarker(spark, dir, batchId.toString)
-      dropMarker(spark, dir, s"$batchId.intent")
-      return false
+    ingest(batch, batchId, dir, idCol, Seq(Partials)) { live =>
+      val state = kmeansStateSums(batch.sparkSession, dir, upTo = batchId)
+      Partials.append(dir, Clustering.miniBatchPartials(live, state, idCol,
+          vecCol)
+        .withColumn("__batch", lit(batchId))
+        .withColumn("__h", lit(batchId))
+        .coalesce(1))
     }
-    putMarker(spark, dir, s"$batchId.intent")
-    val state = kmeansStateSums(spark, dir, upTo = batchId)
-    graft.operators.Clustering
-      .miniBatchPartials(live, state, idCol, vecCol)
-      .withColumn("__batch", lit(batchId))
-      .withColumn("__h", lit(batchId))
-      .coalesce(1).write.mode("append").parquet(s"$dir/partials")
-    putMarker(spark, dir, batchId.toString)
-    dropMarker(spark, dir, s"$batchId.intent")
-    true
-  }
 
   /** The served model: centroid-sum state over every committed batch —
-    * feed straight into [[graft.operators.Clustering.assignClusters]].
-    * Uncommitted/crashed partials are filtered by the ledger. */
+    * feed straight into [[Clustering.assignClusters]]. */
   def readKmeansSums(spark: SparkSession, dir: String): Seq[Seq[Double]] =
     kmeansStateSums(spark, dir, upTo = Long.MaxValue)
 
@@ -988,192 +797,94 @@ object IndexIngest {
       idCol: String = "vec_id", vecCol: String = "embedding",
       availableNow: Boolean = false,
       compactEvery: Option[Int] = None,
-      smallFileBytes: Long = 32L << 20): StreamingQuery = {
-    require(compactEvery.forall(_ > 0), "compactEvery must be positive")
-    val writer = vecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestKmeansBatch(batch, batchId, dir, idCol, vecCol)
-        compactMarkers(batch.sparkSession, dir)
-        compactEvery.foreach { every =>
-          if ((batchId + 1) % every == 0)
-            compactKmeans(batch.sparkSession, dir, smallFileBytes)
-        }
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer)
-      .start()
+      smallFileBytes: Long = 32L << 20): StreamingQuery =
+    stream(vecs, dir, checkpoint, availableNow, compactEvery)(
+      ingestKmeansBatch(_, _, dir, idCol, vecCol))(
+      compactKmeans(_, dir, smallFileBytes))
+
+  /** Fold the partials tail (size-tiered, manifest-logged). */
+  def compactKmeans(spark: SparkSession, dir: String,
+      smallFileBytes: Long = 32L << 20): Unit = compacting(spark, dir) {
+    DedupIngest.foldCorpusTail(spark, Partials.path(dir), smallFileBytes)
   }
 
-  /** Fold the partials tail (size-tiered, manifest-logged). Single-
-    * writer cadence (object doc). */
-  def compactKmeans(spark: SparkSession, dir: String,
-      smallFileBytes: Long = 32L << 20): Unit =
-    withLedgerLock(spark, dir) {
-      DedupIngest.foldCorpusTail(spark, s"$dir/partials", smallFileBytes)
-    }
-
-  private val KmSnapSchema = StructType(Seq(
-    StructField("__vid", LongType),
-    StructField("__v", ArrayType(FloatType)),
-    StructField("__b", LongType)))
-
   /**
-   * Right-to-be-forgotten for the streamed k-means state — completes
-   * deletion across EVERY ledgered family: [[ingestKmeansBatch]]'s
-   * integer partials otherwise retain deleted docs' contributions
-   * forever. The [[deleteBm25Docs]] device adapted to a MODEL (the
+   * Right-to-be-forgotten for the streamed k-means state under the
+   * deletion protocol (object doc): [[ingestKmeansBatch]]'s integer
+   * partials otherwise retain deleted docs' contributions forever. The
    * state holds no per-doc rows, so the caller supplies the
    * to-be-forgotten vectors with the batch each was ingested in —
    * `docs = (idCol, vecCol, batchCol)`, e.g. straight from the
-   * [[DedupIngest]] corpus store):
+   * [[DedupIngest]] corpus store:
    *
-   *  1. intent marker; stage the (id, vector, batch) snapshot to
-   *     `deletes/<id>` (rename-into-place — replays reuse the frozen
-   *     input even if the caller's frame changed);
-   *  2. per affected batch `b`, RE-DERIVE each doc's original cluster
-   *     assignment against the state AS OF ingest —
+   *  1. stage the (id, vector, batch) snapshot to `deletes/<id>`
+   *     (rename-into-place — replays reuse the frozen input even if the
+   *     caller's frame changed), minus ids a committed deletion already
+   *     forgot (double-delete is a no-op, not a double-subtraction);
+   *  2. per affected COMMITTED batch `b` (an uncommitted batch
+   *     contributed nothing to cancel), RE-DERIVE each doc's original
+   *     cluster assignment against the state AS OF ingest —
    *     `kmeansStateSums(upTo = b)`, exact because the `__h` horizon
    *     rule excludes every deletion committed after `b` was first
    *     ingested and assignment is a pure function of (vector, state);
-   *  3. append the NEGATED integer partials under this deletion's
-   *     stamp with `__h =` the ledger's max seen batch: integer sums
-   *     make the cancellation exact, and the horizon keeps crashed
-   *     batches' replays assigning against their original state;
-   *  4. tombstone the ids (coverage horizon) so an uncommitted batch
-   *     replaying later drops them, then commit.
+   *  3. append the NEGATED integer partials under this deletion's stamp
+   *     with `__h =` the ledger's max seen batch: integer sums make the
+   *     cancellation exact, and the horizon keeps crashed batches'
+   *     replays assigning against their original state;
+   *  4. tombstone EVERY snapshot id, so a batch that crashed before the
+   *     deletion drops them when it replays after.
    *
-   * Docs whose batch never committed are skipped (no contribution to
-   * cancel — the replaying batch's tombstone filter handles them), as
-   * are ids already forgotten by a committed deletion (double-delete is
-   * a no-op, not a double-subtraction). Deleting an id that was never
-   * ingested with the claimed batch is a caller error the state cannot
-   * detect — the contract is "these rows were in that batch", exactly
-   * [[deleteBm25Docs]]' trust in its snapshot.
+   * Deleting an id that was never ingested with the claimed batch is a
+   * caller error the state cannot detect — the contract is "these rows
+   * were in that batch", exactly [[deleteBm25Docs]]' trust in its
+   * snapshot.
    *
    * SEMANTICS: the cancellation is exact at the SUM level; the served
    * state equals a rebuild-without-them whenever no surviving doc's
    * assignment flips once the deleted mass is gone (true for separated
-   * clusters; the mini-batch analogue of the IVF centroid-drift caveat
-   * — spec-checked on a separated corpus plus the crash matrix).
-   * SINGLE-WRITER like every deletion (object doc); fresh
-   * caller-managed `deleteId`.
+   * clusters; the mini-batch analogue of the IVF centroid-drift
+   * caveat).
    */
   def deleteKmeansContribs(spark: SparkSession, dir: String,
       docs: DataFrame, deleteId: Long,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      batchCol: String = "__batch"): Boolean = withLedgerLock(spark, dir) {
-    require(deleteId >= 0, s"deleteId must be non-negative, got $deleteId")
-    val m = s"del-$deleteId"
-    val stamp = delStamp(deleteId)
-    val stage = s"$dir/deletes/$deleteId"
-    val (f, stagePath) = DedupIngest.fs(spark, stage)
-    if (hasMarker(spark, dir, m)) {
-      if (f.exists(stagePath)) f.delete(stagePath, true)
-      dropMarker(spark, dir, s"$m.intent")
-      return false
-    }
-    if (hasMarker(spark, dir, s"$m.intent")) {
-      purgeBatch(spark, s"$dir/partials", KmPartialSchema, stamp)
-      purgeWhere(spark, s"$dir/tombstones", TombSchema,
-        col("__del") =!= deleteId)
-    }
-    putMarker(spark, dir, s"$m.intent")
-    val tmpPath = new org.apache.hadoop.fs.Path(stage + ".tmp")
-    if (!f.exists(stagePath)) {
-      // promote a crashed-but-completed earlier stage write, else build
-      // fresh: committed-batch rows only (uncommitted contributions have
-      // no positives to cancel), minus ids a PRIOR committed deletion
-      // already forgot (double-delete must not double-subtract)
-      if (f.exists(tmpPath) && f.exists(
-          new org.apache.hadoop.fs.Path(stage + ".tmp/_SUCCESS"))) {
-        f.mkdirs(stagePath.getParent)
-        DedupIngest.renameOrThrow(f, tmpPath, stagePath, "stage promote")
-      } else {
-        if (f.exists(tmpPath)) f.delete(tmpPath, true)
-        val priorDels = markerNames(spark, dir)
-          .filter(_.startsWith("del-")).flatMap(_.drop(4).toLongOption)
-          .filter(_ != deleteId)
+      batchCol: String = "__batch"): Boolean =
+    delete(spark, dir, deleteId, Seq(Partials)) { (stamp, horizon) =>
+      val stage = stageOf(dir, deleteId)
+      if (!promoteStage(spark, stage)) {
+        val priorDels = committedDeletes(spark, dir).filter(_ != deleteId)
         val priorIds: Seq[String] =
           if (priorDels.isEmpty) Seq.empty
-          else {
-            DedupIngest.recoverSwap(spark, s"$dir/tombstones")
-            DedupIngest.readOrEmpty(spark, s"$dir/tombstones", TombSchema)
-              .filter(col("__del").isInCollection(priorDels))
-              .select("__id").distinct().collect()
-              .map(_.getString(0)).toSeq
-          }
-        val snap0 = docs.select(col(idCol).cast("long").as("__vid"),
-            col(vecCol).cast(ArrayType(FloatType)).as("__v"),
-            col(batchCol).cast("long").as("__b"))
-          .filter(committedPred(spark, dir, col("__b"),
-            ingestOnly = true))
-        val snap = (if (priorIds.isEmpty) snap0
-          else snap0.filter(
-            !coalesce(col("__vid").cast("string")
-              .isInCollection(priorIds), lit(false))))
-          .distinct()
-        snap.coalesce(1).write.parquet(tmpPath.toString)
-        f.mkdirs(stagePath.getParent)
-        DedupIngest.renameOrThrow(f, tmpPath, stagePath, "stage promote")
+          else Tombstones.read(spark, dir)
+            .filter(col("__del").isInCollection(priorDels))
+            .select("__id").distinct().collect().map(_.getString(0)).toSeq
+        val snap = docs.select(col(idCol).cast("long").as("__vid"),
+          col(vecCol).cast(ArrayType(FloatType)).as("__v"),
+          col(batchCol).cast("long").as("__b"))
+        publishStage(spark, stage)((if (priorIds.isEmpty) snap
+          else snap.filter(notIn(col("__vid").cast("string"), priorIds)))
+          .distinct().coalesce(1).write.parquet(_))
       }
-    }
-    val snap = spark.read.schema(KmSnapSchema).parquet(stage)
-    val batches = snap.select("__b").distinct().collect()
-      .map(_.getLong(0)).sorted.toSeq
-    val horizon = maxSeenBatch(spark, dir)
-    // one as-of state per affected batch (bounded: deletions are
-    // takedown lists, not corpus scale), negatives derived with the
-    // SAME assignment kernel the ingest used
-    val negatives = batches.map { b =>
-      val state = kmeansStateSums(spark, dir, upTo = b)
-      graft.operators.Clustering.miniBatchPartials(
-          snap.filter(col("__b") === b)
-            .select(col("__vid").as(idCol), col("__v").as(vecCol)),
-          state, idCol, vecCol)
-        .select(col("__cl"), (-col("__n")).as("__n"),
-          transform(col("__s"), x => -x).as("__s"))
-    }
-    negatives.reduceOption(_ unionByName _).foreach(_
-      .select(col("__cl"), col("__n").cast("long"), col("__s"),
-        lit(stamp).as("__batch"), lit(horizon).as("__h"))
-      .coalesce(1).write.mode("append").parquet(s"$dir/partials"))
-    snap.select(col("__vid").cast("string").as("__id")).distinct()
-      .select(col("__id"), lit(horizon).as("__covered"),
-        lit(deleteId).as("__del"))
-      .coalesce(1).write.mode("append").parquet(s"$dir/tombstones")
-    putMarker(spark, dir, m)
-    dropMarker(spark, dir, s"$m.intent")
-    f.delete(stagePath, true)
-    true
-  }
-
-  /** Targeted PQ vector deletion — [[deleteIvfVecs]]' codes-dir twin:
-    * tombstone append (coverage horizon), then a recoverable filtered
-    * rewrite of the codes. Same single-writer contract and fresh
-    * caller-managed `deleteId`. */
-  def deletePqVecs(spark: SparkSession, dir: String, ids: Seq[Long],
-      deleteId: Long): Boolean = withLedgerLock(spark, dir) {
-    require(ids.nonEmpty, "need at least one vec id to delete")
-    require(deleteId >= 0, s"deleteId must be non-negative, got $deleteId")
-    val m = s"del-$deleteId"
-    if (hasMarker(spark, dir, m)) {
-      dropMarker(spark, dir, s"$m.intent")
-      return false
-    }
-    if (hasMarker(spark, dir, s"$m.intent"))
-      purgeWhere(spark, s"$dir/tombstones", TombSchema,
-        col("__del") =!= deleteId)
-    putMarker(spark, dir, s"$m.intent")
-    val horizon = maxSeenBatch(spark, dir)
-    import spark.implicits._
-    ids.map(_.toString).toDF("__id")
-      .select(col("__id"), lit(horizon).as("__covered"),
-        lit(deleteId).as("__del"))
-      .coalesce(1).write.mode("append").parquet(s"$dir/tombstones")
-    purgeWhere(spark, s"$dir/codes", CodesSchema,
-      !coalesce(col("__vid").isInCollection(ids), lit(false)))
-    putMarker(spark, dir, m)
-    dropMarker(spark, dir, s"$m.intent")
-    true
-  }
+      val snap = spark.read.schema(KmSnapSchema).parquet(stage)
+      val committed = snap.filter(committedPred(spark, dir, col("__b"),
+        ingestOnly = true))
+      val batches = committed.select("__b").distinct().collect()
+        .map(_.getLong(0)).sorted.toSeq
+      // one as-of state per affected batch (bounded: deletions are
+      // takedown lists, not corpus scale), negatives derived with the
+      // SAME assignment kernel the ingest used
+      val negatives = batches.map { b =>
+        Clustering.miniBatchPartials(
+            committed.filter(col("__b") === b)
+              .select(col("__vid").as(idCol), col("__v").as(vecCol)),
+            kmeansStateSums(spark, dir, upTo = b), idCol, vecCol)
+          .select(col("__cl"), (-col("__n")).as("__n"),
+            transform(col("__s"), x => -x).as("__s"))
+      }
+      negatives.reduceOption(_ unionByName _).foreach(n =>
+        Partials.append(dir, n.select(col("__cl"), col("__n").cast("long"),
+          col("__s"), lit(stamp).as("__batch"), lit(horizon).as("__h"))
+          .coalesce(1)))
+      snap.select(col("__vid").cast("string").as("__id")).distinct()
+    } (())
 }

@@ -559,10 +559,8 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
   private def batchWatermark(f: org.apache.hadoop.fs.FileSystem,
       markers: org.apache.hadoop.fs.Path): Long =
     if (!f.exists(markers)) -1L
-    else f.listStatus(markers).toSeq.map(_.getPath.getName)
-      .filter(_.matches("batch-upto-\\d+"))
-      .map(_.stripPrefix("batch-upto-").toLong)
-      .foldLeft(-1L)(math.max)
+    else MarkerLedger.watermark(
+      f.listStatus(markers).toSeq.map(_.getPath.getName))
 
   /** Fold the contiguous committed prefix of the L0 batch markers into
     * ONE `batch-upto-<n>` watermark file. WHY: every ingest and

@@ -30,10 +30,16 @@ object LakehouseDemo {
         $"event_type", $"value")
     val n = ev.count()
     val b = ev.agg(min("user_id"), max("user_id"),
-      min("ts_us"), max("ts_us")).head()
+      min("ts_us"), max("ts_us"), min("event_id"), max("event_id")).head()
     val (umn, umx) = (b.getLong(0), b.getLong(1))
     val (tmn, tmx) = (b.getLong(2), b.getLong(3))
     println(s"[demo] events rows=$n user_id=[$umn,$umx]")
+    // every synthetic event id sits above the input's ids, so the DML
+    // aimed at synthetic rows can never touch an input row at any scale
+    val (idMin, synth) = (b.getLong(4), b.getLong(5) + 1)
+    val (sqlInsId, condId, blockedId) = (synth + 1, synth + 2, synth + 3)
+    val sinkIds = Seq(synth + 4, synth + 5, synth + 6)
+    val boxBase = synth + 10 // the five appended rows, step 13
 
     println("[demo] 1. bootstrap: (user_id, ts_us) z-order grid, " +
       "16 bits, blooms on event_id + event_type")
@@ -133,7 +139,7 @@ object LakehouseDemo {
       "synthetic event (bloom-pruned rewrite)")
     val mergeIds = LayoutIngest.read(spark, dir).orderBy("event_id")
       .limit(3).select($"event_id").as[Long].collect().toSeq
-    val newId = ev.agg(max("event_id")).head().getLong(0) + 1000L
+    val newId = synth
     val (hitM, liveM) = LayoutIngest.pointProbeDirs(
       spark, dir, "event_id", mergeIds :+ newId)
     println(s"[demo]    merge touches ${hitM.size}/${liveM.size} units")
@@ -200,7 +206,7 @@ object LakehouseDemo {
       "(bloom-pruned through the pushed-down filter)")
     val beforeWrite = rel.count()
     ev.drop("value").limit(5)
-      .withColumn("event_id", $"event_id" + 5000L)
+      .withColumn("event_id", $"event_id" - idMin + boxBase)
       .withColumn("event_type", lit("appended"))
       .write.format("graft-layout").mode("append").save(dir)
     require(spark.read.format("graft-layout").load(dir).count()
@@ -210,8 +216,8 @@ object LakehouseDemo {
     println("[demo] 14. SQL DML: DELETE FROM / MERGE INTO route to " +
       "delete/mergeRows (GraftSqlExtensions)")
     val beforeDml = spark.table("events_table").count()
-    // the five appended rows live at event_id 5000+; DELETE them by box
-    spark.sql("DELETE FROM events_table WHERE event_id >= 5000")
+    // the five appended rows live at event_id boxBase+; DELETE them by box
+    spark.sql(s"DELETE FROM events_table WHERE event_id >= $boxBase")
     val afterDelete = spark.table("events_table").count()
     require(afterDelete == beforeDml - 5,
       s"SQL DELETE must remove exactly the appended 5: $beforeDml -> " +
@@ -223,7 +229,7 @@ object LakehouseDemo {
       .withColumn("event_type", lit("sql-merged"))
       .drop("zkey")
       .unionByName(spark.table("events_table").limit(1)
-        .withColumn("event_id", lit(7777L))
+        .withColumn("event_id", lit(sqlInsId))
         .withColumn("event_type", lit("sql-inserted"))
         .drop("zkey"))
       .createOrReplaceTempView("dml_src")
@@ -235,7 +241,7 @@ object LakehouseDemo {
       WHEN NOT MATCHED THEN INSERT (${cols.mkString(", ")})
         VALUES (${cols.map(c => s"dml_src.$c").mkString(", ")})""")
     val dmlLabels = spark.sql(s"SELECT event_type FROM events_table " +
-      s"WHERE event_id IN ($probeId, 7777)").as[String].collect().toSet
+      s"WHERE event_id IN ($probeId, $sqlInsId)").as[String].collect().toSet
     require(dmlLabels == Set("sql-merged", "sql-inserted"),
       s"SQL MERGE must relabel + insert: $dmlLabels")
     require(spark.table("events_table").count() == afterDelete + 1,
@@ -250,32 +256,32 @@ object LakehouseDemo {
     spark.sql(s"DELETE FROM events_table WHERE event_id = " +
       s"${twoPoints(0)} OR event_id = ${twoPoints(1)}")
     require(spark.table("events_table").count() == afterDelete - 1,
-      "OR DELETE must remove both point boxes (7777 + the last row)")
+      "OR DELETE must remove both point boxes (the two synthetic inserts)")
     require(LayoutIngest.history(spark, dir)
         .filter($"kind" === "delete").count() == delOpsBefore + 1,
       "a two-box OR DELETE is ONE history op, not two")
     // conditional MERGE: the SAME source-only condition on both
     // actions pre-filters the source — the false-gated row is ignored
     spark.table("events_table").limit(1)
-      .withColumn("event_id", lit(8888L))
+      .withColumn("event_id", lit(condId))
       .withColumn("event_type", lit("sql-cond-inserted"))
       .drop("zkey")
       .unionByName(spark.table("events_table").limit(1)
-        .withColumn("event_id", lit(9999L))
+        .withColumn("event_id", lit(blockedId))
         .withColumn("event_type", lit("sql-cond-blocked"))
         .drop("zkey"))
       .createOrReplaceTempView("dml_cond_src")
     spark.sql(s"""MERGE INTO events_table USING dml_cond_src
       ON events_table.event_id = dml_cond_src.event_id
-      WHEN MATCHED AND dml_cond_src.event_id = 8888 THEN UPDATE SET
+      WHEN MATCHED AND dml_cond_src.event_id = $condId THEN UPDATE SET
         ${cols.filterNot(_ == "event_id")
           .map(c => s"$c = dml_cond_src.$c").mkString(", ")}
-      WHEN NOT MATCHED AND dml_cond_src.event_id = 8888 THEN
+      WHEN NOT MATCHED AND dml_cond_src.event_id = $condId THEN
         INSERT (${cols.mkString(", ")})
         VALUES (${cols.map(c => s"dml_cond_src.$c").mkString(", ")})""")
     val condIds = spark.sql("SELECT event_id FROM events_table " +
-      "WHERE event_id IN (8888, 9999)").as[Long].collect().toSet
-    require(condIds == Set(8888L),
+      s"WHERE event_id IN ($condId, $blockedId)").as[Long].collect().toSet
+    require(condIds == Set(condId),
       s"conditional MERGE must insert only the gated row: $condIds")
     // UPDATE = box-scoped in-place redaction: null a payload column
     // for a user slice WITHOUT deleting the rows
@@ -302,7 +308,7 @@ object LakehouseDemo {
     val beforeSink = spark.table("events_table").count()
     val sinkIn = new org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[Long](1000, spark)
-    sinkIn.addData(8801L, 8802L, 8803L)
+    sinkIn.addData(sinkIds: _*)
     val template = spark.table("events_table").limit(1)
       .drop("zkey").cache()
     val sinkCk = java.nio.file.Files
