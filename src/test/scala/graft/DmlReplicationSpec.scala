@@ -209,6 +209,68 @@ class DmlReplicationSpec extends SparkSpec {
       .exists(_.getName.startsWith("chunk-cafe0000")))
   }
 
+  test("the chunk plan round-trips: a resume rewrites the literal " +
+      "graft-chunk v1 lines byte for byte, and a second resume reads " +
+      "its own plan back") {
+    val t = freshTable("chunked-codec") // a = 0..99, v = a*10
+    val updates = (25L to 84L).map(i => (i, i, i * 1000L))
+      .toDF("a", "b", "v")
+    val nB = 4
+    val bucketCol = pmod(xxhash64(col("a")), lit(nB.toLong))
+    val planned = updates.groupBy(bucketCol.as("__b")).count()
+      .select("__b").as[Long].collect().sorted.toSeq
+    assert(planned.size === nB, "premise: every bucket is non-empty")
+    val id0 = LayoutIngest.mergeRowsNext(spark, t, "a",
+      updates.filter(bucketCol === planned.head))
+    // the durable snapshot duplicates one key of the LAST bucket: the
+    // middle buckets merge, then that sub-merge refuses before any
+    // ledger write — the resume stops with its plan rewritten
+    val dupKey = updates.filter(bucketCol === planned.last)
+      .select("a").as[Long].collect().min
+    updates.union(updates.filter(col("a") === dupKey))
+      .write.mode("overwrite")
+      .parquet(s"$t/markers/chunk-0badc0de.updates")
+    val host = java.lang.management.ManagementFactory
+      .getRuntimeMXBean.getName.split("@").last
+    val head = Seq("graft-chunk v1 0badc0de", s"O\t4999999@$host",
+      "K\ta", s"N\t$nB", "F\t4") ++ planned.map(c => s"P\t$c")
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(s"$t/markers/chunk-0badc0de.plan-3"),
+      (head :+ s"B\t${planned.head}\t$id0").mkString("\n")
+        .getBytes("UTF-8"))
+    val e = intercept[IllegalArgumentException](
+      LayoutIngest.resumeChunkedMerges(spark, t))
+    assert(e.getMessage.contains("duplicate"), e.getMessage)
+    val plans = new java.io.File(s"$t/markers").list().toSeq
+      .filter(_.startsWith("chunk-0badc0de.plan")).sorted
+    assert(plans === Seq("chunk-0badc0de.plan-5"),
+      "each committed bucket publishes the next version and retires " +
+        "the superseded ones")
+    val me = java.lang.management.ManagementFactory
+      .getRuntimeMXBean.getName
+    val ids = planned.zipWithIndex.take(3).map { case (c, i) =>
+      s"B\t$c\t${id0 + i}" }
+    assert(new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(s"$t/markers/chunk-0badc0de.plan-5")),
+        "UTF-8") ===
+      ((head.head +: s"O\t$me" +: head.drop(2)) ++ ids).mkString("\n"),
+      "the resumer owns the rewritten plan; P and B lines round-trip")
+    // the repaired snapshot: the owner is live now (this JVM), so only
+    // force resumes it, and only the one owed bucket merges
+    updates.write.mode("overwrite")
+      .parquet(s"$t/markers/chunk-0badc0de.updates")
+    assert(LayoutIngest.resumeChunkedMerges(spark, t) === 0)
+    assert(LayoutIngest.resumeChunkedMerges(spark, t, force = true) === 1)
+    val got = LayoutIngest.read(spark, t)
+      .select("a", "v").as[(Long, Long)].collect().toMap
+    assert(got === ((0L to 24L) ++ (85L to 99L)).map(i => i -> i * 10L)
+      .toMap ++ (25L to 84L).map(i => i -> i * 1000L).toMap)
+    assert(LayoutIngest.history(spark, t)
+      .filter(col("kind") === "merge").count() === nB.toLong)
+    assert(!new java.io.File(s"$t/markers").list()
+      .exists(_.startsWith("chunk-0badc0de")))
+  }
+
   test("DML markers carry the statement record; the fold " +
       "consolidates EXACTLY: history identical, replays stay no-ops, " +
       "minting scans the log") {
@@ -896,6 +958,41 @@ class DmlReplicationSpec extends SparkSpec {
     want.foreach { case (d, m, b) =>
       assert(body(dirs(d), m) === b, s"$d/markers/$m")
     }
+    // merges: a whole-row SQL MERGE INTO (ledger id 2) and a gated
+    // WHEN NOT MATCHED BY SOURCE delete (id 3) record `mrg-<id>`; the
+    // replicas replay both under the source ids and record their own
+    Seq((30L, 30L, "m-30", 1L), (98L, 98L, "m-98", 2L))
+      .toDF("a", "b", "doc", "v").createOrReplaceTempView("fmt_msrc")
+    val mergeSql = """MERGE INTO fmt_src USING fmt_msrc
+      ON fmt_src.a = fmt_msrc.a
+      WHEN MATCHED THEN UPDATE SET a = fmt_msrc.a, b = fmt_msrc.b,
+        doc = fmt_msrc.doc, v = fmt_msrc.v
+      WHEN NOT MATCHED THEN INSERT (a, b, doc, v)
+        VALUES (fmt_msrc.a, fmt_msrc.b, fmt_msrc.doc, fmt_msrc.v)"""
+    spark.sql(mergeSql)
+    spark.sql(mergeSql +
+      "\n      WHEN NOT MATCHED BY SOURCE AND fmt_src.v < 50 THEN DELETE")
+    LayoutIngest.replicate(spark, src, dst): Unit
+    LayoutIngest.replicate(spark, dst, dst2): Unit
+    val gate = "S\t__graft_unmatched_del\t%28v+%3C+50L%29"
+    val wantMrg = Seq(
+      ("src", "mrg-2", "graft-dml v1 mrg 2 6 1\nS\ta\tmerge-key"),
+      ("src", "mrg-3", s"graft-dml v1 mrg 3 7 2\nS\ta\tmerge-key\n$gate"),
+      ("r", "mrg-2", "graft-dml v1 mrg 2 6 1\nS\ta\tmerge-key"),
+      ("r", "mrg-3", s"graft-dml v1 mrg 3 7 2\nS\ta\tmerge-key\n$gate"),
+      ("r2", "mrg-2", "graft-dml v1 mrg 2 6 1\nS\ta\tmerge-key"),
+      ("r2", "mrg-3", s"graft-dml v1 mrg 3 7 2\nS\ta\tmerge-key\n$gate"))
+    val listedMrg = dirs.toSeq.flatMap { case (l, d) =>
+      new java.io.File(s"$d/markers").list().toSeq
+        .filter(_.matches("mrg-\\d+")).map(l -> _)
+    }
+    assert(listedMrg.toSet === wantMrg.map(w => (w._1, w._2)).toSet)
+    wantMrg.foreach { case (d, m, b) =>
+      assert(body(dirs(d), m) === b, s"$d/markers/$m")
+    }
+    assert(snapKeyed(dst2) === snapKeyed(src) &&
+      snapKeyed(dst) === snapKeyed(src),
+      "both replicas replay the merges to the source bytes")
   }
 
   test("updateKeys redacts by doc id: bloom-pruned in place, NULL " +

@@ -1088,35 +1088,6 @@ class LayoutIngestSpec extends SparkSpec {
     assert(e.getMessage.contains("LONG or STRING"), e.getMessage)
   }
 
-  test("mergeRows crash window: a replay AFTER the append but before " +
-      "the commit marker must not delete the freshly-appended rows") {
-    val dir = tmp("layout-merge-crash")
-    LayoutIngest.bootstrap(spark, dir, grid.copy(bloomCols = Seq("id")))
-    (0 until 2).foreach { b =>
-      assert(LayoutIngest.ingestBatch(
-        rows(b * 25 until (b + 1) * 25).toDF("id", "x", "y"),
-        b.toLong, dir, 1))
-    }
-    val updates = Seq((10L, 10L, 1L), (300L, 20L, 20L)).toDF("id", "x", "y")
-    assert(LayoutIngest.mergeRows(spark, dir, "id", updates, batchId = 2L))
-    val settled = LayoutIngest.read(spark, dir)
-      .select("id", "zkey").as[(Long, Long)].collect().toMap
-    // crash state: everything ran EXCEPT the commit marker (intent
-    // still standing) — the replay re-runs the rewrites over a table
-    // that now CONTAINS batch-2; without the __batch exemption the
-    // key-matching new rows would be deleted by their own merge
-    java.nio.file.Files.delete(
-      java.nio.file.Paths.get(s"$dir/markers/merge-2"))
-    new java.io.File(s"$dir/markers/merge-2.intent").createNewFile()
-    assert(LayoutIngest.mergeRows(spark, dir, "id", updates, batchId = 2L))
-    val replayed = LayoutIngest.read(spark, dir)
-      .select("id", "zkey").as[(Long, Long)].collect().toMap
-    assert(replayed === settled,
-      "the replay must converge to the same table — no loss, no dup")
-    assert(!new java.io.File(s"$dir/markers/merge-2.intent").exists(),
-      "the intent must be retired with the commit marker")
-  }
-
   test("mergeRows: an EMPTY merge burns its id in the batch ledger — " +
       "a later stream batch can never reuse it") {
     val dir = tmp("layout-merge-empty")
