@@ -217,30 +217,26 @@ object VariantStore {
     * .LedgerLock]]; the same guard the streamed index families hold). */
   def applyGenicUpdates(spark: SparkSession, dir: String,
       changes: DataFrame): Unit =
-    graft.streaming.LedgerLock.withLock(spark, dir) {
-      val current = variants(spark, dir)
-      val fixes = changes.select(col("rgd_id").as("u_rgd_id"),
-        col("genic_status").as("u_status"))
-      val merged = current
-        .join(fixes, col("rgd_id") === col("u_rgd_id"), "left")
-        .withColumn("genic_status",
-          coalesce(col("u_status"), col("genic_status")))
-        .drop("u_rgd_id", "u_status")
-      overwriteVariants(spark, dir, merged)
-    }
+    patchVariantColumn(spark, dir, changes, "genic_status")
 
   /** K5: apply end-position drift updates (locked — see
     * [[applyGenicUpdates]]). */
   def applyEndPosUpdates(spark: SparkSession, dir: String,
       updates: DataFrame): Unit =
+    patchVariantColumn(spark, dir, updates, "end_pos")
+
+  /** The one body under both update sinks: under the store lock, left
+    * join the `(rgd_id, column)` fixes onto the variants and take the
+    * fix where one exists, then rewrite the variant side. */
+  private def patchVariantColumn(spark: SparkSession, dir: String,
+      fixes: DataFrame, column: String): Unit =
     graft.streaming.LedgerLock.withLock(spark, dir) {
-      val current = variants(spark, dir)
-      val fixes = updates.select(col("rgd_id").as("u_rgd_id"),
-        col("end_pos").as("u_end"))
-      val merged = current
-        .join(fixes, col("rgd_id") === col("u_rgd_id"), "left")
-        .withColumn("end_pos", coalesce(col("u_end"), col("end_pos")))
-        .drop("u_rgd_id", "u_end")
+      val merged = variants(spark, dir)
+        .join(fixes.select(col("rgd_id").as("u_rgd_id"),
+          col(column).as("u_value")), col("rgd_id") === col("u_rgd_id"),
+          "left")
+        .withColumn(column, coalesce(col("u_value"), col(column)))
+        .drop("u_rgd_id", "u_value")
       overwriteVariants(spark, dir, merged)
     }
 

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.Layout
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
@@ -187,8 +187,8 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
         grid.bits, grid.curve, grid.bloomCols))
       .toDF("cols", "mns", "mxs", "bits", "curve", "bloomCols")
       .coalesce(1).write.parquet(s"$dir/grid")
-    f.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/data"))
-    f.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/markers"))
+    f.mkdirs(new Path(s"$dir/data"))
+    f.mkdirs(new Path(s"$dir/markers"))
   }
 
   /** The grid is immutable after [[bootstrap]] (regrid = new dir), so
@@ -367,14 +367,13 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     // concurrently with the stream (see the lock-split section of the
     // object doc). Reads are crash-correct without recovery (liveDirs'
     // publish-point rule), so deferring it costs only debris lifetime.
-    val marker = new org.apache.hadoop.fs.Path(markers, s"batch-$batchId")
+    val marker = new Path(markers, s"batch-$batchId")
     if (batchId <= batchWatermark(f, markers) || f.exists(marker))
       return false
-    val target = new org.apache.hadoop.fs.Path(s"$dir/data/batch-$batchId")
+    val target = new Path(s"$dir/data/batch-$batchId")
     if (!f.exists(target)) {
       // crash-leftover stage from a previous attempt is garbage
-      val stage = new org.apache.hadoop.fs.Path(
-        s"$dir/data.stage-$batchId")
+      val stage = new Path(s"$dir/data.stage-$batchId")
       if (f.exists(stage)) f.delete(stage, true)
       val grid = readGrid(spark, dir)
       require(!batch.columns.contains(BatchCol),
@@ -398,9 +397,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
         f.create(marker, true).close()
         return true
       }
-      writeUnitStats(f, stage, grid.cols :+ KeyCol :+ BatchCol,
-        grid.bloomCols)
-      writeUnitBlooms(spark, f, stage, grid.bloomCols)
+      sealUnit(spark, f, stage, grid)
       // schema BEFORE data: the stored union is always a superset of
       // every published file (additive evolution, see tableSchema)
       publishSchema(spark, dir, toWrite.schema)
@@ -419,9 +416,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     * subdir of a RANGE-SPLIT generation. Named relative to `data/`
     * (`batch-3`, `gen-ab12cd34/range-2`); manifests, logical deletion,
     * footer pruning, deletes, and reads all operate on units. */
-  private def leafUnits(f: org.apache.hadoop.fs.FileSystem,
-      data: org.apache.hadoop.fs.Path)
-      : Seq[(String, org.apache.hadoop.fs.Path)] =
+  private def leafUnits(f: FileSystem, data: Path): Seq[(String, Path)] =
     f.listStatus(data).toSeq.filter(_.isDirectory).flatMap { top =>
       val subs = f.listStatus(top.getPath).toSeq.filter(s =>
         s.isDirectory && s.getPath.getName.startsWith("range-"))
@@ -454,13 +449,10 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     if (!f.exists(data)) return
     val (_, markers) = DedupIngest.fs(spark, s"$dir/markers")
     val w = batchWatermark(f, markers)
-    f.listStatus(data).toSeq.filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .filter(_.matches("batch-\\d+"))
-      .map(_.stripPrefix("batch-").toLong)
-      .filter(_ > w)
+    idsOf(f.listStatus(data).toSeq.filter(_.isDirectory)
+      .map(_.getPath.getName), "batch-").filter(_ > w)
       .foreach { id =>
-        val m = new org.apache.hadoop.fs.Path(markers, s"batch-$id")
+        val m = new Path(markers, s"batch-$id")
         if (!f.exists(m)) {
           // rare post-crash healing — worth an audit trace: operators
           // should see that a publish-rename/marker crash window was
@@ -488,17 +480,13 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
   def compact(spark: SparkSession, dir: String,
       smallFileBytes: Long = 32L << 20,
       targetFileBytes: Long = 0L): Unit =
-    withMaintLock(spark, dir) {
-      recoverCompact(spark, dir)
-      adoptOrphanBatches(spark, dir)
-      val (f, data) = DedupIngest.fs(spark, s"$dir/data")
-      val smalls =
-        if (!f.exists(data)) Nil
-        else leafUnits(f, data)
-          .filter { case (_, p) => dirBytes(f, p) < smallFileBytes }
+    maintSection(spark, dir, "compact") {
+      val (f, _) = DedupIngest.fs(spark, s"$dir/data")
+      val smalls = listUnits(spark, dir)
+        .filter { case (_, p) => dirBytes(f, p) < smallFileBytes }
       if (smalls.size >= 2) {
         val stamp = java.util.UUID.randomUUID().toString.take(8)
-        val stage = new org.apache.hadoop.fs.Path(s"$dir/gen-$stamp.stage")
+        val stage = new Path(s"$dir/gen-$stamp.stage")
         val target = if (targetFileBytes > 0) targetFileBytes
           else 8L * smallFileBytes
         val parts = math.min(4096, math.max(1, math.ceil(
@@ -512,40 +500,24 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
           .sortWithinPartitions(KeyCol)
           .write.mode("overwrite").parquet(stage.toString)
         // range-split: one subdir per output file, inside the stage
-        val partFiles = f.listStatus(stage).toSeq.filter(s =>
-          s.isFile && isDataFile(s.getPath.getName))
-          .sortBy(_.getPath.getName)
-        val gridNow = readGrid(spark, dir)
-        val statCols = gridNow.cols :+ KeyCol :+ BatchCol
+        val partFiles = dataFiles(f, stage).sortBy(_.getPath.getName)
+        val grid = readGrid(spark, dir)
         if (partFiles.size > 1) {
           partFiles.zipWithIndex.foreach { case (pf, k) =>
-            val sub = new org.apache.hadoop.fs.Path(stage, s"range-$k")
+            val sub = new Path(stage, s"range-$k")
             f.mkdirs(sub)
             // a false here (Hadoop reports most failures via false,
             // not exceptions) would strand the file at the gen's top
             // level where leafUnits assigns it to NO unit — its rows
             // would silently vanish once the manifest commits
-            if (!f.rename(pf.getPath,
-                new org.apache.hadoop.fs.Path(sub, pf.getPath.getName)))
+            if (!f.rename(pf.getPath, new Path(sub, pf.getPath.getName)))
               throw new IllegalStateException(
                 s"compact: range-split rename failed for ${pf.getPath}")
           }
-          (0 until partFiles.size).foreach { k =>
-            val sub = new org.apache.hadoop.fs.Path(stage, s"range-$k")
-            writeUnitStats(f, sub, statCols, gridNow.bloomCols)
-            writeUnitBlooms(spark, f, sub, gridNow.bloomCols)
-          }
-        } else {
-          writeUnitStats(f, stage, statCols, gridNow.bloomCols)
-          writeUnitBlooms(spark, f, stage, gridNow.bloomCols)
-        }
-        val man = manifestPath(spark, dir, stamp)
-        val out = f.create(man, true)
-        try out.write((smalls.map(s => s"S\t${s._1}") ++
-            Seq(s"T\tgen-$stamp", "COMMIT"))
-          .mkString("\n").getBytes("UTF-8"))
-        finally out.close()
-        recoverCompact(spark, dir) // the happy path IS the replay
+          partFiles.indices.foreach(k =>
+            sealUnit(spark, f, new Path(stage, s"range-$k"), grid))
+        } else sealUnit(spark, f, stage, grid)
+        commitManifest(spark, dir, f, stamp, smalls.map(_._1))
       }
       // NO marker fold here: the batch-marker watermark is TAIL-lock
       // state (the ingest cadence folds it every batch; batch-mode
@@ -556,8 +528,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
   /** "All batch ids ≤ n are committed" — the highest published
     * `batch-upto-<n>` watermark, -1 when none. An id is committed iff
     * it is ≤ the watermark OR its individual marker exists. */
-  private def batchWatermark(f: org.apache.hadoop.fs.FileSystem,
-      markers: org.apache.hadoop.fs.Path): Long =
+  private def batchWatermark(f: FileSystem, markers: Path): Long =
     if (!f.exists(markers)) -1L
     else MarkerLedger.watermark(
       f.listStatus(markers).toSeq.map(_.getPath.getName))
@@ -720,8 +691,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     // shared fold core (MarkerLedger); this family's commit markers
     // are named batch-<id> and leave no per-id debris
     MarkerLedger.fold(f, markers, names,
-      commitIds = names.filter(_.matches("batch-\\d+"))
-        .map(_.stripPrefix("batch-").toLong).toSet,
+      commitIds = idsOf(names, "batch-").toSet,
       commitName = i => s"batch-$i")
     // txn reservations: keep only each query's LATEST (highest-epoch)
     // reservation. Older epochs are checkpoint-committed — Spark
@@ -733,7 +703,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     txns.groupBy(_._1).valuesIterator.foreach { g =>
       val newest = g.maxBy(_._2)._3
       g.iterator.filter(_._3 != newest).foreach { case (_, _, n) =>
-        f.delete(new org.apache.hadoop.fs.Path(markers, n), false): Unit
+        f.delete(new Path(markers, n), false): Unit
       }
     }
   }
@@ -744,7 +714,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
       name.endsWith(".parquet")
 
   private def manifestPath(spark: SparkSession, dir: String,
-      stamp: String): org.apache.hadoop.fs.Path =
+      stamp: String): Path =
     DedupIngest.fs(spark, s"$dir/markers/compact-$stamp.manifest")._2
 
   /** Replay any committed compaction manifest to completion: publish
@@ -775,21 +745,15 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     f.listStatus(markers).toSeq
       .filter(_.getPath.getName.matches("compact-.*\\.manifest"))
       .foreach { m =>
-        val lines = {
-          val in = f.open(m.getPath)
-          try scala.io.Source.fromInputStream(in, "UTF-8")
-            .getLines().toList
-          finally in.close()
-        }
+        val lines = readMarkerLines(f, m.getPath)
         val stamp = m.getPath.getName
           .stripPrefix("compact-").stripSuffix(".manifest")
-        val stage = new org.apache.hadoop.fs.Path(s"$dir/gen-$stamp.stage")
+        val stage = new Path(s"$dir/gen-$stamp.stage")
         if (!lines.lastOption.contains("COMMIT")) {
           f.delete(m.getPath, false)
           if (f.exists(stage)) f.delete(stage, true)
         } else {
-          val target = new org.apache.hadoop.fs.Path(
-            s"$dir/data/" + lines.collectFirst {
+          val target = new Path(s"$dir/data/" + lines.collectFirst {
               case l if l.startsWith("T\t") => l.drop(2) }.get)
           if (!f.exists(target) && f.exists(stage))
             f.rename(stage, target): Unit
@@ -797,14 +761,14 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
             val sources = lines.collect {
               case l if l.startsWith("S\t") => l.drop(2) }
             sources.foreach { s =>
-              val sp = new org.apache.hadoop.fs.Path(s"$dir/data/$s")
+              val sp = new Path(s"$dir/data/$s")
               if (f.exists(sp)) f.delete(sp, true)
             }
             // a range-split gen whose last leaf was folded away leaves
             // an empty (or _SUCCESS-only) parent shell — drop it
             sources.filter(_.contains("/")).map(_.split("/")(0))
               .distinct.foreach { parent =>
-                val pp = new org.apache.hadoop.fs.Path(s"$dir/data/$parent")
+                val pp = new Path(s"$dir/data/$parent")
                 if (f.exists(pp) && f.listStatus(pp).forall(st =>
                     st.isFile && !isDataFile(st.getPath.getName)))
                   f.delete(pp, true)
@@ -1066,11 +1030,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
           scope: Long): (FileSystem, Path) => Boolean = {
         val bs = scoped(scope)
         (f, d) => bs.exists(_.forall { case (c, lo, hi) =>
-          dirColumnRange(f, d, c) match {
-            case Some((mn, mx)) => mx >= lo && mn <= hi
-            case None => true // no stats → conservatively rewrite
-          }
-        })
+          rangeHits(f, d, c, lo, hi) })
       }
       private[streaming] def record(scope: Long,
           assigns: Seq[(String, String)]) = (scoped(scope), assigns)
@@ -1108,32 +1068,12 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
         coalesce(functions.col(col).isin(keys: _*), lit(false)), scope)
       private[streaming] def pruner(spark: SparkSession, dir: String,
           scope: Long): (FileSystem, Path) => Boolean = {
-        val (lo, hi) =
-          if (keyIsLong) {
-            val ls = keys.map(_.asInstanceOf[Long])
-            (ls.min, ls.max)
-          } else (Long.MinValue, Long.MaxValue)
-        val unitCount = {
-          val (f0, data0) = DedupIngest.fs(spark, s"$dir/data")
-          if (!f0.exists(data0)) 0 else leafUnits(f0, data0).size
-        }
-        val probeBloom =
-          keys.size.toLong * math.max(1, unitCount) <= KeyedBloomProbeBudget
+        val probeBloom = keys.size.toLong *
+          math.max(1, listUnits(spark, dir).size) <= KeyedBloomProbeBudget
         if (!probeBloom) keyedBloomBudgetSkips += 1
-        (f, d) => unitRows(f, d) > 0 && inScope(f, d, scope) &&
-          (!keyIsLong || (dirColumnRange(f, d, col) match {
-            case Some((mn, mx)) => mx >= lo && mn <= hi
-            case None => true
-          })) &&
-          (!probeBloom || (unitBloom(f, d, col) match {
-            case Some(b) => keys.exists {
-              case s: String => b.mightContainString(s)
-              case l: Long => b.mightContainLong(l)
-              case other => throw new IllegalStateException(
-                s"unreachable key type: ${other.getClass.getName}")
-            }
-            case None => true // no bloom sidecar → conservative
-          }))
+        val ls = keys.collect { case l: Long => l }
+        keyPruner(col, if (keyIsLong) Some((ls.min, ls.max)) else None,
+          if (probeBloom) keys else Nil, scope)
       }
       /** `(tag, col)`, the key type, every key, the assignments. */
       private[streaming] def record(scope: Long,
@@ -1231,11 +1171,6 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     private def scopedHit(hit: Column, scope: Long) =
       if (scope == Long.MaxValue) hit
       else hit && functions.col(BatchCol) <= scope
-    private def inScope(f: FileSystem, d: Path, scope: Long) =
-      scope == Long.MaxValue || (dirColumnRange(f, d, BatchCol) match {
-        case Some((mn, _)) => mn <= scope
-        case None => true // no stats → conservative
-      })
     private def columnType(what: String,
         known: Option[Map[String, DataType]], c: String) =
       known.map(k => k.getOrElse(c, throw new IllegalArgumentException(
@@ -1248,16 +1183,50 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
   private def knownColumns(spark: SparkSession, dir: String)
       : Option[Map[String, DataType]] =
     tableSchema(spark, dir).orElse {
-      val (f, data) = DedupIngest.fs(spark, s"$dir/data")
-      if (!f.exists(data) || leafUnits(f, data).isEmpty) None
+      if (listUnits(spark, dir).isEmpty) None
       else Some(read(spark, dir).schema)
     }.map(_.fields.map(fd => fd.name -> fd.dataType).toMap)
 
-  private def readMarkerLines(f: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Seq[String] = {
+  /** Every unit under `data/` (none before the first publish). */
+  private def listUnits(spark: SparkSession, dir: String)
+      : Seq[(String, Path)] = {
+    val (f, data) = DedupIngest.fs(spark, s"$dir/data")
+    if (!f.exists(data)) Nil else leafUnits(f, data)
+  }
+
+  /** The ids of the `<prefix><id><suffix>` names among `names`. */
+  private def idsOf(names: Seq[String], prefix: String,
+      suffix: String = ""): Seq[Long] = {
+    val pat = s"\\Q$prefix\\E(\\d+)\\Q$suffix\\E".r
+    names.collect { case pat(i) => i.toLong }
+  }
+
+  /** One marker, manifest or sidecar file's lines. */
+  private def readMarkerLines(f: FileSystem, p: Path): Seq[String] = {
     val in = f.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toSeq
+    try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
     finally in.close()
+  }
+
+  private def writeFile(f: FileSystem, p: Path, body: String): Unit = {
+    val out = f.create(p, true)
+    try out.write(body.getBytes("UTF-8")) finally out.close()
+  }
+
+  /** Publish `markers/<name>` WHOLE: write `<name>.tmp`, then rename
+    * over any older copy — so an existing file always parses, and a
+    * crash mid-write leaves only the tmp, which the owed replay
+    * overwrites. Every marker whose body is state goes through here:
+    * DML records, the dml-log, the promotion fence, chunk plans and
+    * merge intents. */
+  private def publishWhole(f: FileSystem, markers: Path, name: String,
+      body: String): Unit = {
+    val (tmp, p) = (new Path(markers, s"$name.tmp"), new Path(markers, name))
+    writeFile(f, tmp, body)
+    if (f.exists(p)) f.delete(p, false)
+    if (!f.rename(tmp, p))
+      throw new IllegalStateException(
+        s"LayoutIngest: publish of $name failed under $markers")
   }
 
   /** Records folded out of the live marker listing by
@@ -1325,8 +1294,8 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     parsed
   }
 
-  private def parseDmlLogs(f: org.apache.hadoop.fs.FileSystem,
-      logs: Seq[org.apache.hadoop.fs.FileStatus]): Seq[DmlRecord] = {
+  private def parseDmlLogs(f: FileSystem,
+      logs: Seq[FileStatus]): Seq[DmlRecord] = {
     logs.flatMap { s =>
       // lock-free readers (history, records) can race a fold's
       // old-log delete — the superseding log carries every record
@@ -1405,18 +1374,9 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
         else r.copy(atMs = Some(System.currentTimeMillis()))
       }
     val oldLogs = names.filter(_.matches("dml-log-\\d+"))
-    val k = oldLogs.map(_.stripPrefix("dml-log-").toLong)
-      .foldLeft(-1L)(math.max) + 1L
-    val tmp = new org.apache.hadoop.fs.Path(markers, s"dml-log-$k.tmp")
-    if (f.exists(tmp)) f.delete(tmp, false)
-    val out = f.create(tmp, true)
-    try out.write(all.sortBy(_.seq).map(DmlRecord.serialize)
-      .mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    val log = new org.apache.hadoop.fs.Path(markers, s"dml-log-$k")
-    if (!f.rename(tmp, log))
-      throw new IllegalStateException(
-        s"LayoutIngest: dml-log publish failed for $dir")
+    val k = idsOf(oldLogs, "dml-log-").foldLeft(-1L)(math.max) + 1L
+    publishWhole(f, markers, s"dml-log-$k",
+      all.sortBy(_.seq).map(DmlRecord.serialize).mkString("\n"))
     // the COMMIT markers of folded merges retire with their records:
     // the folded mrg record is the committed-proof, the batch marker /
     // watermark keeps the ledger id occupied, and history reads the
@@ -1427,10 +1387,8 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     val mergeMarkers = all.filter(_.kind == "mrg")
       .map(r => s"merge-${r.id}")
       .filter(nameSet)
-    (liveNames ++ mergeMarkers).foreach(n =>
-      f.delete(new org.apache.hadoop.fs.Path(markers, n), false): Unit)
-    oldLogs.foreach(n =>
-      f.delete(new org.apache.hadoop.fs.Path(markers, n), false): Unit)
+    (liveNames ++ mergeMarkers ++ oldLogs).foreach(n =>
+      f.delete(new Path(markers, n), false): Unit)
     liveNames.size + mergeMarkers.size
   }
 
@@ -1460,8 +1418,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
           // lost); same race-tolerance [[dmlLogEntries]] grants the
           // fold's old-log delete
           try Some(DmlRecord.parse(k, n.stripPrefix(s"$k-").toLong,
-            readMarkerLines(f, s.getPath),
-            Some(s.getModificationTime)))
+            readMarkerLines(f, s.getPath), Some(s.getModificationTime)))
           catch { case _: java.io.FileNotFoundException => None }
         }
       }
@@ -1569,18 +1526,27 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
   private[graft] def dmlNext(spark: SparkSession, dir: String,
       target: DmlTarget, sets: Seq[(String, Column)]): Long = {
     val kind = if (sets.isEmpty) target.kinds._1 else target.kinds._2
+    withFreshId(s"dmlNext ($kind)", dir)(
+      occupiedDmlIds(spark, dir, kind).foldLeft(-1L)(math.max) + 1L) { id =>
+      if (sets.isEmpty) delete(spark, dir, target, id)
+      else update(spark, dir, target, sets, id)
+    }
+  }
+
+  /** The fresh-id race loop under [[dmlNext]] and [[mergeRowsNext]]:
+    * mint, try to commit under the id, re-mint when `claim` reports the
+    * id lost (false). Bounded, since every loss means another writer
+    * COMMITTED. Returns the id the claim committed under. */
+  private def withFreshId(what: String, dir: String)(mint: => Long)(
+      claim: Long => Boolean): Long = {
     @scala.annotation.tailrec
     def attempt(lost: Int): Long = {
-      val next =
-        occupiedDmlIds(spark, dir, kind).foldLeft(-1L)(math.max) + 1L
-      val committed =
-        if (sets.isEmpty) delete(spark, dir, target, next)
-        else update(spark, dir, target, sets, next)
-      if (committed) next
+      val id = mint
+      if (claim(id)) id
       else {
         require(lost + 1 < 16,
-          s"dmlNext: lost the $kind-id race ${lost + 1} times on $dir " +
-            "— a pathological storm of concurrent statements")
+          s"$what: lost the id race ${lost + 1} times on $dir — a " +
+            "pathological storm of concurrent writers")
         attempt(lost + 1)
       }
     }
@@ -1695,16 +1661,9 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
           .getOrElse(col(c))
       }: _*)
     refuseReplicaWrite(spark, dir, s"$kind-$id")
-    withMaintLock(spark, dir) {
-      fencePromotedMidSync(spark, dir, s"$kind-$id")
-      val stampPrefix = s"$kind$id"
-      recoverCompact(spark, dir)
-      adoptOrphanBatches(spark, dir)
+    maintSection(spark, dir, s"$kind-$id") {
       val (f, markers) = DedupIngest.fs(spark, s"$dir/markers")
-      val marker = new org.apache.hadoop.fs.Path(markers, s"$kind-$id")
-      if (f.exists(marker) ||
-          dmlLogEntries(spark, dir)
-            .exists(r => r.kind == kind && r.id == id)) false
+      if (committedStatement(spark, dir, s"$kind-$id", kind, id)) false
       else {
         // recorded BEFORE the unit listing: batches committing during
         // the rewrite are not in the listing, so the statement's scope
@@ -1712,14 +1671,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
         // above a gap — served post-rewrite to any later reader, so a
         // replica stays exact either way; see [[replicate]])
         val upto = contiguousCommittedBatch(spark, dir)
-        val seq = dmlRecords(spark, dir).map(_.seq)
-          .foldLeft(-1L)(math.max) + 1L
-        val (_, data) = DedupIngest.fs(spark, s"$dir/data")
-        val units =
-          if (!f.exists(data)) Nil
-          else leafUnits(f, data)
-        val affectedPaths =
-          parFilter(units.map(_._2))(d => affects(f, d)).toSet
+        val seq = nextDmlSeq(spark, dir)
         // a REPLAY after a mid-operation crash (marker not yet
         // created) must not re-transform units the crashed attempt
         // already PUBLISHED — its own outputs are recognizable by the
@@ -1729,53 +1681,88 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
         // crash-recovery discipline the maintenance lock imposes
         // (break the dead holder's lock, replay the owed op BEFORE
         // any other maintenance renames those units).
-        val ownOutput = s"gen-$stampPrefix-"
-        val affected = units.filter(u =>
-          affectedPaths(u._2) && !u._1.startsWith(ownOutput))
-        val gridNow = readGrid(spark, dir) // immutable — read once
-        affected.zipWithIndex.foreach { case ((name, d), i) =>
-          // the attempt nonce keeps a REPLAY's target names distinct
-          // from a previous attempt's published gens — without it a
-          // replayed rewrite of gen-delX could manifest X as both
-          // source and target and recovery would drop the data
-          val stamp = s"$stampPrefix-$i-" +
-            java.util.UUID.randomUUID().toString.take(6)
-          val stage = new org.apache.hadoop.fs.Path(
-            s"$dir/gen-$stamp.stage")
-          if (f.exists(stage)) f.delete(stage, true)
-          // per-file partitions, narrow transform: key order inside
-          // each written file is inherited from the sorted source
-          // files (a filter or a row-local projection preserves it)
-          transform(readUnits(spark, dir, Seq(d)))
-            .write.mode("overwrite").parquet(stage.toString)
-          writeUnitStats(f, stage, gridNow.cols :+ KeyCol :+ BatchCol,
-            gridNow.bloomCols)
-          writeUnitBlooms(spark, f, stage, gridNow.bloomCols)
-          val man = manifestPath(spark, dir, stamp)
-          val out = f.create(man, true)
-          try out.write((Seq(s"S\t$name", s"T\tgen-$stamp",
-              "COMMIT")).mkString("\n").getBytes("UTF-8"))
-          finally out.close()
-          recoverCompact(spark, dir)
-        }
+        rewriteUnits(spark, dir, f, s"$kind$id",
+          admitted(f, listUnits(spark, dir))(affects)
+            .filterNot(_._1.startsWith(s"gen-$kind$id-")))(transform)
         // the marker is the statement's commit record AND its durable
-        // payload — written whole to a tmp and renamed, so an existing
-        // marker always parses (a crash mid-write leaves only the tmp;
-        // the owed replay rewrites nothing — every unit carries the
-        // op's stamp — and re-publishes the marker)
-        val tmp = new org.apache.hadoop.fs.Path(markers,
-          s"$kind-$id.tmp")
-        if (f.exists(tmp)) f.delete(tmp, false)
-        val out = f.create(tmp, true)
-        try out.write(DmlRecord.serialize(DmlRecord(kind, id, seq,
-          upto, recBoxes, recSets, None)).getBytes("UTF-8"))
-        finally out.close()
-        if (!f.rename(tmp, marker))
-          throw new IllegalStateException(
-            s"LayoutIngest: DML marker publish failed for $kind-$id")
+        // payload (a crash mid-write leaves only the tmp; the owed
+        // replay rewrites nothing — every unit carries the op's
+        // stamp — and re-publishes the marker)
+        publishWhole(f, markers, s"$kind-$id", DmlRecord.serialize(
+          DmlRecord(kind, id, seq, upto, recBoxes, recSets, None)))
         true
       }
     }
+  }
+
+  /** Run `body` under the MAINTENANCE lock, after what every unit
+    * rewriter owes first: the promotion fence (a sync's own write),
+    * [[recoverCompact]] and [[adoptOrphanBatches]]. */
+  private def maintSection[T](spark: SparkSession, dir: String,
+      what: String)(body: => T): T =
+    withMaintLock(spark, dir) {
+      fencePromotedMidSync(spark, dir, what)
+      recoverCompact(spark, dir)
+      adoptOrphanBatches(spark, dir)
+      body
+    }
+
+  /** A statement is committed when its marker stands or its record was
+    * folded into the dml-log (only committed statements fold). */
+  private def committedStatement(spark: SparkSession, dir: String,
+      marker: String, kind: String, id: Long): Boolean = {
+    val (f, markers) = DedupIngest.fs(spark, s"$dir/markers")
+    f.exists(new Path(markers, marker)) || dmlLogEntries(spark, dir)
+      .exists(r => r.kind == kind && r.id == id)
+  }
+
+  /** The next global DML `seq` — records mint it at commit. */
+  private def nextDmlSeq(spark: SparkSession, dir: String): Long =
+    dmlRecords(spark, dir).map(_.seq).foldLeft(-1L)(math.max) + 1L
+
+  /** The `units` whose metadata `affects` admits, in listing order —
+    * probed on [[probePool]]. */
+  private def admitted(f: FileSystem, units: Seq[(String, Path)])(
+      affects: (FileSystem, Path) => Boolean): Seq[(String, Path)] = {
+    val hit = parFilter(units.map(_._2))(d => affects(f, d)).toSet
+    units.filter(u => hit(u._2))
+  }
+
+  /** The ONE unit rewrite under every DELETE, UPDATE and MERGE: each
+    * unit stages `transform` of its rows — per-file partitions, a
+    * narrow transform, so key order inside each written file is
+    * inherited from the sorted source files — seals its sidecars and
+    * swaps in through the same WAL manifest as [[compact]]. Targets
+    * are named `gen-<prefix>-<i>-<nonce>`: the statement's id stamp,
+    * plus an attempt nonce that keeps a REPLAY's targets distinct from
+    * a previous attempt's published gens (without it a replayed
+    * rewrite of gen-delX could manifest X as both source and target,
+    * and recovery would drop the data). */
+  private def rewriteUnits(spark: SparkSession, dir: String,
+      f: FileSystem, prefix: String, units: Seq[(String, Path)])(
+      transform: DataFrame => DataFrame): Unit = {
+    val grid = readGrid(spark, dir) // immutable — read once
+    units.zipWithIndex.foreach { case ((name, d), i) =>
+      val stamp = s"$prefix-$i-" +
+        java.util.UUID.randomUUID().toString.take(6)
+      val stage = new Path(s"$dir/gen-$stamp.stage")
+      if (f.exists(stage)) f.delete(stage, true)
+      transform(readUnits(spark, dir, Seq(d)))
+        .write.mode("overwrite").parquet(stage.toString)
+      sealUnit(spark, f, stage, grid)
+      commitManifest(spark, dir, f, stamp, Seq(name))
+    }
+  }
+
+  /** Durably record the swap of `sources` for `gen-<stamp>` (the WAL
+    * manifest: S lines, the T line, the COMMIT trailer), then replay
+    * it — the happy path IS the replay ([[recoverCompact]]). */
+  private def commitManifest(spark: SparkSession, dir: String,
+      f: FileSystem, stamp: String, sources: Seq[String]): Unit = {
+    writeFile(f, manifestPath(spark, dir, stamp),
+      (sources.map(s => s"S\t$s") :+ s"T\tgen-$stamp" :+ "COMMIT")
+        .mkString("\n"))
+    recoverCompact(spark, dir)
   }
 
   /** Every delete/update id OCCUPIED on `dir` for the record kind
@@ -1867,11 +1854,10 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     * Conservative: no stats (pre-string-sidecar units, all-null
     * columns) → true. Byte-order comparisons throughout ([[utf8Cmp]],
     * [[utf8PrefixLeq]]) — the same order the predicate evaluates in. */
-  private def strShapeMayHit(f: org.apache.hadoop.fs.FileSystem,
-      d: org.apache.hadoop.fs.Path, c: String, shape: StrShape)
-      : Boolean =
-    dirColumnRangeStr(f, d, c) match {
-      case Some((mn, mx)) => shape match {
+  private def strShapeMayHit(f: FileSystem, d: Path, c: String,
+      shape: StrShape): Boolean =
+    unitStats(f, d, c, str = true) match {
+      case Some((mn: String, mx: String)) => shape match {
         case StrPrefix(p) =>
           utf8Cmp(mx, p) >= 0 && utf8PrefixLeq(mn, p)
         case StrRange(lo, _, hi, _) =>
@@ -1879,8 +1865,9 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
           lo.forall(l => utf8Cmp(mx, l) >= 0) &&
             hi.forall(h => utf8Cmp(mn, h) <= 0)
       }
-      case None => true
+      case _ => true
     }
+
 
   /** What one [[replicate]] sync did, for operations logging and the
     * battery's premises. */
@@ -1907,14 +1894,12 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
   }
 
   private def isUnpromotedReplica(
-      f: org.apache.hadoop.fs.FileSystem,
-      markers: org.apache.hadoop.fs.Path): Boolean =
-    f.exists(new org.apache.hadoop.fs.Path(markers, ReplicaOfMarker)) &&
-      !f.exists(new org.apache.hadoop.fs.Path(markers, PromotedMarker))
+      f: FileSystem, markers: Path): Boolean =
+    f.exists(new Path(markers, ReplicaOfMarker)) &&
+      !f.exists(new Path(markers, PromotedMarker))
 
-  private def isPromoted(f: org.apache.hadoop.fs.FileSystem,
-      markers: org.apache.hadoop.fs.Path): Boolean =
-    f.exists(new org.apache.hadoop.fs.Path(markers, PromotedMarker))
+  private def isPromoted(f: FileSystem, markers: Path): Boolean =
+    f.exists(new Path(markers, PromotedMarker))
 
   /** Refuse a LOCAL write on an un-promoted replica, typed. Called by
     * every mutator entry ([[ingestBatch]], [[mergeRows]], the
@@ -1971,25 +1956,16 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     LedgerLock.withLockWait(spark, s"$dir/maint", 5000L) {
     LedgerLock.withLockWait(spark, dir, 5000L) {
       val (f, markers) = DedupIngest.fs(spark, s"$dir/markers")
-      require(f.exists(new org.apache.hadoop.fs.Path(markers,
-          ReplicaOfMarker)),
+      require(f.exists(new Path(markers, ReplicaOfMarker)),
         s"promoteReplica: $dir is not a replica (no markers/" +
           s"$ReplicaOfMarker) — only replicate() targets promote")
-      val p = new org.apache.hadoop.fs.Path(markers, PromotedMarker)
+      val p = new Path(markers, PromotedMarker)
       if (f.exists(p))
         readMarkerLines(f, p).headOption
           .flatMap(_.trim.toLongOption).getOrElse(-1L)
       else {
         val w = contiguousCommittedBatch(spark, dir)
-        val tmp = new org.apache.hadoop.fs.Path(markers,
-          s"$PromotedMarker.tmp")
-        if (f.exists(tmp)) f.delete(tmp, false)
-        val out = f.create(tmp, true)
-        try out.write(w.toString.getBytes("UTF-8"))
-        finally out.close()
-        if (!f.rename(tmp, p))
-          throw new IllegalStateException(
-            s"promoteReplica: fence publish failed for $dir")
+        publishWhole(f, markers, PromotedMarker, w.toString)
         w
       }
     }
@@ -2111,9 +2087,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
       dstDir: String, filesPerBatch: Int, lockWaitMs: Long)
       : ReplicateStats = {
     val (sf, smarkers) = DedupIngest.fs(spark, s"$srcDir/markers")
-    val srcNames =
-      if (!sf.exists(smarkers)) Seq.empty[String]
-      else sf.listStatus(smarkers).toSeq.map(_.getPath.getName)
+    val srcNames = MarkerLedger.names(spark, srcDir)
     val (df0, dgrid) = DedupIngest.fs(spark, s"$dstDir/grid")
     if (!df0.exists(dgrid))
       bootstrap(spark, dstDir, readGrid(spark, srcDir))
@@ -2121,13 +2095,8 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     // replicas on their next sync): from here on, LOCAL writes refuse
     // typed until promoteReplica — the read-only contract, enforced
     val (dmf, dmarkers0) = DedupIngest.fs(spark, s"$dstDir/markers")
-    val replicaOf = new org.apache.hadoop.fs.Path(dmarkers0,
-      ReplicaOfMarker)
-    if (!dmf.exists(replicaOf)) {
-      val out = dmf.create(replicaOf, true)
-      try out.write(srcDir.getBytes("UTF-8"))
-      finally out.close()
-    }
+    val replicaOf = new Path(dmarkers0, ReplicaOfMarker)
+    if (!dmf.exists(replicaOf)) writeFile(dmf, replicaOf, srcDir)
     // source statements recorded BEFORE the pull: their effects are in
     // every byte the pull serves
     val srcRecords = dmlRecords(spark, srcDir)
@@ -2143,8 +2112,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     // committed merges fold); a LIVE record without its marker is the
     // in-flight crash window — the stall case, never committed
     val srcNameSet = srcNames.toSet
-    val committedMerges = (srcNames.filter(_.matches("merge-\\d+"))
-      .map(_.stripPrefix("merge-").toLong) ++
+    val committedMerges = (idsOf(srcNames, "merge-") ++
       srcRecords.filter(r => r.kind == "mrg" &&
         !srcNameSet(s"mrg-${r.id}")).map(_.id)).toSet
     committedMerges.find(id => !mergeRec.contains(id) ||
@@ -2155,9 +2123,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
           "row replacement cannot be replayed; rebuild the replica " +
           "from a full read")
     }
-    val mergeIntents = srcNames
-      .filter(_.matches("merge-\\d+\\.intent"))
-      .map(_.stripPrefix("merge-").stripSuffix(".intent").toLong).toSet
+    val mergeIntents = idsOf(srcNames, "merge-", ".intent").toSet
     val srcOps = srcRecords.filterNot(_.kind == "mrg").sortBy(_.seq)
     val dstW = contiguousCommittedBatch(spark, dstDir)
     val dstFresh = dstW < 0
@@ -2200,8 +2166,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
             s"non-contiguous ledger (watermark was ${r.upto}) — its " +
             "removal pass cannot be aligned with a batch-prefix " +
             "replica; rebuild the replica from a full read")
-        val snapPath = new org.apache.hadoop.fs.Path(
-          s"$srcDir/markers/mrg-$b.updates")
+        val snapPath = new Path(s"$srcDir/markers/mrg-$b.updates")
         require(sf.exists(snapPath),
           s"replicate: merge-$b's updates snapshot was dropped by " +
             "retention (dropMergeSnapshots) — this replica's cursor " +
@@ -2355,13 +2320,9 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
       uptoBatch: Long): Int =
     withMaintLock(spark, dir) {
       val (f, markers) = DedupIngest.fs(spark, s"$dir/markers")
-      if (!f.exists(markers)) 0
-      else f.listStatus(markers).toSeq.map(_.getPath.getName)
-        .filter(_.matches("mrg-\\d+\\.updates"))
-        .filter(_.stripPrefix("mrg-").stripSuffix(".updates")
-          .toLong <= uptoBatch)
-        .count(n => f.delete(
-          new org.apache.hadoop.fs.Path(markers, n), true))
+      idsOf(MarkerLedger.names(spark, dir), "mrg-", ".updates")
+        .filter(_ <= uptoBatch)
+        .count(i => f.delete(new Path(markers, s"mrg-$i.updates"), true))
     }
 
   /** [[mergeRows]] under the NEXT UNUSED ledger id — the body behind
@@ -2374,26 +2335,12 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
       keyCol: String, updates: DataFrame,
       filesPerBatch: Int = 4,
       classifiedAt: Option[String] = None,
-      dropUnmatched: Option[UnmatchedDelete] = None): Long = {
-    var attempts = 0
-    while (true) {
-      val id = nextUnusedId(spark, dir)
-      try {
-        mergeRows(spark, dir, keyCol, updates, id, filesPerBatch,
-          classifiedAt = classifiedAt,
-          dropUnmatched = dropUnmatched): Unit
-        return id
-      } catch {
-        case e: StaleBatchIdException =>
-          attempts += 1
-          require(attempts < 16,
-            s"mergeRowsNext: lost the ledger-id race $attempts times " +
-              s"on $dir — a pathological storm of concurrent writers " +
-              s"(last: ${e.getMessage})")
-      }
+      dropUnmatched: Option[UnmatchedDelete] = None): Long =
+    withFreshId("mergeRowsNext", dir)(nextUnusedId(spark, dir)) { id =>
+      try mergeRows(spark, dir, keyCol, updates, id, filesPerBatch,
+        classifiedAt = classifiedAt, dropUnmatched = dropUnmatched)
+      catch { case _: StaleBatchIdException => false }
     }
-    -1L // unreachable
-  }
 
   /** [[mergeRows]] auto-split for CORPUS-SCALE backfills: a merge
     * whose distinct keys exceed `maxKeysPerMerge` lands as N
@@ -2465,34 +2412,49 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
         .agg(countDistinct(col(keyCol)).as("__n"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       if (counts.values.forall(_ <= maxKeysPerMerge)) {
-        val planned = (0 until buckets).map(_.toLong)
-          .filter(counts.contains)
         val (f, markers) = DedupIngest.fs(spark, s"$dir/markers")
         f.mkdirs(markers)
-        val nonce = java.util.UUID.randomUUID().toString.take(8)
+        val plan = ChunkPlan(java.util.UUID.randomUUID().toString.take(8),
+          keyCol, buckets, filesPerBatch,
+          (0 until buckets).map(_.toLong).filter(counts.contains), Nil)
         snap.write.mode("overwrite")
-          .parquet(s"$dir/markers/chunk-$nonce.updates")
-        var committed = Seq.empty[(Long, Long)]
-        var seq = 0
-        def writePlan(): Unit = {
-          writeChunkPlan(f, markers, nonce, seq, keyCol, buckets,
-            filesPerBatch, planned, committed)
-          seq += 1
-        }
-        writePlan()
-        val ids = planned.map { c =>
-          val id = mergeRowsNext(spark, dir, keyCol,
-            snap.filter(bucket === c), filesPerBatch)
-          committed :+= (c -> id)
-          writePlan()
-          id
-        }
-        dropChunkPlan(f, markers, nonce)
-        return ids
+          .parquet(s"$dir/markers/chunk-${plan.nonce}.updates")
+        writeChunkPlan(f, markers, plan, 0)
+        return runChunkPlan(spark, dir, plan, 1, snap)
       }
       buckets *= 2
     }
     Nil // unreachable
+  }
+
+  /** One [[mergeRowsChunkedNext]] plan (`markers/chunk-<nonce>.plan-<seq>`,
+    * line format `graft-chunk v1`): the bucket layout, the planned
+    * non-empty buckets, and each committed (bucket, ledgerId) pair. The
+    * owner (`O` line) is always the writing JVM. */
+  private final case class ChunkPlan(nonce: String, keyCol: String,
+      buckets: Int, filesPerBatch: Int, planned: Seq[Long],
+      committed: Seq[(Long, Long)]) {
+    def bucket: Column = pmod(xxhash64(col(keyCol)), lit(buckets.toLong))
+    def encode: String = (Seq(s"graft-chunk v1 $nonce",
+      "O\t" + java.lang.management.ManagementFactory.getRuntimeMXBean.getName,
+      s"K\t${urlEnc(keyCol)}", s"N\t$buckets", s"F\t$filesPerBatch") ++
+      planned.map(c => s"P\t$c") ++
+      committed.map { case (c, id) => s"B\t$c\t$id" }).mkString("\n")
+  }
+
+  private object ChunkPlan {
+    /** (owner, plan) from one plan version's lines. */
+    def decode(nonce: String, lines: Seq[String]): (String, ChunkPlan) = {
+      def field(tag: String) = lines.collect {
+        case l if l.startsWith(s"$tag\t") => l.drop(tag.length + 1) }
+      (field("O").headOption.getOrElse(""),
+        ChunkPlan(nonce, urlDec(field("K").head), field("N").head.toInt,
+          field("F").head.toInt, field("P").map(_.toLong),
+          field("B").map { b =>
+            val t = b.split("\t")
+            (t(0).toLong, t(1).toLong)
+          }))
+    }
   }
 
   /** Publish plan version `seq` (written whole + renamed to a NEW
@@ -2501,48 +2463,42 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     * versions. A torn superseded-delete leaves extra versions;
     * readers take the highest, and a missing B line only re-merges a
     * value-idempotent bucket. */
-  private def writeChunkPlan(f: org.apache.hadoop.fs.FileSystem,
-      markers: org.apache.hadoop.fs.Path, nonce: String, seq: Int,
-      keyCol: String, buckets: Int, filesPerBatch: Int,
-      planned: Seq[Long], committed: Seq[(Long, Long)]): Unit = {
-    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
-    val owner = java.lang.management.ManagementFactory
-      .getRuntimeMXBean.getName
-    val lines = Seq(s"graft-chunk v1 $nonce", s"O\t$owner",
-      s"K\t${enc(keyCol)}", s"N\t$buckets", s"F\t$filesPerBatch") ++
-      planned.map(c => s"P\t$c") ++
-      committed.map { case (c, id) => s"B\t$c\t$id" }
-    val tmp = new org.apache.hadoop.fs.Path(markers,
-      s"chunk-$nonce.plan-$seq.tmp")
-    if (f.exists(tmp)) f.delete(tmp, false)
-    val out = f.create(tmp, true)
-    try out.write(lines.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    val plan = new org.apache.hadoop.fs.Path(markers,
-      s"chunk-$nonce.plan-$seq")
-    if (f.exists(plan)) f.delete(plan, false)
-    if (!f.rename(tmp, plan))
-      throw new IllegalStateException(
-        s"mergeRowsChunkedNext: plan publish failed for chunk-$nonce")
-    chunkPlanVersions(f, markers, nonce).filter(_._1 < seq)
+  private def writeChunkPlan(f: FileSystem, markers: Path, plan: ChunkPlan,
+      seq: Int): Unit = {
+    publishWhole(f, markers, s"chunk-${plan.nonce}.plan-$seq", plan.encode)
+    chunkPlanVersions(f, markers, plan.nonce).filter(_._1 < seq)
       .foreach(v => f.delete(v._2, false): Unit)
   }
 
-  private def chunkPlanVersions(f: org.apache.hadoop.fs.FileSystem,
-      markers: org.apache.hadoop.fs.Path, nonce: String)
-      : Seq[(Int, org.apache.hadoop.fs.Path)] =
-    f.listStatus(markers).toSeq.map(_.getPath)
-      .filter(_.getName.matches(
-        s"chunk-$nonce\\.plan-\\d+"))
-      .map(p => (p.getName.split("-").last.toInt, p))
-
-  private def dropChunkPlan(f: org.apache.hadoop.fs.FileSystem,
-      markers: org.apache.hadoop.fs.Path, nonce: String): Unit = {
-    chunkPlanVersions(f, markers, nonce)
+  /** The ONE owed-bucket loop, shared by a fresh chunked merge and a
+    * resume: merge each planned-but-uncommitted bucket of `snap` under
+    * its own ledger id, publishing plan version `seq`, `seq+1`, ...
+    * after each commit, then retire the plan and its snapshot. Returns
+    * the ids committed here, in commit order. */
+  private def runChunkPlan(spark: SparkSession, dir: String,
+      plan: ChunkPlan, seq: Int, snap: => DataFrame): Seq[Long] = {
+    val (f, markers) = DedupIngest.fs(spark, s"$dir/markers")
+    val owed = plan.planned.filterNot(plan.committed.map(_._1).toSet)
+    lazy val rows = snap // read only when a bucket is owed
+    var done = plan
+    val ids = owed.zipWithIndex.map { case (c, i) =>
+      val id = mergeRowsNext(spark, dir, plan.keyCol,
+        rows.filter(plan.bucket === c), plan.filesPerBatch)
+      done = done.copy(committed = done.committed :+ (c -> id))
+      writeChunkPlan(f, markers, done, seq + i)
+      id
+    }
+    chunkPlanVersions(f, markers, plan.nonce)
       .foreach(v => f.delete(v._2, false): Unit)
-    f.delete(new org.apache.hadoop.fs.Path(markers,
-      s"chunk-$nonce.updates"), true): Unit
+    f.delete(new Path(markers, s"chunk-${plan.nonce}.updates"), true)
+    ids
   }
+
+  private def chunkPlanVersions(f: FileSystem, markers: Path,
+      nonce: String): Seq[(Int, Path)] =
+    idsOf(f.listStatus(markers).toSeq.map(_.getPath.getName),
+      s"chunk-$nonce.plan-")
+      .map(v => (v.toInt, new Path(markers, s"chunk-$nonce.plan-$v")))
 
   /** Finish the owed buckets of CRASHED chunked merges (the
     * [[mergeRowsChunkedNext]] plan files): for each plan whose owner
@@ -2556,60 +2512,18 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
   def resumeChunkedMerges(spark: SparkSession, dir: String,
       force: Boolean = false): Int = {
     val (f, markers) = DedupIngest.fs(spark, s"$dir/markers")
-    if (!f.exists(markers)) return 0
-    def dec(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
-    var done = 0
-    val nonces = f.listStatus(markers).toSeq.map(_.getPath.getName)
-      .flatMap {
-        case n if n.matches("chunk-[0-9a-f]{8}\\.plan-\\d+") =>
-          Some(n.stripPrefix("chunk-").takeWhile(_ != '.'))
-        case _ => None
-      }.distinct
-    nonces.foreach { nonce =>
-      val versions = chunkPlanVersions(f, markers, nonce)
-      if (versions.nonEmpty) {
-        val (topSeq, p) = versions.maxBy(_._1)
-        val lines = readMarkerLines(f, p)
-        val owner = lines.collectFirst {
-          case l if l.startsWith("O\t") => l.drop(2) }.getOrElse("")
-        val ownerDead =
-          LedgerLock.holderProvablyDead(s"$owner:plan")
-        if (ownerDead || force) {
-          val keyCol = lines.collectFirst {
-            case l if l.startsWith("K\t") => dec(l.drop(2)) }.get
-          val buckets = lines.collectFirst {
-            case l if l.startsWith("N\t") => l.drop(2).toInt }.get
-          val filesPerBatch = lines.collectFirst {
-            case l if l.startsWith("F\t") => l.drop(2).toInt }.get
-          val planned = lines.filter(_.startsWith("P\t"))
-            .map(_.drop(2).toLong)
-          var committedPairs = lines.filter(_.startsWith("B\t"))
-            .map { l =>
-              val t = l.drop(2).split("\t")
-              (t(0).toLong, t(1).toLong)
-            }
-          val owed = planned.filterNot(committedPairs.map(_._1).toSet)
-          if (owed.nonEmpty) {
-            val snap = spark.read
-              .parquet(s"$dir/markers/chunk-$nonce.updates")
-            val bucket = pmod(xxhash64(col(keyCol)),
-              lit(buckets.toLong))
-            var seq = topSeq + 1
-            owed.foreach { c =>
-              val id = mergeRowsNext(spark, dir, keyCol,
-                snap.filter(bucket === c), filesPerBatch)
-              committedPairs :+= (c -> id)
-              writeChunkPlan(f, markers, nonce, seq, keyCol, buckets,
-                filesPerBatch, planned, committedPairs)
-              seq += 1
-              done += 1
-            }
-          }
-          dropChunkPlan(f, markers, nonce)
-        }
-      }
-    }
-    done
+    val plan = "chunk-([0-9a-f]{8})\\.plan-\\d+".r
+    MarkerLedger.names(spark, dir).collect { case plan(n) => n }.distinct
+      .map { nonce =>
+        chunkPlanVersions(f, markers, nonce).maxByOption(_._1).map {
+          case (top, p) =>
+            val (owner, owed) =
+              ChunkPlan.decode(nonce, readMarkerLines(f, p))
+            if (!force && !LedgerLock.holderProvablyDead(s"$owner:plan")) 0
+            else runChunkPlan(spark, dir, owed, top + 1, spark.read
+              .parquet(s"$dir/markers/chunk-$nonce.updates")).size
+        }.getOrElse(0)
+      }.sum
   }
 
   /** Probing every merge key against every unit bloom is driver work
@@ -2780,16 +2694,14 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
       }.getOrElse("")
     }
     val (f, markers) = DedupIngest.fs(spark, s"$dir/markers")
-    val marker = new org.apache.hadoop.fs.Path(markers, s"merge-$batchId")
-    if (f.exists(marker) || dmlLogEntries(spark, dir)
-        .exists(r => r.kind == "mrg" && r.id == batchId)) {
+    val intent = new Path(markers, s"merge-$batchId.intent")
+    if (committedStatement(spark, dir, s"merge-$batchId", "mrg", batchId)) {
       // lock-free early exit (markers are create-only, and a FOLDED
       // mrg record in the dml-log is the same committed-proof — only
       // committed merges fold): retire a stale
       // intent (a crash between the commit marker and the intent
       // delete) so history() and the ledger stay clean
-      f.delete(new org.apache.hadoop.fs.Path(markers,
-        s"merge-$batchId.intent"), false): Unit
+      f.delete(intent, false)
       return false
     }
     require(updates.schema.fieldNames.contains(keyCol),
@@ -2824,32 +2736,24 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     // mutation — rewriter exclusion), with a SHORT tail section nested
     // inside for the freshness guard + append (the only maint→tail
     // nesting; see the object doc's lock-split section)
-    withMaintLock(spark, dir) {
-      fencePromotedMidSync(spark, dir, s"merge-$batchId")
-      recoverCompact(spark, dir)
-      adoptOrphanBatches(spark, dir)
-      val intent = new org.apache.hadoop.fs.Path(markers,
-        s"merge-$batchId.intent")
+    maintSection(spark, dir, s"merge-$batchId") {
       LedgerLock.withLockWait(spark, dir, tailWaitMs) {
         if (!f.exists(intent)) {
           // freshness guard — only on the FIRST attempt (a replay
           // finds the intent; by then the id is legitimately ours);
           // atomic with the append: the tail lock freezes the id
           if (batchId <= batchWatermark(f, markers) ||
-              f.exists(new org.apache.hadoop.fs.Path(markers,
-                s"batch-$batchId")))
+              f.exists(new Path(markers, s"batch-$batchId")))
             throw new StaleBatchIdException(
               s"mergeRows: batch id $batchId is already committed in " +
                 "this table's ledger — merging under it would delete " +
                 "without appending; use the next unused ingest id")
           // a txn-stream's reservation owns its id even before the
           // batch marker lands (the stream's owed in-flight replay)
-          val reserved = f.listStatus(markers).toSeq
-            .map(_.getPath.getName).exists {
+          if (MarkerLedger.names(spark, dir).exists {
               case TxnMarker(_, i, _) => i == batchId
               case _ => false
-            }
-          if (reserved)
+            })
             throw new StaleBatchIdException(
               s"mergeRows: batch id $batchId is reserved by a live " +
                 "stream transaction — its owed replay would collide; " +
@@ -2882,24 +2786,15 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
           // so an existing intent always parses; a crashed attempt's
           // replay must not recompute it (its own appended batch
           // marker would fake a tighter prefix than the merge saw).
-          val itmp = new org.apache.hadoop.fs.Path(markers,
-            s"merge-$batchId.intent.tmp")
-          if (f.exists(itmp)) f.delete(itmp, false)
-          val iout = f.create(itmp, true)
-          try iout.write(contiguousCommittedBatch(spark, dir)
-            .toString.getBytes("UTF-8"))
-          finally iout.close()
-          if (!f.rename(itmp, intent))
-            throw new IllegalStateException(
-              s"mergeRows: intent publish failed for merge-$batchId")
+          publishWhole(f, markers, intent.getName,
+            contiguousCommittedBatch(spark, dir).toString)
         }
         if (nKeys > 0)
           ingestBatch(snap, batchId, dir, filesPerBatch): Unit
         else
           // burn the id even with nothing to append (doc): a later
           // stream batch must never reuse a merged id
-          f.create(new org.apache.hadoop.fs.Path(markers,
-            s"batch-$batchId"), true).close()
+          f.create(new Path(markers, s"batch-$batchId"), true).close()
       }
       // durable REPLAY INPUT for replicas ([[replicate]]): the exact
       // updates snapshot, written before any removal rewrite — the
@@ -2909,93 +2804,40 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
       snap.write.mode("overwrite").parquet(
         s"$dir/markers/mrg-$batchId.updates")
       if (nKeys > 0 || dropUnmatched.nonEmpty) {
-        val (_, data) = DedupIngest.fs(spark, s"$dir/data")
-        val units = if (!f.exists(data)) Nil else leafUnits(f, data)
-        val keysForBloom: Seq[Any] =
-          if (nKeys > 0 && nKeys <= BloomProbeMaxKeys)
-            snap.select(col(keyCol)).distinct()
-              .collect().toSeq.map(_.get(0))
-          else Nil
+        val units = listUnits(spark, dir)
         // a unit entirely at __batch >= batchId holds no pre-merge
-        // rows (the appended batch first among them) — exempt wholesale
-        val preMerge: org.apache.hadoop.fs.Path => Boolean = d =>
-          dirColumnRange(f, d, BatchCol) match {
-            case Some((mn, _)) => mn < batchId
-            case None => true
-          }
-        // stats-range pruning is long-only (the sidecar contract);
-        // string keys prune by bloom alone
-        val statsHit: org.apache.hadoop.fs.Path => Boolean =
-          if (keyIsLong && nKeys > 0) {
-            val (kmn, kmx) = (a.getLong(3), a.getLong(4))
-            d => dirColumnRange(f, d, keyCol) match {
-              case Some((mn, mx)) => mx >= kmn && mn <= kmx
-              case None => unitRows(f, d) > 0 // no stats → conservative
-            }
-          } else d => unitRows(f, d) > 0
-        // a NOT-MATCHED-BY-SOURCE delete can hit ANY pre-merge unit
-        // (every unit may hold an unmatched key — the complement is
-        // un-prunable by construction): key pruning is off, only the
-        // batch-span exemption stands
-        val affectedPaths = parFilter(units.map(_._2)) { d =>
-          preMerge(d) && (
-            if (dropUnmatched.nonEmpty) unitRows(f, d) > 0
-            else statsHit(d) && (keysForBloom.isEmpty ||
-              (unitBloom(f, d, keyCol) match {
-                case Some(b) => keysForBloom.exists {
-                  case s: String => b.mightContainString(s)
-                  case l: Long => b.mightContainLong(l)
-                  case other => throw new IllegalStateException(
-                    s"unreachable key type: ${other.getClass.getName}")
-                }
-                case None => true
-              })))
-        }.toSet
-        val affected = units.filter(u => affectedPaths(u._2))
+        // rows (the appended batch first among them) — exempt
+        // wholesale: the key pruner's scope is batchId - 1. Stats
+        // ranges are long-only (the sidecar contract); string keys
+        // prune by bloom alone. A NOT-MATCHED-BY-SOURCE delete can hit
+        // ANY pre-merge unit (every unit may hold an unmatched key —
+        // the complement is un-prunable by construction): key pruning
+        // is off, only the batch-span exemption stands
+        val bloomKeys =
+          if (nKeys > 0 && nKeys <= BloomProbeMaxKeys)
+            snap.select(col(keyCol)).distinct().collect().toSeq.map(_.get(0))
+          else Nil
+        val affects =
+          if (dropUnmatched.nonEmpty) keyPruner(keyCol, None, Nil, batchId - 1)
+          else keyPruner(keyCol, if (keyIsLong && nKeys > 0)
+            Some((a.getLong(3), a.getLong(4))) else None, bloomKeys, batchId - 1)
         val keysDf = broadcast(snap.select(col(keyCol)).distinct()
           .withColumn("__graft_merge_hit", lit(true)))
-        val gridNow = readGrid(spark, dir)
-        affected.zipWithIndex.foreach { case ((name, d), i) =>
-          // same attempt-nonce discipline as delete: a replay's
-          // target names must not collide with a published one
-          val stamp = s"merge$batchId-$i-" +
-            java.util.UUID.randomUUID().toString.take(6)
-          val stage = new org.apache.hadoop.fs.Path(
-            s"$dir/gen-$stamp.stage")
-          if (f.exists(stage)) f.delete(stage, true)
-          val unitDf = readUnits(spark, dir, Seq(d))
-          val cols = unitDf.columns
-          // keep: key not merged, OR the row is AT/ABOVE the merge
-          // point (its own append wherever a fold carried it, and any
-          // batch a live stream published meanwhile); null keys never
-          // join → kept, the delete null-safety rule. With
-          // dropUnmatched, an UNMATCHED pre-merge row (null-keyed
-          // included — SQL MERGE semantics, the doc) survives only if
-          // the gate spares it.
-          val keepRow = dropUnmatched match {
-            case None =>
-              col("__graft_merge_hit").isNull ||
-                col(BatchCol) >= lit(batchId)
-            case Some(ud) =>
-              val kill = ud.gate
-                .map(g => coalesce(g, lit(false)))
-                .getOrElse(lit(true))
-              col(BatchCol) >= lit(batchId) ||
-                (col("__graft_merge_hit").isNull && !kill)
-          }
-          unitDf.join(keysDf, Seq(keyCol), "left")
-            .filter(keepRow)
-            .select(cols.map(col).toIndexedSeq: _*)
-            .write.mode("overwrite").parquet(stage.toString)
-          writeUnitStats(f, stage, gridNow.cols :+ KeyCol :+ BatchCol,
-            gridNow.bloomCols)
-          writeUnitBlooms(spark, f, stage, gridNow.bloomCols)
-          val man = manifestPath(spark, dir, stamp)
-          val out = f.create(man, true)
-          try out.write(Seq(s"S\t$name", s"T\tgen-$stamp", "COMMIT")
-            .mkString("\n").getBytes("UTF-8"))
-          finally out.close()
-          recoverCompact(spark, dir)
+        // keep: key not merged, OR the row is AT/ABOVE the merge point
+        // (its own append wherever a fold carried it, and any batch a
+        // live stream published meanwhile); null keys never join →
+        // kept, the delete null-safety rule. With dropUnmatched, an
+        // UNMATCHED pre-merge row (null-keyed included — SQL MERGE
+        // semantics, the doc) survives only if the gate spares it.
+        val keepRow = col(BatchCol) >= lit(batchId) || (dropUnmatched match {
+          case None => col("__graft_merge_hit").isNull
+          case Some(ud) => col("__graft_merge_hit").isNull &&
+            !ud.gate.map(g => coalesce(g, lit(false))).getOrElse(lit(true))
+        })
+        rewriteUnits(spark, dir, f, s"merge$batchId",
+          admitted(f, units)(affects)) { unitDf =>
+          unitDf.join(keysDf, Seq(keyCol), "left").filter(keepRow)
+            .select(unitDf.columns.map(col).toIndexedSeq: _*)
         }
       }
       // the merge's statement RECORD (kind `mrg`), minted in COMMIT
@@ -3005,35 +2847,22 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
       // from the intent (the claim-instant watermark), `sets` carries
       // the merge key by convention. upto = -2 marks a pre-format
       // (empty) intent — recorded but refused at replay.
-      val recordPath = new org.apache.hadoop.fs.Path(markers,
-        s"mrg-$batchId")
-      // a crash between the record rename and the marker create leaves
+      // A crash between the record rename and the marker create leaves
       // the record standing — the REPLAY must keep it: its seq is the
       // position the merge's effects actually committed at (statements
       // landing between the crash and the replay minted later seqs,
       // and a re-mint here would tell replicas the wrong order)
-      if (!f.exists(recordPath)) {
+      if (!f.exists(new Path(markers, s"mrg-$batchId"))) {
         val uptoRec = readMarkerLines(f, intent).headOption
           .flatMap(l => scala.util.Try(l.trim.toLong).toOption)
           .getOrElse(-2L)
-        val seqRec = dmlRecords(spark, dir).map(_.seq)
-          .foldLeft(-1L)(math.max) + 1L
-        val rtmp = new org.apache.hadoop.fs.Path(markers,
-          s"mrg-$batchId.tmp")
-        if (f.exists(rtmp)) f.delete(rtmp, false)
-        val rout = f.create(rtmp, true)
         val recSets = Seq((keyCol, "merge-key")) ++
-          unmatchedRec.map(g => (UnmatchedDelTag,
-            java.net.URLEncoder.encode(g, "UTF-8")))
-        try rout.write(DmlRecord.serialize(DmlRecord("mrg", batchId,
-          seqRec, uptoRec, Nil, recSets, None))
-          .getBytes("UTF-8"))
-        finally rout.close()
-        if (!f.rename(rtmp, recordPath))
-          throw new IllegalStateException(
-            s"mergeRows: record publish failed for mrg-$batchId")
+          unmatchedRec.map(g => (UnmatchedDelTag, urlEnc(g)))
+        publishWhole(f, markers, s"mrg-$batchId", DmlRecord.serialize(
+          DmlRecord("mrg", batchId, nextDmlSeq(spark, dir), uptoRec, Nil,
+            recSets, None)))
       }
-      f.create(marker, true).close()
+      f.create(new Path(markers, s"merge-$batchId"), true).close()
       f.delete(intent, false): Unit
       true
     }
@@ -3055,6 +2884,16 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     * provenance soundness check answer without a footer walk. */
   private val RowsStat = "__rows"
 
+  /** Seal a freshly-staged unit: the stats sidecar over the grid
+    * columns, the key and the provenance (string stats for the bloom
+    * columns), and the bloom sidecars — written into the stage, so
+    * atomic with the unit's publish. */
+  private def sealUnit(spark: SparkSession, f: FileSystem, unit: Path,
+      grid: Grid): Unit = {
+    writeUnitStats(f, unit, grid.cols :+ KeyCol :+ BatchCol, grid.bloomCols)
+    writeUnitBlooms(spark, f, unit, grid.bloomCols)
+  }
+
   /** Write the sidecar for the columns pruning will ask about, from
     * the freshly-written (still hot) footers of `unit`. `strCols` get
     * STRING min/max lines (`c str encMin encMax`, URL-encoded — the
@@ -3062,47 +2901,74 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     * of the long format never mis-parse them); a strCol whose footer
     * stats are not binary (a long bloom column) or are absent writes
     * `c str-none` — read conservatively. */
-  private def writeUnitStats(f: org.apache.hadoop.fs.FileSystem,
-      unit: org.apache.hadoop.fs.Path, cols: Seq[String],
-      strCols: Seq[String] = Nil): Unit = {
+  private def writeUnitStats(f: FileSystem, unit: Path, cols: Seq[String],
+      strCols: Seq[String]): Unit = {
     val n = footerRowCount(f, unit)
-    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
-    val lines = s"$RowsStat\t$n\t$n" +: (cols.map { c =>
-      footerColumnRange(f, unit, c) match {
-        case Some((mn, mx)) => s"$c\t$mn\t$mx"
-        case None => s"$c\tnone"
-      }
-    } ++ strCols.filterNot(cols.contains).map { c =>
-      footerColumnRangeStr(f, unit, c) match {
-        case Some((mn, mx)) => s"$c\tstr\t${enc(mn)}\t${enc(mx)}"
-        case None => s"$c\tstr-none"
-      }
-    })
-    val out = f.create(new org.apache.hadoop.fs.Path(unit, StatsFile), true)
-    try out.write(lines.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
+    def line(c: String, str: Boolean) = footerRange(f, unit, c, str) match {
+      case Some((mn, mx)) =>
+        if (str) s"$c\tstr\t${urlEnc(mn.toString)}\t${urlEnc(mx.toString)}"
+        else s"$c\t$mn\t$mx"
+      case None => if (str) s"$c\tstr-none" else s"$c\tnone"
+    }
+    writeFile(f, new Path(unit, StatsFile), (s"$RowsStat\t$n\t$n" +:
+      (cols.map(line(_, false)) ++
+        strCols.filterNot(cols.contains).map(line(_, true)))).mkString("\n"))
+  }
+
+  /** A unit's parquet data files (not `_SUCCESS`, sidecars or hidden). */
+  private def dataFiles(f: FileSystem, d: Path): Seq[FileStatus] =
+    f.listStatus(d).toSeq.filter(s => s.isFile && isDataFile(s.getPath.getName))
+
+  /** `g` over every row group of the unit's parquet footers — metadata
+    * only, no data read. */
+  private def footerBlocks[T](f: FileSystem, d: Path)(
+      g: org.apache.parquet.hadoop.metadata.BlockMetaData => T): Seq[T] = {
+    import scala.jdk.CollectionConverters._
+    dataFiles(f, d).flatMap { st =>
+      val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          st.getPath, f.getConf))
+      try rdr.getFooter.getBlocks.asScala.toSeq.map(g) finally rdr.close()
+    }
   }
 
   /** Exact row count from the parquet footers (no data read). */
-  private def footerRowCount(f: org.apache.hadoop.fs.FileSystem,
-      d: org.apache.hadoop.fs.Path): Long = {
+  private def footerRowCount(f: FileSystem, d: Path): Long =
+    footerBlocks(f, d)(_.getRowCount).sum
+
+  /** The footer walk behind every stats read: [min, max] of column `c`
+    * over the unit's row groups — LONG statistics, or (`str`) binary
+    * statistics decoded as UTF-8 and ordered by [[utf8Cmp]] (parquet
+    * orders binary stats by unsigned bytes — exactly that order). None
+    * when the unit has no data files or a row group lacks stats; a
+    * string walk over a non-binary column, or any footer oddity, also
+    * yields None — never a wrong bound. */
+  private def footerRange(f: FileSystem, d: Path, c: String,
+      str: Boolean): Option[(Any, Any)] = {
     import scala.jdk.CollectionConverters._
-    f.listStatus(d).toSeq
-      .filter(s => s.isFile && isDataFile(s.getPath.getName))
-      .map { st =>
-        val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            st.getPath, f.getConf))
-        try rdr.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-        finally rdr.close()
-      }.sum
+    def decode(v: Any): Any =
+      if (str) new String(v.asInstanceOf[org.apache.parquet.io.api.Binary]
+        .getBytes, java.nio.charset.StandardCharsets.UTF_8)
+      else v.asInstanceOf[java.lang.Long].longValue()
+    val ord = Ordering.fromLessThan[Any]((x, y) =>
+      if (str) utf8Cmp(x.toString, y.toString) < 0
+      else x.asInstanceOf[Long] < y.asInstanceOf[Long])
+    def walk: Option[(Any, Any)] = {
+      val ranges = footerBlocks(f, d)(_.getColumns.asScala
+        .find(_.getPath.toDotString == c).map(_.getStatistics)
+        .filter(s => s != null && s.hasNonNullValue)
+        .map(s => (decode(s.genericGetMin), decode(s.genericGetMax))))
+      if (ranges.isEmpty || ranges.exists(_.isEmpty)) None
+      else Some((ranges.flatten.map(_._1).min(ord),
+        ranges.flatten.map(_._2).max(ord)))
+    }
+    if (str) scala.util.Try(walk).toOption.flatten else walk
   }
 
   /** The unit's row count: sidecar-first (the [[RowsStat]] line, via
     * the same LRU the pruner uses), footer walk for units written
     * before the line existed. */
-  private def unitRows(f: org.apache.hadoop.fs.FileSystem,
-      d: org.apache.hadoop.fs.Path): Long =
+  private def unitRows(f: FileSystem, d: Path): Long =
     dirColumnRange(f, d, RowsStat) match {
       case Some((n, _)) => n
       case None => footerRowCount(f, d)
@@ -3115,11 +2981,9 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     * pass per column, filter sized to the unit's actual row count
     * (a footer-metadata count, no data read), fpp 1%. Written into
     * the STAGE like [[writeUnitStats]], so atomic with the unit. */
-  private def writeUnitBlooms(spark: SparkSession,
-      f: org.apache.hadoop.fs.FileSystem,
-      unit: org.apache.hadoop.fs.Path, bloomCols: Seq[String]): Unit =
-    if (bloomCols.nonEmpty && f.listStatus(unit).exists(s =>
-        s.isFile && isDataFile(s.getPath.getName))) {
+  private def writeUnitBlooms(spark: SparkSession, f: FileSystem,
+      unit: Path, bloomCols: Seq[String]): Unit =
+    if (bloomCols.nonEmpty && dataFiles(f, unit).nonEmpty) {
       // (fileless units — a rewrite that emptied everything — carry no
       // blooms; scanPoints reads bloom-less units conservatively)
       val df = spark.read.parquet(unit.toString)
@@ -3139,8 +3003,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
         val n = math.max(64L, rows)
         bloomCols.foreach { c =>
           val bloom = df.stat.bloomFilter(c, n, 0.01)
-          val out = f.create(
-            new org.apache.hadoop.fs.Path(unit, bloomFile(c)), true)
+          val out = f.create(new Path(unit, bloomFile(c)), true)
           try bloom.writeTo(out) finally out.close()
         }
       }
@@ -3157,24 +3020,17 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
       size() > MaxBloomCache
   }
 
-  private def unitBloom(f: org.apache.hadoop.fs.FileSystem,
-      d: org.apache.hadoop.fs.Path, c: String)
+  private def unitBloom(f: FileSystem, d: Path, c: String)
       : Option[org.apache.spark.util.sketch.BloomFilter] = {
     val key = (d.toString, c)
     val bytes = bloomCache.synchronized(Option(bloomCache.get(key)))
       .getOrElse {
         val r = scala.util.Try {
-          val p = new org.apache.hadoop.fs.Path(d, bloomFile(c))
+          val p = new Path(d, bloomFile(c))
           if (!f.exists(p)) None
           else {
             val in = f.open(p)
-            try {
-              val buf = new java.io.ByteArrayOutputStream()
-              val chunk = new Array[Byte](64 << 10)
-              var k = in.read(chunk)
-              while (k >= 0) { buf.write(chunk, 0, k); k = in.read(chunk) }
-              Some(buf.toByteArray)
-            } finally in.close()
+            try Some(in.readAllBytes()) finally in.close()
           }
         }.toOption.flatten
         bloomCache.synchronized(bloomCache.put(key, r)): Unit
@@ -3184,6 +3040,45 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
       org.apache.spark.util.sketch.BloomFilter.readFrom(
         new java.io.ByteArrayInputStream(b))).toOption)
   }
+
+  /** The unit's bloom for `c` may hold one of `values` (Long or String —
+    * callers validate); no bloom sidecar → conservatively true. */
+  private def bloomMayHold(f: FileSystem, d: Path, c: String,
+      values: Seq[Any]): Boolean = unitBloom(f, d, c) match {
+    case Some(b) => values.exists {
+      case s: String => b.mightContainString(s)
+      case l: Long => b.mightContainLong(l)
+      case _ => true
+    }
+    case None => true
+  }
+
+  /** The unit's long stats for `c` meet [lo, hi]; no stats →
+    * conservatively true. */
+  private def rangeHits(f: FileSystem, d: Path, c: String, lo: Long,
+      hi: Long): Boolean = dirColumnRange(f, d, c) match {
+    case Some((mn, mx)) => mx >= lo && mn <= hi
+    case None => true
+  }
+
+  /** The unit holds rows of batches <= `scope` (`Long.MaxValue` =
+    * unscoped); no stats → conservatively true. */
+  private def inScope(f: FileSystem, d: Path, scope: Long): Boolean =
+    scope == Long.MaxValue || (dirColumnRange(f, d, BatchCol) match {
+      case Some((mn, _)) => mn <= scope
+      case None => true
+    })
+
+  /** The ONE key pruner, under keyed DELETE/UPDATE ([[DmlTarget.Keys]])
+    * and [[mergeRows]]: a non-empty unit holding rows of batches <=
+    * `scope`, whose `c` stats meet `range` (long keys; None = no range
+    * test) and whose bloom may hold one of `bloomKeys` (empty = no
+    * probe — the callers' probe budgets decide). */
+  private def keyPruner(c: String, range: Option[(Long, Long)],
+      bloomKeys: Seq[Any], scope: Long): (FileSystem, Path) => Boolean =
+    (f, d) => unitRows(f, d) > 0 && inScope(f, d, scope) &&
+      range.forall { case (lo, hi) => rangeHits(f, d, c, lo, hi) } &&
+      (bloomKeys.isEmpty || bloomMayHold(f, d, c, bloomKeys))
 
   /** Bounded pool for per-unit METADATA probes (bloom/stats sidecar
     * reads) during planning: the decisions are per-unit independent
@@ -3208,9 +3103,8 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     * raw IOException from the serial walk keep working), and the
     * predicates themselves already degrade conservatively on
     * missing/corrupt metadata. */
-  private def parFilter(dirs: Seq[org.apache.hadoop.fs.Path])(
-      pred: org.apache.hadoop.fs.Path => Boolean)
-      : Seq[org.apache.hadoop.fs.Path] = {
+  private def parFilter(dirs: Seq[Path])(pred: Path => Boolean)
+      : Seq[Path] = {
     import scala.jdk.CollectionConverters._
     if (dirs.size <= 2) dirs.filter(pred)
     else {
@@ -3234,8 +3128,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     * [[probePool]] — per-unit bloom reads in parallel, not a serial
     * driver walk. */
   private[graft] def pointProbeDirs(spark: SparkSession, dir: String,
-      column: String, values: Seq[Any])
-      : (Seq[org.apache.hadoop.fs.Path], Seq[org.apache.hadoop.fs.Path]) = {
+      column: String, values: Seq[Any]): (Seq[Path], Seq[Path]) = {
     values.foreach {
       case _: String | _: Long => ()
       case v => throw new IllegalArgumentException(
@@ -3244,16 +3137,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     }
     val (f, _) = DedupIngest.fs(spark, s"$dir/data")
     val dirs = liveDirs(spark, dir)
-    (parFilter(dirs) { d =>
-      unitBloom(f, d, column) match {
-        case Some(b) => values.exists {
-          case s: String => b.mightContainString(s)
-          case l: Long => b.mightContainLong(l)
-          case _ => true // unreachable — validated above
-        }
-        case None => true
-      }
-    }, dirs)
+    (parFilter(dirs)(d => bloomMayHold(f, d, column, values)), dirs)
   }
 
   /** Point lookup through the Bloom sidecars — the equality twin of
@@ -3296,13 +3180,13 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
 
   /** Published units are WRITE-ONCE (atomic-rename publish, never
     * mutated — deletes and folds mint NEW gen names), so their stats
-    * are immutable and cacheable by path. LRU-bounded; long sessions
-    * over many tables stay flat. */
+    * are immutable and cacheable by (unit path, column, string-ness).
+    * LRU-bounded; long sessions over many tables stay flat. */
   private val MaxStatsCache = 8192
   private val statsCache = new java.util.LinkedHashMap[
-      (String, String), Option[(Long, Long)]](64, 0.75f, true) {
+      (String, String, Boolean), Option[(Any, Any)]](64, 0.75f, true) {
     override def removeEldestEntry(e: java.util.Map.Entry[
-        (String, String), Option[(Long, Long)]]): Boolean =
+        (String, String, Boolean), Option[(Any, Any)]]): Boolean =
       size() > MaxStatsCache
   }
 
@@ -3314,75 +3198,48 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     * fresh paths never need it. */
   def clearStatsCache(): Unit = {
     statsCache.synchronized(statsCache.clear())
-    statsStrCache.synchronized(statsStrCache.clear())
     bloomCache.synchronized(bloomCache.clear())
     gridCache.synchronized(gridCache.clear())
   }
 
-  /** Per-dir [min, max] of a long column — the statistics a pruning
-    * reader consumes, reused here to decide which dirs a delete must
-    * touch. Source order: in-memory cache (units are write-once),
-    * sidecar, parquet footers. None when the dir holds no data files
-    * or a file lacks stats for the column. */
-  private def dirColumnRange(f: org.apache.hadoop.fs.FileSystem,
-      d: org.apache.hadoop.fs.Path, colName: String)
-      : Option[(Long, Long)] = {
-    val key = (d.toString, colName)
+  /** The ONE stats reader: per-unit [min, max] of a LONG column, or
+    * (`str`) of a STRING column in UTF-8 byte order — the statistics a
+    * pruning reader consumes, reused to decide which units a statement
+    * must touch. Source order: in-memory cache (units are write-once),
+    * the sidecar (`c mn mx` / `c none` lines; `c str encMn encMx` /
+    * `c str-none` for strings), the parquet footers ([[footerRange]]).
+    * None — read conservatively — when the unit holds no data, a
+    * footer lacks stats for the column, or the unit predates the
+    * string-stats sidecar and its footers carry none. */
+  private def unitStats(f: FileSystem, d: Path, c: String,
+      str: Boolean): Option[(Any, Any)] = {
+    val key = (d.toString, c, str)
     statsCache.synchronized {
       val hit = statsCache.get(key)
       if (hit != null) return hit
     }
     // an unreadable/corrupt sidecar (torn disk, checksum mismatch)
     // degrades to the footer walk — pruning never fails on metadata
-    val fromSidecar: Option[Option[(Long, Long)]] =
-      scala.util.Try {
-        val sp = new org.apache.hadoop.fs.Path(d, StatsFile)
-        if (!f.exists(sp)) None
-        else {
-          val in = f.open(sp)
-          val lines =
-            try scala.io.Source.fromInputStream(in, "UTF-8")
-              .getLines().toList
-            finally in.close()
-          lines.map(_.split("\t")).collectFirst {
-            case Array(c, "none") if c == colName => None
-            case Array(c, mn, mx) if c == colName =>
-              Some((mn.toLong, mx.toLong))
-          }
-        }
-      }.toOption.flatten
-    val r = fromSidecar.getOrElse(footerColumnRange(f, d, colName))
+    val fromSidecar: Option[Option[(Any, Any)]] = scala.util.Try {
+      val sp = new Path(d, StatsFile)
+      if (!f.exists(sp)) None
+      else readMarkerLines(f, sp).map(_.split("\t")).collectFirst {
+        case Array(`c`, "none") if !str => None
+        case Array(`c`, mn, mx) if !str => Some((mn.toLong, mx.toLong))
+        case Array(`c`, "str-none") if str => None
+        case Array(`c`, "str", mn, mx) if str => Some((urlDec(mn), urlDec(mx)))
+      }
+    }.toOption.flatten
+    val r = fromSidecar.getOrElse(footerRange(f, d, c, str))
     statsCache.synchronized(statsCache.put(key, r)): Unit
     r
   }
 
-  /** The footer-walk source of truth behind [[dirColumnRange]]. */
-  private def footerColumnRange(f: org.apache.hadoop.fs.FileSystem,
-      d: org.apache.hadoop.fs.Path, colName: String)
-      : Option[(Long, Long)] = {
-    import scala.jdk.CollectionConverters._
-    val files = f.listStatus(d).toSeq.filter(s => s.isFile &&
-      !s.getPath.getName.startsWith("_") &&
-      !s.getPath.getName.startsWith(".") &&
-      s.getPath.getName.endsWith(".parquet"))
-    if (files.isEmpty) return None
-    val ranges = files.flatMap { st =>
-      val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          st.getPath, f.getConf))
-      try rdr.getFooter.getBlocks.asScala.toSeq.map { blk =>
-        blk.getColumns.asScala
-          .find(_.getPath.toDotString == colName)
-          .map(_.getStatistics)
-          .filter(s => s != null && s.hasNonNullValue)
-          .map(s => (
-            s.genericGetMin.asInstanceOf[java.lang.Long].longValue(),
-            s.genericGetMax.asInstanceOf[java.lang.Long].longValue()))
-      } finally rdr.close()
-    }
-    if (ranges.isEmpty || ranges.exists(_.isEmpty)) None
-    else Some((ranges.flatten.map(_._1).min, ranges.flatten.map(_._2).max))
-  }
+  /** [[unitStats]] of a LONG column. */
+  private def dirColumnRange(f: FileSystem, d: Path,
+      c: String): Option[(Long, Long)] =
+    unitStats(f, d, c, str = false).map { case (mn, mx) =>
+      (mn.asInstanceOf[Long], mx.asInstanceOf[Long]) }
 
   /** UTF-8 BYTE comparison — the string order Spark's comparisons
     * (UTF8String), DuckDB's default collation AND parquet's
@@ -3422,99 +3279,13 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     true // equal up to min length: mn is a prefix of p or p-prefixed
   }
 
-  private val statsStrCache = new java.util.LinkedHashMap[
-      (String, String), Option[(String, String)]](64, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[
-        (String, String), Option[(String, String)]]): Boolean =
-      size() > MaxStatsCache
-  }
-
-  /** Per-dir [min, max] of a STRING column in UTF-8 byte order — the
-    * [[StrShape]] statements' pruning input. Source order mirrors
-    * [[dirColumnRange]]: cache, sidecar (`c str encMin encMax`
-    * lines), parquet footers. None (read conservatively) when the dir
-    * has no data, the column has no binary stats, or the unit predates
-    * the string-stats sidecar. */
-  private def dirColumnRangeStr(f: org.apache.hadoop.fs.FileSystem,
-      d: org.apache.hadoop.fs.Path, colName: String)
-      : Option[(String, String)] = {
-    val key = (d.toString, colName)
-    statsStrCache.synchronized {
-      val hit = statsStrCache.get(key)
-      if (hit != null) return hit
-    }
-    def dec(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
-    val fromSidecar: Option[Option[(String, String)]] =
-      scala.util.Try {
-        val sp = new org.apache.hadoop.fs.Path(d, StatsFile)
-        if (!f.exists(sp)) None
-        else {
-          val in = f.open(sp)
-          val lines =
-            try scala.io.Source.fromInputStream(in, "UTF-8")
-              .getLines().toList
-            finally in.close()
-          lines.map(_.split("\t")).collectFirst {
-            case Array(c, "str-none") if c == colName => None
-            case Array(c, "str", mn, mx) if c == colName =>
-              Some((dec(mn), dec(mx)))
-          }
-        }
-      }.toOption.flatten
-    val r = fromSidecar.getOrElse(footerColumnRangeStr(f, d, colName))
-    statsStrCache.synchronized(statsStrCache.put(key, r)): Unit
-    r
-  }
-
-  /** The footer-walk source of truth behind [[dirColumnRangeStr]]:
-    * parquet binary statistics decode as UTF-8 (parquet orders binary
-    * stats by unsigned byte comparison — exactly [[utf8Cmp]]). Any
-    * non-binary column or footer oddity yields None, never a wrong
-    * bound. */
-  private def footerColumnRangeStr(f: org.apache.hadoop.fs.FileSystem,
-      d: org.apache.hadoop.fs.Path, colName: String)
-      : Option[(String, String)] = scala.util.Try {
-    import scala.jdk.CollectionConverters._
-    val files = f.listStatus(d).toSeq.filter(s => s.isFile &&
-      !s.getPath.getName.startsWith("_") &&
-      !s.getPath.getName.startsWith(".") &&
-      s.getPath.getName.endsWith(".parquet"))
-    if (files.isEmpty) None
-    else {
-      val ranges = files.flatMap { st =>
-        val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            st.getPath, f.getConf))
-        try rdr.getFooter.getBlocks.asScala.toSeq.map { blk =>
-          blk.getColumns.asScala
-            .find(_.getPath.toDotString == colName)
-            .map(_.getStatistics)
-            .filter(s => s != null && s.hasNonNullValue)
-            .map(s => (
-              new String(s.genericGetMin
-                .asInstanceOf[org.apache.parquet.io.api.Binary]
-                .getBytes, java.nio.charset.StandardCharsets.UTF_8),
-              new String(s.genericGetMax
-                .asInstanceOf[org.apache.parquet.io.api.Binary]
-                .getBytes, java.nio.charset.StandardCharsets.UTF_8)))
-        } finally rdr.close()
-      }
-      if (ranges.isEmpty || ranges.exists(_.isEmpty)) None
-      else Some((
-        ranges.flatten.map(_._1).reduce((a, b) =>
-          if (utf8Cmp(a, b) <= 0) a else b),
-        ranges.flatten.map(_._2).reduce((a, b) =>
-          if (utf8Cmp(a, b) >= 0) a else b)))
-    }
-  }.toOption.flatten
-
   /** The LIVE prunable units under the publish-point rule (object
     * doc): committed-manifest sources are dropped exactly when their
     * target gen is published. A source name may be a top-level dir or
     * a `gen-X/range-k` leaf; a leaf is dead if either its own name or
     * its whole parent is logically deleted. */
   private def liveDirs(spark: SparkSession, dir: String)
-      : Seq[org.apache.hadoop.fs.Path] = {
+      : Seq[Path] = {
     val (f, data) = DedupIngest.fs(spark, s"$dir/data")
     val (_, markers) = DedupIngest.fs(spark, s"$dir/markers")
     val logicallyDeleted: Set[String] =
@@ -3522,16 +3293,10 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
       else f.listStatus(markers).toSeq
         .filter(_.getPath.getName.matches("compact-.*\\.manifest"))
         .flatMap { m =>
-          val lines = {
-            val in = f.open(m.getPath)
-            try scala.io.Source.fromInputStream(in, "UTF-8")
-              .getLines().toList
-            finally in.close()
-          }
+          val lines = readMarkerLines(f, m.getPath)
           val published = lines.lastOption.contains("COMMIT") &&
             lines.collectFirst { case l if l.startsWith("T\t") =>
-              f.exists(new org.apache.hadoop.fs.Path(
-                s"$dir/data/" + l.drop(2)))
+              f.exists(new Path(s"$dir/data/" + l.drop(2)))
             }.getOrElse(false)
           if (published)
             lines.collect { case l if l.startsWith("S\t") => l.drop(2) }
@@ -3588,10 +3353,8 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
         .map(_.stripPrefix("schema-").stripSuffix(".json").toLong)
       if (vs.isEmpty) return None
       try {
-        val in = f.open(new org.apache.hadoop.fs.Path(sd,
-          s"schema-${vs.max}.json"))
-        val json = try scala.io.Source.fromInputStream(in, "UTF-8")
-          .mkString finally in.close()
+        val json = readMarkerLines(f, new Path(sd, s"schema-${vs.max}.json"))
+          .mkString("\n")
         return Some(org.apache.spark.sql.types.DataType.fromJson(json)
           .asInstanceOf[org.apache.spark.sql.types.StructType])
       } catch {
@@ -3645,8 +3408,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
       .filter(_.matches("schema-\\d+\\.json"))
       .map(_.stripPrefix("schema-").stripSuffix(".json").toLong)
     val next = vs.foldLeft(-1L)(math.max) + 1
-    val out = f.create(new org.apache.hadoop.fs.Path(sd,
-      s"schema-$next.json"), true)
+    val out = f.create(new Path(sd, s"schema-$next.json"), true)
     try out.write(merged.json.getBytes("UTF-8")) finally out.close()
     // retire superseded versions but KEEP the immediately-previous
     // one: a lock-free reader that listed before this publish may
@@ -3654,13 +3416,13 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     // monotone supersets, so serving v-1 is stale-but-valid — only
     // versions two generations back can be deleted without a race
     vs.filter(_ < next - 1).foreach(v => f.delete(
-      new org.apache.hadoop.fs.Path(sd, s"schema-$v.json"), false))
+      new Path(sd, s"schema-$v.json"), false))
   }
 
   /** Read units under the stored table schema (nulls for columns a
     * unit predates); plain read for pre-evolution tables. */
   private def readUnits(spark: SparkSession, dir: String,
-      units: Seq[org.apache.hadoop.fs.Path]): DataFrame =
+      units: Seq[Path]): DataFrame =
     tableSchema(spark, dir) match {
       case Some(s) => spark.read.schema(s).parquet(units.map(_.toString): _*)
       case None => spark.read.parquet(units.map(_.toString): _*)
@@ -3711,15 +3473,16 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     * batch) must hold the offset back, or a consumer would take its
     * rows and then skip the gap batch when it later commits. -1 when
     * nothing is committed. */
-  def contiguousCommittedBatch(spark: SparkSession, dir: String): Long = {
-    val (f, markers) = DedupIngest.fs(spark, s"$dir/markers")
-    if (!f.exists(markers)) return -1L
-    val names = f.listStatus(markers).toSeq.map(_.getPath.getName)
-    val ids = names.filter(_.matches("batch-\\d+"))
-      .map(_.stripPrefix("batch-").toLong).toSet
+  def contiguousCommittedBatch(spark: SparkSession, dir: String): Long =
+    committedBatches(MarkerLedger.names(spark, dir))._1
+
+  /** (the contiguous committed prefix n, the ids committed above it)
+    * from one marker listing. */
+  private def committedBatches(names: Seq[String]): (Long, Seq[Long]) = {
+    val ids = idsOf(names, "batch-").toSet
     var n = MarkerLedger.watermark(names)
     while (ids.contains(n + 1)) n += 1
-    n
+    (n, ids.filter(_ > n).toSeq.sorted)
   }
 
   /** Canonical fingerprint of everything that can change a key's
@@ -3735,16 +3498,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     * metadata work, statement-cadence cost. */
   private[graft] def ledgerStamp(spark: SparkSession,
       dir: String): String = {
-    val (f, markers) = DedupIngest.fs(spark, s"$dir/markers")
-    val names =
-      if (!f.exists(markers)) Nil
-      else f.listStatus(markers).toSeq.map(_.getPath.getName)
-    val w = MarkerLedger.watermark(names)
-    var n = w
-    val ids = names.filter(_.matches("batch-\\d+"))
-      .map(_.stripPrefix("batch-").toLong).filter(_ > w).toSet
-    while (ids.contains(n + 1)) n += 1
-    val above = ids.filter(_ > n).toSeq.sorted
+    val (n, above) = committedBatches(MarkerLedger.names(spark, dir))
     val dmlSeq = dmlRecords(spark, dir).map(_.seq).foldLeft(-1L)(math.max)
     s"upto=$n;above=${above.mkString(",")};dml=$dmlSeq"
   }
@@ -3802,28 +3556,15 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     * advisory (mint-then-release) uses. */
   private def nextUnusedIdLocked(spark: SparkSession,
       dir: String): Long = {
-    val (f, markers) = DedupIngest.fs(spark, s"$dir/markers")
-    val ids =
-      if (!f.exists(markers)) Nil
-      else f.listStatus(markers).toSeq.map(_.getPath.getName).collect {
-        case n if n.matches("batch-\\d+") =>
-          n.stripPrefix("batch-").toLong
-        case n if n.matches("batch-upto-\\d+") =>
-          n.stripPrefix("batch-upto-").toLong
-        case n if n.matches("merge-\\d+\\.intent") =>
-          n.stripPrefix("merge-").stripSuffix(".intent").toLong
-        case n if n.matches("merge-\\d+") =>
-          n.stripPrefix("merge-").toLong
-        case TxnMarker(_, id, _) => id
-      }
-    val (_, dataP) = DedupIngest.fs(spark, s"$dir/data")
+    val names = MarkerLedger.names(spark, dir)
+    val (f, data) = DedupIngest.fs(spark, s"$dir/data")
     val dirIds =
-      if (!f.exists(dataP)) Nil
-      else f.listStatus(dataP).toSeq.map(_.getPath.getName).collect {
-        case n if n.matches("batch-\\d+") =>
-          n.stripPrefix("batch-").toLong
-      }
-    (ids ++ dirIds).foldLeft(-1L)(math.max) + 1L
+      if (!f.exists(data)) Nil
+      else idsOf(f.listStatus(data).toSeq.map(_.getPath.getName), "batch-")
+    (idsOf(names, "batch-") ++ idsOf(names, "batch-upto-") ++
+      idsOf(names, "merge-", ".intent") ++ idsOf(names, "merge-") ++
+      names.collect { case TxnMarker(_, id, _) => id } ++ dirIds)
+      .foldLeft(-1L)(math.max) + 1L
   }
 
   /** ADVISORY next-unused ledger id (taken and released under the tail
@@ -3892,9 +3633,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
   private def checkpointQueryId(spark: SparkSession,
       checkpoint: String): String = {
     val (f, p) = DedupIngest.fs(spark, s"$checkpoint/metadata")
-    val in = f.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
+    val txt = readMarkerLines(f, p).mkString("\n")
     """"id"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(txt)
       .map(_.group(1)).getOrElse(throw new IllegalStateException(
         s"LayoutIngest: no query id in $checkpoint/metadata — not a " +
@@ -3921,16 +3660,11 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
   private[graft] def streamLedgerId(spark: SparkSession, dir: String,
       qid: String, epoch: Long): Long = {
     val (f, markers) = DedupIngest.fs(spark, s"$dir/markers")
-    val existing =
-      if (!f.exists(markers)) None
-      else f.listStatus(markers).toSeq.map(_.getPath.getName)
-        .collectFirst {
-          case TxnMarker(e, i, q) if e == epoch && q == qid => i
-        }
-    existing.getOrElse {
+    MarkerLedger.names(spark, dir).collectFirst {
+      case TxnMarker(e, i, q) if e == epoch && q == qid => i
+    }.getOrElse {
       val id = nextUnusedIdLocked(spark, dir)
-      f.create(new org.apache.hadoop.fs.Path(markers,
-        TxnMarker.name(epoch, id, qid)), true).close()
+      f.create(new Path(markers, TxnMarker.name(epoch, id, qid)), true).close()
       id
     }
   }
@@ -3970,21 +3704,8 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     val fullBox = box ++
       (if (bounded) Seq((BatchCol, batchLo, batchHi)) else Nil)
     val hit = parFilter(live) { d =>
-      fullBox.forall { case (c, lo, hi) =>
-        dirColumnRange(f, d, c) match {
-          case Some((mn, mx)) => mx >= lo && mn <= hi
-          case None => true
-        }
-      } && points.forall { case (c, vs) =>
-        unitBloom(f, d, c) match {
-          case Some(b) => vs.exists {
-            case s: String => b.mightContainString(s)
-            case l: Long => b.mightContainLong(l)
-            case _ => true // non-probe types never reach here
-          }
-          case None => true
-        }
-      }
+      fullBox.forall { case (c, lo, hi) => rangeHits(f, d, c, lo, hi) } &&
+        points.forall { case (c, vs) => bloomMayHold(f, d, c, vs) }
     }
     val base =
       if (hit.nonEmpty) readUnits(spark, dir, hit)
@@ -4054,21 +3775,14 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     * Sidecar reads run on [[probePool]], not a serial driver walk. */
   private[graft] def prunedBoxDirs(spark: SparkSession, dir: String,
       box: Seq[(String, Long, Long)])
-      : (Seq[org.apache.hadoop.fs.Path], Seq[org.apache.hadoop.fs.Path]) = {
+      : (Seq[Path], Seq[Path]) = {
     val (f, _) = DedupIngest.fs(spark, s"$dir/data")
     val dirs = liveDirs(spark, dir)
-    (parFilter(dirs) { d =>
-      box.forall { case (c, lo, hi) =>
-        dirColumnRange(f, d, c) match {
-          case Some((mn, mx)) => mx >= lo && mn <= hi
-          case None => true
-        }
-      }
-    }, dirs)
+    (parFilter(dirs)(d =>
+      box.forall { case (c, lo, hi) => rangeHits(f, d, c, lo, hi) }), dirs)
   }
 
-  private def dirBytes(f: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Long =
+  private def dirBytes(f: FileSystem, p: Path): Long =
     f.listStatus(p).filter(_.isFile).map(_.getLen).sum
 
   /** Re-grid the table into a NEW table dir — the answer to domain
@@ -4098,7 +3812,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     val (f, dst) = DedupIngest.fs(spark, dstDir)
     require(!f.exists(dst), s"regrid: $dstDir already exists")
     require(targetFileBytes > 0, "regrid: targetFileBytes must be > 0")
-    val stage = new org.apache.hadoop.fs.Path(dstDir + ".stage")
+    val stage = new Path(dstDir + ".stage")
     if (f.exists(stage)) f.delete(stage, true) // crashed attempt
     bootstrap(spark, stage.toString, newGrid)
     val live = read(spark, srcDir).drop(KeyCol)
@@ -4208,8 +3922,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
           if (w < 0) Nil
           else Seq(("ingest-upto", w, true,
             byName.get(s"batch-upto-$w").map(_.getModificationTime)))
-        val tail = names.toSeq.filter(_.matches("batch-\\d+"))
-          .map(_.stripPrefix("batch-").toLong).filter(_ > w).sorted
+        val tail = idsOf(names.toSeq, "batch-").filter(_ > w).sorted
           .map(i => ("ingest", i, true,
             Some(byName(s"batch-$i").getModificationTime)))
         // DML ops come from the RECORDS (live markers + the folded
@@ -4217,16 +3930,13 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
         // a [[foldDmlMarkers]] — the folded record carries the marker's
         // commit mtime
         val dml = dmlRecords(spark, dir)
-        def dmlKind(kind: String, as: String) =
+        val dmlOps = Seq("del" -> "delete", "delk" -> "delete_keys",
+          "dels" -> "delete_range", "upd" -> "update",
+          "updk" -> "update_keys", "upds" -> "update_range",
+          "sdml" -> "replay").flatMap { case (kind, as) =>
           dml.filter(_.kind == kind).sortBy(_.id)
             .map(r => (as, r.id, true, r.atMs))
-        val dels = dmlKind("del", "delete")
-        val delks = dmlKind("delk", "delete_keys")
-        val delrs = dmlKind("dels", "delete_range")
-        val upds = dmlKind("upd", "update")
-        val updks = dmlKind("updk", "update_keys")
-        val updrs = dmlKind("upds", "update_range")
-        val replays = dmlKind("sdml", "replay")
+        }
         // committed merges come from live commit markers AND folded
         // mrg records (a record in the dml-log is committed by the
         // fold rule; a LIVE mrg record without its marker is the
@@ -4237,22 +3947,17 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
           .map(r => (r.id, byName.get(s"merge-${r.id}")
             .map(_.getModificationTime).orElse(r.atMs)))
         val recIds = recMerges.map(_._1).toSet
-        val legacyMerges = names.toSeq.filter(_.matches("merge-\\d+"))
-          .map(_.stripPrefix("merge-").toLong)
-          .filterNot(recIds)
+        val legacyMerges = idsOf(names.toSeq, "merge-").filterNot(recIds)
           .map(i => (i, Some(byName(s"merge-$i").getModificationTime)
             : Option[Long]))
         val committedMergeIds = recIds ++ legacyMerges.map(_._1)
         val merges = (recMerges ++ legacyMerges).sortBy(_._1)
           .map { case (i, at) => ("merge", i, true, at) }
-        val intents = names.toSeq.filter(_.matches("merge-\\d+\\.intent"))
-          .map(_.stripPrefix("merge-").stripSuffix(".intent").toLong)
+        val intents = idsOf(names.toSeq, "merge-", ".intent")
           .filterNot(committedMergeIds).sorted
           .map(i => ("merge", i, false,
             Some(byName(s"merge-$i.intent").getModificationTime)))
-        folded ++ tail ++ dels ++ delks ++ delrs ++ upds ++ updks ++
-          updrs ++ replays ++
-          merges ++ intents
+        folded ++ tail ++ dmlOps ++ merges ++ intents
       }
     import spark.implicits._
     entries.toDF("kind", "id", "committed", "at_ms")
@@ -4271,7 +3976,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     val (f, _) = DedupIngest.fs(spark, s"$dir/data")
     // unit name relative to data/ (leafUnits' convention), robust to
     // scheme-qualified listing paths
-    def unitName(d: org.apache.hadoop.fs.Path): String =
+    def unitName(d: Path): String =
       if (d.getParent.getName == "data") d.getName
       else s"${d.getParent.getName}/${d.getName}"
     val rows = liveDirs(spark, dir).map { d =>

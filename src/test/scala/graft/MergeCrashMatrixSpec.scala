@@ -78,6 +78,14 @@ class MergeCrashMatrixSpec extends SparkSpec {
       upd((3L, 3L, "doc-3", -8L), (80L, 80L, "doc-80", -9L)),
       Some(LayoutIngest.UnmatchedDelete(Some(col("v") < 100L)))))
 
+  /** The uninterrupted merge of each kind, built once per kind. */
+  private val refs = scala.collection.mutable.Map.empty[String, String]
+  private def ref(kind: Kind): String = refs.getOrElseUpdate(kind.name, {
+    val t = freshTable(s"mrgref-${kind.name.split(" ").head.toLowerCase}")
+    assert(kind.merge(t))
+    t
+  })
+
   /** The claim-instant watermark the intent carries (batches 0..1). */
   private def writeIntent(t: String): Unit =
     java.nio.file.Files.write(marker(t, s"merge-$Id.intent"),
@@ -107,18 +115,16 @@ class MergeCrashMatrixSpec extends SparkSpec {
         "the uninterrupted merge, history shows one merge, a replica " +
         "replays to the same bytes") {
       val kind = kinds.find(_.name == k).get
-      val tag = k.split(" ").head.toLowerCase
-      val ref = freshTable(s"mrgref-$tag")
-      assert(kind.merge(ref))
-      val t = freshTable(s"mrgcrash-$tag")
+      val t = freshTable(s"mrgcrash-${k.split(" ").head.toLowerCase}")
       val r = t.stripSuffix("/t") + "/r"
       // the replica mirrors the pre-merge table, so the merge reaches it
       // as a replay rather than a bootstrap pull
       assert(LayoutIngest.replicate(spark, t, r).batchesPulled === 2)
       build(kind, t)
       assert(kind.merge(t) === owed)
-      assert(snap(t) === snap(ref), "the replay converges: no loss, no dup")
-      assert(body(t, s"mrg-$Id") === body(ref, s"mrg-$Id"))
+      assert(snap(t) === snap(ref(kind)),
+        "the replay converges: no loss, no dup")
+      assert(body(t, s"mrg-$Id") === body(ref(kind), s"mrg-$Id"))
       assert(!java.nio.file.Files.exists(marker(t, s"merge-$Id.intent")),
         "the intent retires with the commit marker")
       assert(!kind.merge(t), "a committed merge replays as a no-op")
