@@ -1341,7 +1341,8 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
   private def foldDmlMarkers(spark: SparkSession, dir: String): Int = {
     val (f, markers) = DedupIngest.fs(spark, s"$dir/markers")
     if (!f.exists(markers)) return 0
-    val names = f.listStatus(markers).toSeq.map(_.getPath.getName)
+    val listed = f.listStatus(markers).toSeq
+    val names = listed.map(_.getPath.getName)
     val nameSet = names.toSet
     // an mrg record whose COMMIT marker is still absent is in-flight
     // state (the crash window between record and marker): it must stay
@@ -1352,8 +1353,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
         !(n.startsWith("mrg-") &&
           !nameSet(s"merge-${n.stripPrefix("mrg-")}")))
     if (liveNames.isEmpty) return 0
-    val byName = f.listStatus(markers).toSeq
-      .map(s => s.getPath.getName -> s).toMap
+    val byName = listed.map(s => s.getPath.getName -> s).toMap
     val all = dmlRecords(spark, dir)
       // same rule for the log side: an uncommitted mrg record never
       // enters the log — so a FOLDED mrg record always means
@@ -1781,35 +1781,19 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     * replay of the crashed statement itself keeps the skip. */
   private def occupiedDmlIds(spark: SparkSession, dir: String,
       prefix: String): Set[Long] = {
-    val (f, markers) = DedupIngest.fs(spark, s"$dir/markers")
-    val stamp = s"gen-$prefix(\\d+)-.*"
-    val markerIds =
-      if (!f.exists(markers)) Seq.empty[Long]
-      else f.listStatus(markers).toSeq.map(_.getPath.getName).flatMap {
-        case n if n.matches(s"$prefix-\\d+") =>
-          Some(n.stripPrefix(s"$prefix-").toLong)
-        case n if n.matches(s"compact-$prefix(\\d+)-.*\\.manifest") =>
-          Some(n.stripPrefix(s"compact-$prefix")
-            .takeWhile(_.isDigit).toLong)
-        case _ => None
-      }
-    val logIds = dmlLogEntries(spark, dir)
-      .filter(_.kind == prefix).map(_.id)
-    val (_, root) = DedupIngest.fs(spark, dir)
-    val stageIds =
-      if (!f.exists(root)) Seq.empty[Long]
-      else f.listStatus(root).toSeq.map(_.getPath.getName).collect {
-        case n if n.matches(s"$stamp\\.stage") =>
-          n.stripPrefix(s"gen-$prefix").takeWhile(_.isDigit).toLong
-      }
-    val (_, data) = DedupIngest.fs(spark, s"$dir/data")
-    val unitIds =
-      if (!f.exists(data)) Seq.empty[Long]
-      else f.listStatus(data).toSeq.map(_.getPath.getName).collect {
-        case n if n.matches(stamp) =>
-          n.stripPrefix(s"gen-$prefix").takeWhile(_.isDigit).toLong
-      }
-    (markerIds ++ logIds ++ stageIds ++ unitIds).toSet
+    // the debris carries the id in its stamp: compact-<prefix><id>-*
+    // manifests, gen-<prefix><id>-*.stage stages, gen-<prefix><id>-*
+    // units
+    val stamped = s"(?:compact-|gen-)\\Q$prefix\\E(\\d+)-.*".r
+    def listing(p: String) = {
+      val (f, d) = DedupIngest.fs(spark, p)
+      if (!f.exists(d)) Nil else f.listStatus(d).toSeq.map(_.getPath.getName)
+    }
+    val names = MarkerLedger.names(spark, dir)
+    (idsOf(names, s"$prefix-") ++
+      dmlLogEntries(spark, dir).filter(_.kind == prefix).map(_.id) ++
+      (names ++ listing(dir) ++ listing(s"$dir/data")).collect {
+        case stamped(i) => i.toLong }).toSet
   }
 
   /** Hard ceiling on one keyed statement's keys: the keys drive
@@ -1867,7 +1851,6 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
       }
       case _ => true
     }
-
 
   /** What one [[replicate]] sync did, for operations logging and the
     * battery's premises. */
@@ -2086,7 +2069,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
   private[graft] def replicateBody(spark: SparkSession, srcDir: String,
       dstDir: String, filesPerBatch: Int, lockWaitMs: Long)
       : ReplicateStats = {
-    val (sf, smarkers) = DedupIngest.fs(spark, s"$srcDir/markers")
+    val (sf, _) = DedupIngest.fs(spark, s"$srcDir/markers")
     val srcNames = MarkerLedger.names(spark, srcDir)
     val (df0, dgrid) = DedupIngest.fs(spark, s"$dstDir/grid")
     if (!df0.exists(dgrid))
@@ -2181,7 +2164,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
         // the replica decides membership exactly as the source did
         val unmatchedDel = r.sets.collectFirst {
           case (UnmatchedDelTag, v) =>
-            val sql = java.net.URLDecoder.decode(v, "UTF-8")
+            val sql = urlDec(v)
             UnmatchedDelete(
               if (sql.isEmpty) None
               else Some(org.apache.spark.sql.functions.expr(sql)))
@@ -2403,20 +2386,20 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
       require(rounds <= 20,
         "mergeRowsChunkedNext: bucket sizing failed to converge — " +
           "pathological key distribution")
-      val bucket = pmod(xxhash64(col(keyCol)), lit(buckets.toLong))
+      val layout = ChunkPlan(java.util.UUID.randomUUID().toString.take(8),
+        keyCol, buckets, filesPerBatch, Nil, Nil)
       // ONE sizing job returns every bucket's distinct-key count:
       // both the cap check and per-bucket emptiness (an empty bucket
       // merges nothing and must not burn an id) come from it — no
       // per-bucket isEmpty jobs
-      val counts = snap.groupBy(bucket.as("__b"))
+      val counts = snap.groupBy(layout.bucket.as("__b"))
         .agg(countDistinct(col(keyCol)).as("__n"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       if (counts.values.forall(_ <= maxKeysPerMerge)) {
         val (f, markers) = DedupIngest.fs(spark, s"$dir/markers")
         f.mkdirs(markers)
-        val plan = ChunkPlan(java.util.UUID.randomUUID().toString.take(8),
-          keyCol, buckets, filesPerBatch,
-          (0 until buckets).map(_.toLong).filter(counts.contains), Nil)
+        val plan = layout.copy(
+          planned = (0 until buckets).map(_.toLong).filter(counts.contains))
         snap.write.mode("overwrite")
           .parquet(s"$dir/markers/chunk-${plan.nonce}.updates")
         writeChunkPlan(f, markers, plan, 0)
