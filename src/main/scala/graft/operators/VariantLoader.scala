@@ -119,10 +119,18 @@ object VariantLoader {
    * specs).
    */
   def mintIdsDense(df: DataFrame, seed: Long, keyExprs: Seq[Column],
-      tieBreak: Seq[Column]): DataFrame = {
-    val counts = df.groupBy("chromosome")
+      tieBreak: Seq[Column]): DataFrame =
+    mintIdsDense(df, seed, df.groupBy("chromosome")
       .agg(countDistinct(struct(keyExprs: _*)).as("n")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).sortBy(_._1)
+      .map(r => r.getString(0) -> r.getLong(1)).toSeq, keyExprs, tieBreak)
+
+  /** [[mintIdsDense]] with the per-chromosome distinct-key counts already
+    * known (the load computes them in the job that also finds key
+    * duplicates). */
+  private def mintIdsDense(df: DataFrame, seed: Long,
+      chromCounts: Seq[(String, Long)], keyExprs: Seq[Column],
+      tieBreak: Seq[Column]): DataFrame = {
+    val counts = chromCounts.sortBy(_._1)
     val offsets = counts.map(_._1)
       .zip(counts.scanLeft(0L) { case (acc, (_, n)) => acc + n })
     val offsetCol = offsets.foldLeft(lit(0L)) { case (acc, (c, off)) =>
@@ -217,6 +225,31 @@ object VariantLoader {
     val existingMatched = joined.filter(col("db_rgd_id").isNotNull)
     val novel = joined.filter(col("db_rgd_id").isNull)
 
+    // ONE eager job over the batch before any sink. Per null-safe variant
+    // key: its row count, and whether it is novel (a key matches the
+    // store for all of its rows or for none). Per chromosome: the novel
+    // distinct keys (the mint's offsets) and the largest key count.
+    //
+    // Duplicate details can ONLY arise when the batch itself contains
+    // same-key duplicate records (novel dups share a minted id; existing
+    // dups matched the same store row), so the (rgd_id, sample_id) dedup
+    // window over the ~10^7-row melt is paid only when some key count
+    // exceeds 1 — measured 19 s of a 64 s full load when applied
+    // unconditionally.
+    val perChrom = joined
+      .groupBy(col("chromosome"), col("start_pos"),
+        coalesce(col("ref_nuc"), lit("")).as("r"),
+        coalesce(col("var_nuc"), lit("")).as("v"))
+      .agg(count(lit(1)).as("rows"), max(col("db_rgd_id").isNull).as("novel"))
+      .groupBy("chromosome")
+      .agg(count(when(col("novel"), lit(1))).as("novel_keys"),
+        max("rows").as("max_rows"))
+      .collect().toSeq
+    val hasKeyDups = perChrom.exists(_.getLong(2) > 1)
+    val novelKeys = perChrom.collect {
+      case r if r.getLong(1) > 0 => r.getString(0) -> r.getLong(1)
+    }
+
     // W2 + intra-batch dedup: the J4 join only sees the PRIOR store, so
     // two records in one batch normalizing to the same null-safe variant
     // key would both look novel. Dense minting gives key-duplicates ONE
@@ -229,7 +262,7 @@ object VariantLoader {
     // within the same batch.
     val minted = mintIdsDense(novel.drop("db_rgd_id", "db_chrom", "db_start",
       "db_end", "db_ref", "db_var"),
-      config.rgdIdSeed,
+      config.rgdIdSeed, novelKeys,
       keyExprs = Seq(col("start_pos"),
         coalesce(col("ref_nuc"), lit("")), coalesce(col("var_nuc"), lit(""))),
       // total order over every column the insert row emits: when
@@ -267,17 +300,6 @@ object VariantLoader {
     val endPosUpdates = existingMatched
       .filter(col("db_end") =!= col("end_pos") && col("end_pos") =!= 0)
       .select(col("db_rgd_id").as("rgd_id"), col("end_pos"))
-
-    // Duplicate details can ONLY arise when the batch itself contains
-    // same-key duplicate records (novel dups share a minted id; existing
-    // dups matched the same store row). Detect that with one cheap
-    // aggregation over the allele-level batch (~10^5 rows) and only then
-    // pay the (rgd_id, sample_id) dedup window over the ~10^7-row melt —
-    // measured 19 s of a 64 s full load when applied unconditionally.
-    val hasKeyDups = !classified.groupBy(col("chromosome"), col("start_pos"),
-        coalesce(col("ref_nuc"), lit("")).as("r"),
-        coalesce(col("var_nuc"), lit("")).as("v"))
-      .count().filter(col("count") > 1).isEmpty
 
     // J7 + P9-P11 + §2.7: melt samples, align allele j with AD[j+1],
     // compute zygosity, then J6 anti-join against already-present details

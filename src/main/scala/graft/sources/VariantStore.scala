@@ -33,6 +33,17 @@ import org.apache.spark.sql.functions._
  * files (schema inferred, bucket DDL re-stated) on first touch, keeping
  * the API directory-based and sessions independent.
  *
+ * Bucket count: a recorded property of each side, not a constant. The
+ * session that writes a side's directory — its first append, or any
+ * rewrite — buckets it `defaultParallelism` ways, so every bucketed scan
+ * is one wave of tasks and every append writes one file per core; the
+ * count goes into a `_graft_buckets` file inside the directory (Spark's
+ * file index skips `_`-prefixed names), and later appends and reads use
+ * the recorded count whatever their own session's width. A side with no
+ * record was written before the count was recorded and has
+ * [[LegacyBuckets]]. Only a rewrite (K5/K6, [[migrateDetails]],
+ * [[compact]]) changes a side's count.
+ *
  * K5/K6 updates (end-pos drift, genic flips) are write-to-temp + atomic
  * directory swap — the bucketed analog of the reference's batched
  * UPDATEs. No self-overwrite (Spark forbids overwriting a table being
@@ -40,10 +51,13 @@ import org.apache.spark.sql.functions._
  */
 object VariantStore {
 
-  /** Bucket count for both sides. 32 matches local[32] testing; at real
-    * scale pick ~(store size / healthy scan partition) — e.g. 4096 for
-    * 100 TB — once at store creation. */
-  val NumBuckets = 32
+  /** Bucket count of a side written before counts were recorded: every
+    * side then had 32 buckets. */
+  val LegacyBuckets = 32
+
+  /** The per-side bucket-count record, written last into a rewrite's
+    * `_tmp` directory: a `_tmp` holding it is complete. */
+  private val BucketsFile = "_graft_buckets"
 
   private val variantKeys = Seq("chromosome", "start_pos")
   private val detailKeys_ = Seq("rgd_id", "sample_id")
@@ -55,41 +69,64 @@ object VariantStore {
     appendSide(result.sampleDetails, dir, "details", detailKeys_)
   }
 
+  /** An existing side takes the rows at its recorded bucket count; a
+    * side's first-ever append creates it through [[overwriteSide]], so
+    * no side directory exists without its record. */
   private def appendSide(df: DataFrame, dir: String, side: String,
       keys: Seq[String]): Unit = {
     val t0 = System.currentTimeMillis()
-    ensureTable(df.sparkSession, dir, side, keys)
-    bucketed(df, keys).mode(SaveMode.Append).format("parquet")
-      .option("path", s"$dir/$side")
-      .saveAsTable(tableName(dir, side))
+    val spark = df.sparkSession
+    ensureTable(spark, dir, side, keys) match {
+      case Some(tbl) =>
+        bucketed(df, keys, recordedBuckets(spark, dir, side))
+          .mode(SaveMode.Append).format("parquet")
+          .option("path", s"$dir/$side")
+          .saveAsTable(tbl)
+      case None => overwriteSide(spark, dir, side, keys, df)
+    }
     println(f"[graft] append $side: ${(System.currentTimeMillis() - t0) / 1000.0}%.1f s")
   }
 
   /**
-   * Bucketed writer for one store side. Pre-shuffles onto the bucket
-   * function so every bucket lands in exactly ONE task and one file per
-   * write: without it each task fans out to all NumBuckets files —
+   * Bucketed writer for one store side at `n` buckets. Pre-shuffles onto
+   * the bucket function so every bucket lands in exactly ONE task and one
+   * file per write: without it each task fans out to all `n` files —
    * measured 73 s vs 8 s for an 8.1M-row detail append, dominated by
    * per-file parquet writer overhead across tasks × buckets tiny files.
    *
    * One task per core, not one per bucket: `p`, the largest divisor of
-   * NumBuckets no larger than the session's parallelism, partitions on
-   * `pmod(murmur3(keys), p)` — the bucket id `pmod(murmur3(keys),
-   * NumBuckets)` taken mod `p`, since `p` divides NumBuckets — so each
-   * task writes NumBuckets / p whole buckets. A bucketed-write task costs
-   * ~40 ms of deserialization on its own, so 32 tasks on 4 cores were
-   * mostly that overhead; `local[32]` keeps one bucket per task.
+   * `n` no larger than the session's parallelism, partitions on
+   * `pmod(murmur3(keys), p)` — the bucket id `pmod(murmur3(keys), n)`
+   * taken mod `p`, since `p` divides `n` — so each task writes `n / p`
+   * whole buckets. `p` is `n` itself when the writing session created the
+   * side; it is smaller when a narrower session appends to a side a wider
+   * one wrote (a bucketed-write task costs ~40 ms of deserialization on
+   * its own, so 32 tasks on 4 cores were mostly that overhead).
    *
    * Deliberately NOT sortBy: exchange elision needs bucketing only; the
    * downstream joins sort on supersets of the bucket keys (J4) or see
    * multi-file buckets after the second append (J6), so a write sort is
    * pure cost on every insert batch.
    */
-  private def bucketed(df: DataFrame, keys: Seq[String]): DataFrameWriter[Row] = {
+  private def bucketed(df: DataFrame, keys: Seq[String],
+      n: Int): DataFrameWriter[Row] = {
     val cores = df.sparkSession.sparkContext.defaultParallelism
-    val p = (1 to NumBuckets).filter(d => NumBuckets % d == 0 && d <= cores).max
+    val p = (1 to n).filter(d => n % d == 0 && d <= cores).max
     df.repartition(p, keys.map(col): _*).write
-      .bucketBy(NumBuckets, keys.head, keys.tail: _*)
+      .bucketBy(n, keys.head, keys.tail: _*)
+  }
+
+  /** The bucket count a side records, or [[LegacyBuckets]] for a side
+    * without a record. */
+  def recordedBuckets(spark: SparkSession, dir: String, side: String): Int = {
+    val p = new org.apache.hadoop.fs.Path(s"$dir/$side/$BucketsFile")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) LegacyBuckets
+    else {
+      val in = fs.open(p)
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt
+      finally in.close()
+    }
   }
 
   /** U1 secondary variant side (`variant_ext`): rgdcore's VariantDAO
@@ -248,28 +285,35 @@ object VariantStore {
     overwriteSide(spark, dir, "variants", variantKeys,
       df.select(VariantLoader.variantCols.map(col): _*))
 
+  /** Write `df` as the whole of a side, bucketed one way per core of
+    * this session, and swap it in. The first append of a side and every
+    * rewrite come through here. */
   private def overwriteSide(spark: SparkSession, dir: String, side: String,
       keys: Seq[String], df: DataFrame): Unit = {
     val finalPath = s"$dir/$side"
     val tmpPath = s"$dir/${side}_tmp"
     val oldPath = s"$dir/${side}_old"
     val tmpTbl = tableName(dir, s"${side}_tmp")
+    val n = spark.sparkContext.defaultParallelism
     spark.sql(s"DROP TABLE IF EXISTS $tmpTbl")
     deletePath(spark, tmpPath)
     deletePath(spark, oldPath)
-    bucketed(df, keys).mode(SaveMode.Overwrite).format("parquet")
+    bucketed(df, keys, n).mode(SaveMode.Overwrite).format("parquet")
       .option("path", tmpPath)
       .saveAsTable(tmpTbl)
     spark.sql(s"DROP TABLE IF EXISTS $tmpTbl")
     spark.sql(s"DROP TABLE IF EXISTS ${tableName(dir, side)}")
     val fin = new org.apache.hadoop.fs.Path(finalPath)
     val fs = fin.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val record = fs.create(new org.apache.hadoop.fs.Path(tmpPath, BucketsFile), true)
+    try record.write(n.toString.getBytes("UTF-8")) finally record.close()
     // Crash-safe promote: move the live dir ASIDE (never delete it before
     // the new data is in place), then promote tmp, then drop the old copy
     // last. Each step is a single atomic rename, so at every instant the
     // store side is recoverable: a crash between the two renames leaves
     // `_old` + a complete `_tmp` (recoverSwap promotes tmp); a crash after
     // the promote leaves only garbage `_old`/`_tmp` (recoverSwap deletes).
+    // The count record travels with the data in the same renames.
     if (fs.exists(fin))
       fs.rename(fin, new org.apache.hadoop.fs.Path(oldPath))
     fs.rename(new org.apache.hadoop.fs.Path(tmpPath), fin)
@@ -279,9 +323,10 @@ object VariantStore {
 
   /** Recover a store side from a crash mid-[[overwriteSide]]. The swap's
     * invariant: `_old` exists ⟺ the writer got past the rename-aside,
-    * which only happens after the `_tmp` write completed — so when the
-    * final dir is missing and `_old` exists, a present `_tmp` is complete
-    * and wins (the update had finished computing); absent `_tmp` means an
+    * which only happens after the `_tmp` write and its count record
+    * completed — so when the final dir is missing and `_old` exists, a
+    * `_tmp` holding its record is complete and wins (the update had
+    * finished computing); a `_tmp` without one, or none, means an
     * impossible interleaving on an atomic-rename filesystem, but `_old`
     * restores the pre-update snapshot regardless. When the final dir
     * exists, any surviving `_tmp`/`_old` are garbage from a crash after
@@ -294,15 +339,17 @@ object VariantStore {
     val tmp = new org.apache.hadoop.fs.Path(s"$dir/${side}_tmp")
     val old = new org.apache.hadoop.fs.Path(s"$dir/${side}_old")
     if (!fs.exists(fin) && fs.exists(old)) {
-      if (fs.exists(tmp)) { fs.rename(tmp, fin); fs.delete(old, true) }
-      else fs.rename(old, fin)
+      if (fs.exists(new org.apache.hadoop.fs.Path(tmp, BucketsFile))) {
+        fs.rename(tmp, fin); fs.delete(old, true)
+      } else { fs.rename(old, fin); fs.delete(tmp, true) }
     } else if (fs.exists(fin)) {
       if (fs.exists(tmp)) fs.delete(tmp, true)
       if (fs.exists(old)) fs.delete(old, true)
     }
-    // fin, tmp, old all absent: the side never existed — nothing to do
-    // (a lone incomplete _tmp from a first-ever write crash stays until
-    // the next overwriteSide clears it; it is never read)
+    // fin and old absent: the side was never created — nothing to do (a
+    // lone _tmp from a first-ever append that crashed before its promote,
+    // with or without its record, is never read; the next append's
+    // overwriteSide clears it, and the ledger never recorded that load)
   }
 
   /** One-time migration for stores written before the 12-column detail
@@ -333,11 +380,12 @@ object VariantStore {
     }
 
   /** Compact a store side back to one file per bucket. Every append
-    * (each load, each streaming micro-batch) lands NumBuckets new files,
-    * so a long-running ingest accumulates small files — listing and scan
-    * overhead grows per batch. Compaction is the same temp-table +
-    * directory-swap rewrite the K5/K6 updates use: readers in flight
-    * keep their snapshot, content is unchanged, bucketing is preserved. */
+    * (each load, each streaming micro-batch) lands up to one new file per
+    * bucket, so a long-running ingest accumulates small files — listing
+    * and scan overhead grows per batch. Compaction is the same temp-table
+    * + directory-swap rewrite the K5/K6 updates use: readers in flight
+    * keep their snapshot, content is unchanged, and the side comes back
+    * bucketed at this session's count (a legacy 32-bucket side included). */
   def compact(spark: SparkSession, dir: String): Unit =
     Seq("variants" -> variantKeys, "variants_ext" -> variantKeys,
       "details" -> detailKeys_).foreach { case (side, keys) =>
@@ -357,7 +405,7 @@ object VariantStore {
 
   /** Register the catalog entry for a store side if its files exist but
     * the (session-scoped) catalog has forgotten it. Returns the table
-    * name, or None when the side doesn't exist yet. */
+    * name, or None when the side doesn't exist yet or holds no data. */
   private def ensureTable(spark: SparkSession, dir: String, side: String,
       keys: Seq[String]): Option[String] = {
     val tbl = tableName(dir, side)
@@ -367,13 +415,19 @@ object VariantStore {
       val path = s"$dir/$side"
       val p = new org.apache.hadoop.fs.Path(path)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) None
+      // a side created by an empty append holds no data file to take a
+      // schema from: it reads as absent, and its next append recreates it
+      val hasData = fs.exists(p) && fs.listStatus(p).exists { f =>
+        val name = f.getPath.getName
+        !name.startsWith("_") && !name.startsWith(".")
+      }
+      if (!hasData) None
       else {
         val schemaDdl = spark.read.parquet(path).schema.toDDL
         spark.sql(
           s"""CREATE TABLE $tbl ($schemaDdl) USING PARQUET
              |CLUSTERED BY (${keys.mkString(", ")})
-             |INTO $NumBuckets BUCKETS
+             |INTO ${recordedBuckets(spark, dir, side)} BUCKETS
              |LOCATION '$path'""".stripMargin)
         Some(tbl)
       }

@@ -2796,14 +2796,16 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
         // ANY pre-merge unit (every unit may hold an unmatched key —
         // the complement is un-prunable by construction): key pruning
         // is off, only the batch-span exemption stands
-        val bloomKeys =
-          if (nKeys > 0 && nKeys <= BloomProbeMaxKeys)
-            snap.select(col(keyCol)).distinct().collect().toSeq.map(_.get(0))
-          else Nil
         val affects =
           if (dropUnmatched.nonEmpty) keyPruner(keyCol, None, Nil, batchId - 1)
-          else keyPruner(keyCol, if (keyIsLong && nKeys > 0)
-            Some((a.getLong(3), a.getLong(4))) else None, bloomKeys, batchId - 1)
+          else {
+            val bloomKeys =
+              if (nKeys > 0 && nKeys <= BloomProbeMaxKeys)
+                snap.select(col(keyCol)).distinct().collect().toSeq.map(_.get(0))
+              else Nil
+            keyPruner(keyCol, if (keyIsLong && nKeys > 0)
+              Some((a.getLong(3), a.getLong(4))) else None, bloomKeys, batchId - 1)
+          }
         val keysDf = broadcast(snap.select(col(keyCol)).distinct()
           .withColumn("__graft_merge_hit", lit(true)))
         // keep: key not merged, OR the row is AT/ABOVE the merge point

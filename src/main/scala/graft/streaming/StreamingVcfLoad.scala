@@ -35,11 +35,12 @@ object StreamingVcfLoad {
    *                   per-file batches, each observing the prior ones'
    *                   appends
    * @param compactEvery fold each store side back to one file per bucket
-   *                   after every N micro-batches. Every append lands
-   *                   NumBuckets new files, so a long-running ingest
-   *                   accumulates small files and per-batch listing/scan
-   *                   overhead grows; periodic compaction caps it at N
-   *                   batches' worth. Runs inside foreachBatch — the
+   *                   after every N micro-batches. Every append lands up to
+   *                   one new file per bucket of the side's recorded count,
+   *                   so a long-running ingest accumulates small files and
+   *                   per-batch listing/scan overhead grows; periodic
+   *                   compaction caps it at N batches' worth, and re-buckets
+   *                   each side at the stream session's count. Runs inside foreachBatch — the
    *                   stream pauses for the rewrite (a full store
    *                   rewrite, so amortize with N >> 1); the swap is the
    *                   crash-safe rename [[VariantStore.compact]] uses.

@@ -2,13 +2,11 @@ package graft
 
 import java.io.{File, PrintWriter}
 import java.nio.file.Files
-import java.util.concurrent.TimeUnit
 
-import scala.jdk.CollectionConverters._
 import scala.util.Random
 
 import graft.model.LoadConfig
-import graft.operators.VariantLoader
+import graft.operators.{GenicQcJob, VariantLoader}
 import graft.sources.VariantStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -18,8 +16,10 @@ import org.apache.spark.sql.functions._
  * then reloaded with a delta, must leave a hash-identical store —
  * variants with their minted rgd_ids, and details — under `local[1]` and
  * `local[4]`, at shuffle widths 1, 7 and 32, from one file or four gz
- * chunks. Every append writes at most one file per bucket, and every row
- * in a file hashes to that file's bucket.
+ * chunks. Each side records one bucket per core of the session that
+ * created it (4 and 1 here), every append writes at most one file per
+ * bucket, and every row in a file hashes to that file's bucket under the
+ * side's recorded count.
  */
 object StoreInvariance {
 
@@ -93,29 +93,48 @@ object StoreInvariance {
 
   private val bucketOf = raw".*_(\d+)(?:\..*)?$$".r
 
-  /** Violations of one-file-per-bucket and bucket membership among the
-    * files one append added to a store side. */
-  private def bucketProblems(spark: SparkSession, dir: File, before: Set[File],
+  /** Violations of one-file-per-bucket and bucket membership, under the
+    * side's recorded bucket count, among the files of a store side that
+    * are not in `before`. */
+  def bucketProblems(spark: SparkSession, dir: File, before: Set[File],
       keys: Seq[String]): Seq[String] = {
+    val n = VariantStore.recordedBuckets(spark, dir.getParent, dir.getName)
     val added = (parts(dir) -- before).toSeq
     val ids = added.map(f => f.getName -> (f.getName match {
       case bucketOf(b) => b.toInt
     })).toMap
     val shared = ids.groupBy(_._2).collect {
       case (b, fs) if fs.size > 1 => s"${dir.getName}: bucket $b in ${fs.size} files"
+      case (b, _) if b >= n => s"${dir.getName}: bucket $b of $n"
     }.toSeq
     val stray =
       if (added.isEmpty) Nil
       else spark.read.parquet(added.map(_.getPath): _*)
         .select(input_file_name().as("f"),
-          pmod(hash(keys.map(col): _*), lit(VariantStore.NumBuckets)).as("b"))
+          pmod(hash(keys.map(col): _*), lit(n)).as("b"))
         .distinct().collect().toSeq
         .map(r => (new File(new java.net.URI(r.getString(0))).getName, r.getInt(1)))
         .collect { case (f, b) if ids(f) != b => s"${dir.getName}: row of bucket $b in $f" }
     shared ++ stray
   }
 
-  private def digest(df: DataFrame): String = {
+  val sides: Seq[(String, Seq[String])] = Seq(
+    "variants" -> Seq("chromosome", "start_pos"),
+    "details" -> Seq("rgd_id", "sample_id"))
+
+  /** A store side as it was written before bucket counts were recorded:
+    * [[VariantStore.LegacyBuckets]] buckets written from four tasks, and
+    * no count record. */
+  def writeLegacySide(spark: SparkSession, df: DataFrame, path: String,
+      keys: Seq[String]): Unit = {
+    val tbl = s"graft_legacy_${Math.abs(path.hashCode)}"
+    df.repartition(4, keys.map(col): _*).write
+      .bucketBy(VariantStore.LegacyBuckets, keys.head, keys.tail: _*)
+      .mode("overwrite").format("parquet").option("path", path).saveAsTable(tbl)
+    spark.sql(s"DROP TABLE $tbl")
+  }
+
+  def digest(df: DataFrame): String = {
     val rows = df.collect().map(_.toString).sorted.mkString("\n")
     java.security.MessageDigest.getInstance("SHA-256")
       .digest(rows.getBytes("UTF-8")).map("%02x".format(_)).mkString
@@ -123,14 +142,12 @@ object StoreInvariance {
 
   /** `--runLoad` of `input` into `store` as the CLI runs it; returns the
     * bucket problems of its append. */
-  private def load(spark: SparkSession, input: String, store: File): Seq[String] = {
+  def load(spark: SparkSession, input: String, store: File): Seq[String] = {
     val dir = store.getPath
     val config = LoadConfig(mapKey = 372, sampleDict = sampleDict,
       rgdIdSeed = VariantStore.maxRgdId(spark, dir, 1000L))
     val r = VariantLoader.load(spark, input, genes(spark),
       VariantStore.variants(spark, dir), VariantStore.detailKeys(spark, dir), config)
-    val sides = Seq("variants" -> Seq("chromosome", "start_pos"),
-      "details" -> Seq("rgd_id", "sample_id"))
     val before = sides.map { case (side, _) => parts(new File(store, side)) }
     VariantStore.append(r, dir)
     r.unpersist()
@@ -153,8 +170,12 @@ object StoreInvariance {
       spark.conf.set("spark.sql.shuffle.partitions", width.toString)
       try {
         val store = new File(work, s"store-$width-$input")
+        val cores = spark.sparkContext.defaultParallelism
         val problems = load(spark, new File(fixture, input).getPath, store) ++
-          load(spark, new File(fixture, "delta.vcf").getPath, store)
+          load(spark, new File(fixture, "delta.vcf").getPath, store) ++
+          sides.map(s => s._1 -> VariantStore.recordedBuckets(spark, store.getPath, s._1))
+            .collect { case (side, n) if n != cores =>
+              s"$master $side records $n buckets, not $cores" }
         val vs = VariantStore.variants(spark, store.getPath)
         val ds = spark.read.parquet(s"$store/details")
         (Outcome(s"$master width=$width input=$input", digest(vs), digest(ds),
@@ -180,39 +201,35 @@ object StoreInvariance {
 class StoreInvarianceSpec extends SparkSpec {
   import StoreInvariance.Outcome
 
-  /** The grid under `master` in a child JVM with this JVM's module flags. */
+  /** The grid under `master` in a child JVM. */
   private def inChildJvm(master: String, fixture: File, work: File)
       : (Seq[Outcome], Seq[String]) = {
-    val inherited = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.asScala.toSeq
-    val opens = inherited.zip(inherited.drop(1) :+ "").flatMap {
-      case ("--add-opens", v) => Seq("--add-opens", v)
-      case (a, _) if a.startsWith("--add-opens=") || a.startsWith("-Dspark.") => Seq(a)
-      case _ => Nil
-    }
-    val cmd = Seq(s"${System.getProperty("java.home")}/bin/java") ++ opens ++
-      Seq("-Xmx1g", "-cp", System.getProperty("java.class.path"),
-        "graft.StoreInvariance", master, fixture.getPath, work.getPath)
-    val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
-    val out = scala.io.Source.fromInputStream(p.getInputStream).getLines().toList
-    assert(p.waitFor(10, TimeUnit.MINUTES) && p.exitValue() == 0,
-      out.takeRight(40).mkString("\n"))
-    val fields = out.map(_.split("\t", -1).toSeq)
+    val fields = SparkSpec.runInChildJvm("graft.StoreInvariance", master,
+      fixture.getPath, work.getPath).map(_.split("\t", -1).toSeq)
     (fields.collect { case Seq("OUTCOME", l, v, d, nv, nd) =>
       Outcome(l, v, d, nv.toLong, nd.toLong) },
       fields.collect { case Seq("PROBLEM", p) => p })
   }
 
-  test("load + reload store is hash-identical across masters, widths and chunking") {
+  private final class Grid(val fixture: File, val outcomes: Seq[Outcome],
+      val problems: Seq[String], val storeByBuckets: Map[Int, String])
+
+  /** The grid here under `local[4]` and in a `local[1]` child JVM; its
+    * stores stay on disk for the plan test. */
+  private lazy val grid: Grid = {
     val fixture = Files.createTempDirectory("graft-invariance").toFile
     StoreInvariance.writeFixture(fixture)
-    val (here, hereProblems) = StoreInvariance.runGrid(spark, fixture,
-      Files.createTempDirectory("graft-invariance-4").toFile)
-    val (child, childProblems) = inChildJvm("local[1]", fixture,
+    val (work4, work1) = (Files.createTempDirectory("graft-invariance-4").toFile,
       Files.createTempDirectory("graft-invariance-1").toFile)
-    assert(hereProblems.isEmpty && childProblems.isEmpty,
-      (hereProblems ++ childProblems).mkString("\n"))
-    val all = here ++ child
+    val (here, hereProblems) = StoreInvariance.runGrid(spark, fixture, work4)
+    val (child, childProblems) = inChildJvm("local[1]", fixture, work1)
+    new Grid(fixture, here ++ child, hereProblems ++ childProblems,
+      Map(4 -> s"$work4/store-1-cohort.vcf", 1 -> s"$work1/store-1-cohort.vcf"))
+  }
+
+  test("load + reload store is hash-identical across masters, widths and chunking") {
+    assert(grid.problems.isEmpty, grid.problems.mkString("\n"))
+    val all = grid.outcomes
     assert(all.size == 12 && all.map(_.label).distinct.size == 12, all.mkString("\n"))
     val reference = all.head
     all.foreach { o =>
@@ -222,36 +239,75 @@ class StoreInvarianceSpec extends SparkSpec {
     assert(reference.nVariants > 300 && reference.nDetails > 1000, reference)
   }
 
+  // at recorded counts 1 and 4, crossed with shuffle widths 1, 7 and 32
   test("J4 and J6 shuffle only the batch side against the bucketed store") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-invariance-plan").toString
-    val fixture = Files.createTempDirectory("graft-invariance-fixture").toFile
-    StoreInvariance.writeFixture(fixture)
     val config = LoadConfig(mapKey = 372, sampleDict = StoreInvariance.sampleDict)
-    val genes = Seq((1, "1", 1200L, 1600L))
-      .toDF("gene_rgd_id", "chromosome", "start_pos", "stop_pos")
-    val r = VariantLoader.load(spark, s"$fixture/delta.vcf", genes,
-      VariantStore.variants(spark, dir), VariantStore.detailKeys(spark, dir), config)
-    VariantStore.append(r, dir)
-    r.unpersist()
+    def assertOneExchange(label: String, df: DataFrame): Unit = {
+      val plan = df.queryExecution.executedPlan.toString
+      assert("Exchange hashpartitioning".r.findAllIn(plan).length == 1, s"$label\n$plan")
+    }
+    val batch = Seq(("1", 1234L, Option("A"), Option.empty[String]))
+      .toDF("chromosome", "start_pos", "ref_nuc", "var_nuc")
+    val variants = Seq((5L, "1", 1234L, 0, "0/1:3,4:7\t1/1:0,9:9"))
+      .toDF("rgd_id", "chromosome", "start_pos", "allele_idx", "genotypes")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
     try {
-      def assertOneExchange(df: DataFrame): Unit = {
-        val plan = df.queryExecution.executedPlan.toString
-        assert("Exchange hashpartitioning".r.findAllIn(plan).length == 1, plan)
+      for ((n, dir) <- grid.storeByBuckets.toSeq.sorted; width <- Seq(1, 7, 32)) {
+        StoreInvariance.sides.foreach { case (side, _) =>
+          assert(VariantStore.recordedBuckets(spark, dir, side) == n, s"$dir $side")
+        }
+        spark.conf.set("spark.sql.shuffle.partitions", width.toString)
+        assertOneExchange(s"J4 at $n buckets, width $width",
+          VariantLoader.matchStore(batch, VariantStore.variants(spark, dir)))
+        assertOneExchange(s"J6 at $n buckets, width $width",
+          VariantLoader.sampleDetails(variants, VariantStore.detailKeys(spark, dir),
+            config, Some(Map(0 -> 101, 1 -> 102)), intraBatchDedup = true))
       }
-      val batch = Seq(("1", 1234L, Option("A"), Option.empty[String]))
-        .toDF("chromosome", "start_pos", "ref_nuc", "var_nuc")
-      assertOneExchange(VariantLoader.matchStore(batch, VariantStore.variants(spark, dir)))
-      val variants = Seq((5L, "1", 1234L, 0, "0/1:3,4:7\t1/1:0,9:9"))
-        .toDF("rgd_id", "chromosome", "start_pos", "allele_idx", "genotypes")
-      assertOneExchange(VariantLoader.sampleDetails(variants,
-        VariantStore.detailKeys(spark, dir), config, Some(Map(0 -> 101, 1 -> 102)),
-        intraBatchDedup = true))
     } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
+      Seq("spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold",
+        "spark.sql.shuffle.partitions").foreach(spark.conf.unset)
     }
+  }
+
+  test("a legacy 32-bucket store without a record reloads and QCs like a " +
+      "fresh store") {
+    import spark.implicits._
+    val fixture = grid.fixture
+    val fresh = Files.createTempDirectory("graft-invariance-fresh").toFile
+    val legacy = Files.createTempDirectory("graft-invariance-legacy").toFile
+    assert(StoreInvariance.load(spark, s"$fixture/cohort.vcf", fresh).isEmpty)
+    StoreInvariance.sides.foreach { case (side, keys) =>
+      StoreInvariance.writeLegacySide(spark, spark.read.parquet(s"$fresh/$side"),
+        s"$legacy/$side", keys)
+      assert(VariantStore.recordedBuckets(spark, legacy.getPath, side) == 32)
+    }
+    // the reload appends to the legacy sides at their 32 buckets
+    val problems = Seq(fresh, legacy).flatMap(store =>
+      StoreInvariance.load(spark, s"$fixture/delta.vcf", store))
+    assert(problems.isEmpty, problems.mkString("\n"))
+    val revised = Seq((1, "1", 1000L, 1300L), (6, "2", 1400L, 1500L),
+      (7, "X", 1000L, 3000L)).toDF("gene_rgd_id", "chromosome", "start_pos", "stop_pos")
+    val flips = Seq(fresh, legacy).map { store =>
+      val dir = store.getPath
+      val changes = GenicQcJob.run(spark, s"$fixture/delta.vcf", revised,
+        VariantStore.variants(spark, dir),
+        LoadConfig(mapKey = 372, sampleDict = StoreInvariance.sampleDict)).persist()
+      val n = changes.count()
+      VariantStore.applyGenicUpdates(spark, dir,
+        changes.select(col("rgd_id"), col("genic_status")))
+      changes.unpersist()
+      n
+    }
+    assert(flips.head > 0 && flips.distinct.size == 1, flips)
+    // the QC rewrite re-buckets the variants at this session's count
+    assert(VariantStore.recordedBuckets(spark, legacy.getPath, "variants") == 4)
+    assert(VariantStore.recordedBuckets(spark, legacy.getPath, "details") == 32)
+    assert(StoreInvariance.digest(VariantStore.variants(spark, fresh.getPath)) ==
+      StoreInvariance.digest(VariantStore.variants(spark, legacy.getPath)))
+    assert(StoreInvariance.digest(spark.read.parquet(s"$fresh/details")) ==
+      StoreInvariance.digest(spark.read.parquet(s"$legacy/details")))
   }
 }

@@ -128,7 +128,8 @@ class VariantStoreSpec extends SparkSpec {
     VariantStore.compact(spark, dir)
 
     assert(dataFiles("variants_ext") < filesBefore)
-    assert(dataFiles("variants_ext") <= VariantStore.NumBuckets)
+    assert(dataFiles("variants_ext") <=
+      VariantStore.recordedBuckets(spark, dir, "variants_ext"))
     val after = VariantStore.variantsExt(spark, dir)
       .orderBy("rgd_id", "chromosome").collect().toSeq
     assert(after == before)
@@ -146,13 +147,23 @@ class VariantStoreSpec extends SparkSpec {
     }
   }
 
+  /** Problems of a store side against its recorded bucket count: a
+    * bucket id beyond the count, a bucket in two files, a row in the
+    * wrong bucket's file. */
+  private def bucketProblems(dir: String, side: String): Seq[String] =
+    StoreInvariance.bucketProblems(spark, new java.io.File(s"$dir/$side"), Set.empty,
+      StoreInvariance.sides.toMap.apply(side))
+
+  // a table of crash states: rewrites at each step, and first-ever appends
   test("half-finished swap recovers on next session touch") {
     val dir = Files.createTempDirectory("graft-store-crash").toString
-    val r = VariantLoader.load(spark, vcf, genes,
-      VariantStore.variants(spark, dir),
-      VariantStore.detailKeys(spark, dir), config)
-    VariantStore.append(r, dir)
-    r.unpersist()
+    def loadInto(d: String): Unit = {
+      val r = VariantLoader.load(spark, vcf, genes,
+        VariantStore.variants(spark, d), VariantStore.detailKeys(spark, d), config)
+      VariantStore.append(r, d)
+      r.unpersist()
+    }
+    loadInto(dir)
     val want = VariantStore.variants(spark, dir)
       .orderBy("rgd_id").collect().toSeq
     assert(want.nonEmpty)
@@ -172,29 +183,82 @@ class VariantStoreSpec extends SparkSpec {
         else java.nio.file.Files.copy(f.toPath, t.toPath)
       }
     }
+    def dropRecord(d: java.io.File): Unit =
+      Seq("_graft_buckets", "._graft_buckets.crc")
+        .foreach(n => new java.io.File(d, n).delete())
     val fin = new java.io.File(s"$dir/variants")
     val tmp = new java.io.File(s"$dir/variants_tmp")
     val old = new java.io.File(s"$dir/variants_old")
 
-    // crash BETWEEN the two renames: live dir moved aside, complete _tmp
-    // not yet promoted → recovery must promote _tmp and drop _old
-    copyDir(fin, tmp)
-    assert(fin.renameTo(old))
-    forgetCatalog()
-    val recovered = VariantStore.variants(spark, dir)
-      .orderBy("rgd_id").collect().toSeq
-    assert(recovered == want)
-    assert(fin.exists && !tmp.exists && !old.exists)
+    // (case, the crash's leftovers): recovery keeps or restores the live
+    // data, or promotes a `_tmp` only when it holds its count record
+    val crashes: Seq[(String, () => Unit)] = Seq(
+      "rewrite crashed writing _tmp, before its record" -> { () =>
+        copyDir(fin, tmp); dropRecord(tmp) },
+      "rewrite crashed between the renames, _tmp without its record" -> { () =>
+        copyDir(fin, tmp); dropRecord(tmp); assert(fin.renameTo(old)) },
+      "rewrite crashed between the renames, _tmp with its record" -> { () =>
+        copyDir(fin, tmp); assert(fin.renameTo(old)) },
+      "rewrite crashed after the promote: stale _tmp and _old" -> { () =>
+        copyDir(fin, tmp); copyDir(fin, old) })
+    crashes.foreach { case (label, crash) =>
+      crash()
+      forgetCatalog()
+      val recovered = VariantStore.variants(spark, dir)
+        .orderBy("rgd_id").collect().toSeq
+      assert(recovered == want, label)
+      assert(fin.exists && !tmp.exists && !old.exists, label)
+      assert(bucketProblems(dir, "variants").isEmpty, label)
+    }
 
-    // crash AFTER the promote: live dir intact, stale _tmp/_old garbage
-    // → recovery must keep the live data and delete the leftovers
-    copyDir(fin, tmp)
-    copyDir(fin, old)
-    forgetCatalog()
-    val survived = VariantStore.variants(spark, dir)
-      .orderBy("rgd_id").collect().toSeq
-    assert(survived == want)
-    assert(fin.exists && !tmp.exists && !old.exists)
+    // a first-ever append that crashed before its promote leaves a lone
+    // _tmp, with or without its record: the side reads as absent, and the
+    // next load creates it from scratch
+    Seq(true, false).foreach { withRecord =>
+      val label = s"first append crashed before the promote, record $withRecord"
+      val first = Files.createTempDirectory("graft-store-first").toString
+      val lone = new java.io.File(s"$first/variants_tmp")
+      copyDir(fin, lone)
+      if (!withRecord) dropRecord(lone)
+      assert(VariantStore.variants(spark, first).isEmpty, label)
+      loadInto(first)
+      assert(!lone.exists, label)
+      assert(VariantStore.variants(spark, first).orderBy("rgd_id").collect().toSeq
+        == want, label)
+      Seq("variants", "details").foreach { side =>
+        assert(VariantStore.recordedBuckets(spark, first, side) ==
+          spark.sparkContext.defaultParallelism, s"$label $side")
+        assert(bucketProblems(first, side).isEmpty, s"$label $side")
+      }
+    }
+  }
+
+  test("compact under local[2] re-buckets a legacy 32-bucket store to 2 " +
+      "buckets, content unchanged") {
+    val fixture = Files.createTempDirectory("graft-store-legacy-fx").toFile
+    StoreInvariance.writeFixture(fixture)
+    val fresh = Files.createTempDirectory("graft-store-legacy-src").toFile
+    assert(StoreInvariance.load(spark, s"$fixture/cohort.vcf", fresh).isEmpty)
+    val dir = Files.createTempDirectory("graft-store-legacy").toString
+    StoreInvariance.sides.foreach { case (side, keys) =>
+      StoreInvariance.writeLegacySide(spark, spark.read.parquet(s"$fresh/$side"),
+        s"$dir/$side", keys)
+    }
+    def content(side: String): String =
+      StoreInvariance.digest(spark.read.parquet(s"$dir/$side"))
+    val before = StoreInvariance.sides.map(s => content(s._1))
+    def dataFiles(side: String): Int =
+      new java.io.File(s"$dir/$side").listFiles().count(_.getName.startsWith("part-"))
+    assert(StoreInvariance.sides.forall(s => dataFiles(s._1) > 2))
+
+    SparkSpec.runInChildJvm("graft.CompactStore", "local[2]", dir)
+
+    assert(StoreInvariance.sides.map(s => content(s._1)) == before)
+    StoreInvariance.sides.foreach { case (side, _) =>
+      assert(VariantStore.recordedBuckets(spark, dir, side) == 2, side)
+      assert(dataFiles(side) == 2, side)
+      assert(bucketProblems(dir, side).isEmpty, side)
+    }
   }
 
   test("migrateDetails rewrites a pre-12-column store once, then no-ops") {
@@ -317,5 +381,14 @@ class VariantStoreSpec extends SparkSpec {
     VariantStore.applyGenicUpdates(spark, dir, change)
     assert(VariantStore.variants(spark, dir).select("genic_status")
       .as[String].collect().forall(_ == "GENIC"))
+  }
+}
+
+/** `CompactStore <master> <store dir>`: [[VariantStore.compact]] in a
+  * session on `master`. */
+object CompactStore {
+  def main(args: Array[String]): Unit = {
+    val spark = SparkSpec.session(args(0))
+    try VariantStore.compact(spark, args(1)) finally spark.stop()
   }
 }
