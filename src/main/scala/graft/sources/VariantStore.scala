@@ -3,6 +3,7 @@ package graft.sources
 import graft.operators.VariantLoader
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /**
  * The variant store — the engine's replacement for the reference's four
@@ -318,19 +319,23 @@ object VariantStore {
       fs.rename(fin, new org.apache.hadoop.fs.Path(oldPath))
     fs.rename(new org.apache.hadoop.fs.Path(tmpPath), fin)
     deletePath(spark, oldPath)
-    // next read re-registers the table from the swapped files
+    // the written schema is the files' schema: no inference on next read
+    register(spark, dir, side, keys, df.schema, n)
   }
 
   /** Recover a store side from a crash mid-[[overwriteSide]]. The swap's
     * invariant: `_old` exists ⟺ the writer got past the rename-aside,
     * which only happens after the `_tmp` write and its count record
     * completed — so when the final dir is missing and `_old` exists, a
-    * `_tmp` holding its record is complete and wins (the update had
-    * finished computing); a `_tmp` without one, or none, means an
-    * impossible interleaving on an atomic-rename filesystem, but `_old`
-    * restores the pre-update snapshot regardless. When the final dir
-    * exists, any surviving `_tmp`/`_old` are garbage from a crash after
-    * the promote (or an aborted write) and are deleted. */
+    * complete `_tmp` wins (the update had finished computing). Complete
+    * means it holds its record, or, for a swap begun by code that
+    * predates the record, Spark's `_SUCCESS` mark: that `_tmp` has
+    * [[LegacyBuckets]] buckets and is promoted as a legacy side. A `_tmp`
+    * with neither, or none, means an impossible interleaving on an
+    * atomic-rename filesystem, but `_old` restores the pre-update
+    * snapshot regardless. When the final dir exists, any surviving
+    * `_tmp`/`_old` are garbage from a crash after the promote (or an
+    * aborted write) and are deleted. */
   private def recoverSwap(spark: SparkSession, dir: String,
       side: String): Unit = {
     val fs = new org.apache.hadoop.fs.Path(dir)
@@ -339,7 +344,8 @@ object VariantStore {
     val tmp = new org.apache.hadoop.fs.Path(s"$dir/${side}_tmp")
     val old = new org.apache.hadoop.fs.Path(s"$dir/${side}_old")
     if (!fs.exists(fin) && fs.exists(old)) {
-      if (fs.exists(new org.apache.hadoop.fs.Path(tmp, BucketsFile))) {
+      if (Seq(BucketsFile, "_SUCCESS")
+          .exists(m => fs.exists(new org.apache.hadoop.fs.Path(tmp, m)))) {
         fs.rename(tmp, fin); fs.delete(old, true)
       } else { fs.rename(old, fin); fs.delete(tmp, true) }
     } else if (fs.exists(fin)) {
@@ -422,16 +428,22 @@ object VariantStore {
         !name.startsWith("_") && !name.startsWith(".")
       }
       if (!hasData) None
-      else {
-        val schemaDdl = spark.read.parquet(path).schema.toDDL
-        spark.sql(
-          s"""CREATE TABLE $tbl ($schemaDdl) USING PARQUET
-             |CLUSTERED BY (${keys.mkString(", ")})
-             |INTO ${recordedBuckets(spark, dir, side)} BUCKETS
-             |LOCATION '$path'""".stripMargin)
-        Some(tbl)
-      }
+      else Some(register(spark, dir, side, keys, spark.read.parquet(path).schema,
+        recordedBuckets(spark, dir, side)))
     }
+  }
+
+  /** Create the catalog entry of a store side over its files, bucketed
+    * `n` ways. Parquet reads every column back nullable. */
+  private def register(spark: SparkSession, dir: String, side: String,
+      keys: Seq[String], schema: StructType, n: Int): String = {
+    val tbl = tableName(dir, side)
+    val columns = StructType(schema.map(_.copy(nullable = true))).toDDL
+    spark.sql(
+      s"""CREATE TABLE $tbl ($columns) USING PARQUET
+         |CLUSTERED BY (${keys.mkString(", ")}) INTO $n BUCKETS
+         |LOCATION '$dir/$side'""".stripMargin)
+    tbl
   }
 
   private def deletePath(spark: SparkSession, path: String): Unit = {

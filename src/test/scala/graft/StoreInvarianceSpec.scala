@@ -215,7 +215,8 @@ class StoreInvarianceSpec extends SparkSpec {
       val problems: Seq[String], val storeByBuckets: Map[Int, String])
 
   /** The grid here under `local[4]` and in a `local[1]` child JVM; its
-    * stores stay on disk for the plan test. */
+    * stores stay on disk for the plan test, with a legacy 32-bucket copy
+    * of the `local[4]` one. */
   private lazy val grid: Grid = {
     val fixture = Files.createTempDirectory("graft-invariance").toFile
     StoreInvariance.writeFixture(fixture)
@@ -223,8 +224,14 @@ class StoreInvarianceSpec extends SparkSpec {
       Files.createTempDirectory("graft-invariance-1").toFile)
     val (here, hereProblems) = StoreInvariance.runGrid(spark, fixture, work4)
     val (child, childProblems) = inChildJvm("local[1]", fixture, work1)
+    val legacy = Files.createTempDirectory("graft-invariance-32").toFile
+    StoreInvariance.sides.foreach { case (side, keys) =>
+      StoreInvariance.writeLegacySide(spark,
+        spark.read.parquet(s"$work4/store-1-cohort.vcf/$side"), s"$legacy/$side", keys)
+    }
     new Grid(fixture, here ++ child, hereProblems ++ childProblems,
-      Map(4 -> s"$work4/store-1-cohort.vcf", 1 -> s"$work1/store-1-cohort.vcf"))
+      Map(4 -> s"$work4/store-1-cohort.vcf", 1 -> s"$work1/store-1-cohort.vcf",
+        VariantStore.LegacyBuckets -> legacy.getPath))
   }
 
   test("load + reload store is hash-identical across masters, widths and chunking") {
@@ -239,7 +246,8 @@ class StoreInvarianceSpec extends SparkSpec {
     assert(reference.nVariants > 300 && reference.nDetails > 1000, reference)
   }
 
-  // at recorded counts 1 and 4, crossed with shuffle widths 1, 7 and 32
+  // at recorded counts 1 and 4 and a legacy store's 32, crossed with
+  // shuffle widths 1, 7 and 32
   test("J4 and J6 shuffle only the batch side against the bucketed store") {
     import spark.implicits._
     val config = LoadConfig(mapKey = 372, sampleDict = StoreInvariance.sampleDict)

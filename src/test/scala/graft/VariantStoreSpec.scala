@@ -183,20 +183,23 @@ class VariantStoreSpec extends SparkSpec {
         else java.nio.file.Files.copy(f.toPath, t.toPath)
       }
     }
-    def dropRecord(d: java.io.File): Unit =
-      Seq("_graft_buckets", "._graft_buckets.crc")
+    def drop(d: java.io.File, marks: String*): Unit =
+      marks.flatMap(m => Seq(m, s".$m.crc"))
         .foreach(n => new java.io.File(d, n).delete())
+    def dropRecord(d: java.io.File): Unit = drop(d, "_graft_buckets")
     val fin = new java.io.File(s"$dir/variants")
     val tmp = new java.io.File(s"$dir/variants_tmp")
     val old = new java.io.File(s"$dir/variants_old")
 
     // (case, the crash's leftovers): recovery keeps or restores the live
-    // data, or promotes a `_tmp` only when it holds its count record
+    // data, or promotes a complete `_tmp` (one holding its count record)
     val crashes: Seq[(String, () => Unit)] = Seq(
       "rewrite crashed writing _tmp, before its record" -> { () =>
         copyDir(fin, tmp); dropRecord(tmp) },
-      "rewrite crashed between the renames, _tmp without its record" -> { () =>
-        copyDir(fin, tmp); dropRecord(tmp); assert(fin.renameTo(old)) },
+      "rewrite crashed between the renames, _tmp without its record or " +
+          "_SUCCESS" -> { () =>
+        copyDir(fin, tmp); drop(tmp, "_graft_buckets", "_SUCCESS")
+        assert(fin.renameTo(old)) },
       "rewrite crashed between the renames, _tmp with its record" -> { () =>
         copyDir(fin, tmp); assert(fin.renameTo(old)) },
       "rewrite crashed after the promote: stale _tmp and _old" -> { () =>
@@ -231,6 +234,26 @@ class VariantStoreSpec extends SparkSpec {
         assert(bucketProblems(first, side).isEmpty, s"$label $side")
       }
     }
+
+    // a swap begun by code that predates the record, crashed between the
+    // renames: `_old` plus a complete 32-bucket `_tmp` (`_SUCCESS`, no
+    // record). The update had finished, so the `_tmp` is promoted and
+    // reads as a legacy side.
+    val label = "pre-record rewrite crashed between the renames"
+    val updated = VariantStore.variants(spark, dir)
+      .withColumn("end_pos", col("end_pos") + 1)
+    val wantUpdated = updated.orderBy("rgd_id").collect().toSeq
+    StoreInvariance.writeLegacySide(spark, updated, tmp.getPath,
+      StoreInvariance.sides.toMap.apply("variants"))
+    assert(new java.io.File(tmp, "_SUCCESS").exists, label)
+    assert(fin.renameTo(old), label)
+    forgetCatalog()
+    assert(VariantStore.variants(spark, dir).orderBy("rgd_id").collect().toSeq
+      == wantUpdated, label)
+    assert(fin.exists && !tmp.exists && !old.exists, label)
+    assert(VariantStore.recordedBuckets(spark, dir, "variants") ==
+      VariantStore.LegacyBuckets, label)
+    assert(bucketProblems(dir, "variants").isEmpty, label)
   }
 
   test("compact under local[2] re-buckets a legacy 32-bucket store to 2 " +
