@@ -42,6 +42,17 @@ object GraftSession {
     spark
   }
 
+  /** A command-line tool's session (`Manager`, `StreamLoadBench`): as
+    * wide as this machine, `local[<cores>]` with one shuffle partition
+    * per core, so a store the tool creates gets one bucket per core.
+    * `SPARK_MASTER` overrides the master, `SPARK_GRAFT_CPUS` the
+    * shuffle width. */
+  private[graft] def cli(appName: String): SparkSession = {
+    val cores = Runtime.getRuntime.availableProcessors
+    apply(sys.env.getOrElse("SPARK_MASTER", s"local[$cores]"),
+      sys.env.get("SPARK_GRAFT_CPUS").fold(cores)(_.toInt), Some(appName))
+  }
+
   /** The battery drivers' session: `local[SPARK_GRAFT_CPUS]` (default 32)
     * with one shuffle partition per core. */
   def battery(): SparkSession = {

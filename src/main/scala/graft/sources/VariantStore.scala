@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.operators.VariantLoader
+import graft.streaming.DedupIngest.renameOrThrow
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -77,13 +78,14 @@ object VariantStore {
       keys: Seq[String]): Unit = {
     val t0 = System.currentTimeMillis()
     val spark = df.sparkSession
-    ensureTable(spark, dir, side, keys) match {
+    val store = qualified(spark, dir)
+    ensureTable(spark, store, side, keys) match {
       case Some(tbl) =>
-        bucketed(df, keys, recordedBuckets(spark, dir, side))
+        bucketed(df, keys, recordedBuckets(spark, store, side))
           .mode(SaveMode.Append).format("parquet")
-          .option("path", s"$dir/$side")
+          .option("path", s"$store/$side")
           .saveAsTable(tbl)
-      case None => overwriteSide(spark, dir, side, keys, df)
+      case None => overwriteSide(spark, store, side, keys, df)
     }
     println(f"[graft] append $side: ${(System.currentTimeMillis() - t0) / 1000.0}%.1f s")
   }
@@ -139,7 +141,7 @@ object VariantStore {
       "variants_ext", variantKeys)
 
   def variantsExt(spark: SparkSession, dir: String): DataFrame =
-    ensureTable(spark, dir, "variants_ext", variantKeys) match {
+    ensureTable(spark, qualified(spark, dir), "variants_ext", variantKeys) match {
       case Some(tbl) =>
         spark.table(tbl).select(VariantLoader.variantCols.map(col): _*)
       case None => emptyVariants(spark)
@@ -173,7 +175,7 @@ object VariantStore {
     * back as the bucketed table: joins on (chromosome, start_pos) skip
     * the store-side shuffle. */
   def variants(spark: SparkSession, dir: String): DataFrame =
-    ensureTable(spark, dir, "variants", variantKeys) match {
+    ensureTable(spark, qualified(spark, dir), "variants", variantKeys) match {
       case Some(tbl) =>
         spark.table(tbl).select(VariantLoader.variantCols.map(col): _*)
       case None => emptyVariants(spark)
@@ -182,7 +184,7 @@ object VariantStore {
   /** Snapshot read of `(rgd_id, sample_id)` detail keys (bucketed — the
     * J6 anti-join skips the store-side shuffle). */
   def detailKeys(spark: SparkSession, dir: String): DataFrame =
-    ensureTable(spark, dir, "details", detailKeys_) match {
+    ensureTable(spark, qualified(spark, dir), "details", detailKeys_) match {
       case Some(tbl) => spark.table(tbl).select("rgd_id", "sample_id")
       case None =>
         import spark.implicits._
@@ -267,16 +269,18 @@ object VariantStore {
     * join the `(rgd_id, column)` fixes onto the variants and take the
     * fix where one exists, then rewrite the variant side. */
   private def patchVariantColumn(spark: SparkSession, dir: String,
-      fixes: DataFrame, column: String): Unit =
-    graft.streaming.LedgerLock.withLock(spark, dir) {
-      val merged = variants(spark, dir)
+      fixes: DataFrame, column: String): Unit = {
+    val store = qualified(spark, dir)
+    graft.streaming.LedgerLock.withLock(spark, store) {
+      val merged = variants(spark, store)
         .join(fixes.select(col("rgd_id").as("u_rgd_id"),
           col(column).as("u_value")), col("rgd_id") === col("u_rgd_id"),
           "left")
         .withColumn(column, coalesce(col("u_value"), col(column)))
         .drop("u_rgd_id", "u_value")
-      overwriteVariants(spark, dir, merged)
+      overwriteVariants(spark, store, merged)
     }
+  }
 
   /** Full rewrite of the variant side: write the merged frame to a temp
     * bucketed table (the old files stay readable while it runs), then
@@ -315,9 +319,13 @@ object VariantStore {
     // `_old` + a complete `_tmp` (recoverSwap promotes tmp); a crash after
     // the promote leaves only garbage `_old`/`_tmp` (recoverSwap deletes).
     // The count record travels with the data in the same renames.
+    // A refused rename throws before anything is deleted: a refused
+    // promote leaves `_old` + a complete `_tmp`, the crash state above.
     if (fs.exists(fin))
-      fs.rename(fin, new org.apache.hadoop.fs.Path(oldPath))
-    fs.rename(new org.apache.hadoop.fs.Path(tmpPath), fin)
+      renameOrThrow(fs, fin, new org.apache.hadoop.fs.Path(oldPath),
+        "VariantStore.overwriteSide")
+    renameOrThrow(fs, new org.apache.hadoop.fs.Path(tmpPath), fin,
+      "VariantStore.overwriteSide")
     deletePath(spark, oldPath)
     // the written schema is the files' schema: no inference on next read
     register(spark, dir, side, keys, df.schema, n)
@@ -346,8 +354,12 @@ object VariantStore {
     if (!fs.exists(fin) && fs.exists(old)) {
       if (Seq(BucketsFile, "_SUCCESS")
           .exists(m => fs.exists(new org.apache.hadoop.fs.Path(tmp, m)))) {
-        fs.rename(tmp, fin); fs.delete(old, true)
-      } else { fs.rename(old, fin); fs.delete(tmp, true) }
+        renameOrThrow(fs, tmp, fin, "VariantStore.recoverSwap")
+        fs.delete(old, true)
+      } else {
+        renameOrThrow(fs, old, fin, "VariantStore.recoverSwap")
+        fs.delete(tmp, true)
+      }
     } else if (fs.exists(fin)) {
       if (fs.exists(tmp)) fs.delete(tmp, true)
       if (fs.exists(old)) fs.delete(old, true)
@@ -364,8 +376,9 @@ object VariantStore {
     * the details side once, adding the missing reference columns with
     * the unset-bean defaults, via the same crash-safe temp-table swap
     * the K5/K6 updates use. No-op when the store is already current. */
-  def migrateDetails(spark: SparkSession, dir: String): Unit =
-    ensureTable(spark, dir, "details", detailKeys_).foreach { tbl =>
+  def migrateDetails(spark: SparkSession, dir: String): Unit = {
+    val store = qualified(spark, dir)
+    ensureTable(spark, store, "details", detailKeys_).foreach { tbl =>
       val cur = spark.table(tbl)
       if (!cur.columns.contains("source")) {
         val full = cur.select(
@@ -381,9 +394,10 @@ object VariantStore {
           lit(0).as("zygosity_num_allele"),
           col("zygosity_in_pseudo"),
           lit(null).cast("int").as("quality_score"))
-        overwriteSide(spark, dir, "details", detailKeys_, full)
+        overwriteSide(spark, store, "details", detailKeys_, full)
       }
     }
+  }
 
   /** Compact a store side back to one file per bucket. Every append
     * (each load, each streaming micro-batch) lands up to one new file per
@@ -392,13 +406,28 @@ object VariantStore {
     * + directory-swap rewrite the K5/K6 updates use: readers in flight
     * keep their snapshot, content is unchanged, and the side comes back
     * bucketed at this session's count (a legacy 32-bucket side included). */
-  def compact(spark: SparkSession, dir: String): Unit =
+  def compact(spark: SparkSession, dir: String): Unit = {
+    val store = qualified(spark, dir)
     Seq("variants" -> variantKeys, "variants_ext" -> variantKeys,
       "details" -> detailKeys_).foreach { case (side, keys) =>
-      ensureTable(spark, dir, side, keys).foreach { tbl =>
-        overwriteSide(spark, dir, side, keys, spark.table(tbl))
+      ensureTable(spark, store, side, keys).foreach { tbl =>
+        overwriteSide(spark, store, side, keys, spark.table(tbl))
       }
     }
+  }
+
+  /** The store directory as a fully qualified path. Spark resolves a
+    * relative catalog LOCATION (and `saveAsTable`'s path) under the
+    * session warehouse, but a Hadoop call resolves it against the
+    * working directory. Each entry point that reaches a bucketed side
+    * passes this path on, so both name the same directory (the plain
+    * parquet paths — samples, ledger — resolve against the working
+    * directory either way). */
+  private def qualified(spark: SparkSession, dir: String): String = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .makeQualified(p).toString
+  }
 
   /** Deterministic catalog name for one store side (the catalog is
     * session-scoped; the name only has to avoid collisions between

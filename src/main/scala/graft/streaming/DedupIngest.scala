@@ -72,7 +72,7 @@ object DedupIngest {
     * set that resurrects deleted docs) instead of a visible error.
     * Crash recovery heals the on-disk state either way; this makes the
     * CURRENT process stop instead of computing against it. */
-  private[streaming] def renameOrThrow(f: org.apache.hadoop.fs.FileSystem,
+  private[graft] def renameOrThrow(f: org.apache.hadoop.fs.FileSystem,
       src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path,
       what: String): Unit =
     if (!f.rename(src, dst))

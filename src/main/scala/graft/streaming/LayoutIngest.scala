@@ -197,22 +197,29 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     * micro-batch for a constant. Same invalidation contract as the
     * stats cache ([[clearStatsCache]] — drop + re-bootstrap at the
     * SAME path). */
-  private val MaxGridCache = 4096
-  private val gridCache = new java.util.LinkedHashMap[String, Grid](
-      16, 0.75f, true) {
-    override def removeEldestEntry(
-        e: java.util.Map.Entry[String, Grid]): Boolean =
-      size() > MaxGridCache
-  }
+  private val gridCache = new Lru[String, Grid](4096)
 
-  def readGrid(spark: SparkSession, dir: String): Grid = {
-    gridCache.synchronized {
-      val hit = gridCache.get(dir)
-      if (hit != null) return hit
+  def readGrid(spark: SparkSession, dir: String): Grid =
+    gridCache.getOrLoad(dir)(readGridUncached(spark, dir))
+
+  /** The bounded LRU map (access order, eldest evicted past `capacity`)
+    * behind the grid, stats, bloom and dml-log caches. Synchronized on
+    * itself; a miss loads outside the lock, so two racing readers may
+    * both load an entry — every cached value is immutable, so either
+    * copy serves. */
+  private final class Lru[K, V](capacity: Int) {
+    private val m = new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
+        size() > capacity
     }
-    val g = readGridUncached(spark, dir)
-    gridCache.synchronized(gridCache.put(dir, g)): Unit
-    g
+    def get(k: K): Option[V] = synchronized(Option(m.get(k)))
+    def put(k: K, v: V): Unit = synchronized(m.put(k, v): Unit)
+    def clear(): Unit = synchronized(m.clear())
+    def getOrLoad(k: K)(load: => V): V = get(k).getOrElse {
+      val v = load
+      put(k, v)
+      v
+    }
   }
 
   private def readGridUncached(spark: SparkSession, dir: String): Grid = {
@@ -1255,13 +1262,8 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     * would be indistinguishable, so the window re-reads; var — the
     * cache spec pins the hit path without waiting the window out). */
   private[graft] var DmlLogMtimeSlackMs = 2000L
-  private val MaxDmlLogCache = 1024
-  private val dmlLogCache = new java.util.LinkedHashMap[String,
-      (Seq[(String, Long, Long)], Seq[DmlRecord])](16, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[String,
-        (Seq[(String, Long, Long)], Seq[DmlRecord])]): Boolean =
-      size() > MaxDmlLogCache
-  }
+  private val dmlLogCache =
+    new Lru[String, (Seq[(String, Long, Long)], Seq[DmlRecord])](1024)
   /** Test instrumentation for the cache (no behavior rides on them). */
   private[graft] var dmlLogCacheHits = 0L
   private[graft] var dmlLogCacheMisses = 0L
@@ -1279,19 +1281,15 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     // inside the slack window the fingerprint is not yet decisive
     val settled = print.forall(p =>
       System.currentTimeMillis() - p._2 >= DmlLogMtimeSlackMs)
-    if (settled) dmlLogCache.synchronized {
-      val hit = dmlLogCache.get(key)
-      if (hit != null && hit._1 == print) {
-        dmlLogCacheHits += 1
-        return hit._2
-      }
-    }
-    val parsed = parseDmlLogs(f, logs)
+    val hit = dmlLogCache.get(key).filter(c => settled && c._1 == print)
     dmlLogCache.synchronized {
-      dmlLogCacheMisses += 1
-      dmlLogCache.put(key, (print, parsed)): Unit
+      if (hit.isDefined) dmlLogCacheHits += 1 else dmlLogCacheMisses += 1
     }
-    parsed
+    hit.map(_._2).getOrElse {
+      val parsed = parseDmlLogs(f, logs)
+      dmlLogCache.put(key, (print, parsed))
+      parsed
+    }
   }
 
   private def parseDmlLogs(f: FileSystem,
@@ -2176,7 +2174,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
           (mergeIntents(b) || mergeRec.contains(b))) {
         stalled = true
       } else {
-        val slice = provenanceScan(spark, srcDir, b, b)
+        val slice = readBatchRange(spark, srcDir, b, b)
           .drop(KeyCol, BatchCol)
         LedgerLock.withLockWait(spark, dstDir, lockWaitMs) {
           // a promotion racing this sync fences mid-pull: the fence is
@@ -2997,30 +2995,21 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
   /** Bloom sidecar bytes, LRU-cached by write-once unit path; None
     * when absent or unreadable (probe degrades to reading the unit —
     * same conservative rule as missing stats). */
-  private val MaxBloomCache = 128
-  private val bloomCache = new java.util.LinkedHashMap[
-      (String, String), Option[Array[Byte]]](16, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[
-        (String, String), Option[Array[Byte]]]): Boolean =
-      size() > MaxBloomCache
-  }
+  private val bloomCache =
+    new Lru[(String, String), Option[Array[Byte]]](128)
 
   private def unitBloom(f: FileSystem, d: Path, c: String)
       : Option[org.apache.spark.util.sketch.BloomFilter] = {
-    val key = (d.toString, c)
-    val bytes = bloomCache.synchronized(Option(bloomCache.get(key)))
-      .getOrElse {
-        val r = scala.util.Try {
-          val p = new Path(d, bloomFile(c))
-          if (!f.exists(p)) None
-          else {
-            val in = f.open(p)
-            try Some(in.readAllBytes()) finally in.close()
-          }
-        }.toOption.flatten
-        bloomCache.synchronized(bloomCache.put(key, r)): Unit
-        r
-      }
+    val bytes = bloomCache.getOrLoad((d.toString, c)) {
+      scala.util.Try {
+        val p = new Path(d, bloomFile(c))
+        if (!f.exists(p)) None
+        else {
+          val in = f.open(p)
+          try Some(in.readAllBytes()) finally in.close()
+        }
+      }.toOption.flatten
+    }
     bytes.flatMap(b => scala.util.Try(
       org.apache.spark.util.sketch.BloomFilter.readFrom(
         new java.io.ByteArrayInputStream(b))).toOption)
@@ -3106,23 +3095,24 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     }
   }
 
-  /** (units a point probe must read, all live units): a unit is read
-    * when its bloom might contain ANY probed value, or when it has no
-    * bloom for the column (conservative). No false negatives — a unit
-    * holding a probed value is always read. Probes run on
-    * [[probePool]] — per-unit bloom reads in parallel, not a serial
-    * driver walk. */
+  /** (units a point probe must read, all live units) — the
+    * [[selectUnits]] of [[scanPoints]]: a unit is read when its bloom
+    * might contain ANY probed value, or when it has no bloom for the
+    * column (conservative). No false negatives — a unit holding a
+    * probed value is always read. */
   private[graft] def pointProbeDirs(spark: SparkSession, dir: String,
-      column: String, values: Seq[Any]): (Seq[Path], Seq[Path]) = {
+      column: String, values: Seq[Any]): (Seq[Path], Seq[Path]) =
+    selectUnits(spark, dir, Nil, Seq(column -> probeValues(values)))
+
+  /** `values`, each checked to be a Long or a String (the bloom types). */
+  private def probeValues(values: Seq[Any]): Seq[Any] = {
     values.foreach {
       case _: String | _: Long => ()
       case v => throw new IllegalArgumentException(
         s"bloom probe values must be Long or String, got " +
           s"${v.getClass.getName}")
     }
-    val (f, _) = DedupIngest.fs(spark, s"$dir/data")
-    val dirs = liveDirs(spark, dir)
-    (parFilter(dirs)(d => bloomMayHold(f, d, column, values)), dirs)
+    values
   }
 
   /** Point lookup through the Bloom sidecars — the equality twin of
@@ -3152,28 +3142,15 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     require(values.forall(_ != null),
       "scanPoints: null probe values are not supported (isin never " +
         "matches null; probe for nulls with scanBox on a stats column)")
-    val (hit, live) = pointProbeDirs(spark, dir, column, values)
-    val pred = col(column).isInCollection(values)
-    if (hit.nonEmpty)
-      readUnits(spark, dir, hit).filter(pred)
-    else if (live.nonEmpty)
-      // zero candidate units: keep the full schema via one live dir —
-      // its bloom already proves the probe empty there
-      readUnits(spark, dir, Seq(live.head)).filter(pred)
-    else emptyShape(spark, dir).filter(pred)
+    scan(spark, dir, points = Seq(column -> probeValues(values)))._1
   }
 
   /** Published units are WRITE-ONCE (atomic-rename publish, never
     * mutated — deletes and folds mint NEW gen names), so their stats
     * are immutable and cacheable by (unit path, column, string-ness).
     * LRU-bounded; long sessions over many tables stay flat. */
-  private val MaxStatsCache = 8192
-  private val statsCache = new java.util.LinkedHashMap[
-      (String, String, Boolean), Option[(Any, Any)]](64, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[
-        (String, String, Boolean), Option[(Any, Any)]]): Boolean =
-      size() > MaxStatsCache
-  }
+  private val statsCache = new Lru[(String, String, Boolean),
+    Option[(Any, Any)]](8192)
 
   /** Drop the in-process stats cache. The cache is sound because
     * published units are write-once — the ONE way to violate that is
@@ -3182,9 +3159,9 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     * the old). Call this after such a drop-and-recreate; tables at
     * fresh paths never need it. */
   def clearStatsCache(): Unit = {
-    statsCache.synchronized(statsCache.clear())
-    bloomCache.synchronized(bloomCache.clear())
-    gridCache.synchronized(gridCache.clear())
+    statsCache.clear()
+    bloomCache.clear()
+    gridCache.clear()
   }
 
   /** The ONE stats reader: per-unit [min, max] of a LONG column, or
@@ -3197,28 +3174,23 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     * footer lacks stats for the column, or the unit predates the
     * string-stats sidecar and its footers carry none. */
   private def unitStats(f: FileSystem, d: Path, c: String,
-      str: Boolean): Option[(Any, Any)] = {
-    val key = (d.toString, c, str)
-    statsCache.synchronized {
-      val hit = statsCache.get(key)
-      if (hit != null) return hit
+      str: Boolean): Option[(Any, Any)] =
+    statsCache.getOrLoad((d.toString, c, str)) {
+      // an unreadable/corrupt sidecar (torn disk, checksum mismatch)
+      // degrades to the footer walk — pruning never fails on metadata
+      val fromSidecar: Option[Option[(Any, Any)]] = scala.util.Try {
+        val sp = new Path(d, StatsFile)
+        if (!f.exists(sp)) None
+        else readMarkerLines(f, sp).map(_.split("\t")).collectFirst {
+          case Array(`c`, "none") if !str => None
+          case Array(`c`, mn, mx) if !str => Some((mn.toLong, mx.toLong))
+          case Array(`c`, "str-none") if str => None
+          case Array(`c`, "str", mn, mx) if str =>
+            Some((urlDec(mn), urlDec(mx)))
+        }
+      }.toOption.flatten
+      fromSidecar.getOrElse(footerRange(f, d, c, str))
     }
-    // an unreadable/corrupt sidecar (torn disk, checksum mismatch)
-    // degrades to the footer walk — pruning never fails on metadata
-    val fromSidecar: Option[Option[(Any, Any)]] = scala.util.Try {
-      val sp = new Path(d, StatsFile)
-      if (!f.exists(sp)) None
-      else readMarkerLines(f, sp).map(_.split("\t")).collectFirst {
-        case Array(`c`, "none") if !str => None
-        case Array(`c`, mn, mx) if !str => Some((mn.toLong, mx.toLong))
-        case Array(`c`, "str-none") if str => None
-        case Array(`c`, "str", mn, mx) if str => Some((urlDec(mn), urlDec(mx)))
-      }
-    }.toOption.flatten
-    val r = fromSidecar.getOrElse(footerRange(f, d, c, str))
-    statsCache.synchronized(statsCache.put(key, r)): Unit
-    r
-  }
 
   /** [[unitStats]] of a LONG column. */
   private def dirColumnRange(f: FileSystem, d: Path,
@@ -3297,11 +3269,92 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
 
   /** Read the live table — correct in every crash state WITHOUT
     * writing ([[liveDirs]]). */
-  def read(spark: SparkSession, dir: String): DataFrame = {
-    val dirs = liveDirs(spark, dir)
-    if (dirs.isEmpty) emptyShape(spark, dir)
-    else readUnits(spark, dir, dirs).drop(BatchCol)
+  def read(spark: SparkSession, dir: String): DataFrame =
+    scan(spark, dir)._1.drop(BatchCol)
+
+  /** (units a read must open, all live units): the live units whose
+    * stats meet every long range of `box` and whose blooms may hold a
+    * value of every `points` column — conservative, a unit without the
+    * stats or the bloom is kept. The probes run on [[probePool]], not
+    * a serial driver walk. */
+  private def selectUnits(spark: SparkSession, dir: String,
+      box: Seq[(String, Long, Long)], points: Seq[(String, Seq[Any])])
+      : (Seq[Path], Seq[Path]) = {
+    val (f, _) = DedupIngest.fs(spark, s"$dir/data")
+    val live = liveDirs(spark, dir)
+    val hit =
+      if (box.isEmpty && points.isEmpty) live
+      else parFilter(live) { d =>
+        box.forall { case (c, lo, hi) => rangeHits(f, d, c, lo, hi) } &&
+          points.forall { case (c, vs) => bloomMayHold(f, d, c, vs) }
+      }
+    (hit, live)
   }
+
+  /** The ONE scan under every read — [[read]], [[scanBox]],
+    * [[scanPoints]], the provenance views ([[readSince]], [[readAsOf]],
+    * [[readBatchRange]]) and [[LayoutTableRelation]]:
+    *  1. the live units ([[liveDirs]]);
+    *  2. [[selectUnits]] on `box`, `points` and the `span` of batch ids;
+    *  3. the selected units are read; with none selected, one live unit
+    *     gives the frame the table's full schema (its sidecars already
+    *     prove the predicate empty there); with no live unit, the
+    *     table's empty shape;
+    *  4. the residual filter: the span always (it defines the view),
+    *     `box` and `points` when `exact` (the relation passes false —
+    *     Spark reapplies its pushed filters above the scan).
+    * A span over a pre-provenance unit is refused: its rows carry no
+    * batch id and would silently vanish from the view. Returns the
+    * frame, [[BatchCol]] kept, with (units selected, units live). */
+  private def scan(spark: SparkSession, dir: String,
+      box: Seq[(String, Long, Long)] = Nil,
+      points: Seq[(String, Seq[Any])] = Nil,
+      span: Option[(Long, Long)] = None,
+      exact: Boolean = true): (DataFrame, Int, Int) = {
+    val spanBox = span.map { case (lo, hi) => (BatchCol, lo, hi) }.toSeq
+    val (hit, live) = selectUnits(spark, dir, box ++ spanBox, points)
+    if (span.nonEmpty) {
+      val (f, _) = DedupIngest.fs(spark, s"$dir/data")
+      // __batch is a non-null long, so a published unit always has
+      // stats for it; zero-row units (a delete that emptied one) have
+      // stats for NO column and are trivially prunable
+      val bare = live.filter(d => dirColumnRange(f, d, BatchCol).isEmpty &&
+        unitRows(f, d) > 0)
+      require(bare.isEmpty,
+        s"provenance read: unit ${bare.map(_.getName).mkString(", ")} " +
+          s"predates the $BatchCol column — its rows have no batch " +
+          "attribution and would silently vanish from this view " +
+          "(regrid to re-stamp the table, or read() for current state)")
+    }
+    val base =
+      if (hit.nonEmpty) readUnits(spark, dir, hit)
+      else if (live.nonEmpty) readUnits(spark, dir, Seq(live.head))
+      else emptyShape(spark, dir)
+    val within: ((String, Long, Long)) => Column = {
+      case (c, lo, hi) => col(c) >= lo && col(c) <= hi
+    }
+    val residual = (if (exact) box.map(within) ++
+        points.map { case (c, vs) => col(c).isInCollection(vs) }
+      else Nil) ++ spanBox.map(within)
+    (residual.reduceOption(_ && _).fold(base)(base.filter), hit.size,
+      live.size)
+  }
+
+  /** Empty frame with the table's shape: the stored schema when the
+    * table has one, else the grid's key shape (no data published yet),
+    * with [[BatchCol]] last. */
+  private def emptyShape(spark: SparkSession, dir: String): DataFrame =
+    (tableSchema(spark, dir) match {
+      case Some(s) => spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        org.apache.spark.sql.types.StructType(
+          s.fields.filterNot(_.name == BatchCol)))
+      case None =>
+        val grid = readGrid(spark, dir)
+        spark.range(0).select(
+          (grid.cols.map(c => lit(null).cast("long").as(c)) :+
+            lit(0L).as(KeyCol)): _*)
+    }).withColumn(BatchCol, lit(0L))
 
   // -- additive schema evolution ----------------------------------------
   //
@@ -3435,7 +3488,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
       afterBatch: Long): DataFrame = {
     require(afterBatch >= -1L && afterBatch < Long.MaxValue,
       s"readSince: afterBatch out of range: $afterBatch")
-    provenanceScan(spark, dir, afterBatch + 1, Long.MaxValue)
+    readBatchRange(spark, dir, afterBatch + 1, Long.MaxValue)
   }
 
   /** Ingest-time travel: the live rows ingested by batches ≤ `batch`
@@ -3449,7 +3502,7 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     * exact through any number of generations. */
   def readAsOf(spark: SparkSession, dir: String, batch: Long): DataFrame = {
     require(batch >= 0L, s"readAsOf: batch must be >= 0: $batch")
-    provenanceScan(spark, dir, 0L, batch)
+    readBatchRange(spark, dir, 0L, batch)
   }
 
   /** The CONTIGUOUS committed batch prefix — "every id in [0, n] is
@@ -3488,45 +3541,15 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
     s"upto=$n;above=${above.mkString(",")};dml=$dmlSeq"
   }
 
-  /** Rows of batches lo..hi (inclusive), stats-pruned — the
-    * micro-batch body behind [[LayoutTableSource.getBatch]]. */
+  /** Rows of batches lo..hi (inclusive), stats-pruned on the
+    * provenance column — the body of [[readSince]] and [[readAsOf]] and
+    * the micro-batch behind [[LayoutTableSource.getBatch]]: units whose
+    * sidecar batch span is disjoint from [lo, hi] are never opened.
+    * Tables written before the provenance column carry no per-row
+    * batch ids — [[scan]] fails fast rather than guess. */
   private[streaming] def readBatchRange(spark: SparkSession,
       dir: String, lo: Long, hi: Long): DataFrame =
-    provenanceScan(spark, dir, lo, hi)
-
-  /** Stats-pruned scan on the provenance column (the [[scanBox]]
-    * machinery on [[BatchCol]]): units whose sidecar batch span is
-    * disjoint from [lo, hi] are never opened; the residual predicate
-    * keeps the result exact. Tables written before the provenance
-    * column carry no per-row batch ids — fail fast rather than guess. */
-  private def provenanceScan(spark: SparkSession, dir: String,
-      lo: Long, hi: Long): DataFrame = {
-    val (hit, live) = prunedBoxDirs(spark, dir, Seq((BatchCol, lo, hi)))
-    if (live.isEmpty)
-      return emptyShape(spark, dir).withColumn(BatchCol, lit(0L))
-        .filter(lit(false))
-    // EVERY live unit must carry per-row provenance, not just one
-    // sample: __batch is a non-null long, so a published unit always
-    // has footer (and sidecar) min/max for it — a unit with NO batch
-    // range is a pre-provenance unit, and filtering it would silently
-    // DROP its rows from the as-of/CDC answer (its __batch reads as
-    // null under the stored schema). Mixed tables fail fast instead.
-    val (f, _) = DedupIngest.fs(spark, s"$dir/data")
-    // zero-row units (a delete that emptied a whole unit) have no
-    // stats for ANY column — they are trivially prunable, not
-    // pre-provenance
-    val bare = live.filter(d => dirColumnRange(f, d, BatchCol).isEmpty &&
-      unitRows(f, d) > 0)
-    require(bare.isEmpty,
-      s"provenance read: unit ${bare.map(_.getName).mkString(", ")} " +
-        s"predates the $BatchCol column — its rows have no batch " +
-        "attribution and would silently vanish from this view " +
-        "(regrid to re-stamp the table, or read() for current state)")
-    val pred = col(BatchCol) >= lo && col(BatchCol) <= hi
-    if (hit.nonEmpty)
-      readUnits(spark, dir, hit).filter(pred)
-    else readUnits(spark, dir, Seq(live.head)).filter(pred)
-  }
+    scan(spark, dir, span = Some((lo, hi)))._1
 
   /** Highest ledger id ANY artifact claims, plus one: committed batch
     * markers, the `batch-upto` watermark, published-but-unmarked
@@ -3672,57 +3695,11 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
       points: Seq[(String, Seq[Any])],
       batchLo: Long, batchHi: Long,
       keepBatch: Boolean): (DataFrame, Int, Int) = {
-    val (f, _) = DedupIngest.fs(spark, s"$dir/data")
-    val live = liveDirs(spark, dir)
-    val bounded = batchLo > 0L || batchHi < Long.MaxValue
-    if (bounded && live.nonEmpty) {
-      // same soundness rule as provenanceScan: a provenance-bounded
-      // view over pre-provenance units would silently drop their rows
-      val bare = live.filter(d =>
-        dirColumnRange(f, d, BatchCol).isEmpty && unitRows(f, d) > 0)
-      require(bare.isEmpty,
-        s"provenance read: unit ${bare.map(_.getName).mkString(", ")} " +
-          s"predates the $BatchCol column — its rows have no batch " +
-          "attribution and would silently vanish from this view " +
-          "(regrid to re-stamp the table, or read() for current state)")
-    }
-    val fullBox = box ++
-      (if (bounded) Seq((BatchCol, batchLo, batchHi)) else Nil)
-    val hit = parFilter(live) { d =>
-      fullBox.forall { case (c, lo, hi) => rangeHits(f, d, c, lo, hi) } &&
-        points.forall { case (c, vs) => bloomMayHold(f, d, c, vs) }
-    }
-    val base =
-      if (hit.nonEmpty) readUnits(spark, dir, hit)
-      else if (live.nonEmpty)
-        // keep the full schema via one live unit — its sidecars
-        // already prove the predicate empty there, and Spark's
-        // reapplied filters keep the result exact
-        readUnits(spark, dir, Seq(live.head))
-      else emptyShape(spark, dir)
-        .withColumn(BatchCol, lit(0L)).filter(lit(false))
-    val residual = if (bounded)
-      base.filter(col(BatchCol) >= batchLo && col(BatchCol) <= batchHi)
-    else base
-    (if (keepBatch) residual else residual.drop(BatchCol),
-      hit.size, live.size)
+    val span = Some((batchLo, batchHi))
+      .filter(_ => batchLo > 0L || batchHi < Long.MaxValue)
+    val (df, read, live) = scan(spark, dir, box, points, span, exact = false)
+    (if (keepBatch) df else df.drop(BatchCol), read, live)
   }
-
-  /** Empty frame with the table's shape: the stored schema (minus the
-    * provenance column) when the table has one, else the grid's key
-    * shape (no data published yet). */
-  private def emptyShape(spark: SparkSession, dir: String): DataFrame =
-    tableSchema(spark, dir) match {
-      case Some(s) => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(
-          s.fields.filterNot(_.name == BatchCol)))
-      case None =>
-        val grid = readGrid(spark, dir)
-        spark.range(0).select(
-          (grid.cols.map(c => lit(null).cast("long").as(c)) :+
-            lit(0L).as(KeyCol)): _*)
-    }
 
   /**
    * Box scan with FILE-LEVEL pruning — the read-side twin of
@@ -3742,30 +3719,15 @@ object LayoutIngest extends org.apache.spark.internal.Logging {
   def scanBox(spark: SparkSession, dir: String,
       box: Seq[(String, Long, Long)]): DataFrame = {
     require(box.nonEmpty, "scanBox: empty box")
-    val (hit, live) = prunedBoxDirs(spark, dir, box)
-    val pred = box.map { case (c, lo, hi) =>
-      col(c) >= lo && col(c) <= hi
-    }.reduce(_ && _)
-    if (hit.nonEmpty)
-      readUnits(spark, dir, hit).filter(pred)
-    else if (live.nonEmpty)
-      // zero intersecting dirs: keep the table's FULL schema by
-      // filtering one live dir — its stats already prove the predicate
-      // empty there, so the reader materializes ~nothing
-      readUnits(spark, dir, Seq(live.head)).filter(pred)
-    else emptyShape(spark, dir).filter(pred)
+    scan(spark, dir, box = box)._1
   }
 
-  /** (dirs whose footer stats intersect the box, all live dirs).
-    * Sidecar reads run on [[probePool]], not a serial driver walk. */
+  /** (dirs whose footer stats intersect the box, all live dirs) — the
+    * [[selectUnits]] of [[scanBox]]. */
   private[graft] def prunedBoxDirs(spark: SparkSession, dir: String,
       box: Seq[(String, Long, Long)])
-      : (Seq[Path], Seq[Path]) = {
-    val (f, _) = DedupIngest.fs(spark, s"$dir/data")
-    val dirs = liveDirs(spark, dir)
-    (parFilter(dirs)(d =>
-      box.forall { case (c, lo, hi) => rangeHits(f, d, c, lo, hi) }), dirs)
-  }
+      : (Seq[Path], Seq[Path]) =
+    selectUnits(spark, dir, box, Nil)
 
   private def dirBytes(f: FileSystem, p: Path): Long =
     f.listStatus(p).filter(_.isFile).map(_.getLen).sum

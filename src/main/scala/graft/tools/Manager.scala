@@ -28,8 +28,7 @@ object Manager {
         k.stripPrefix("--") -> v
     }.toMap
 
-    val spark = GraftSession(sys.env.getOrElse("SPARK_MASTER", "local[32]"),
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, Some("graft-variant-manager"))
+    val spark = GraftSession.cli("graft-variant-manager")
 
     val started = System.currentTimeMillis()
     try {

@@ -33,8 +33,7 @@ object StreamLoadBench {
     val Array(watchDir, genesPath, storeDir, checkpoint) = args.take(4)
     val mapKey = args.lift(4).map(_.toInt).getOrElse(372)
     val mfpt = args.lift(5).map(_.toInt).getOrElse(1)
-    val spark = GraftSession(sys.env.getOrElse("SPARK_MASTER", "local[32]"),
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, Some("graft-stream-bench"))
+    val spark = GraftSession.cli("graft-stream-bench")
     try {
       val genes = spark.read.parquet(genesPath)
       val t0 = System.currentTimeMillis()

@@ -171,8 +171,12 @@ class VariantStoreSpec extends SparkSpec {
     // simulate "new JVM": the session-scoped catalog forgets this store
     // (recovery only runs on the re-register path, like a restart would)
     def forgetCatalog(): Unit = {
+      // the store names its catalog entries after its qualified path
+      val path = new org.apache.hadoop.fs.Path(dir)
+      val qualified = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .makeQualified(path).toString
       val digest = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
+        .digest(qualified.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
       spark.sql(s"DROP TABLE IF EXISTS graft_store_variants_$digest")
     }
     def copyDir(src: java.io.File, dst: java.io.File): Unit = {
@@ -352,6 +356,79 @@ class VariantStoreSpec extends SparkSpec {
     }
   }
 
+  test("a relative store directory: appends, updates and counts all name " +
+      "the working-directory copy, none the warehouse") {
+    val rel = s"target/graft-store-rel-${java.util.UUID.randomUUID()}"
+    val abs = new java.io.File(rel).getAbsoluteFile
+    try {
+      def loadInto(): Unit = {
+        val r = VariantLoader.load(spark, vcf, genes,
+          VariantStore.variants(spark, rel), VariantStore.detailKeys(spark, rel),
+          config.copy(rgdIdSeed = VariantStore.maxRgdId(spark, rel, 100L)))
+        VariantStore.append(r, rel)
+        r.unpersist()
+      }
+      loadInto()
+      // the counts `Manager --runLoad` takes: plain reads of the relative path
+      assert(spark.read.parquet(s"$rel/variants").count() == 2)
+      val details = spark.read.parquet(s"$rel/details").count()
+      assert(details > 0)
+      assert(VariantStore.variants(spark, rel).count() == 2)
+      assert(VariantStore.detailKeys(spark, rel).count() == details)
+      Seq("variants", "details").foreach { side =>
+        assert(new java.io.File(abs, s"$side/_graft_buckets").isFile, side)
+        assert(VariantStore.recordedBuckets(spark, rel, side) ==
+          spark.sparkContext.defaultParallelism, side)
+        assert(bucketProblems(abs.getPath, side).isEmpty, side)
+      }
+      // a reload adds nothing; a K6 swap rewrites the same directory
+      loadInto()
+      assert(spark.read.parquet(s"$rel/variants").count() == 2)
+      VariantStore.applyGenicUpdates(spark, rel, VariantStore.variants(spark, rel)
+        .select($"rgd_id", lit("GENIC").as("genic_status")))
+      assert(spark.read.parquet(s"$rel/variants").select("genic_status")
+        .as[String].collect().toSeq == Seq("GENIC", "GENIC"))
+      assert(VariantStore.variants(spark, abs.getPath).count() == 2)
+      val warehouse = new org.apache.hadoop.fs.Path(
+        spark.conf.get("spark.sql.warehouse.dir"), rel)
+      assert(!warehouse.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .exists(warehouse), s"rows written under $warehouse")
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(abs)
+  }
+
+  test("a refused promote rename fails the rewrite, and the next read " +
+      "recovers the side whole") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.refusing.impl", classOf[RefusingFs].getName)
+    val dir = "refusing:" + Files.createTempDirectory("graft-store-refuse")
+    val r = VariantLoader.load(spark, vcf, genes, VariantStore.variants(spark, dir),
+      VariantStore.detailKeys(spark, dir), config)
+    VariantStore.append(r, dir)
+    r.unpersist()
+    def rows(): Set[(Long, String)] = VariantStore.variants(spark, dir)
+      .select("rgd_id", "genic_status").as[(Long, String)].collect().toSet
+    val before = rows()
+    val updated = before.map { case (id, _) => (id, "GENIC") }
+    assert(before.size == 2 && before != updated)
+    val change = VariantStore.variants(spark, dir)
+      .select($"rgd_id", lit("GENIC").as("genic_status"))
+    val promote = (src: String, dst: String) =>
+      src == "variants_tmp" && dst == "variants"
+    RefusingFs.refuse = promote
+    try {
+      val e = intercept[IllegalStateException] {
+        VariantStore.applyGenicUpdates(spark, dir, change)
+      }
+      assert(e.getMessage.contains("overwriteSide: rename"), e.getMessage)
+      // the recovery's own promote is checked too: refused, it throws
+      // and deletes nothing
+      val e2 = intercept[IllegalStateException](rows())
+      assert(e2.getMessage.contains("recoverSwap: rename"), e2.getMessage)
+    } finally RefusingFs.refuse = (_, _) => false
+    val recovered = rows()
+    assert(recovered == before || recovered == updated, recovered)
+  }
+
   test("K5/K6 swaps hold the single-writer lock: a concurrent second " +
       "updater fails fast naming the holder; crash recovery unchanged") {
     import graft.streaming.LedgerLock
@@ -405,6 +482,21 @@ class VariantStoreSpec extends SparkSpec {
     assert(VariantStore.variants(spark, dir).select("genic_status")
       .as[String].collect().forall(_ == "GENIC"))
   }
+}
+
+/** The local filesystem under the `refusing:` scheme: a rename whose
+  * (source, destination) names [[RefusingFs.refuse]] matches returns
+  * false, the way Hadoop filesystems report most rename failures. */
+class RefusingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = "refusing"
+  override def getUri: java.net.URI = java.net.URI.create("refusing:///")
+  override def rename(src: org.apache.hadoop.fs.Path,
+      dst: org.apache.hadoop.fs.Path): Boolean =
+    !RefusingFs.refuse(src.getName, dst.getName) && super.rename(src, dst)
+}
+
+object RefusingFs {
+  @volatile var refuse: (String, String) => Boolean = (_, _) => false
 }
 
 /** `CompactStore <master> <store dir>`: [[VariantStore.compact]] in a
